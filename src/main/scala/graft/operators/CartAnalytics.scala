@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.sources.ArtifactFamily
+import graft.sources.ArtifactFamily.{Rederive, RowAppend}
 
 /** Reference-parity analytics re-expressed on the synthetic star schema.
   *
@@ -550,6 +552,7 @@ object CartAnalytics {
     * family's fixed surface over the orders fact. */
   private[graft] val ProfileNumCols = Seq("o_orderkey", "o_custkey", "o_totalprice")
   private[graft] val ProfileStrCols = Seq("o_orderstatus", "o_orderpriority")
+  private val Orders = Seq("orders")
 
   /** The per-value histogram of the orders numeric columns as a
     * PERSISTED CATALOG ARTIFACT (r18, r17 verdict task 4): the mergeable
@@ -560,55 +563,54 @@ object CartAnalytics {
     * 4,447 CPU-s at sf10full for bytes q15 never reads); now the key
     * moves exactly when orders bytes move, and an orders APPEND folds
     * in at O(batch) (file-level link + batch histogram — the multiset
-    * contract in [[Profile.histogram]]). */
-  private[graft] def profHistArtifactName(spark: SparkSession, dir: String): String =
-    "profhist_" + graft.sources.Artifacts.keyForTables(spark, dir, "profhist",
-      Seq("orders"))(Profile.histogram(ord(spark, dir), ProfileNumCols))
-
-  private[graft] def persistedProfHist(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, profHistArtifactName(spark, dir)) {
-      Profile.histogram(ord(spark, dir), ProfileNumCols)
-    }
+    * contract in [[Profile.histogram]]: per-value counts are additive
+    * under append, so consumers re-aggregate by value). */
+  private[graft] lazy val ProfHist: ArtifactFamily = new ArtifactFamily("profhist",
+    Orders,
+    defining = (spark, dir) => Profile.histogram(ord(spark, dir), ProfileNumCols),
+    build = (spark, dir, _) => Profile.histogram(ord(spark, dir), ProfileNumCols),
+    refresh = RowAppend((batch, _) => Profile.histogram(batch, ProfileNumCols)),
+    tableScoped = true, multisetCount = Some("c"))
 
   /** q17's string-histogram twin (profstrh_). */
-  private[graft] def profStrHistArtifactName(spark: SparkSession, dir: String): String =
-    "profstrh_" + graft.sources.Artifacts.keyForTables(spark, dir, "profstrh",
-      Seq("orders"))(Profile.stringHistogram(ord(spark, dir), ProfileStrCols))
+  private[graft] lazy val ProfStrHist: ArtifactFamily = new ArtifactFamily("profstrh",
+    Orders,
+    defining = (spark, dir) => Profile.stringHistogram(ord(spark, dir), ProfileStrCols),
+    build = (spark, dir, _) => Profile.stringHistogram(ord(spark, dir), ProfileStrCols),
+    refresh = RowAppend((batch, _) => Profile.stringHistogram(batch, ProfileStrCols)),
+    tableScoped = true, multisetCount = Some("c"))
 
-  private[graft] def persistedProfStrHist(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, profStrHistArtifactName(spark, dir)) {
-      Profile.stringHistogram(ord(spark, dir), ProfileStrCols)
-    }
+  /** q15's statistics. Key: the full (histogram → statistics) derivation
+    * as a LAZY plan (materialize = false, the d10Program idiom — no
+    * cache entries minted during name derivation), orders-content-scoped.
+    * Build: the DECLARED statistics from the served histogram — the raw
+    * fact is scanned only by the histogram build itself; ProfileHistSpec
+    * pins bit-identity to Profile.summarize. On append it re-derives
+    * from the refreshed histogram, never from the full raw fact. */
+  private[graft] lazy val ProfileStats: ArtifactFamily = new ArtifactFamily("profile",
+    Orders,
+    defining = (spark, dir) => {
+      val o = ord(spark, dir)
+      Profile.summarizeFromHistogram(Profile.histogram(o, ProfileNumCols),
+        Profile.columnKinds(o, ProfileNumCols), materialize = false)
+    },
+    build = (spark, dir, built) => Profile.summarizeFromHistogram(ProfHist.serve(spark, dir),
+      Profile.columnKinds(ord(spark, dir), ProfileNumCols), built = built),
+    refresh = Rederive, tableScoped = true)
 
-  /** profile_ key: the full (histogram → statistics) derivation as a
-    * LAZY plan (materialize = false, the d10Program idiom — no cache
-    * entries minted during name derivation), orders-content-scoped. */
-  private[graft] def profileArtifactName(spark: SparkSession, dir: String): String = {
-    val o = ord(spark, dir)
-    "profile_" + graft.sources.Artifacts.keyForTables(spark, dir, "profile",
-      Seq("orders"))(Profile.summarizeFromHistogram(
-        Profile.histogram(o, ProfileNumCols),
-        Profile.columnKinds(o, ProfileNumCols), materialize = false))
-  }
+  /** q17's statistics, derived from the served string histogram
+    * (identical rows: the re-aggregated counts frame IS
+    * summarizeStrings's counts frame). */
+  private[graft] lazy val ProfileStrStats: ArtifactFamily = new ArtifactFamily("profstr",
+    Orders,
+    defining = (spark, dir) => Profile.summarizeStringsFromHistogram(
+      Profile.stringHistogram(ord(spark, dir), ProfileStrCols), ProfileStrCols),
+    build = (spark, dir, _) => Profile.summarizeStringsFromHistogram(
+      ProfStrHist.serve(spark, dir), ProfileStrCols),
+    refresh = Rederive, tableScoped = true)
 
-  private[graft] def profStrArtifactName(spark: SparkSession, dir: String): String =
-    "profstr_" + graft.sources.Artifacts.keyForTables(spark, dir, "profstr",
-      Seq("orders"))(Profile.summarizeStringsFromHistogram(
-        Profile.stringHistogram(ord(spark, dir), ProfileStrCols), ProfileStrCols))
-
-  def q15ProfileOrders(spark: SparkSession, dir: String): DataFrame = {
-    val built = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val res = graft.sources.Artifacts.servePersisted(spark,
-        profileArtifactName(spark, dir)) {
-      // derive the DECLARED statistics from the served histogram — the
-      // raw fact is scanned only by the histogram build itself;
-      // ProfileHistSpec pins bit-identity to Profile.summarize
-      Profile.summarizeFromHistogram(persistedProfHist(spark, dir),
-        Profile.columnKinds(ord(spark, dir), ProfileNumCols), built = built)
-    }
-    built.foreach(_.unpersist(false))
-    res.orderBy(col("column_name").asc)
-  }
+  def q15ProfileOrders(spark: SparkSession, dir: String): DataFrame =
+    ProfileStats.serve(spark, dir).orderBy(col("column_name").asc)
 
   // ---------------------------------------------------------------------
   // Q17 — string-column profile (the top/freq half of summarize): per
@@ -617,81 +619,7 @@ object CartAnalytics {
   // a deterministic (count, value) tiebreak.
   // ---------------------------------------------------------------------
   def q17ProfileOrdersStrings(spark: SparkSession, dir: String): DataFrame =
-    // persisted statistics, same contract as q15's numeric profile —
-    // derived from the served string histogram (identical rows: the
-    // re-aggregated counts frame IS summarizeStrings's counts frame)
-    graft.sources.Artifacts.servePersisted(spark,
-        profStrArtifactName(spark, dir)) {
-      Profile.summarizeStringsFromHistogram(
-        persistedProfStrHist(spark, dir), ProfileStrCols)
-    }.orderBy(col("column_name").asc)
-
-  // ---------------------------------------------------------------------
-  // Incremental profile refresh (r18, r17 verdict task 4): fold an
-  // ORDERS append into the histogram artifacts at O(batch) cost, then
-  // re-derive the final statistics from the merged histogram — never
-  // from the full raw fact. Exactness: per-value counts are additive
-  // under append (the multiset contract), and ProfileHistSpec pins the
-  // histogram-derived statistics bit-identical to the raw-row profile.
-  // Caller contract mirrors Dedup's refreshers: newDir holds oldDir's
-  // orders plus appended rows (new o_orderkeys); in-place edits are a
-  // different lifecycle and must rebuild.
-  // ---------------------------------------------------------------------
-  /** The appended orders batch: rows of `newDir`'s orders whose
-    * o_orderkey is absent from `oldDir`'s — reads only the old key
-    * column (parquet-pruned). */
-  private def ordersBatch(spark: SparkSession, oldDir: String, newDir: String): DataFrame =
-    Tables.load(spark, newDir, "orders")
-      .join(Tables.load(spark, oldDir, "orders").select(col("o_orderkey")),
-        Seq("o_orderkey"), "left_anti")
-
-  /** Serve `newDir`'s numeric-histogram artifact, composing it from
-    * `oldDir`'s at FILE level when absent: previous generation's parquet
-    * parts hard-linked + freshly written batch-histogram files —
-    * O(batch) compute. The composed table is a valid MULTISET histogram
-    * (consumers re-aggregate by value), so derived statistics equal a
-    * from-scratch build's. */
-  private[graft] def refreshedProfHist(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    persistedProfHist(spark, oldDir) // previous generation must exist
-    Dedup.appendRefreshed(spark, profHistArtifactName(spark, newDir),
-        profHistArtifactName(spark, oldDir)) { _ =>
-      Profile.histogram(ordersBatch(spark, oldDir, newDir), ProfileNumCols)
-    }
-  }
-
-  private[graft] def refreshedProfStrHist(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    persistedProfStrHist(spark, oldDir)
-    Dedup.appendRefreshed(spark, profStrHistArtifactName(spark, newDir),
-        profStrHistArtifactName(spark, oldDir)) { _ =>
-      Profile.stringHistogram(ordersBatch(spark, oldDir, newDir), ProfileStrCols)
-    }
-  }
-
-  /** Serve `newDir`'s profile statistics, deriving them from the
-    * incrementally-refreshed histogram when absent — the table name is
-    * [[profileArtifactName]] of `newDir`, the SAME key a from-scratch
-    * q15 computes, so later cold sessions serve transparently. */
-  private[graft] def refreshedProfile(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    val built = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val res = graft.sources.Artifacts.servePersisted(spark,
-        profileArtifactName(spark, newDir)) {
-      Profile.summarizeFromHistogram(refreshedProfHist(spark, oldDir, newDir),
-        Profile.columnKinds(ord(spark, newDir), ProfileNumCols), built = built)
-    }
-    built.foreach(_.unpersist(false))
-    res
-  }
-
-  private[graft] def refreshedProfileStrings(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark,
-        profStrArtifactName(spark, newDir)) {
-      Profile.summarizeStringsFromHistogram(
-        refreshedProfStrHist(spark, oldDir, newDir), ProfileStrCols)
-    }
+    ProfileStrStats.serve(spark, dir).orderBy(col("column_name").asc)
 
   // ---------------------------------------------------------------------
   // Q16 — calendar dimension (reference py:74-76: sequence + explode, the

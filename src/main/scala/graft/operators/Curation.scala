@@ -29,7 +29,7 @@ object Curation {
   // ---------------------------------------------------------------------
   def p01CurationLedger(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val nearDrop = Dedup.clusterLabels(spark, dir)
+    val nearDrop = Dedup.Labels.serve(spark, dir)
       .where(col("label") =!= col("doc_id"))
       .select(col("doc_id"), lit(true).as("is_near_dup"))
     val quality = TextAnalysis.t12QualityFilter(spark, dir)
@@ -352,7 +352,7 @@ object Curation {
   // already exist.
   // ---------------------------------------------------------------------
   def p08SplitLeakage(spark: SparkSession, dir: String): DataFrame = {
-    val labels = Dedup.clusterLabels(spark, dir)
+    val labels = Dedup.Labels.serve(spark, dir)
     val splits = p03SplitAssign(spark, dir).select(col("doc_id"), col("split"))
     labels.join(splits, Seq("doc_id"))
       .groupBy(col("label").as("cluster_id"))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.SharedHash._
+import graft.sources.ArtifactFamily
+import graft.sources.ArtifactFamily.{Fold, Rederive, RowAppend}
 
 /** Deduplication operators over the `documents` table — the core of a
   * training-data pipeline at 100 TB.
@@ -98,6 +100,14 @@ object Dedup {
     else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
+  /** The read set of the document artifact families. */
+  private[graft] val Docs = Seq("documents")
+
+  /** The corpus's (doc_id, text) projection — what the per-doc artifact
+    * derivations (and their key-defining plans) start from. */
+  private[graft] def docText(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))
+
   /** DuckDB mirror of [[shinglesOf]] as a `sh` CTE over `src`. */
   private def shinglesSqlOver(src: String): String =
     s"""sh AS (
@@ -178,7 +188,7 @@ object Dedup {
   def d02NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
     requireExactBaselineCorpus(Tables.load(spark, dir, "documents"),
       "d02_ngram_jaccard")
-    ngramJaccardPairs(persistedShingles(spark, dir))
+    ngramJaccardPairs(Shingles.serve(spark, dir))
   }
 
   // ---------------------------------------------------------------------
@@ -309,22 +319,37 @@ object Dedup {
     * d14 sweep, the edges_* build), so they run once per corpus state.
     * Keyed by the raw derivation; the build reads the served shingle
     * artifact. est_raw is k/16 (exact in binary) and the counts are
-    * longs, so the parquet round trip is bit-identical to recompute. */
-  private[graft] def scoredArtifactName(spark: SparkSession, dir: String): String =
-    "scored_" + graft.sources.Artifacts.keyFor(spark, dir, "scored")(
-      scoredCandidatesOf(Tables.load(spark, dir, "documents")))
-
-  private[graft] def persistedScoredCandidates(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, scoredArtifactName(spark, dir)) {
-      scoredCandidatesFromShingles(persistOnce(persistedShingles(spark, dir)))
-    }
-
-  /** Test hook: drop the persisted scored-candidate artifact. */
-  private[graft] def clearScoredCache(spark: SparkSession, dir: String): Unit =
-    graft.sources.Artifacts.dropArtifact(spark, scoredArtifactName(spark, dir))
+    * longs, so the parquet round trip is bit-identical to recompute.
+    *
+    * Append refresh: old×old pairs are the old artifact verbatim; pairs
+    * touching the batch are found by band-probing the old SIGNATURE
+    * artifact with batch signatures (canonicalized to doc_a < doc_b like
+    * the from-scratch self-join) plus the batch self-pairs, then scored
+    * by [[scoreCandidates]] over batch shingles ∪ the band-collided slice
+    * of the old SHINGLE artifact (semi-join pushdown into the
+    * doc_id-clustered table). No old text is read; old index rows are
+    * read only for collided docs. */
+  private[graft] lazy val Scored: ArtifactFamily = new ArtifactFamily("scored", Docs,
+    defining = (spark, dir) => scoredCandidatesOf(Tables.load(spark, dir, "documents")),
+    build = (spark, dir, _) =>
+      scoredCandidatesFromShingles(persistOnce(Shingles.serve(spark, dir))),
+    refresh = Fold { (spark, oldDir, newDir, built) =>
+      val oldIdx = DedupSig.serve(spark, oldDir)
+      val shB = shinglesOf(appendedBatch(spark, oldDir, newDir).select(col("doc_id"), col("text")))
+      val sigB = lshSignatures(shB)
+      val candB = persistOnce(batchCandidates(sigB, oldIdx))
+      built += shB; built += sigB; built += candB
+      val touched = endpoints(candB)
+      val sigCols = col("doc_id") +: (0 until NumHashes).map(i => col(s"mh$i")) :+ col("n")
+      val sig = sigB.select(sigCols: _*).unionAll(
+        oldIdx.select(sigCols: _*).join(touched, Seq("doc_id"), "left_semi"))
+      val sh = shB.unionAll(
+        Shingles.serve(spark, oldDir).join(touched, Seq("doc_id"), "left_semi"))
+      Scored.serve(spark, oldDir).unionAll(scoreCandidates(candB, sig, sh))
+    })
 
   def d03MinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    minhashTopK(persistedScoredCandidates(spark, dir))
+    minhashTopK(Scored.serve(spark, dir))
 
   // ---------------------------------------------------------------------
   // d04 — SimHash: 120-bit signature (two 60-bit words from one md5 per
@@ -867,16 +892,14 @@ object Dedup {
     * corpus state; the contamination pair build and any future
     * h60 consumer read the parquet table. Values are exact longs, so
     * the round trip is bit-identical to recompute. */
-  private[graft] def h60ArtifactName(spark: SparkSession, dir: String): String =
-    "h60_" + graft.sources.Artifacts.keyFor(spark, dir, "h60")(
-      hashed60ShinglesOf(Tables.load(spark, dir, "documents")
-        .select(col("doc_id"), col("text"))))
-
-  private[graft] def persistedH60Shingles(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, h60ArtifactName(spark, dir)) {
-      hashed60ShinglesOf(Tables.load(spark, dir, "documents")
-        .select(col("doc_id"), col("text")))
-    }
+  private[graft] lazy val H60: ArtifactFamily = new ArtifactFamily("h60", Docs,
+    defining = (spark, dir) => hashed60ShinglesOf(docText(spark, dir)),
+    build = (spark, dir, _) => hashed60ShinglesOf(docText(spark, dir)),
+    refresh = RowAppend { (batch, built) =>
+      val hB = hashed60ShinglesOf(batch.select(col("doc_id"), col("text")))
+      built += hB
+      hB
+    })
 
   /** The qualifying contamination PAIR SET as a persisted catalog
     * artifact — the s12/edges pattern applied to the d-chain (r15
@@ -887,37 +910,53 @@ object Dedup {
     * the RAW fixture derivation (fresh-JVM reproducible, the labels
     * discipline); the BUILD body derives from the served h60 artifact,
     * so even a cold build never re-walks corpus text for shingles.
-    * Columns are exact longs → serve ≡ recompute bit-for-bit. */
-  private[graft] def contamPairsArtifactName(spark: SparkSession, dir: String): String =
-    "contam_" + graft.sources.Artifacts.keyFor(spark, dir, "contam")({
+    * Columns are exact longs → serve ≡ recompute bit-for-bit.
+    *
+    * Append refresh: pairs split by endpoint membership — (old-eval ×
+    * old-train) is the old artifact; (batch-eval × all-train) and
+    * (old-eval × batch-train) are two h60-keyed joins over the served
+    * index, so the old corpus is touched only through its h60 artifact.
+    * Per-pair (shared, n_eval) depend only on the two docs' shingle
+    * sets, so the union is row-identical to a from-scratch derivation. */
+  private[graft] lazy val Contam: ArtifactFamily = new ArtifactFamily("contam", Docs,
+    defining = (spark, dir) => {
       val (train, eval_) = fixtureEvalSplit(spark, dir)
       contaminationPairs(train, eval_)
+    },
+    build = (spark, dir, _) => contamPairsDerive(spark, dir),
+    refresh = Fold { (spark, oldDir, newDir, built) =>
+      val oldH60 = persistOnce(H60.serve(spark, oldDir))
+      val batch = appendedBatch(spark, oldDir, newDir)
+      val bH60 = hashed60ShinglesOf(batch.select(col("doc_id"), col("text")))
+      built += oldH60; built += bH60
+      val bEval = bH60.where(col("doc_id") % 10 === 0)
+      val bTrain = bH60.where(col("doc_id") % 10 =!= 0)
+      // counts gate the broadcast hint only (values are count-independent)
+      val nEvalB = batch.where(col("doc_id") % 10 === 0).count()
+      val nEvalOld = Tables.load(spark, oldDir, "documents")
+        .where(col("doc_id") % 10 === 0).count()
+      Contam.serve(spark, oldDir)
+        .unionAll(contaminationPairsHashed(
+          oldH60.where(col("doc_id") % 10 =!= 0).unionAll(bTrain), bEval, nEvalB))
+        .unionAll(contaminationPairsHashed(
+          bTrain, oldH60.where(col("doc_id") % 10 === 0), nEvalOld))
     })
 
   /** The contamination pair DERIVATION body over the served h60 index —
-    * what [[persistedContamPairs]] materializes once per corpus state.
+    * what [[Contam]] materializes once per corpus state.
     * Filtering the corpus-wide index by the fixture predicate equals
     * hashing the filtered frames (shingling is per-row), so this plan
     * is value-identical to the raw derivation the key hashes. */
   private[graft] def contamPairsDerive(spark: SparkSession, dir: String): DataFrame = {
-    val h60 = persistOnce(persistedH60Shingles(spark, dir))
+    val h60 = persistOnce(H60.serve(spark, dir))
     val nEvalDocs = Tables.load(spark, dir, "documents")
       .where(col("doc_id") % 10 === 0).count()
     contaminationPairsHashed(h60.where(col("doc_id") % 10 =!= 0),
       h60.where(col("doc_id") % 10 === 0), nEvalDocs)
   }
 
-  private[graft] def persistedContamPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, contamPairsArtifactName(spark, dir)) {
-      contamPairsDerive(spark, dir)
-    }
-
-  /** Test hook: drop the persisted pair artifact (entry + files). */
-  private[graft] def clearContamCache(spark: SparkSession, dir: String): Unit =
-    graft.sources.Artifacts.dropArtifact(spark, contamPairsArtifactName(spark, dir))
-
   def d07Contamination(spark: SparkSession, dir: String): DataFrame =
-    persistedContamPairs(spark, dir)
+    Contam.serve(spark, dir)
       .orderBy((col("shared").cast("double") / col("n_eval")).desc,
         col("eval_id").asc, col("train_id").asc)
       .limit(200)
@@ -947,7 +986,7 @@ object Dedup {
     // reads, so detect and apply still cannot disagree — the shared-
     // derivation contract, now shared through the warehouse instead of
     // a per-JVM cache
-    val dirty = persistedContamPairs(spark, dir)
+    val dirty = Contam.serve(spark, dir)
       .select(col("train_id").as("doc_id")).distinct()
     Tables.load(spark, dir, "documents")
       .where(col("doc_id") % 10 =!= 0)
@@ -1044,10 +1083,34 @@ object Dedup {
     * is per-row and the excerpt ids are provably disjoint), so a cold
     * build re-walks only the 1/17 excerpt slice, not the corpus. The
     * rounded doubles round-trip parquet bit-exactly (IEEE), so serve ≡
-    * recompute. */
-  private[graft] def contAuditArtifactName(spark: SparkSession, dir: String): String =
-    "contaud_" + graft.sources.Artifacts.keyFor(spark, dir, "contaud")(
-      containmentAudit(excerptAugmented(spark, dir)))
+    * recompute.
+    *
+    * Append refresh (r17 verdict task 3): pairs split by endpoint
+    * membership exactly like scored_ — band collisions and every scored
+    * value depend only on the two endpoint docs — so old×old pairs are
+    * the old artifact verbatim, and pairs touching the AUGMENTED batch
+    * (batch docs + batch excerpts) come from band-probing the old
+    * contsig_ index with batch signatures plus the batch self-join. The
+    * old corpus is touched only through its artifacts (contsig_ for
+    * signatures, shingles_ ∪ exsh_ semi-joined to collided docs for
+    * verification) — NO old text is read. */
+  private[graft] lazy val ContAudit: ArtifactFamily = new ArtifactFamily("contaud", Docs,
+    defining = (spark, dir) => containmentAudit(excerptAugmented(spark, dir)),
+    build = (spark, dir, _) => d16Derive(spark, dir),
+    refresh = Fold { (spark, oldDir, newDir, built) =>
+      val oldSig = ContSig.serve(spark, oldDir)
+      val shB = shinglesOf(augmentedOf(appendedBatch(spark, oldDir, newDir)))
+      val sigB = lshSignatures(shB)
+      val candB = persistOnce(batchCandidates(sigB, oldSig))
+      built += shB; built += sigB; built += candB
+      val touched = endpoints(candB)
+      val sh = shB.unionAll(Shingles.serve(spark, oldDir)
+        .unionAll(ExcerptShingles.serve(spark, oldDir))
+        .join(touched, Seq("doc_id"), "left_semi"))
+      val sizes = sigB.select(col("doc_id"), col("n")).unionAll(
+        oldSig.select(col("doc_id"), col("n")).join(touched, Seq("doc_id"), "left_semi"))
+      ContAudit.serve(spark, oldDir).unionAll(scoreContainment(candB, sh, sizes))
+    })
 
   /** Excerpt-row shingles as a PERSISTED CATALOG ARTIFACT (r18, the
     * contaud-refresh prerequisite): the d16 build and the contaud_
@@ -1056,14 +1119,14 @@ object Dedup {
     * the old corpus's 1/17 excerpt slice. One tiny table (13 shingles
     * per excerpt row) makes the old side probe-only. Keyed by the raw
     * derivation; per-DOC rows → file-level append refresh. */
-  private[graft] def excerptShingleArtifactName(spark: SparkSession, dir: String): String =
-    "exsh_" + graft.sources.Artifacts.keyFor(spark, dir, "exsh")(
-      shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))))
-
-  private[graft] def persistedExcerptShingles(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, excerptShingleArtifactName(spark, dir)) {
-      shinglesOf(excerptsOf(Tables.load(spark, dir, "documents")))
-    }
+  private[graft] lazy val ExcerptShingles: ArtifactFamily = new ArtifactFamily("exsh", Docs,
+    defining = (spark, dir) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))),
+    build = (spark, dir, _) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))),
+    refresh = RowAppend { (batch, built) =>
+      val shB = shinglesOf(excerptsOf(batch))
+      built += shB
+      shB
+    })
 
   /** MinHash signatures of the EXCERPT-AUGMENTED corpus as a persisted
     * artifact — the probe index the contaud_ refresh band-probes with
@@ -1071,41 +1134,34 @@ object Dedup {
     * it, any corpus append had to re-derive every augmented signature
     * before the audit could be refreshed. Keyed by the raw derivation;
     * the build composes the served real-doc and excerpt shingle
-    * artifacts (exact longs → serve ≡ recompute). */
-  private[graft] def contSigArtifactName(spark: SparkSession, dir: String): String =
-    "contsig_" + graft.sources.Artifacts.keyFor(spark, dir, "contsig")(
-      lshSignatures(shinglesOf(excerptAugmented(spark, dir))))
-
-  private[graft] def persistedContSig(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, contSigArtifactName(spark, dir)) {
-      lshSignatures(persistOnce(persistedShingles(spark, dir)
-        .unionAll(persistedExcerptShingles(spark, dir))))
-    }
+    * artifacts (exact longs → serve ≡ recompute). Per-DOC rows (batch
+    * docs + batch excerpts) → file-level append refresh. */
+  private[graft] lazy val ContSig: ArtifactFamily = new ArtifactFamily("contsig", Docs,
+    defining = (spark, dir) => lshSignatures(shinglesOf(excerptAugmented(spark, dir))),
+    build = (spark, dir, _) => lshSignatures(persistOnce(Shingles.serve(spark, dir)
+      .unionAll(ExcerptShingles.serve(spark, dir)))),
+    refresh = RowAppend { (batch, built) =>
+      val shB = shinglesOf(augmentedOf(batch))
+      val sigB = lshSignatures(shB)
+      built += shB; built += sigB
+      sigB
+    })
 
   /** The d16 DERIVATION body over the served shingle/signature
-    * artifacts — what [[persistedContainmentAudit]] materializes once
+    * artifacts — what [[ContAudit]] materializes once
     * per corpus state. sh(docs ∪ excerpts) = served_sh(docs) ∪
     * served_exsh(docs) (shingling is per-row, excerpt ids disjoint),
     * and the signature table is the served contsig_ — a cold audit
     * build never re-walks corpus text. */
   private[graft] def d16Derive(spark: SparkSession, dir: String): DataFrame = {
     val sh = persistOnce(
-      persistedShingles(spark, dir).unionAll(persistedExcerptShingles(spark, dir)))
-    val sig = persistOnce(persistedContSig(spark, dir))
+      Shingles.serve(spark, dir).unionAll(ExcerptShingles.serve(spark, dir)))
+    val sig = persistOnce(ContSig.serve(spark, dir))
     scoreContainment(lshCandidates(sig), sh, sig.select(col("doc_id"), col("n")))
   }
 
-  private[graft] def persistedContainmentAudit(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, contAuditArtifactName(spark, dir)) {
-      d16Derive(spark, dir)
-    }
-
-  /** Test hook: drop the persisted audit artifact (entry + files). */
-  private[graft] def clearContAuditCache(spark: SparkSession, dir: String): Unit =
-    graft.sources.Artifacts.dropArtifact(spark, contAuditArtifactName(spark, dir))
-
   def d16ContainmentAudit(spark: SparkSession, dir: String): DataFrame =
-    persistedContainmentAudit(spark, dir)
+    ContAudit.serve(spark, dir)
       .orderBy(col("containment").desc, col("doc_a").asc, col("doc_b").asc)
 
   // ---------------------------------------------------------------------
@@ -1389,9 +1445,9 @@ object Dedup {
     * is per-row). The INTERMEDIATE is what's served: anchors, the df
     * cap, the probe join and the exact verify still execute in-window on
     * every read, and the h60_ family is refresh-folded on append
-    * ([[refreshedH60Shingles]]). */
+    * ([[H60]]). */
   private def fixtureSketchPairsServed(spark: SparkSession, dir: String): DataFrame = {
-    val h60 = persistOnce(persistedH60Shingles(spark, dir))
+    val h60 = persistOnce(H60.serve(spark, dir))
     contaminationSketchPairsHashed(h60.where(col("doc_id") % 10 =!= 0),
       h60.where(col("doc_id") % 10 === 0), ContamDfCap)
   }
@@ -1560,16 +1616,6 @@ object Dedup {
   def lshClusters(docs: DataFrame): DataFrame =
     clusterOutput(minLabelComponents(lshEdgesOf(docs)))
 
-  /** Cluster-label table name for a corpus — keyed by the corpus dir AND
-    * the semantic hash of the edge derivation, so a changed LSH layout or
-    * threshold can never serve a stale artifact. */
-  private[graft] def labelsArtifactName(spark: SparkSession, dir: String): String =
-    "labels_" + graft.sources.Artifacts.keyFor(spark, dir, "labels")(lshEdges(spark, dir))
-
-  /** Edge-set table name — same defining-plan key discipline as labels. */
-  private[graft] def edgesArtifactName(spark: SparkSession, dir: String): String =
-    "edges_" + graft.sources.Artifacts.keyFor(spark, dir, "edges")(lshEdges(spark, dir))
-
   /** The exact-verified LSH edge set, served as a PERSISTED CATALOG
     * ARTIFACT. Until r13 the edge derivation was recomputed by every
     * consumer and its cost rode on persistOnce cache ORDER inside one
@@ -1583,23 +1629,22 @@ object Dedup {
     * Serving is value-identical to recomputing (the derivation is
     * deterministic; every consumer aggregates or re-sorts, so file row
     * order is immaterial) and the DuckDB oracle still re-derives the
-    * full edge set per query. */
-  private[graft] def persistedLshEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, edgesArtifactName(spark, dir)) {
-      // build from the served SCORED candidate artifact (r16): the edge
-      // set is the ≥ threshold slice of the one scored pair population —
-      // a cold edge build pays a table scan, not its own band joins +
-      // verification. Expression mirrors thresholdEdges exactly (Divide
-      // casts to double; a null `shared` comparison is null → dropped,
-      // same as the inner join it replaces).
-      persistedScoredCandidates(spark, dir)
-        .where(col("shared") / (col("n_a") + col("n_b") - col("shared")) >= ClusterThreshold)
-        .select(col("doc_a"), col("doc_b"))
-    }
-
-  /** Test hook: drop the persisted edge artifact (entry + files). */
-  private[graft] def clearEdgesCache(spark: SparkSession, dir: String): Unit =
-    graft.sources.Artifacts.dropArtifact(spark, edgesArtifactName(spark, dir))
+    * full edge set per query. Keyed, like labels, by the corpus and the
+    * edge derivation, so a changed LSH layout or threshold can never
+    * serve a stale artifact. On append it is re-derived from the
+    * refreshed scored_ table. */
+  private[graft] lazy val Edges: ArtifactFamily = new ArtifactFamily("edges", Docs,
+    defining = lshEdges,
+    // build from the served SCORED candidate artifact (r16): the edge
+    // set is the ≥ threshold slice of the one scored pair population —
+    // a cold edge build pays a table scan, not its own band joins +
+    // verification. Expression mirrors thresholdEdges exactly (Divide
+    // casts to double; a null `shared` comparison is null → dropped,
+    // same as the inner join it replaces).
+    build = (spark, dir, _) => Scored.serve(spark, dir)
+      .where(col("shared") / (col("n_a") + col("n_b") - col("shared")) >= ClusterThreshold)
+      .select(col("doc_a"), col("doc_b")),
+    refresh = Rederive)
 
   // ---------------------------------------------------------------------
   // Persisted DEDUP INDEX artifacts (VERDICT r7 task 2): the per-doc
@@ -1624,25 +1669,20 @@ object Dedup {
       .join(lshSignatures(shinglesOf(docs.select(col("doc_id"), col("text")))),
         Seq("doc_id"), "left_outer")
 
-  /** Index/shingle artifact names — the same (corpus fingerprint,
-    * defining plan) key discipline as the label table: a regenerated
-    * corpus or a changed shingle/signature derivation misses and
-    * rebuilds, never serves stale. */
-  private[graft] def dedupIndexArtifactName(spark: SparkSession, dir: String): String =
-    "dedupsig_" + graft.sources.Artifacts.keyFor(spark, dir, "dedupsig")(
-      dedupIndexOf(Tables.load(spark, dir, "documents")))
-
-  private[graft] def shingleArtifactName(spark: SparkSession, dir: String): String =
-    "shingles_" + graft.sources.Artifacts.keyFor(spark, dir, "shingles")(
-      shinglesOf(Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))))
-
   /** The per-doc signature index, served as a persisted catalog
     * artifact. Build-once: every incremental consumer probes this table
-    * instead of re-signing the corpus. */
-  private[graft] def persistedDedupIndex(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, dedupIndexArtifactName(spark, dir)) {
-      dedupIndexOf(Tables.load(spark, dir, "documents"))
-    }
+    * instead of re-signing the corpus. Per-row derivation (md5 +
+    * own-shingle MinHash) → file-level append refresh. */
+  private[graft] lazy val DedupSig: ArtifactFamily = new ArtifactFamily("dedupsig", Docs,
+    defining = (spark, dir) => dedupIndexOf(Tables.load(spark, dir, "documents")),
+    build = (spark, dir, _) => dedupIndexOf(Tables.load(spark, dir, "documents")),
+    refresh = RowAppend { (batch, built) =>
+      val shB = shinglesOf(batch.select(col("doc_id"), col("text")))
+      val sigB = lshSignatures(shB)
+      built += shB; built += sigB
+      batch.select(col("doc_id"), md5(col("text")).as("text_md5"))
+        .join(sigB, Seq("doc_id"), "left_outer")
+    })
 
   /** The doc-shingle inverted-index rows, served as a persisted catalog
     * artifact. The build clusters rows by doc_id (range partition +
@@ -1650,12 +1690,20 @@ object Dedup {
     * prune parquet row groups by doc_id min/max instead of scanning the
     * whole index. The defining KEY plan stays the raw derivation — the
     * layout step changes bytes-on-disk, not rows, so from-scratch and
-    * chained builds keep the same key contract. */
-  private[graft] def persistedShingles(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, shingleArtifactName(spark, dir)) {
-      shinglesOf(Tables.load(spark, dir, "documents").select(col("doc_id"), col("text")))
-        .repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id"))
-    }
+    * chained builds keep the same key contract. On append the previous
+    * generation's doc_id-clustered files are LINKED unchanged (their
+    * per-file min/max pruning stays intact); the batch files are
+    * clustered among themselves — global range disjointness degrades to
+    * per-file pruning, which is what parquet min/max stats give anyway. */
+  private[graft] lazy val Shingles: ArtifactFamily = new ArtifactFamily("shingles", Docs,
+    defining = (spark, dir) => shinglesOf(docText(spark, dir)),
+    build = (spark, dir, _) => shinglesOf(docText(spark, dir))
+      .repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id")),
+    refresh = RowAppend { (batch, built) =>
+      val shB = shinglesOf(batch.select(col("doc_id"), col("text")))
+      built += shB
+      shB.repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id"))
+    })
 
   /** The near-dup label table, served as a PERSISTED CATALOG ARTIFACT —
     * the dedup counterpart of Similarity's trained-centroid table: a real
@@ -1665,23 +1713,37 @@ object Dedup {
     * re-running the band joins + propagation loop. Serving is
     * bit-identical to recomputing (the loop is deterministic; spec-pinned
     * cold ≡ warm ≡ cross-session), and the DuckDB oracle still re-derives
-    * the full recursive clustering per query. */
-  private[graft] def clusterLabels(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, labelsArtifactName(spark, dir)) {
-      // build from the served EDGE artifact: a cold label build pays one
-      // edge derivation (shared with s08 and any other pair consumer),
-      // not its own — and the propagation loop reads a compact parquet
-      // pair table instead of re-running band joins per iteration seed
-      minLabelComponents(persistedLshEdges(spark, dir))
-    }
-
-  /** Test hook: drop the persisted label artifact (entry + files) to
-    * force a truly cold rebuild. */
-  private[graft] def clearLabelsCache(spark: SparkSession, dir: String): Unit =
-    graft.sources.Artifacts.dropArtifact(spark, labelsArtifactName(spark, dir))
+    * the full recursive clustering per query.
+    *
+    * Append refresh RIDES the refreshed edges_ artifact: the scored_
+    * refresh already found and verified every pair touching the batch,
+    * so the label update is [[mergeNewEdgesIntoLabels]] over the
+    * batch-touching slice of edges(newDir) — no second band probe.
+    * ([[refreshedClusterLabels]] stays the direct-probe form for
+    * deployments that refresh labels WITHOUT maintaining a scored
+    * artifact.) */
+  private[graft] lazy val Labels: ArtifactFamily = new ArtifactFamily("labels", Docs,
+    defining = lshEdges,
+    // build from the served EDGE artifact: a cold label build pays one
+    // edge derivation (shared with s08 and any other pair consumer),
+    // not its own — and the propagation loop reads a compact parquet
+    // pair table instead of re-running band joins per iteration seed
+    build = (spark, dir, _) => minLabelComponents(Edges.serve(spark, dir)),
+    refresh = Fold { (spark, oldDir, newDir, _) =>
+      val batchIds = appendedBatch(spark, oldDir, newDir).select(col("doc_id"))
+      val e = Edges.serve(spark, newDir)
+      val touching = e
+        .join(batchIds.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
+        .select(col("doc_a"), col("doc_b"))
+        .unionAll(e
+          .join(batchIds.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
+          .join(batchIds.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
+          .select(col("doc_a"), col("doc_b")))
+      mergeNewEdgesIntoLabels(Labels.serve(spark, oldDir), touching)
+    })
 
   def d08LshClusters(spark: SparkSession, dir: String): DataFrame =
-    clusterOutput(clusterLabels(spark, dir))
+    clusterOutput(Labels.serve(spark, dir))
 
   // ---------------------------------------------------------------------
   // d09 — dedup APPLY: the pipeline's actual output — the corpus that
@@ -1716,7 +1778,7 @@ object Dedup {
     dedupApply(docs, minLabelComponents(lshEdgesOf(docs)))
 
   def d09DedupApply(spark: SparkSession, dir: String): DataFrame =
-    dedupApply(Tables.load(spark, dir, "documents"), clusterLabels(spark, dir))
+    dedupApply(Tables.load(spark, dir, "documents"), Labels.serve(spark, dir))
 
   // ---------------------------------------------------------------------
   // d10 — INCREMENTAL dedup: today's batch (doc_id % 7 == 0 stands in
@@ -1735,8 +1797,8 @@ object Dedup {
 
   /** Incremental dedup of a new batch against an existing corpus's
     * PRE-BUILT index — the deployment shape: `existingIndex` is the
-    * [[persistedDedupIndex]] table (doc_id, text_md5, mh*, n) and
-    * `existingShingles` the [[persistedShingles]] table; NO existing
+    * [[DedupSig]] table (doc_id, text_md5, mh*, n) and
+    * `existingShingles` the [[Shingles]] table; NO existing
     * TEXT is read. Exact-dup probes hash-join the batch md5s into the
     * index; band lookups pair NEW × EXISTING only; exact verification
     * reads existing shingle rows solely for collided docs (semi-join
@@ -1910,8 +1972,8 @@ object Dedup {
   private def e15Program(spark: SparkSession, dir: String,
       materialize: Boolean): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val idx = persistedDedupIndex(spark, dir)
-    val shs = persistedShingles(spark, dir)
+    val idx = DedupSig.serve(spark, dir)
+    val shs = Shingles.serve(spark, dir)
     def isCorpus(c: Column) = c % IncrementalMod =!= 0
     // Column arithmetic, not string-spliced expr(): splicing
     // Column.toString into expr() silently builds wrong SQL for
@@ -1945,14 +2007,12 @@ object Dedup {
     * gate run. Keyed by the LAZY verdict plan itself (materialize =
     * false), so a changed threshold/band layout mints a new key and can
     * never serve stale. */
-  private[graft] def e15ArtifactName(spark: SparkSession, dir: String): String =
-    "e15verd_" + graft.sources.Artifacts.keyFor(spark, dir, "e15verd")(
-      e15Program(spark, dir, materialize = false))
+  private[graft] lazy val E15Verdicts: ArtifactFamily = new ArtifactFamily("e15verd", Docs,
+    defining = e15Program(_, _, materialize = false),
+    build = (spark, dir, _) => e15Program(spark, dir, materialize = true))
 
   def e15StreamDedup(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, e15ArtifactName(spark, dir)) {
-      e15Program(spark, dir, materialize = true)
-    }.orderBy(col("doc_id").asc)
+    E15Verdicts.serve(spark, dir).orderBy(col("doc_id").asc)
 
   private def d10Program(spark: SparkSession, dir: String,
       materialize: Boolean): DataFrame = {
@@ -1962,26 +2022,24 @@ object Dedup {
     // so the filtered full-corpus artifact equals an index built over the
     // existing side alone, and the serve path is the one a deployment
     // pays daily (the oracle re-derives identical state from raw text).
-    val idx = persistedDedupIndex(spark, dir)
+    val idx = DedupSig.serve(spark, dir)
       .where(col("doc_id") % IncrementalMod =!= 0)
     incrementalDedupProgram(
       docs.where(col("doc_id") % IncrementalMod === 0).select(col("doc_id"), col("text")),
       idx, idx,
-      persistedShingles(spark, dir).where(col("doc_id") % IncrementalMod =!= 0),
+      Shingles.serve(spark, dir).where(col("doc_id") % IncrementalMod =!= 0),
       (_, _) => lit(true),
       materialize)
   }
 
   /** d10's verdict ledger — same argument and contract as
-    * [[e15ArtifactName]]. */
-  private[graft] def d10ArtifactName(spark: SparkSession, dir: String): String =
-    "d10verd_" + graft.sources.Artifacts.keyFor(spark, dir, "d10verd")(
-      d10Program(spark, dir, materialize = false))
+    * [[E15Verdicts]]. */
+  private[graft] lazy val D10Verdicts: ArtifactFamily = new ArtifactFamily("d10verd", Docs,
+    defining = d10Program(_, _, materialize = false),
+    build = (spark, dir, _) => d10Program(spark, dir, materialize = true))
 
   def d10IncrementalDedup(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, d10ArtifactName(spark, dir)) {
-      d10Program(spark, dir, materialize = true)
-    }.orderBy(col("doc_id").asc)
+    D10Verdicts.serve(spark, dir).orderBy(col("doc_id").asc)
 
   // ---------------------------------------------------------------------
   // Incremental LABEL REFRESH: d10's batch-probe economics applied to the
@@ -2039,8 +2097,8 @@ object Dedup {
   /** Refresh an existing near-dup label table with a new batch, probing
     * the existing corpus's PRE-BUILT index — the deployment shape,
     * mirroring the 3-arg [[incrementalDedup]]: `existingIndex` is the
-    * [[persistedDedupIndex]] table (doc_id, text_md5, mh*, n) and
-    * `existingShingles` the [[persistedShingles]] table; NO existing
+    * [[DedupSig]] table (doc_id, text_md5, mh*, n) and
+    * `existingShingles` the [[Shingles]] table; NO existing
     * TEXT is read, and existing SHINGLE rows are read only for
     * band-collided docs (semi-join pushdown into the doc_id-clustered
     * shingle table). `existingLabels` must be the label table of the
@@ -2098,7 +2156,7 @@ object Dedup {
   /** Artifact-level refresh: serve the labels artifact for the corpus at
     * `newDir` (= `oldDir`'s corpus plus an appended batch), building it
     * incrementally from `oldDir`'s artifact when absent. The table name
-    * is [[labelsArtifactName]] of `newDir` — the SAME key a from-scratch
+    * is [[Labels]]'s name for `newDir` — the SAME key a from-scratch
     * d08 on `newDir` computes — so every later cold session (d08/d09/p01
     * and friends) serves the incrementally-built labels transparently. */
   private[graft] def refreshedClusterLabels(spark: SparkSession,
@@ -2107,13 +2165,12 @@ object Dedup {
     val newDocs = Tables.load(spark, newDir, "documents")
     val batch = newDocs
       .join(oldDocs.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    graft.sources.Artifacts.servePersisted(spark, labelsArtifactName(spark, newDir)) {
+    Labels.serveWith(spark, newDir) { _ =>
       // existing side = oldDir's PERSISTED index/shingle artifacts: the
       // refresh reads old doc_ids (anti-join above, text column pruned)
       // and band-collided shingle rows — never the old corpus's text
-      refreshLabels(persistedDedupIndex(spark, oldDir),
-        persistedShingles(spark, oldDir),
-        clusterLabels(spark, oldDir), batch)
+      refreshLabels(DedupSig.serve(spark, oldDir), Shingles.serve(spark, oldDir),
+        Labels.serve(spark, oldDir), batch)
     }
   }
 
@@ -2122,402 +2179,50 @@ object Dedup {
   // task 1). Until r17 the artifact lifecycle answered ANY corpus change
   // with a full rebuild of every family (r16 gate: 1,658.9 s prebuild at
   // sf10full) — but corpus snapshots evolve by append, and for the
-  // append case every family below has a batch-cost update that is
-  // ROW-IDENTICAL to a from-scratch rebuild:
-  //   - shingles_/h60_/dedupsig_ are per-row derivations: rows of the
-  //     new state = old artifact ∪ derivation(batch). No old text read.
-  //   - scored_ pairs split by endpoint membership: old×old pairs are
-  //     unchanged (per-pair values depend only on the two docs), and
-  //     pairs touching the batch come from band-probing the OLD INDEX
-  //     artifacts with batch signatures — d10's economics.
-  //   - contam_ pairs split the same way over the (train, eval) cross:
-  //     new pairs are (batch-eval × all-train) ∪ (old-eval ×
-  //     batch-train), both joins over the served h60 index.
-  //   - edges_ is the threshold slice of scored_, labels_ refreshes via
-  //     [[refreshLabels]]'s contracted-graph propagation — both ride the
-  //     refreshed scored/index artifacts.
-  // Each refresh persists under the NEW state's own key (the same key a
-  // from-scratch build computes), so later cold sessions serve the
-  // incrementally-built table transparently and serve ≡ recompute stays
-  // a checked contract.
-  // NOT refreshed incrementally, by design: contaud_ (its excerpt
-  // augmentation would need an augmented-signature artifact before the
-  // old side can be probed without re-walking 1/17 of old text) and
-  // profile_ (exact countDistinct + exact median are not mergeable from
-  // final statistics; an incremental profile needs a per-value histogram
-  // artifact instead — a different data structure, not a refresh).
+  // append case every refreshable family has a batch-cost update that is
+  // ROW-IDENTICAL to a from-scratch rebuild. Each family declares its
+  // own shape ([[graft.sources.ArtifactFamily.Refresh]]): per-row
+  // families link the old generation and add batch rows; edges_ and the
+  // profile statistics re-derive from their refreshed upstream; scored_,
+  // contam_, contaud_ and labels_ fold the batch into the old
+  // generation. Each refresh persists under the NEW state's own key
+  // (the same key a from-scratch build computes), so later cold
+  // sessions serve the incrementally-built table transparently and
+  // serve ≡ recompute stays a checked contract.
   // ---------------------------------------------------------------------
-  /** The appended batch between two corpus states: rows of `newDir`'s
-    * documents whose doc_id is absent from `oldDir`'s. Reads the new
-    * state fully (it is the batch, plus ids) and ONLY the doc_id column
-    * of the old state (parquet-pruned) — never old text. Caller
-    * contract (same as [[refreshedClusterLabels]]): `newDir` holds
-    * `oldDir`'s corpus plus appended rows; in-place row EDITS are a
-    * different lifecycle and must rebuild.
-    *
-    * MATERIALIZED once per corpus-state pair: all seven refresh
-    * families need the same batch rows, and deriving it per family
-    * re-scanned the new corpus's full text column once per family (the
-    * r17 probe's first leg paid ~6 corpus text scans per refresh).
-    * Keyed by both content fingerprints (the scalar-probe memo
-    * discipline); superseded pairs free their checkpoint blocks. */
-  private def appendedBatch(spark: SparkSession, oldDir: String, newDir: String): DataFrame = {
-    val fp = graft.sources.Artifacts.corpusFingerprint(spark, oldDir) + ":" +
-      graft.sources.Artifacts.corpusFingerprint(spark, newDir)
-    batchMemo.get((oldDir, newDir)) match {
-      case Some((f, df)) if f == fp => df
-      case prior =>
-        val df = Tables.load(spark, newDir, "documents")
-          .join(Tables.load(spark, oldDir, "documents").select(col("doc_id")),
-            Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        prior.foreach(p => freeCheckpoint(p._2))
-        batchMemo.put((oldDir, newDir), (fp, df))
-        df
-    }
-  }
+  /** The appended documents between two corpus states (see
+    * [[graft.sources.ArtifactFamily.appendedRows]]). */
+  private def appendedBatch(spark: SparkSession, oldDir: String, newDir: String): DataFrame =
+    ArtifactFamily.appendedRows(spark, "documents", oldDir, newDir)
 
-  /** (oldDir, newDir) → (state-pair fingerprint, materialized batch). */
-  private val batchMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (String, DataFrame)]
+  /** Band candidates touching a batch: batch signatures probed against
+    * an existing signature index (canonicalized to doc_a < doc_b like the
+    * from-scratch self-join) plus the batch self-pairs. */
+  private def batchCandidates(sigB: DataFrame, oldSig: DataFrame): DataFrame =
+    bandCandidates(sigB, oldSig, canonical = false)
+      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+      .unionAll(bandCandidates(sigB, sigB, canonical = true))
 
-  /** File-level append refresh shared by the PER-ROW families
-    * (shingles/h60/dedupsig): compose `newTable` as hard links to
-    * `oldTable`'s immutable part files plus freshly written
-    * batch-derived files. Per-row derivations give rows(new corpus) =
-    * rows(old artifact) ∪ rows(batch derivation), so the composed table
-    * is value-identical to a from-scratch rebuild while paying O(batch)
-    * COMPUTE and O(files) metadata — no corpus-sized decode/re-encode
-    * (the r17-measured shingle rewrite cost 70 CPU-s at sf10full for a
-    * 1% batch; the link form pays ~1). `batchRows` derives the batch's
-    * rows and is written with whatever layout the caller gives it. */
-  private[graft] def appendRefreshed(spark: SparkSession, newTable: String,
-      oldTable: String)(
-      batchRows: scala.collection.mutable.Buffer[DataFrame] => DataFrame): DataFrame = {
-    // the thunk registers every internally-persisted frame here so the
-    // batch-keyed caches (never re-servable) are released after the
-    // build — the incrementalDedup release discipline
-    val built = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val res = graft.sources.Artifacts.servePersistedBy(spark, newTable) { stage =>
-      batchRows(built).write.mode("overwrite").parquet(stage.toString)
-      val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.sources.Artifacts.linkDataFilesInto(fs,
-        graft.sources.Artifacts.location(spark, oldTable), stage)
-    }
-    built.foreach(_.unpersist(false))
-    res
-  }
-
-  /** Serve `newDir`'s shingle artifact, building it incrementally from
-    * `oldDir`'s when absent: shingling is per-row, so the new state's
-    * rows are exactly old-artifact ∪ shinglesOf(batch). The previous
-    * generation's doc_id-clustered files are LINKED unchanged (their
-    * per-file min/max pruning stays intact); the batch files are
-    * clustered among themselves — global range disjointness degrades to
-    * per-file pruning, which is what parquet min/max stats give anyway. */
-  private[graft] def refreshedShingles(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    persistedShingles(spark, oldDir) // previous generation must exist
-    appendRefreshed(spark, shingleArtifactName(spark, newDir),
-        shingleArtifactName(spark, oldDir)) { built =>
-      val shB = shinglesOf(
-        appendedBatch(spark, oldDir, newDir).select(col("doc_id"), col("text")))
-      built += shB
-      shB.repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id"))
-    }
-  }
-
-  /** Serve `newDir`'s h60 inverted index, incrementally when absent —
-    * per-row derivation, same union argument as [[refreshedShingles]]. */
-  private[graft] def refreshedH60Shingles(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    persistedH60Shingles(spark, oldDir)
-    appendRefreshed(spark, h60ArtifactName(spark, newDir),
-        h60ArtifactName(spark, oldDir)) { built =>
-      val hB = hashed60ShinglesOf(
-        appendedBatch(spark, oldDir, newDir).select(col("doc_id"), col("text")))
-      built += hB
-      hB
-    }
-  }
-
-  /** Serve `newDir`'s per-doc signature index, incrementally when
-    * absent — per-row derivation (md5 + own-shingle MinHash). */
-  private[graft] def refreshedDedupIndex(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    persistedDedupIndex(spark, oldDir)
-    appendRefreshed(spark, dedupIndexArtifactName(spark, newDir),
-        dedupIndexArtifactName(spark, oldDir)) { built =>
-      val batch = appendedBatch(spark, oldDir, newDir)
-      val shB = shinglesOf(batch.select(col("doc_id"), col("text")))
-      val sigB = lshSignatures(shB)
-      built += shB; built += sigB
-      batch.select(col("doc_id"), md5(col("text")).as("text_md5"))
-        .join(sigB, Seq("doc_id"), "left_outer")
-    }
-  }
-
-  /** Serve `newDir`'s scored LSH candidate table, incrementally when
-    * absent. Old×old pairs are the old artifact verbatim; pairs touching
-    * the batch are found by band-probing the old SIGNATURE artifact with
-    * batch signatures (canonicalized to doc_a < doc_b like the
-    * from-scratch self-join) plus the batch self-pairs, then scored by
-    * [[scoreCandidates]] over batch shingles ∪ the band-collided slice
-    * of the old SHINGLE artifact (semi-join pushdown into the
-    * doc_id-clustered table). No old text is read; old index rows are
-    * read only for collided docs. */
-  private[graft] def refreshedScoredCandidates(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    val built = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val res = graft.sources.Artifacts.servePersisted(
-        spark, scoredArtifactName(spark, newDir)) {
-      val oldScored = persistedScoredCandidates(spark, oldDir)
-      val oldIdx = persistedDedupIndex(spark, oldDir)
-      val oldSh = persistedShingles(spark, oldDir)
-      val shB = shinglesOf(
-        appendedBatch(spark, oldDir, newDir).select(col("doc_id"), col("text")))
-      val sigB = lshSignatures(shB)
-      val candB = persistOnce(
-        bandCandidates(sigB, oldIdx, canonical = false)
-          .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-            greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-          .unionAll(bandCandidates(sigB, sigB, canonical = true)))
-      built += shB; built += sigB; built += candB
-      val touched = candB.select(col("doc_a").as("doc_id"))
-        .unionAll(candB.select(col("doc_b").as("doc_id"))).distinct()
-      val sigCols = col("doc_id") +:
-        (0 until NumHashes).map(i => col(s"mh$i")) :+ col("n")
-      val sig = sigB.select(sigCols: _*).unionAll(
-        oldIdx.select(sigCols: _*).join(touched, Seq("doc_id"), "left_semi"))
-      val sh = shB.unionAll(oldSh.join(touched, Seq("doc_id"), "left_semi"))
-      oldScored.unionAll(scoreCandidates(candB, sig, sh))
-    }
-    built.foreach(_.unpersist(false))
-    res
-  }
-
-  /** Serve `newDir`'s contamination pair artifact, incrementally when
-    * absent. Pairs split by endpoint membership: (old-eval × old-train)
-    * is the old artifact; (batch-eval × all-train) and (old-eval ×
-    * batch-train) are two h60-keyed joins over the served index — the
-    * old corpus is touched only through its h60 artifact (a table scan),
-    * never its text. Per-pair (shared, n_eval) depend only on the two
-    * docs' shingle sets, so the union is row-identical to a from-scratch
-    * derivation over the appended corpus. */
-  private[graft] def refreshedContamPairs(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    val built = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val res = graft.sources.Artifacts.servePersisted(
-        spark, contamPairsArtifactName(spark, newDir)) {
-      val oldPairs = persistedContamPairs(spark, oldDir)
-      val oldH60 = persistOnce(persistedH60Shingles(spark, oldDir))
-      val batch = appendedBatch(spark, oldDir, newDir)
-      val bH60 = hashed60ShinglesOf(batch.select(col("doc_id"), col("text")))
-      built += oldH60; built += bH60
-      val bEval = bH60.where(col("doc_id") % 10 === 0)
-      val bTrain = bH60.where(col("doc_id") % 10 =!= 0)
-      val oldEval = oldH60.where(col("doc_id") % 10 === 0)
-      val oldTrain = oldH60.where(col("doc_id") % 10 =!= 0)
-      // counts gate the broadcast hint only (values are count-independent)
-      val nEvalB = batch.where(col("doc_id") % 10 === 0).count()
-      val nEvalOld = Tables.load(spark, oldDir, "documents")
-        .where(col("doc_id") % 10 === 0).count()
-      oldPairs
-        .unionAll(contaminationPairsHashed(oldTrain.unionAll(bTrain), bEval, nEvalB))
-        .unionAll(contaminationPairsHashed(bTrain, oldEval, nEvalOld))
-    }
-    built.foreach(_.unpersist(false))
-    res
-  }
-
-  /** Serve `newDir`'s excerpt-shingle artifact, incrementally when
-    * absent — per-DOC derivation over the batch's excerpt rows. */
-  private[graft] def refreshedExcerptShingles(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    persistedExcerptShingles(spark, oldDir)
-    appendRefreshed(spark, excerptShingleArtifactName(spark, newDir),
-        excerptShingleArtifactName(spark, oldDir)) { built =>
-      val shB = shinglesOf(excerptsOf(appendedBatch(spark, oldDir, newDir)))
-      built += shB
-      shB
-    }
-  }
-
-  /** Serve `newDir`'s augmented-signature artifact, incrementally when
-    * absent — per-DOC derivation (batch docs + batch excerpts), same
-    * union argument as [[refreshedDedupIndex]]. */
-  private[graft] def refreshedContSig(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    persistedContSig(spark, oldDir)
-    appendRefreshed(spark, contSigArtifactName(spark, newDir),
-        contSigArtifactName(spark, oldDir)) { built =>
-      val shB = shinglesOf(augmentedOf(appendedBatch(spark, oldDir, newDir)))
-      val sigB = lshSignatures(shB)
-      built += shB; built += sigB
-      sigB
-    }
-  }
-
-  /** Serve `newDir`'s containment-audit artifact, incrementally when
-    * absent (r17 verdict task 3). Pairs split by endpoint membership
-    * exactly like scored_: band collisions are per-pair (two docs share
-    * a band or not, independent of the rest of the corpus), and every
-    * scored value (n_a, n_b, shared, containment, jaccard,
-    * resemblance_missed) depends only on the two endpoint docs — so
-    * old×old pairs are the old artifact verbatim, and pairs touching
-    * the AUGMENTED batch (batch docs + batch excerpts) come from
-    * band-probing the old contsig_ index with batch signatures plus the
-    * batch self-join. The old corpus is touched only through its
-    * artifacts: signatures via contsig_, and verify-side shingles via
-    * shingles_ ∪ exsh_ semi-joined to collided docs — NO old text is
-    * read. */
-  private[graft] def refreshedContAudit(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    val built = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val res = graft.sources.Artifacts.servePersisted(
-        spark, contAuditArtifactName(spark, newDir)) {
-      val oldAud = persistedContainmentAudit(spark, oldDir)
-      val oldSig = persistedContSig(spark, oldDir)
-      val oldShT = persistedShingles(spark, oldDir)
-        .unionAll(persistedExcerptShingles(spark, oldDir))
-      val shB = shinglesOf(augmentedOf(appendedBatch(spark, oldDir, newDir)))
-      val sigB = lshSignatures(shB)
-      val candB = persistOnce(
-        bandCandidates(sigB, oldSig, canonical = false)
-          .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-            greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-          .unionAll(bandCandidates(sigB, sigB, canonical = true)))
-      built += shB; built += sigB; built += candB
-      val touched = candB.select(col("doc_a").as("doc_id"))
-        .unionAll(candB.select(col("doc_b").as("doc_id"))).distinct()
-      val sh = shB.unionAll(oldShT.join(touched, Seq("doc_id"), "left_semi"))
-      val sizes = sigB.select(col("doc_id"), col("n")).unionAll(
-        oldSig.select(col("doc_id"), col("n"))
-          .join(touched, Seq("doc_id"), "left_semi"))
-      oldAud.unionAll(scoreContainment(candB, sh, sizes))
-    }
-    built.foreach(_.unpersist(false))
-    res
-  }
+  /** The distinct endpoint doc_ids of a candidate pair set. */
+  private def endpoints(cand: DataFrame): DataFrame =
+    cand.select(col("doc_a").as("doc_id"))
+      .unionAll(cand.select(col("doc_b").as("doc_id"))).distinct()
 
   /** Refresh EVERY incrementally-refreshable served family for the
     * corpus at `newDir` (= `oldDir` plus an appended batch) — the
     * deployment's "corpus advanced one snapshot" entry point. Families
-    * build in dependency order (scored before edges so the edge build's
-    * threshold slice reads the refreshed scored table; index/shingles
-    * before labels so the label refresh probes served artifacts).
+    * refresh in registry (dependency) order, and only those whose read
+    * tables exist in both states ([[ArtifactFamily.refreshable]]).
     * Returns (family, table name) for each refreshed artifact; every
     * table is named with the NEW state's from-scratch key, so all later
     * consumers — this session or any cold JVM — serve transparently. */
-  /** Labels refresh RIDING the refreshed edges_ artifact: the scored_
-    * refresh already found and verified every pair touching the batch,
-    * so the label update is [[mergeNewEdgesIntoLabels]] over the
-    * batch-touching slice of edges(newDir) — no second band probe.
-    * ([[refreshedClusterLabels]] stays the direct-probe form for
-    * deployments that refresh labels WITHOUT maintaining a scored
-    * artifact.) */
-  private[graft] def refreshedClusterLabelsViaEdges(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, labelsArtifactName(spark, newDir)) {
-      val batchIds = appendedBatch(spark, oldDir, newDir).select(col("doc_id"))
-      val e = persistedLshEdges(spark, newDir)
-      val touching = e
-        .join(batchIds.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
-        .select(col("doc_a"), col("doc_b"))
-        .unionAll(e
-          .join(batchIds.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
-          .join(batchIds.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
-          .select(col("doc_a"), col("doc_b")))
-      mergeNewEdgesIntoLabels(clusterLabels(spark, oldDir), touching)
-    }
-
-  /** Serve `newDir`'s word-tf artifact, incrementally when absent —
-    * per-DOC derivation (r18: the wtf_ family t09/t12/t14 serve), same
-    * union argument as [[refreshedShingles]]. */
-  private[graft] def refreshedWordTf(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    TextAnalysis.persistedWordTf(spark, oldDir)
-    appendRefreshed(spark, TextAnalysis.wordTfArtifactName(spark, newDir),
-        TextAnalysis.wordTfArtifactName(spark, oldDir)) { _ =>
-      TextAnalysis.wordTfOf(
-        appendedBatch(spark, oldDir, newDir).select(col("doc_id"), col("text")))
-    }
-  }
-
-  /** Serve `newDir`'s bigram-tf artifact (t13's dbg_), incrementally. */
-  private[graft] def refreshedBigramTf(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    TextAnalysis.persistedBigramTf(spark, oldDir)
-    appendRefreshed(spark, TextAnalysis.bigramTfArtifactName(spark, newDir),
-        TextAnalysis.bigramTfArtifactName(spark, oldDir)) { _ =>
-      TextAnalysis.bigramTfOf(
-        appendedBatch(spark, oldDir, newDir).select(col("doc_id"), col("text")))
-    }
-  }
-
-  /** Serve `newDir`'s span-code artifact (d12's spans_), incrementally. */
-  private[graft] def refreshedSpanTf(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    persistedSpanTf(spark, oldDir)
-    appendRefreshed(spark, spanTfArtifactName(spark, newDir),
-        spanTfArtifactName(spark, oldDir)) { _ =>
-      spanTfOf(
-        appendedBatch(spark, oldDir, newDir).select(col("doc_id"), col("text")))
-    }
-  }
-
   def refreshArtifactsAfterAppend(spark: SparkSession,
-      oldDir: String, newDir: String): Seq[(String, String)] = {
-    refreshedShingles(spark, oldDir, newDir)
-    refreshedH60Shingles(spark, oldDir, newDir)
-    refreshedDedupIndex(spark, oldDir, newDir)
-    refreshedScoredCandidates(spark, oldDir, newDir)
-    persistedLshEdges(spark, newDir) // threshold slice of refreshed scored
-    refreshedContamPairs(spark, oldDir, newDir)
-    refreshedClusterLabelsViaEdges(spark, oldDir, newDir)
-    refreshedWordTf(spark, oldDir, newDir)
-    refreshedBigramTf(spark, oldDir, newDir)
-    refreshedSpanTf(spark, oldDir, newDir)
-    refreshedExcerptShingles(spark, oldDir, newDir)
-    refreshedContSig(spark, oldDir, newDir)
-    refreshedContAudit(spark, oldDir, newDir)
-    // profile families ride the ORDERS fact, not documents: refresh only
-    // when both states carry it (an unchanged orders table keys to the
-    // SAME artifact names — keyForTables — so the calls below then serve
-    // without building anything). A documents-only snapshot pair skips.
-    val ordersInBoth = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      Seq(oldDir, newDir).forall { d =>
-        val p = new org.apache.hadoop.fs.Path(d, "orders.parquet")
-        p.getFileSystem(conf).exists(p)
-      }
+      oldDir: String, newDir: String): Seq[(String, String)] =
+    ArtifactFamily.refreshable(spark, oldDir, newDir).map { f =>
+      f.refreshAfterAppend(spark, oldDir, newDir)
+      f.kind -> f.name(spark, newDir)
     }
-    val profileRefreshed =
-      if (!ordersInBoth) Seq.empty[(String, String)]
-      else {
-        CartAnalytics.refreshedProfile(spark, oldDir, newDir)
-        CartAnalytics.refreshedProfileStrings(spark, oldDir, newDir)
-        Seq(
-          "profhist" -> CartAnalytics.profHistArtifactName(spark, newDir),
-          "profile" -> CartAnalytics.profileArtifactName(spark, newDir),
-          "profstrh" -> CartAnalytics.profStrHistArtifactName(spark, newDir),
-          "profstr" -> CartAnalytics.profStrArtifactName(spark, newDir))
-      }
-    Seq(
-      "shingles" -> shingleArtifactName(spark, newDir),
-      "h60" -> h60ArtifactName(spark, newDir),
-      "dedupsig" -> dedupIndexArtifactName(spark, newDir),
-      "scored" -> scoredArtifactName(spark, newDir),
-      "edges" -> edgesArtifactName(spark, newDir),
-      "contam" -> contamPairsArtifactName(spark, newDir),
-      "labels" -> labelsArtifactName(spark, newDir),
-      "wtf" -> TextAnalysis.wordTfArtifactName(spark, newDir),
-      "dbg" -> TextAnalysis.bigramTfArtifactName(spark, newDir),
-      "spans" -> spanTfArtifactName(spark, newDir),
-      "exsh" -> excerptShingleArtifactName(spark, newDir),
-      "contsig" -> contSigArtifactName(spark, newDir),
-      "contaud" -> contAuditArtifactName(spark, newDir)) ++ profileRefreshed
-  }
 
   // ---------------------------------------------------------------------
   // d11 — source-overlap matrix: for every pair of sources, the number of
@@ -2560,7 +2265,7 @@ object Dedup {
   }
 
   def d11SourceOverlap(spark: SparkSession, dir: String): DataFrame =
-    sourceOverlapOfShingles(persistedShingles(spark, dir),
+    sourceOverlapOfShingles(Shingles.serve(spark, dir),
       Tables.load(spark, dir, "documents"))
 
   // ---------------------------------------------------------------------
@@ -2596,15 +2301,10 @@ object Dedup {
       .select(col("doc_id"), explode(expr(s"graft_ngram_h60(text, $SpanWidth)")).as("g"))
       .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
 
-  private[graft] def spanTfArtifactName(spark: SparkSession, dir: String): String =
-    "spans_" + graft.sources.Artifacts.keyFor(spark, dir, "spans")(
-      spanTfOf(Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))))
-
-  private[graft] def persistedSpanTf(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, spanTfArtifactName(spark, dir)) {
-      spanTfOf(graft.plans.Scale.spreadIfNarrow(
-        Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))))
-    }
+  private[graft] lazy val Spans: ArtifactFamily = new ArtifactFamily("spans", Docs,
+    defining = (spark, dir) => spanTfOf(docText(spark, dir)),
+    build = (spark, dir, _) => spanTfOf(graft.plans.Scale.spreadIfNarrow(docText(spark, dir))),
+    refresh = RowAppend((batch, _) => spanTfOf(batch.select(col("doc_id"), col("text")))))
 
   /** Boilerplate-span shares over a pre-built (doc_id, g, c) frame plus
     * the (doc_id, source) projection — the span document-frequency rides
@@ -2635,7 +2335,7 @@ object Dedup {
     boilerplateSpansOverTf(spanTfOf(docs), docs.select(col("doc_id"), col("source")))
 
   def d12BoilerplateSpans(spark: SparkSession, dir: String): DataFrame =
-    boilerplateSpansOverTf(persistedSpanTf(spark, dir),
+    boilerplateSpansOverTf(Spans.serve(spark, dir),
       Tables.load(spark, dir, "documents").select(col("doc_id"), col("source")))
 
   // ---------------------------------------------------------------------
@@ -2736,7 +2436,7 @@ object Dedup {
     sweepFromScored(scoredCandidatesOf(docs))
 
   def d14ThresholdSweep(spark: SparkSession, dir: String): DataFrame =
-    sweepFromScored(persistedScoredCandidates(spark, dir))
+    sweepFromScored(Scored.serve(spark, dir))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "d14_threshold_sweep" -> d14ThresholdSweep _,

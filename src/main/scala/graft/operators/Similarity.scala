@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.sources.ArtifactFamily
 import graft.operators.Dedup.{dotExpr, dotSql, normed, normedOf, normedSql}
 import graft.plans.Scale
 
@@ -193,11 +194,7 @@ object Similarity {
       .agg(avg(col("m"))).first().getDouble(0)
   }
 
-  /** Centroid table name for a corpus — keyed by the corpus dir AND the
-    * semantic hash of the (unrolled, lazy) training plan, so a changed K,
-    * iteration count, or seed rule can never serve a stale index. */
-  private[graft] def centroidsArtifactName(spark: SparkSession, dir: String): String =
-    "cents_" + graft.sources.Artifacts.keyFor(spark, dir, "cents")(computeTrainedCentroids(spark, dir))
+  private val Emb = Seq("embeddings")
 
   /** Trained IVF centroids, served as a PERSISTED CATALOG ARTIFACT: an
     * IVF deployment builds its index ONCE per corpus and serves every
@@ -205,15 +202,14 @@ object Similarity {
     * JVM — from the K-row parquet table (kilobytes; each consumer
     * broadcasts it). Results are identical to retraining because the
     * Lloyd loop is deterministic (exact integer-grid means, fixed
-    * iteration count) and doubles round-trip parquet bit-exactly. */
-  private[graft] def trainedCentroids(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, centroidsArtifactName(spark, dir))(
-      computeTrainedCentroids(spark, dir))
-
-  /** Test hook: drop the persisted index artifact (entry + files) to
-    * force a truly cold rebuild. */
-  private[graft] def clearIndexCache(spark: SparkSession, dir: String): Unit =
-    graft.sources.Artifacts.dropArtifact(spark, centroidsArtifactName(spark, dir))
+    * iteration count) and doubles round-trip parquet bit-exactly. Keyed
+    * by the corpus AND the (unrolled, lazy) training plan, so a changed
+    * K, iteration count, or seed rule can never serve a stale index.
+    * Not append-refreshed by the registry: [[refreshedCentroids]] is
+    * the drift-gated refresh. */
+  private[graft] lazy val Centroids: ArtifactFamily = new ArtifactFamily("cents", Emb,
+    defining = computeTrainedCentroids,
+    build = (spark, dir, _) => computeTrainedCentroids(spark, dir))
 
   private def computeTrainedCentroids(spark: SparkSession, dir: String): DataFrame =
     computeTrainedCentroidsOf(normed(spark, dir), ivfK(spark, dir))
@@ -274,7 +270,7 @@ object Similarity {
     * cell) — the shared assignment stage of s03 (cr = 1 only) and s05
     * (queries also probe cr ≤ NProbe). */
   private def cellRanked(spark: SparkSession, dir: String): DataFrame =
-    cellTop1Lit(normed(spark, dir), collectCents(trainedCentroids(spark, dir)))
+    cellTop1Lit(normed(spark, dir), collectCents(Centroids.serve(spark, dir)))
 
   /** The k-row centroid table fetched to the driver, sorted by cent_id —
     * the index is kilobytes, and inlining it as a literal makes cell
@@ -357,7 +353,7 @@ object Similarity {
 
   def s03AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
-    annIvf(emb, emb.where(col("vec_id") < QuerySet), trainedCentroids(spark, dir))
+    annIvf(emb, emb.where(col("vec_id") < QuerySet), Centroids.serve(spark, dir))
   }
 
   // ---------------------------------------------------------------------
@@ -397,7 +393,7 @@ object Similarity {
   def s05AnnIvfMultiprobe(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
     annIvfMultiprobe(emb, emb.where(col("vec_id") < QuerySet),
-      trainedCentroids(spark, dir))
+      Centroids.serve(spark, dir))
   }
 
   // ---------------------------------------------------------------------
@@ -440,7 +436,7 @@ object Similarity {
     // r14: the pair set is the PERSISTED edge artifact (shared with the
     // d08 label build), not a per-query re-derivation — s08's cost no
     // longer depends on which d-family caches happen to be resident
-    Dedup.persistedLshEdges(spark, dir)
+    Dedup.Edges.serve(spark, dir)
       .join(v.select(col("vec_id").as("doc_a"), col("embedding").as("ea"),
         col("nrm").as("na"), col("label").as("label_a")), Seq("doc_a"))
       .join(v.select(col("vec_id").as("doc_b"), col("embedding").as("eb"),
@@ -538,12 +534,12 @@ object Similarity {
   // their bucket yield no edges — the documented LSH recall trade, same
   // as s02 (production would union multiple hash tables to close it).
   // The finished edge set is served as a persisted catalog artifact
-  // ([[knnGraph]]): s09 and s11 are two consumers of one build.
+  // ([[KnnGraph]]): s09 and s11 are two consumers of one build.
   // ---------------------------------------------------------------------
   val KnnK = 3
 
   /** The ranked kNN edge rows (no global order) — the artifact body the
-    * bucket-equi build produces and [[knnGraph]] persists. */
+    * bucket-equi build produces and [[KnnGraph]] persists. */
   private[graft] def knnGraphRanked(spark: SparkSession, dir: String): DataFrame = {
     val v = normed(spark, dir).withColumn("bucket", bucketCol("embedding"))
     val q = v.select(col("vec_id"), col("embedding").as("qe"),
@@ -582,21 +578,12 @@ object Similarity {
     * scheme can never serve stale edges. Columns round-trip exactly
     * (ids, a label string, and a round(·,6) double — parquet stores the
     * double bit-identically), so serve ≡ rebuild row-for-row. */
-  private[graft] def knnArtifactName(spark: SparkSession, dir: String): String =
-    "knng_" + graft.sources.Artifacts.keyFor(spark, dir, "knng")(knnGraphRanked(spark, dir))
-
-  private[graft] def knnGraph(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, knnArtifactName(spark, dir)) {
-      knnGraphRanked(spark, dir)
-    }
-
-  /** Test hook: drop the persisted edge artifact (entry + files) to
-    * force a truly cold rebuild. */
-  private[graft] def clearKnnGraphCache(spark: SparkSession, dir: String): Unit =
-    graft.sources.Artifacts.dropArtifact(spark, knnArtifactName(spark, dir))
+  private[graft] lazy val KnnGraph: ArtifactFamily = new ArtifactFamily("knng", Emb,
+    defining = knnGraphRanked,
+    build = (spark, dir, _) => knnGraphRanked(spark, dir))
 
   def s09KnnGraph(spark: SparkSession, dir: String): DataFrame =
-    knnGraph(spark, dir)
+    KnnGraph.serve(spark, dir)
       .orderBy(col("vec_id").asc, col("rank").asc)
 
   // ---------------------------------------------------------------------
@@ -637,38 +624,26 @@ object Similarity {
   // rounds over only the docs that touch an edge. The DuckDB oracle
   // rebuilds the identical graph and clusters it with a recursive CTE.
   // ---------------------------------------------------------------------
-  /** Component-label table name — keyed like d08's labels: by the
-    * corpus and the semantic hash of the EDGE derivation (the loop
+  /** Component labels over the kNN graph — keyed like d08's labels: by
+    * the corpus and the semantic hash of the EDGE derivation (the loop
     * itself is imperative and has no single defining plan), so a
     * changed K / bucket rule / threshold can never serve stale
-    * components. */
-  private[graft] def knnLabelsArtifactName(spark: SparkSession, dir: String): String =
-    "knnl_" + graft.sources.Artifacts.keyFor(spark, dir, "knnl")(knnGraphRanked(spark, dir))
+    * components. Built from the served [[KnnGraph]] (the d08 pattern):
+    * a second components run, or one after an s09 in the same session,
+    * starts from a parquet scan instead of re-paying the bucketed pair
+    * sweep. */
+  private[graft] lazy val KnnLabels: ArtifactFamily = new ArtifactFamily("knnl", Emb,
+    defining = knnGraphRanked,
+    build = (spark, dir, _) => Dedup.minLabelComponents(KnnGraph.serve(spark, dir)
+      .select(least(col("vec_id"), col("neighbor_id")).as("doc_a"),
+        greatest(col("vec_id"), col("neighbor_id")).as("doc_b"))
+      .distinct()))
 
-  /** Test hook: drop the persisted component labels. */
-  private[graft] def clearKnnLabelsCache(spark: SparkSession, dir: String): Unit =
-    graft.sources.Artifacts.dropArtifact(spark, knnLabelsArtifactName(spark, dir))
-
-  def s11KnnComponents(spark: SparkSession, dir: String): DataFrame = {
-    // both stages are served index state (the d08 pattern): the edge
-    // sweep comes from the knnGraph artifact — a second components run,
-    // or one after an s09 in the same session, starts from a parquet
-    // scan instead of re-paying the bucketed pair sweep — and the
-    // propagation loop's labels persist under their own key, so every
-    // later consumer pays one table scan + the cluster aggregation.
-    val labels = graft.sources.Artifacts.servePersisted(
-        spark, knnLabelsArtifactName(spark, dir)) {
-      val edges = knnGraph(spark, dir)
-        .select(least(col("vec_id"), col("neighbor_id")).as("doc_a"),
-          greatest(col("vec_id"), col("neighbor_id")).as("doc_b"))
-        .distinct()
-      Dedup.minLabelComponents(edges)
-    }
-    Dedup.clusterOutput(labels)
+  def s11KnnComponents(spark: SparkSession, dir: String): DataFrame =
+    Dedup.clusterOutput(KnnLabels.serve(spark, dir))
       .select(col("doc_id").as("vec_id"), col("cluster_id"),
         col("cluster_size"), col("is_keeper"))
       .orderBy(col("cluster_id").asc, col("vec_id").asc)
-  }
 
   // ---------------------------------------------------------------------
   // s12 — SemDeDup semantic pruning: within each trained IVF cell, a
@@ -690,7 +665,7 @@ object Similarity {
 
   /** s12 SERVES the persisted verdict artifact (the s08/edges pattern,
     * r15): the Σ cell² sweep is index state — it runs once per corpus
-    * via [[semVerdicts]] and every later read (s12 itself, s13, the
+    * via [[SemVerdicts]] and every later read (s12 itself, s13, the
     * next JVM) pays one table scan. Measured at sf10full: the sweep
     * burns ~190 s of executor CPU per derivation (ProbeStages, PERF
     * 15d); serving drops s12's steady state from 22.8 s to a scan.
@@ -700,11 +675,11 @@ object Similarity {
     * serve path reads `semv_*` with no pair machinery; the derivation
     * body stays cell-equi, never cartesian. */
   def s12Semdedup(spark: SparkSession, dir: String): DataFrame =
-    semVerdicts(spark, dir)
+    SemVerdicts.serve(spark, dir)
       .select(col("vec_id"), col("cell"), col("status"), col("kept_by"))
       .orderBy(col("vec_id").asc)
 
-  /** The SemDeDup DERIVATION body — what [[semVerdicts]] materializes
+  /** The SemDeDup DERIVATION body — what [[SemVerdicts]] materializes
     * once per corpus state. */
   private[graft] def s12Derive(spark: SparkSession, dir: String): DataFrame =
     semDedupFromAssigned(Dedup.persistOnce(cellRanked(spark, dir)
@@ -780,21 +755,12 @@ object Similarity {
     * the defining plan, so a changed tau / K / centroid rule can never
     * serve stale verdicts. Columns are exact (ids + a status string — no
     * floats), so the parquet round-trip is bit-identical to recompute. */
-  private[graft] def semVerdictsArtifactName(spark: SparkSession, dir: String): String =
-    "semv_" + graft.sources.Artifacts.keyFor(spark, dir, "semv")(s12Derive(spark, dir))
-
-  private[graft] def semVerdicts(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, semVerdictsArtifactName(spark, dir)) {
-      s12Derive(spark, dir)
-    }
-
-  /** Test hook: drop the persisted verdict artifact (entry + files) to
-    * force a truly cold rebuild. */
-  private[graft] def clearSemVerdictsCache(spark: SparkSession, dir: String): Unit =
-    graft.sources.Artifacts.dropArtifact(spark, semVerdictsArtifactName(spark, dir))
+  private[graft] lazy val SemVerdicts: ArtifactFamily = new ArtifactFamily("semv", Emb,
+    defining = s12Derive,
+    build = (spark, dir, _) => s12Derive(spark, dir))
 
   def s13SemanticApply(spark: SparkSession, dir: String): DataFrame = {
-    val kept = semVerdicts(spark, dir).where(col("status") === "kept")
+    val kept = SemVerdicts.serve(spark, dir).where(col("status") === "kept")
       .select(col("vec_id"), col("cell"))
     kept.join(graft.Tables.load(spark, dir, "embeddings")
         .select(col("vec_id"), col("label")), Seq("vec_id"))
@@ -876,10 +842,9 @@ object Similarity {
     val batch = neu.join(old.select(col("vec_id")), Seq("vec_id"), "left_anti")
     val worst = centroidDrift(old, batch).agg(max(col("drift"))).first()
     val rebuild = worst.isNullAt(0) || worst.getDouble(0) > maxDrift
-    val served = graft.sources.Artifacts.servePersisted(
-      spark, centroidsArtifactName(spark, newDir))(
+    val served = Centroids.serveWith(spark, newDir)(_ =>
       if (rebuild) computeTrainedCentroids(spark, newDir)
-      else trainedCentroids(spark, oldDir))
+      else Centroids.serve(spark, oldDir))
     (served, rebuild)
   }
 
@@ -903,7 +868,7 @@ object Similarity {
   private def ddotSql(a: String, b: String): String =
     s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
 
-  /** DuckDB mirror of [[trainedCentroids]]: the Lloyd loop unrolled
+  /** DuckDB mirror of [[Centroids]]: the Lloyd loop unrolled
     * CTE-for-CTE (seed c0 → assign a_i → exact-grid means m_i → c_i),
     * ending in `cents(cent_id, ce, cn)`. Shared verbatim by the s03 and
     * s05 oracles so the two indexes cannot train apart. The VARCHAR

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.SharedHash._
+import graft.sources.ArtifactFamily
+import graft.sources.ArtifactFamily.RowAppend
 
 /** Text-analysis operators over `documents`: language ID, quality
   * scoring, token counting, fingerprinting.
@@ -320,21 +322,17 @@ object TextAnalysis {
       .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("word"))
       .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
 
-  private[graft] def wordTfArtifactName(spark: SparkSession, dir: String): String =
-    "wtf_" + graft.sources.Artifacts.keyFor(spark, dir, "wtf")(
-      wordTfOf(Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))))
-
   /** The (doc_id, word, tf) frame as a PERSISTED CATALOG ARTIFACT — the
     * h60 discipline applied to the text family: t09/t12/t14 (and p01/p05
     * through t12's rules) each re-derived the identical explode +
     * (doc_id, word) shuffle from raw text per query. Values are exact
     * (long counts, verbatim word strings) → serve ≡ recompute; the
-    * DuckDB oracle still re-derives every consumer from raw text. */
-  private[graft] def persistedWordTf(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, wordTfArtifactName(spark, dir)) {
-      wordTfOf(graft.plans.Scale.spreadIfNarrow(
-        Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))))
-    }
+    * DuckDB oracle still re-derives every consumer from raw text.
+    * Per-DOC rows → file-level append refresh. */
+  private[graft] lazy val WordTf: ArtifactFamily = new ArtifactFamily("wtf", Dedup.Docs,
+    defining = (spark, dir) => wordTfOf(Dedup.docText(spark, dir)),
+    build = (spark, dir, _) => wordTfOf(graft.plans.Scale.spreadIfNarrow(Dedup.docText(spark, dir))),
+    refresh = RowAppend((batch, _) => wordTfOf(batch.select(col("doc_id"), col("text")))))
 
   /** Distinctive terms (tf/df) over a pre-built tf frame. The corpus df
     * rides a `count() OVER (PARTITION BY word)` window on the SAME
@@ -357,7 +355,7 @@ object TextAnalysis {
     distinctiveTermsOverTf(wordTfOf(docs))
 
   def t09DistinctiveTerms(spark: SparkSession, dir: String): DataFrame =
-    distinctiveTermsOverTf(persistedWordTf(spark, dir))
+    distinctiveTermsOverTf(WordTf.serve(spark, dir))
 
   // ---------------------------------------------------------------------
   // t10 — sketch cardinality: per-source distinct-document counts via
@@ -532,7 +530,7 @@ object TextAnalysis {
   def t12QualityFilter(spark: SparkSession, dir: String): DataFrame =
     qualityFilterOverTf(
       graft.operators.Dedup.persistOnce(
-        persistedWordTf(spark, dir).withColumnRenamed("tf", "c")),
+        WordTf.serve(spark, dir).withColumnRenamed("tf", "c")),
       Tables.load(spark, dir, "documents").select(col("doc_id"), col("lang")))
 
   // ---------------------------------------------------------------------
@@ -560,15 +558,10 @@ object TextAnalysis {
           |ELSE array() END""".stripMargin)).as("bg"))
       .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("c"))
 
-  private[graft] def bigramTfArtifactName(spark: SparkSession, dir: String): String =
-    "dbg_" + graft.sources.Artifacts.keyFor(spark, dir, "dbg")(
-      bigramTfOf(Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))))
-
-  private[graft] def persistedBigramTf(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.servePersisted(spark, bigramTfArtifactName(spark, dir)) {
-      bigramTfOf(graft.plans.Scale.spreadIfNarrow(
-        Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))))
-    }
+  private[graft] lazy val BigramTf: ArtifactFamily = new ArtifactFamily("dbg", Dedup.Docs,
+    defining = (spark, dir) => bigramTfOf(Dedup.docText(spark, dir)),
+    build = (spark, dir, _) => bigramTfOf(graft.plans.Scale.spreadIfNarrow(Dedup.docText(spark, dir))),
+    refresh = RowAppend((batch, _) => bigramTfOf(batch.select(col("doc_id"), col("text")))))
 
   /** Bigram-LM novelty over a pre-built (doc_id, bg, c) frame plus the
     * (doc_id, lang) projection. Restructured r18 (guide §2.4): the train
@@ -602,7 +595,7 @@ object TextAnalysis {
     bigramNoveltyOverDbg(bigramTfOf(docs), docs.select(col("doc_id"), col("lang")))
 
   def t13BigramNovelty(spark: SparkSession, dir: String): DataFrame =
-    bigramNoveltyOverDbg(persistedBigramTf(spark, dir),
+    bigramNoveltyOverDbg(BigramTf.serve(spark, dir),
       Tables.load(spark, dir, "documents").select(col("doc_id"), col("lang")))
 
   // ---------------------------------------------------------------------
@@ -639,7 +632,7 @@ object TextAnalysis {
     rarityScoreOverTf(wordTfOf(docs), docs.select(col("doc_id"), col("lang")))
 
   def t14RarityScore(spark: SparkSession, dir: String): DataFrame =
-    rarityScoreOverTf(persistedWordTf(spark, dir),
+    rarityScoreOverTf(WordTf.serve(spark, dir),
       Tables.load(spark, dir, "documents").select(col("doc_id"), col("lang")))
 
   // ---------------------------------------------------------------------

@@ -299,13 +299,7 @@ object Artifacts {
     // re-probe per (dir, JVM), nothing at steady state.
     if (!dirFpSeen.put(dir, fp).contains(fp))
       graft.plans.Scale.clearSpreadMemoUnder(dir)
-    keyMemo.get((kind, dir)) match {
-      case Some((oldFp, k)) if oldFp == fp => k
-      case _ =>
-        val k = keyOf(dir, fp, defining)
-        keyMemo.put((kind, dir), (fp, k))
-        k
-    }
+    memoKey(kind, dir, fp)(defining)
   }
 
   /** [[keyFor]] scoped to the TABLES the derivation actually reads
@@ -322,8 +316,11 @@ object Artifacts {
     * Scale.spreadIfNarrow (fact scans are multi-row-group parquet);
     * derivations that do must stay on [[keyFor]]. */
   def keyForTables(spark: SparkSession, dir: String, kind: String,
-      tables: Seq[String])(defining: => DataFrame): String = {
-    val fp = tablesFingerprint(spark, dir, tables)
+      tables: Seq[String])(defining: => DataFrame): String =
+    memoKey(kind, dir, tablesFingerprint(spark, dir, tables))(defining)
+
+  /** The (kind, dir) memo lookup shared by [[keyFor]] and [[keyForTables]]. */
+  private def memoKey(kind: String, dir: String, fp: String)(defining: => DataFrame): String =
     keyMemo.get((kind, dir)) match {
       case Some((oldFp, k)) if oldFp == fp => k
       case _ =>
@@ -331,42 +328,13 @@ object Artifacts {
         keyMemo.put((kind, dir), (fp, k))
         k
     }
-  }
 
   /** [[corpusFingerprint]] restricted to `dir/<table>.parquet` entries
     * (each a single file or a directory of part files). Missing tables
     * contribute nothing — the absence is visible because the fingerprint
     * then matches no state that had the table. */
-  def tablesFingerprint(spark: SparkSession, dir: String, tables: Seq[String]): String = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    def walk(d: Path): Unit =
-      fs.listStatus(d).sortBy(_.getPath.getName).foreach { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (!st.getPath.getName.startsWith(".")) {
-          val path = st.getPath.toUri.getPath
-          val dig = fileDigestMemo.getOrElseUpdate(
-            (path, st.getLen, st.getModificationTime),
-            headTailDigest(fs, st.getPath, st.getLen))
-          entries += s"$path|${st.getLen}|$dig"
-        }
-      }
-    tables.sorted.foreach { t =>
-      val p = new Path(dir, s"$t.parquet")
-      if (fs.exists(p)) {
-        if (fs.getFileStatus(p).isDirectory) walk(p)
-        else {
-          val st = fs.getFileStatus(p)
-          val path = st.getPath.toUri.getPath
-          val dig = fileDigestMemo.getOrElseUpdate(
-            (path, st.getLen, st.getModificationTime),
-            headTailDigest(fs, st.getPath, st.getLen))
-          entries += s"$path|${st.getLen}|$dig"
-        }
-      }
-    }
-    md5hex(entries.mkString("\n"))
-  }
+  def tablesFingerprint(spark: SparkSession, dir: String, tables: Seq[String]): String =
+    fingerprintOf(spark, tables.sorted.map(t => new Path(dir, s"$t.parquet")))
 
   /** dir → last fingerprint any keyFor observed (latest state only). */
   private val dirFpSeen =
@@ -407,13 +375,19 @@ object Artifacts {
     * content keys make those memos survive an in-place same-bytes
     * rewrite too — which is correct, where the mtime key's forced miss
     * was merely safe. */
-  def corpusFingerprint(spark: SparkSession, dir: String): String = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def corpusFingerprint(spark: SparkSession, dir: String): String =
+    fingerprintOf(spark, Seq(new Path(dir)))
+
+  /** md5 over the `path|length|content digest` lines of every file under
+    * `roots` (each a file or a directory walked recursively in name
+    * order); missing roots contribute nothing. */
+  private def fingerprintOf(spark: SparkSession, roots: Seq[Path]): String = {
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    def walk(d: Path): Unit =
-      fs.listStatus(d).sortBy(_.getPath.getName).foreach { st =>
-        if (st.isDirectory) walk(st.getPath)
+    roots.foreach { root =>
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def visit(st: org.apache.hadoop.fs.FileStatus): Unit =
+        if (st.isDirectory)
+          fs.listStatus(st.getPath).sortBy(_.getPath.getName).foreach(visit)
         else if (!st.getPath.getName.startsWith(".")) { // ignore CRC sidecars
           val path = st.getPath.toUri.getPath
           val dig = fileDigestMemo.getOrElseUpdate(
@@ -421,8 +395,8 @@ object Artifacts {
             headTailDigest(fs, st.getPath, st.getLen))
           entries += s"$path|${st.getLen}|$dig"
         }
-      }
-    if (fs.exists(p)) walk(p)
+      if (fs.exists(root)) visit(fs.getFileStatus(root))
+    }
     md5hex(entries.mkString("\n"))
   }
 

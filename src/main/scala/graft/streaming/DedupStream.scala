@@ -34,8 +34,8 @@ object DedupStream {
 
   /** Start the verdict stream. `docs` is a STREAMING frame with at least
     * (doc_id, text); `existingIndex`/`existingShingles` are the corpus's
-    * persisted artifacts ([[Dedup.persistedDedupIndex]] /
-    * [[Dedup.persistedShingles]] in a deployment). Writes under
+    * persisted artifacts ([[Dedup.DedupSig]] /
+    * [[Dedup.Shingles]] in a deployment). Writes under
     * `baseDir`: `verdicts/` (append sink), `stream_index/` and
     * `stream_shingles/` (the growing stream-side existing state). */
   def verdictStream(docs: DataFrame, existingIndex: DataFrame,

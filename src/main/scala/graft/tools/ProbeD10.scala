@@ -19,10 +19,10 @@ object ProbeD10 {
     // artifact warm-up (first d10 call builds + memoizes)
     Dedup.d10IncrementalDedup(spark, dir).count()
     time("artifact index scan") {
-      Dedup.persistedDedupIndex(spark, dir).count()
+      Dedup.DedupSig.serve(spark, dir).count()
     }
     time("artifact shingle scan") {
-      Dedup.persistedShingles(spark, dir).count()
+      Dedup.Shingles.serve(spark, dir).count()
     }
     val docs = graft.Tables.load(spark, dir, "documents")
     time("batch shingles") {

@@ -24,7 +24,7 @@ object ProbeD18Stages {
     }
     (1 to 2).foreach { pass =>
       println(s"=== pass $pass ===")
-      val h60 = D.persistOnce(D.persistedH60Shingles(spark, dir))
+      val h60 = D.persistOnce(D.H60.serve(spark, dir))
       cpuOf("h60 materialize")(h60)
       val trainHs = h60.where(col("doc_id") % 10 =!= 0)
       val evalHs = h60.where(col("doc_id") % 10 === 0)

@@ -21,7 +21,7 @@ object ProbeE15 {
       val docs = Tables.load(spark, dir, "documents")
       val incoming = docs.where(col("doc_id") % D.IncrementalMod === 0)
         .select(col("doc_id"), col("text"))
-      val idx = D.persistedDedupIndex(spark, dir)
+      val idx = D.DedupSig.serve(spark, dir)
       val shInc = D.shinglesOf(incoming)
       val sigInc = D.lshSignatures(shInc)
       val nInc = incoming.count()

@@ -1,27 +1,33 @@
 package graft.tools
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.{BenchConsume, CpuMeter, Session, Tables}
-import graft.operators.Dedup
+import graft.sources.{ArtifactFamily, Artifacts}
 
-/** r17 (verdict task 1 "Done" criterion): measure the incremental
-  * artifact refresh against a full from-scratch rebuild on an APPENDED
-  * corpus, and prove digest equality family by family.
+/** Measure the incremental artifact refresh against a full from-scratch
+  * rebuild on an APPENDED corpus, and prove digest equality for every
+  * refreshable family of the registry ([[ArtifactFamily.all]]).
   *
   * Usage: runMain graft.tools.ProbeRefresh <oldDir> <newDir> [batchFrac]
   *
-  * `newDir` is created on first run as oldDir's documents plus a
-  * synthesized batch (default 1% of the corpus): half near-dup mutations
-  * of sampled old docs — so band collisions, contamination pairs, and
-  * cluster merges actually happen — and half fresh text. Then:
-  *   phase old:     ensure oldDir's artifact families exist (timed;
-  *                  ~0 when a prebuild leg already built them)
+  * `newDir` is created on first run as oldDir's documents and orders
+  * plus a synthesized batch of each (default 1% of the table):
+  *   documents: half near-dup mutations of sampled old docs — so band
+  *              collisions, contamination pairs, and cluster merges
+  *              actually happen — and half fresh text;
+  *   orders:    fresh o_orderkeys, half carrying duplicate value tuples
+  *              (multiset merge of existing histogram rows) and half
+  *              shifted price/custkey values (new histogram rows).
+  * Then:
+  *   phase old:     ensure oldDir's families exist (timed; ~0 when a
+  *                  prebuild leg already built them)
   *   phase refresh: refresh each family incrementally onto newDir
   *   phase scratch: drop newDir's artifacts, rebuild each from scratch
   * and print one JSON line with per-family wall/CPU for both phases and
-  * a per-family digest comparison (BenchConsume xor-fold — order-
-  * insensitive, all columns).
+  * a per-family digest comparison (BenchConsume xor-fold over the
+  * family's canonical rows — order-insensitive, all columns).
   */
 object ProbeRefresh {
   def main(args: Array[String]): Unit = {
@@ -30,164 +36,95 @@ object ProbeRefresh {
     val batchFrac = if (args.length > 2) args(2).toDouble else 0.01
     val spark = Session.get("graft-probe-refresh")
     CpuMeter.install(spark)
-
-    // ---- corpus: newDir = oldDir + synthesized batch ------------------
-    val newDocsPath = s"$newDir/documents.parquet"
-    val fs = new org.apache.hadoop.fs.Path(newDocsPath)
+    val fs = new org.apache.hadoop.fs.Path(newDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(newDocsPath))) {
-      val docs = Tables.load(spark, oldDir, "documents")
-      val maxId = docs.agg(max(col("doc_id"))).first().getLong(0)
-      val nBatch = math.max(1L, (docs.count() * batchFrac).toLong)
-      val sampled = docs.orderBy(col("doc_id")).limit(nBatch.toInt)
-      val batch = sampled.select(
-        (col("doc_id") + maxId + 1L).as("doc_id"),
-        when((col("doc_id") + maxId + 1L) % 2 === 0,
-            concat_ws(" ", slice(split(col("text"), "\\s+"), 2, Int.MaxValue)))
-          .otherwise(concat(lit("fresh append r17 "), col("text"))).as("text"),
+
+    // ---- corpus: newDir = oldDir + synthesized batches ----------------
+    def appendBatch(table: String, key: String, cols: Column*)(
+        batchOf: (DataFrame, Long) => DataFrame): Unit = {
+      val (src, dst) = (s"$oldDir/$table.parquet", s"$newDir/$table.parquet")
+      if (fs.exists(new org.apache.hadoop.fs.Path(src)) &&
+          !fs.exists(new org.apache.hadoop.fs.Path(dst))) {
+        val old = Tables.load(spark, oldDir, table)
+        val maxId = old.agg(max(col(key))).first().getLong(0)
+        val nBatch = math.max(1L, (old.count() * batchFrac).toLong)
+        val sampled = old.orderBy(col(key)).limit(nBatch.toInt)
+        old.select(cols: _*).unionByName(batchOf(sampled, maxId))
+          .write.mode("overwrite").parquet(dst)
+        System.err.println(s"[probe-refresh] wrote $dst (+$nBatch batch rows)")
+      }
+    }
+    appendBatch("documents", "doc_id", col("doc_id"), col("text"), col("lang"),
+        col("source"), col("n_chars").cast("long").as("n_chars")) { (docs, maxId) =>
+      val id = col("doc_id") + maxId + 1L
+      docs.select(id.as("doc_id"),
+        when(id % 2 === 0, concat_ws(" ", slice(split(col("text"), "\\s+"), 2, Int.MaxValue)))
+          .otherwise(concat(lit("fresh append "), col("text"))).as("text"),
         col("lang"), col("source"))
         .withColumn("n_chars", length(col("text")).cast("long"))
-      docs.select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
-        .unionByName(batch)
-        .write.mode("overwrite").parquet(newDocsPath)
-      System.err.println(s"[probe-refresh] wrote $newDocsPath (+$nBatch batch docs)")
+    }
+    appendBatch("orders", "o_orderkey", col("*")) { (ord, maxId) =>
+      val id = col("o_orderkey") + maxId + 1L
+      ord.select(id.as("o_orderkey"),
+        when(id % 2 === 0, col("o_custkey") + 7L).otherwise(col("o_custkey")).as("o_custkey"),
+        col("o_orderstatus"),
+        when(id % 2 === 0, col("o_totalprice") + 0.17)
+          .otherwise(col("o_totalprice")).as("o_totalprice"),
+        col("o_orderdate"), col("o_orderpriority"))
     }
 
-    def timed[A](body: => A): (A, Double, Double) = {
+    def timed(body: => Unit): (Double, Double) = {
       val t0 = System.nanoTime()
-      val (a, cpu, _) = CpuMeter.measure(spark)(body)
-      (a, (System.nanoTime() - t0) / 1e9, cpu)
+      val (_, cpu, _) = CpuMeter.measure(spark)(body)
+      ((System.nanoTime() - t0) / 1e9, cpu)
     }
+    val fams = ArtifactFamily.refreshable(spark, oldDir, newDir)
+    def phase(label: String)(step: ArtifactFamily => Unit): Map[String, (Double, Double)] = {
+      val times = fams.map { f =>
+        val (w, c) = timed(step(f))
+        System.err.println(f"[probe-refresh] $label ${f.kind}: $w%.1f s / $c%.1f cpu-s")
+        f.kind -> (w, c)
+      }.toMap
+      spark.catalog.clearCache()
+      times
+    }
+    def digests(): Map[String, (Long, Long)] = fams.map { f =>
+      f.kind -> BenchConsume.consume(
+        f.canonical(spark.table(s"`${Artifacts.Db}`.`${f.name(spark, newDir)}`")))
+    }.toMap
 
     // ---- phase old: the deployment precondition -----------------------
-    val (_, oldWall, oldCpu) = timed {
-      Dedup.persistedShingles(spark, oldDir)
-      Dedup.persistedH60Shingles(spark, oldDir)
-      Dedup.persistedDedupIndex(spark, oldDir)
-      Dedup.persistedScoredCandidates(spark, oldDir)
-      Dedup.persistedLshEdges(spark, oldDir)
-      Dedup.persistedContamPairs(spark, oldDir)
-      Dedup.clusterLabels(spark, oldDir)
-      // r18 families
-      graft.operators.TextAnalysis.persistedWordTf(spark, oldDir)
-      graft.operators.TextAnalysis.persistedBigramTf(spark, oldDir)
-      Dedup.persistedSpanTf(spark, oldDir)
-      Dedup.persistedExcerptShingles(spark, oldDir)
-      Dedup.persistedContSig(spark, oldDir)
-      Dedup.persistedContainmentAudit(spark, oldDir)
-    }
+    val (oldWall, oldCpu) = timed(fams.foreach(_.serve(spark, oldDir)))
     spark.catalog.clearCache()
-
     // a prior run (or its scratch phase) may have left newDir artifacts
     // behind — drop them so the refresh phase measures a real build
-    Seq(Dedup.shingleArtifactName(spark, newDir),
-      Dedup.h60ArtifactName(spark, newDir),
-      Dedup.dedupIndexArtifactName(spark, newDir),
-      Dedup.scoredArtifactName(spark, newDir),
-      Dedup.edgesArtifactName(spark, newDir),
-      Dedup.contamPairsArtifactName(spark, newDir),
-      Dedup.labelsArtifactName(spark, newDir),
-      graft.operators.TextAnalysis.wordTfArtifactName(spark, newDir),
-      graft.operators.TextAnalysis.bigramTfArtifactName(spark, newDir),
-      Dedup.spanTfArtifactName(spark, newDir),
-      Dedup.excerptShingleArtifactName(spark, newDir),
-      Dedup.contSigArtifactName(spark, newDir),
-      Dedup.contAuditArtifactName(spark, newDir))
-      .foreach(t => graft.sources.Artifacts.dropArtifact(spark, t))
+    fams.foreach(_.drop(spark, newDir))
 
-    // ---- phase refresh: incremental, per family -----------------------
-    val refreshSteps: Seq[(String, () => Unit)] = Seq(
-      "shingles" -> (() => { Dedup.refreshedShingles(spark, oldDir, newDir); () }),
-      "h60" -> (() => { Dedup.refreshedH60Shingles(spark, oldDir, newDir); () }),
-      "dedupsig" -> (() => { Dedup.refreshedDedupIndex(spark, oldDir, newDir); () }),
-      "scored" -> (() => { Dedup.refreshedScoredCandidates(spark, oldDir, newDir); () }),
-      "edges" -> (() => { Dedup.persistedLshEdges(spark, newDir); () }),
-      "contam" -> (() => { Dedup.refreshedContamPairs(spark, oldDir, newDir); () }),
-      "labels" -> (() => { Dedup.refreshedClusterLabelsViaEdges(spark, oldDir, newDir); () }),
-      "wtf" -> (() => { Dedup.refreshedWordTf(spark, oldDir, newDir); () }),
-      "dbg" -> (() => { Dedup.refreshedBigramTf(spark, oldDir, newDir); () }),
-      "spans" -> (() => { Dedup.refreshedSpanTf(spark, oldDir, newDir); () }),
-      "exsh" -> (() => { Dedup.refreshedExcerptShingles(spark, oldDir, newDir); () }),
-      "contsig" -> (() => { Dedup.refreshedContSig(spark, oldDir, newDir); () }),
-      "contaud" -> (() => { Dedup.refreshedContAudit(spark, oldDir, newDir); () }))
-    val refreshTimes = refreshSteps.map { case (fam, step) =>
-      val (_, w, c) = timed(step())
-      System.err.println(f"[probe-refresh] refresh $fam: $w%.1f s / $c%.1f cpu-s")
-      fam -> (w, c)
-    }
-    spark.catalog.clearCache()
-
-    val tables: Seq[(String, String)] = Seq(
-      "shingles" -> Dedup.shingleArtifactName(spark, newDir),
-      "h60" -> Dedup.h60ArtifactName(spark, newDir),
-      "dedupsig" -> Dedup.dedupIndexArtifactName(spark, newDir),
-      "scored" -> Dedup.scoredArtifactName(spark, newDir),
-      "edges" -> Dedup.edgesArtifactName(spark, newDir),
-      "contam" -> Dedup.contamPairsArtifactName(spark, newDir),
-      "labels" -> Dedup.labelsArtifactName(spark, newDir),
-      "wtf" -> graft.operators.TextAnalysis.wordTfArtifactName(spark, newDir),
-      "dbg" -> graft.operators.TextAnalysis.bigramTfArtifactName(spark, newDir),
-      "spans" -> Dedup.spanTfArtifactName(spark, newDir),
-      "exsh" -> Dedup.excerptShingleArtifactName(spark, newDir),
-      "contsig" -> Dedup.contSigArtifactName(spark, newDir),
-      "contaud" -> Dedup.contAuditArtifactName(spark, newDir))
-    def digests(): Map[String, (Long, Long)] = tables.map { case (fam, tbl) =>
-      fam -> BenchConsume.consume(
-        spark.table(s"`${graft.sources.Artifacts.Db}`.`$tbl`"))
-    }.toMap
+    // ---- phase refresh, then scratch: drop + ordinary cold build ------
+    val refreshTimes = phase("refresh")(_.refreshAfterAppend(spark, oldDir, newDir))
     val refreshDigests = digests()
-
-    // ---- phase scratch: drop + ordinary cold-build path ---------------
-    tables.foreach { case (_, tbl) =>
-      graft.sources.Artifacts.dropArtifact(spark, tbl)
-    }
+    fams.foreach(_.drop(spark, newDir))
     spark.catalog.clearCache()
-    val scratchSteps: Seq[(String, () => Unit)] = Seq(
-      "shingles" -> (() => { Dedup.persistedShingles(spark, newDir); () }),
-      "h60" -> (() => { Dedup.persistedH60Shingles(spark, newDir); () }),
-      "dedupsig" -> (() => { Dedup.persistedDedupIndex(spark, newDir); () }),
-      "scored" -> (() => { Dedup.persistedScoredCandidates(spark, newDir); () }),
-      "edges" -> (() => { Dedup.persistedLshEdges(spark, newDir); () }),
-      "contam" -> (() => { Dedup.persistedContamPairs(spark, newDir); () }),
-      "labels" -> (() => { Dedup.clusterLabels(spark, newDir); () }),
-      "wtf" -> (() => { graft.operators.TextAnalysis.persistedWordTf(spark, newDir); () }),
-      "dbg" -> (() => { graft.operators.TextAnalysis.persistedBigramTf(spark, newDir); () }),
-      "spans" -> (() => { Dedup.persistedSpanTf(spark, newDir); () }),
-      "exsh" -> (() => { Dedup.persistedExcerptShingles(spark, newDir); () }),
-      "contsig" -> (() => { Dedup.persistedContSig(spark, newDir); () }),
-      "contaud" -> (() => { Dedup.persistedContainmentAudit(spark, newDir); () }))
-    val scratchTimes = scratchSteps.map { case (fam, step) =>
-      val (_, w, c) = timed(step())
-      System.err.println(f"[probe-refresh] scratch $fam: $w%.1f s / $c%.1f cpu-s")
-      fam -> (w, c)
-    }
+    val scratchTimes = phase("scratch")(_.serve(spark, newDir))
     val scratchDigests = digests()
 
     def jnum(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val fams = tables.map(_._1)
-    val famJson = fams.map { fam =>
-      val (rw, rc) = refreshTimes.find(_._1 == fam).get._2
-      val (sw, sc) = scratchTimes.find(_._1 == fam).get._2
-      val (rn, rd) = refreshDigests(fam)
-      val (sn, sd) = scratchDigests(fam)
+    val famJson = fams.map(_.kind).map { fam =>
+      val ((rw, rc), (sw, sc)) = (refreshTimes(fam), scratchTimes(fam))
+      val (rn, _) = refreshDigests(fam)
       s""""$fam":{"refresh_s":${jnum(rw)},"refresh_cpu_s":${jnum(rc)},""" +
         s""""scratch_s":${jnum(sw)},"scratch_cpu_s":${jnum(sc)},""" +
-        s""""rows":$rn,"digest_match":${rn == sn && rd == sd}}"""
+        s""""rows":$rn,"digest_match":${refreshDigests(fam) == scratchDigests(fam)}}"""
     }.mkString("{", ",", "}")
-    val rTot = refreshTimes.map(_._2._1).sum
-    val rCpuTot = refreshTimes.map(_._2._2).sum
-    val sTot = scratchTimes.map(_._2._1).sum
-    val sCpuTot = scratchTimes.map(_._2._2).sum
-    val allMatch = fams.forall(f => refreshDigests(f) == scratchDigests(f))
+    def total(ts: Map[String, (Double, Double)]) = (ts.values.map(_._1).sum, ts.values.map(_._2).sum)
+    val ((rTot, rCpuTot), (sTot, sCpuTot)) = (total(refreshTimes), total(scratchTimes))
     val line =
-      s"""{"probe":"refresh","old":"$oldDir","new":"$newDir",""" +
+      s"""{"probe":"refresh","old":"$oldDir","new":"$newDir","n_families":${fams.size},""" +
       s""""old_build_s":${jnum(oldWall)},"old_build_cpu_s":${jnum(oldCpu)},""" +
       s""""refresh_s":${jnum(rTot)},"refresh_cpu_s":${jnum(rCpuTot)},""" +
       s""""scratch_s":${jnum(sTot)},"scratch_cpu_s":${jnum(sCpuTot)},""" +
       s""""refresh_over_scratch":${jnum(rTot / math.max(sTot, 1e-9))},""" +
-      s""""digests_equal":$allMatch,"families":$famJson}"""
-    println(line)
+      s""""digests_equal":${refreshDigests == scratchDigests},"families":$famJson}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/probe_refresh.json"), line + "\n")
     catch { case _: Throwable => () }

@@ -15,8 +15,8 @@ object ProbeS13Cold {
     val spark = Session.get("probe-s13-cold")
     val k = Similarity.ivfK(spark, dir)
     println(s"[probe-s13] $dir k=$k (n=${Similarity.vecCount(spark, dir)})")
-    Similarity.clearSemVerdictsCache(spark, dir)
-    Similarity.clearIndexCache(spark, dir)
+    Similarity.SemVerdicts.drop(spark, dir)
+    Similarity.Centroids.drop(spark, dir)
     val t0 = System.nanoTime()
     val (n0, d0) = BenchConsume.consume(Similarity.s13SemanticApply(spark, dir))
     println(f"[probe-s13] COLD  ${(System.nanoTime() - t0) / 1e9}%7.1f s  rows=$n0 digest=$d0%016x")

@@ -116,9 +116,9 @@ class IncrementalRefreshSpec extends SparkSpec {
     // a corpus under incremental maintenance has its labels AND its
     // signature index/shingle tables materialized (the refresh probes
     // the latter instead of re-reading the corpus text)
-    val v1 = labelSet(Dedup.clusterLabels(spark, oldDir))
-    Dedup.persistedDedupIndex(spark, oldDir)
-    Dedup.persistedShingles(spark, oldDir)
+    val v1 = labelSet(Dedup.Labels.serve(spark, oldDir))
+    Dedup.DedupSig.serve(spark, oldDir)
+    Dedup.Shingles.serve(spark, oldDir)
     assert(v1 === (0 until 8).map(i => (i.toLong, 0L)).toSet,
       s"chain must form one cluster labeled 0, got $v1")
 
@@ -149,10 +149,10 @@ class IncrementalRefreshSpec extends SparkSpec {
     // JVM restart) — d08's serve path must re-register and read the
     // incrementally built table without any build jobs
     spark.sql(s"DROP TABLE IF EXISTS `${graft.sources.Artifacts.Db}`." +
-      s"`${Dedup.labelsArtifactName(spark, newDir)}`")
+      s"`${Dedup.Labels.name(spark, newDir)}`")
     var coldServed: Set[(Long, Long)] = null
     val serveJobs = countJobs {
-      coldServed = labelSet(Dedup.clusterLabels(spark, newDir))
+      coldServed = labelSet(Dedup.Labels.serve(spark, newDir))
     }
     assert(coldServed === refreshedLabels, "cold serve must see the refreshed labels")
     info(s"cold serve jobs=$serveJobs")
@@ -175,11 +175,9 @@ class IncrementalRefreshSpec extends SparkSpec {
     (oldRows ++ batchRows).toDF(cols: _*).write.parquet(s"$newDir/documents.parquet")
 
     // build the v1 artifacts from the REAL text, and the expected result
-    Dedup.persistedDedupIndex(spark, oldDir)
-    Dedup.persistedShingles(spark, oldDir)
-    Dedup.clusterLabels(spark, oldDir)
-    val realNames = Seq(Dedup.dedupIndexArtifactName(spark, oldDir),
-      Dedup.shingleArtifactName(spark, oldDir), Dedup.labelsArtifactName(spark, oldDir))
+    val families = Seq(Dedup.DedupSig, Dedup.Shingles, Dedup.Labels)
+    families.foreach(_.serve(spark, oldDir))
+    val realNames = families.map(_.name(spark, oldDir))
     val expected = labelSet(Dedup.minLabelComponents(Dedup.lshEdgesOf(
       (oldRows ++ batchRows).toDF(cols: _*).select($"doc_id", $"text"))))
     assert(Set(10L, 11L, 20L, 21L, 100L).forall(d => expected.contains((d, 10L))),
@@ -192,8 +190,7 @@ class IncrementalRefreshSpec extends SparkSpec {
     // corpus's TEXT reads garbage and must corrupt the labels
     oldRows.map { case (i, _, l, s, n) => (i, s"poison $i", l, s, n) }
       .toDF(cols: _*).write.mode("overwrite").parquet(s"$oldDir/documents.parquet")
-    val poisonedNames = Seq(Dedup.dedupIndexArtifactName(spark, oldDir),
-      Dedup.shingleArtifactName(spark, oldDir), Dedup.labelsArtifactName(spark, oldDir))
+    val poisonedNames = families.map(_.name(spark, oldDir))
     assert(realNames.zip(poisonedNames).forall { case (a, b) => a != b },
       "poisoning must change the artifact keys (else this test is vacuous)")
     realNames.zip(poisonedNames).foreach { case (real, poisoned) =>
@@ -233,7 +230,7 @@ class IncrementalRefreshSpec extends SparkSpec {
 
   test("refreshArtifactsAfterAppend: every refreshed family is row-identical " +
       "to a from-scratch rebuild on the appended corpus (r16 verdict task 1)") {
-    import graft.sources.Artifacts
+    import graft.sources.{ArtifactFamily, Artifacts}
     val v1 = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "inc-fam-v1-").toString
     val v2 = java.nio.file.Files.createTempDirectory(
@@ -249,13 +246,34 @@ class IncrementalRefreshSpec extends SparkSpec {
     v1Rows.toDF(cols: _*).write.parquet(s"$v1/documents.parquet")
     (v1Rows ++ batchRows).toDF(cols: _*).write.parquet(s"$v2/documents.parquet")
 
+    // a documents-only state pair skips every family that reads orders
+    val ordersFamilies = ArtifactFamily.all.filter(_.reads.contains("orders")).map(_.kind)
+    assert(ordersFamilies.size === 4)
+    assert(ArtifactFamily.refreshable(spark, v1, v2).map(_.kind).intersect(ordersFamilies)
+      .isEmpty, "a documents-only append must not refresh the orders families")
+
+    // orders append: fresh keys, some carrying value tuples already in
+    // the old fact (the histogram multiset merge), some new values
+    def ordersOf(rows: Seq[(Long, Long, String, Double, java.sql.Timestamp, String)]) =
+      rows.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderdate", "o_orderpriority")
+    val t0 = java.sql.Timestamp.valueOf("1995-03-04 00:00:00")
+    val oldOrders = (0L until 40L).map(i =>
+      (i, i % 7, Seq("O", "P", "F")(i.toInt % 3), 100.0 + 3.25 * i, t0, s"${i % 5}-PRIO"))
+    val batchOrders = (40L until 52L).map(i =>
+      (i, i % 5, Seq("O", "P", "F")(i.toInt % 3), 90.5 + 7.75 * (i % 8), t0, s"${i % 5}-PRIO"))
+    ordersOf(oldOrders).write.parquet(s"$v1/orders.parquet")
+    ordersOf(oldOrders ++ batchOrders).write.parquet(s"$v2/orders.parquet")
+
     val refreshed = Dedup.refreshArtifactsAfterAppend(spark, v1, v2)
-    assert(refreshed.map(_._1).toSet ===
-      Set("shingles", "h60", "dedupsig", "scored", "edges", "contam", "labels",
-        "wtf", "dbg", "spans", "exsh", "contsig", "contaud"))
-    def rowsOf(tbl: String): Seq[String] =
-      spark.table(s"`${Artifacts.Db}`.`$tbl`").collect().map(_.toString).sorted.toSeq
-    val incremental = refreshed.map { case (fam, tbl) => fam -> rowsOf(tbl) }.toMap
+    assert(refreshed.map(_._1) ===
+      ArtifactFamily.all.filter(_.refresh != ArtifactFamily.NoRefresh).map(_.kind),
+      "every family with a refresh shape must refresh, in registry order")
+    val family = ArtifactFamily.all.map(f => f.kind -> f).toMap
+    def rowsOf(fam: String, tbl: String): Seq[String] =
+      family(fam).canonical(spark.table(s"`${Artifacts.Db}`.`$tbl`"))
+        .collect().map(_.toString).sorted.toSeq
+    val incremental = refreshed.map { case (fam, tbl) => fam -> rowsOf(fam, tbl) }.toMap
     // the refresh must have found actual work: batch docs appear in the
     // per-row families and the bridge doc merges the clusters
     assert(incremental("labels").exists(_.contains("[100,10]")),
@@ -263,22 +281,10 @@ class IncrementalRefreshSpec extends SparkSpec {
 
     // from-scratch control: drop every v2 artifact (files + entries),
     // then let the ordinary cold-build path rebuild each family
-    refreshed.foreach { case (_, tbl) => Artifacts.dropArtifact(spark, tbl) }
-    Dedup.persistedShingles(spark, v2)
-    Dedup.persistedH60Shingles(spark, v2)
-    Dedup.persistedDedupIndex(spark, v2)
-    Dedup.persistedScoredCandidates(spark, v2)
-    Dedup.persistedLshEdges(spark, v2)
-    Dedup.persistedContamPairs(spark, v2)
-    Dedup.clusterLabels(spark, v2)
-    TextAnalysis.persistedWordTf(spark, v2)
-    TextAnalysis.persistedBigramTf(spark, v2)
-    Dedup.persistedSpanTf(spark, v2)
-    Dedup.persistedExcerptShingles(spark, v2)
-    Dedup.persistedContSig(spark, v2)
-    Dedup.persistedContainmentAudit(spark, v2)
+    refreshed.foreach { case (fam, _) => family(fam).drop(spark, v2) }
+    refreshed.foreach { case (fam, _) => family(fam).serve(spark, v2) }
     refreshed.foreach { case (fam, tbl) =>
-      assert(rowsOf(tbl) === incremental(fam),
+      assert(rowsOf(fam, tbl) === incremental(fam),
         s"family '$fam' incremental refresh must equal the from-scratch rebuild")
     }
   }
@@ -315,7 +321,7 @@ class IncrementalRefreshSpec extends SparkSpec {
     def cents(df: DataFrame): Set[(Long, Seq[Double])] =
       df.select(col("cent_id"), col("ce")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1))).toSet
-    val oldCents = cents(Similarity.trainedCentroids(spark, dirs(0)))
+    val oldCents = cents(Similarity.Centroids.serve(spark, dirs(0)))
 
     val (calm, calmRebuilt) = Similarity.refreshedCentroids(spark, dirs(0), dirs(1))
     assert(!calmRebuilt, "an un-drifted batch must not trigger retraining")

@@ -281,11 +281,11 @@ class OperatorSemanticsSpec extends SparkSpec {
     // NOT the pinned quantity; the objective is deterministic and moves
     // decisively: 0.187 → 0.255 at sf0.001.)
     val seedObj = Similarity.ivfObjective(spark, sf, Similarity.seedCentroids(spark, sf))
-    val trainedObj = Similarity.ivfObjective(spark, sf, Similarity.trainedCentroids(spark, sf))
+    val trainedObj = Similarity.ivfObjective(spark, sf, Similarity.Centroids.serve(spark, sf))
     assert(trainedObj > seedObj + 0.01,
       s"training must improve the k-means objective: seed=$seedObj trained=$trainedObj")
     // every cell must survive on this fixture and cells stay a partition
-    val cells = Similarity.trainedCentroids(spark, sf).collect()
+    val cells = Similarity.Centroids.serve(spark, sf).collect()
     assert(cells.length == Similarity.IvfCells)
     assert(cells.map(_.getAs[Long]("cent_id")).distinct.length == cells.length)
   }
@@ -793,8 +793,8 @@ class OperatorSemanticsSpec extends SparkSpec {
   }
 
   test("ivf centroid cache: a cached serve is bit-identical to the cold build") {
-    Similarity.clearIndexCache(spark, sf)
-    def snap() = Similarity.trainedCentroids(spark, sf).collect()
+    Similarity.Centroids.drop(spark, sf)
+    def snap() = Similarity.Centroids.serve(spark, sf).collect()
       .sortBy(_.getAs[Long]("cent_id"))
       .map(r => (r.getAs[Long]("cent_id"), r.getAs[Seq[Double]]("ce"), r.getAs[Double]("cn")))
     val cold = snap().toSeq
@@ -804,8 +804,8 @@ class OperatorSemanticsSpec extends SparkSpec {
   }
 
   test("cluster-label cache: a cached serve is bit-identical to the cold build") {
-    Dedup.clearLabelsCache(spark, sf)
-    Dedup.clearEdgesCache(spark, sf) // truly cold: edge artifact rebuilt too
+    Dedup.Labels.drop(spark, sf)
+    Dedup.Edges.drop(spark, sf) // truly cold: edge artifact rebuilt too
     def snap() = Dedup.d08LshClusters(spark, sf).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
         r.getAs[Long]("cluster_size"), r.getAs[Boolean]("is_keeper"))).toSeq
@@ -819,8 +819,8 @@ class OperatorSemanticsSpec extends SparkSpec {
       "to a cold build AND to the raw core derivation (r16)") {
     // truly cold: pair + audit artifacts dropped (h60/shingle artifacts
     // may persist — they are exact and shared by the builds)
-    Dedup.clearContamCache(spark, sf)
-    Dedup.clearContAuditCache(spark, sf)
+    Dedup.Contam.drop(spark, sf)
+    Dedup.ContAudit.drop(spark, sf)
     def d07snap() = Dedup.d07Contamination(spark, sf).collect().map(_.toString).toSeq
     def d15snap() = Dedup.d15DecontaminateApply(spark, sf).collect().map(_.toString).toSeq
     def d16snap() = Dedup.d16ContainmentAudit(spark, sf).collect().map(_.toString).toSeq
@@ -842,7 +842,7 @@ class OperatorSemanticsSpec extends SparkSpec {
 
   test("scored-candidate cache: the served artifact is bit-identical to a cold " +
       "build AND to the raw cores for d03/d14 (r16)") {
-    Dedup.clearScoredCache(spark, sf)
+    Dedup.Scored.drop(spark, sf)
     def d03snap() = Dedup.d03MinhashLsh(spark, sf).collect().map(_.toString).toSeq
     def d14snap() = Dedup.d14ThresholdSweep(spark, sf).collect().map(_.toString).toSeq
     val (cold03, cold14) = (d03snap(), d14snap())
@@ -857,8 +857,8 @@ class OperatorSemanticsSpec extends SparkSpec {
   }
 
   test("knn-graph cache: a cached serve is bit-identical to the cold build; s09/s11 read the artifact") {
-    Similarity.clearKnnGraphCache(spark, sf)
-    Similarity.clearKnnLabelsCache(spark, sf)
+    Similarity.KnnGraph.drop(spark, sf)
+    Similarity.KnnLabels.drop(spark, sf)
     def snap09() = Similarity.s09KnnGraph(spark, sf).collect().map(_.toString).toSeq
     def snap11() = Similarity.s11KnnComponents(spark, sf).collect().map(_.toString).toSeq
     val cold09 = snap09()
@@ -878,12 +878,12 @@ class OperatorSemanticsSpec extends SparkSpec {
   test("persisted artifacts: a fresh catalog serves labels + centroids from the warehouse, no rebuild") {
     import graft.sources.Artifacts
     // build (or reuse) both artifacts, snapshot results + file mtimes
-    val labelsT = Dedup.labelsArtifactName(spark, sf)
-    val centsT = Similarity.centroidsArtifactName(spark, sf)
+    val labelsT = Dedup.Labels.name(spark, sf)
+    val centsT = Similarity.Centroids.name(spark, sf)
     val d08Before = Dedup.d08LshClusters(spark, sf).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
         r.getAs[Long]("cluster_size"), r.getAs[Boolean]("is_keeper"))).toSeq
-    val centsBefore = Similarity.trainedCentroids(spark, sf).collect()
+    val centsBefore = Similarity.Centroids.serve(spark, sf).collect()
       .sortBy(_.getAs[Long]("cent_id"))
       .map(r => (r.getAs[Long]("cent_id"), r.getAs[Seq[Double]]("ce"),
         r.getAs[Double]("cn"))).toSeq
@@ -897,7 +897,7 @@ class OperatorSemanticsSpec extends SparkSpec {
     // same warehouse files: simulate by dropping only the entries
     Artifacts.dropEntry(spark, labelsT)
     Artifacts.dropEntry(spark, centsT)
-    val servedLabels = Dedup.clusterLabels(spark, sf)
+    val servedLabels = Dedup.Labels.serve(spark, sf)
     // the served frame must be the artifact table scan, not a rebuilt
     // propagation-loop checkpoint
     assert(servedLabels.queryExecution.executedPlan.toString.contains(Artifacts.Db),
@@ -905,7 +905,7 @@ class OperatorSemanticsSpec extends SparkSpec {
     val d08After = Dedup.d08LshClusters(spark, sf).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
         r.getAs[Long]("cluster_size"), r.getAs[Boolean]("is_keeper"))).toSeq
-    val centsAfter = Similarity.trainedCentroids(spark, sf).collect()
+    val centsAfter = Similarity.Centroids.serve(spark, sf).collect()
       .sortBy(_.getAs[Long]("cent_id"))
       .map(r => (r.getAs[Long]("cent_id"), r.getAs[Seq[Double]]("ce"),
         r.getAs[Double]("cn"))).toSeq

@@ -585,7 +585,7 @@ class PlanSpec extends SparkSpec {
   test("s12: the query reads the PERSISTED verdict artifact — never a per-query Σ cell² re-derivation") {
     // the s08/edges contract applied to SemDeDup (r15): the sweep burns
     // ~190 s of executor CPU per derivation at sf10full, so it is index
-    // state — built once by semVerdicts, served from the semv_* table.
+    // state — built once by SemVerdicts, served from the semv_* table.
     val physical = Similarity.s12Semdedup(spark, sf).queryExecution.executedPlan.toString
     assert(physical.contains(graft.sources.Artifacts.Db) && physical.contains("semv_"),
       s"verdicts must come from the persisted artifact:\n$physical")

@@ -132,12 +132,18 @@ class ProfileHistSpec extends SparkSpec {
     ordersOf(oldRows).write.parquet(s"$oldDir/orders.parquet")
     ordersOf(oldRows ++ batchRows).write.parquet(s"$newDir/orders.parquet")
 
-    import graft.operators.CartAnalytics
-    // build the old generation, then refresh onto the new state
-    CartAnalytics.persistedProfHist(spark, oldDir)
-    CartAnalytics.persistedProfStrHist(spark, oldDir)
-    val refreshedNum = CartAnalytics.refreshedProfile(spark, oldDir, newDir).collect()
-    val refreshedStr = CartAnalytics.refreshedProfileStrings(spark, oldDir, newDir).collect()
+    import graft.operators.{CartAnalytics, Dedup}
+    // build the old generation, then refresh onto the new state through
+    // the append entry point (an orders-only corpus refreshes exactly
+    // the four orders families)
+    CartAnalytics.ProfHist.serve(spark, oldDir)
+    CartAnalytics.ProfStrHist.serve(spark, oldDir)
+    val refreshed = Dedup.refreshArtifactsAfterAppend(spark, oldDir, newDir).toMap
+    assert(refreshed.keySet === Set("profhist", "profile", "profstrh", "profstr"))
+    def table(kind: String) =
+      spark.table(s"`${graft.sources.Artifacts.Db}`.`${refreshed(kind)}`")
+    val refreshedNum = table("profile").collect()
+    val refreshedStr = table("profstr").collect()
 
     // from-scratch comparator computed WITHOUT artifacts
     val newOrders = spark.read.parquet(s"$newDir/orders.parquet")
