@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.LongAdder
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -78,4 +79,9 @@ object CpuMeter {
     val (c1, r1) = snapshot(spark)
     (a, c1 - c0, r1 - r0)
   }
+
+  /** Janino compiles so far in this JVM (driver and local executors).
+    * Generated-class cache hits do not count, so a warm run's delta is 0
+    * while the cache holds the query's working set ([[Session.CodegenCacheEntries]]). */
+  def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one place engine SparkSession conf lives (SURVEY.md §7.2 step 1).
   *
-  * Defaults are scale-oriented; every knob is env-overridable so the same
-  * binary runs local[32] tests and a 1000-executor cluster:
+  * Defaults are scale-oriented; every knob below is env-overridable so the
+  * same binary runs local[32] tests and a 1000-executor cluster:
   *
   *  - AQE on: runtime shuffle coalescing, skew-join splitting, plan
   *    re-optimization from real stats.
@@ -20,6 +20,16 @@ import org.apache.spark.sql.SparkSession
   *    (surfaced as Long; Tables.load adapts per-schema — micros-era
   *    events files don't need it, but keeping it set is harmless).
   *  - GraftExtensions registers engine-native functions (graft_dot).
+  *
+  * Three settings are fixed, with no env knob, because no corpus or
+  * cluster size calls for another value and none can change an answer:
+  *
+  *  - The generated-class cache size and class naming, so a warm query
+  *    compiles nothing ([[CodegenCacheEntries]]).
+  *  - Status-store retention. The UI is off and nothing in the engine
+  *    reads `statusTracker` or the status store, yet Spark keeps plan
+  *    graphs and stage data for 1,000 SQL executions, jobs and stages by
+  *    default. It now keeps the last 20 executions and 50 jobs and stages.
   */
 object Session {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -54,6 +64,28 @@ object Session {
   def shjLocalMapThreshold: String =
     sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0")
 
+  /** Generated-class cache size (`spark.sql.codegen.cache.maxEntries`).
+    * Spark's default of 100 is far below this engine's working set, so a
+    * warm pass recompiled (Janino, then the JIT) classes it had compiled
+    * moments earlier. Working sets, as Janino compiles per pass read from
+    * `CodegenMetrics` (each class counts once per class loader, driver and
+    * executor): the 8-query perfbench set at sf0.001 compiles 255 classes;
+    * one `graft.Verify` pass over all 109 queries at sf0.01 compiles 1,526
+    * distinct classes (2,940 compiles with the 100-entry cache, most of the
+    * difference recompiles inside that one pass). 4096 is more than twice
+    * the full-suite working set. The cache is keyed by the generated source
+    * text, so its size decides only whether a class is compiled again,
+    * never an answer; each class kept costs about 30–40 KB of heap.
+    * Spark reads the size once, when the JVM generates its first class,
+    * so it holds only where a session built here exists by then.
+    *
+    * `useIdInClassName` is off for the same reason: AQE numbers codegen
+    * stages in the order it plans them, which follows shuffle completion
+    * order, and the number in the class name made the same stage's source
+    * differ from run to run — a cache miss and a fresh compile. The number
+    * stays in the class comment and in `explain` output. */
+  val CodegenCacheEntries = 4096
+
   def builder(appName: String): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
@@ -71,6 +103,11 @@ object Session {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.sql.ui.retainedExecutions", 20L)
+      .config("spark.ui.retainedJobs", 50L)
+      .config("spark.ui.retainedStages", 50L)
 
   def get(appName: String): SparkSession = {
     val spark = builder(appName).getOrCreate()
