@@ -26,6 +26,8 @@ package graft
   *   - per-query Janino compiles over the timed runs under "compiles"
   *     (full JSON only): nonzero on these warm rows means the
   *     generated-class cache no longer holds the suite's working set;
+  *   - per-query Spark jobs started over the timed runs under "jobs"
+  *     (full JSON only);
   *   - an untimed artifact-prebuild pass at the TARGET corpus before the
   *     timed window (wall reported as "prebuild_s"): persisted-artifact
   *     builds are once-per-corpus-state index costs a deployment pays in
@@ -112,15 +114,16 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val loadAtStart = loadavg()
       var rows = -1L
-      def timedRun(): Option[(Double, Double, Long)] = {
+      def timedRun(): Option[(Double, Double, Long, Long)] = {
         val (c0, _) = CpuMeter.snapshot(spark)
         val k0 = CpuMeter.compiles
+        val j0 = CpuMeter.jobs
         val t0 = System.nanoTime()
         try {
           rows = BenchConsume.consume(fn(spark, sfDir))._1
           val wall = (System.nanoTime() - t0) / 1e9
           val (c1, _) = CpuMeter.snapshot(spark)
-          Some((wall, c1 - c0, CpuMeter.compiles - k0))
+          Some((wall, c1 - c0, CpuMeter.compiles - k0, CpuMeter.jobs - j0))
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           None
@@ -185,6 +188,9 @@ object Bench {
     val compiles = results.map { case (k, _, ts, _, _, _) =>
       "\"" + k + "\":" + ts.map(_._3).sum
     }.mkString("{", ",", "}")
+    val jobs = results.map { case (k, _, ts, _, _, _) =>
+      "\"" + k + "\":" + ts.map(_._4).sum
+    }.mkString("{", ",", "}")
     val perQLoad = results.map { case (k, _, _, _, l, _) =>
       "\"" + k + "\":\"" + l + "\""
     }.mkString("{", ",", "}")
@@ -195,7 +201,7 @@ object Bench {
       s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
       s""","prebuild_s":${jnum(prebuildSec)},"prebuild_builds":$prebuildBuilds""" +
       s""","cpu_value":${jnum(cpuTotal)},"cpu_s":$cpuS,"cpu_runs":$cpuRuns""" +
-      s""","compiles":$compiles,"runs":$runs,"rows":$rows,"loadavg":{"before":"$loadBefore","after":"$loadAfter","per_query":$perQLoad}}"""
+      s""","compiles":$compiles,"jobs":$jobs,"runs":$runs,"rows":$rows,"loadavg":{"before":"$loadBefore","after":"$loadAfter","per_query":$perQLoad}}"""
     // Compact contract line (fits the driver's 2 KB stdout tail); keys are
     // the unique query-name prefixes, full detail in the file artifacts.
     // The per-query form is ~1.4 KB at 106 queries — close to the limit —

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Per-query executor CPU accounting (r14 verdict task 1).
@@ -36,6 +36,7 @@ import org.apache.spark.sql.SparkSession
 object CpuMeter {
   private val cpuNs = new LongAdder
   private val runMs = new LongAdder
+  private val jobStarts = new LongAdder
   @volatile private var installedOn: String = null
 
   private object listener extends SparkListener {
@@ -46,6 +47,7 @@ object CpuMeter {
         runMs.add(m.executorRunTime)
       }
     }
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobStarts.increment()
   }
 
   /** Idempotent per SparkContext; harness mains call it right after
@@ -84,4 +86,9 @@ object CpuMeter {
     * Generated-class cache hits do not count, so a warm run's delta is 0
     * while the cache holds the query's working set ([[Session.CodegenCacheEntries]]). */
   def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Spark jobs started so far, as of the last [[snapshot]] (which drains
+    * the listener bus). A warm query starts jobs only to run: building
+    * its plan probes nothing ([[graft.sources.ContentMemo]]). */
+  def jobs: Long = jobStarts.sum
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated synthetic tables (TESTDATA.md).
   *
@@ -35,11 +36,38 @@ object Tables {
     *    wall-clock values map to the same instants the nanos path produced.
     * Anything else is a generator change we haven't seen: fail loudly with
     * the file path rather than let 15 downstream queries mis-analyze.
+    *
+    * The parquet schema is resolved once per content state of the table
+    * and then passed to the reader. Inferring it is a full Spark job
+    * (a parallel footer merge), and queries load their tables on every
+    * construction: re-inferring made most of the jobs a warm query
+    * started before it ran. The memo is keyed by the table's content
+    * fingerprint ([[graft.sources.ContentMemo]]), so a rewrite with
+    * different bytes re-infers, plus the session settings that change
+    * what inference returns ([[InferenceConfs]]). Only the schema is
+    * shared: every load builds a fresh relation with fresh attribute ids
+    * (self-joins stay unambiguous), and [[conform]] runs on every load.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    conform(spark.read.parquet(path), name, path)
+    val settings = InferenceConfs.map(spark.conf.getOption(_).getOrElse("")).mkString(",")
+    val schema = schemas(spark, dir, s"$name|$settings", Seq(name))(
+      spark.read.parquet(path).schema)
+    conform(spark.read.schema(schema).parquet(path), name, path)
   }
+
+  /** Session settings that change the schema parquet inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private val schemas = new graft.sources.ContentMemo[StructType]
+  private val rowCounts = new graft.sources.ContentMemo[Long]
+
+  /** Row count of one table, probed once per content state of the table. */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long =
+    rowCounts(spark, dir, name, Seq(name))(load(spark, dir, name).count())
 
   /** [[load]] + [[graft.plans.Scale.spreadIfNarrow]] — for operators
     * whose per-row CPU (md5 window walks, byte scanners, 64-dim dot
@@ -188,14 +216,6 @@ object Tables {
         cls.adapt(acc, c, field.dataType)
       }
     }
-
-  /** Snapshot memo key for dir-keyed scalar-probe memos (anchor date,
-    * doc count, pack max-id): the dir plus a content fingerprint of its
-    * file listing. Overwriting any table in place changes the key, so
-    * the memos refresh instead of serving stale values — keyed by
-    * (dir, snapshot), not dir alone. One FS metadata walk, no job. */
-  def snapshotKey(spark: SparkSession, dir: String): String =
-    dir + "@" + graft.sources.Artifacts.corpusFingerprint(spark, dir)
 
   /** Register just the named tables as temp views. Registration is
     * per-table so a schema break in one table can only fail queries that

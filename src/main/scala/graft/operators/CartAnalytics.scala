@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
-import graft.sources.ArtifactFamily
+import graft.sources.{ArtifactFamily, ContentMemo}
 import graft.sources.ArtifactFamily.{Rederive, RowAppend}
 
 /** Reference-parity analytics re-expressed on the synthetic star schema.
@@ -42,28 +42,28 @@ object CartAnalytics {
     coalesce(sum(c.cast(DecimalType(18, 2))).cast(DoubleType), lit(0.0))
 
   /** Scalar-param capture (reference S8/S9, py:78-82): fetch
-    * MAX(o_orderdate) to the driver once and splice it into later plans as
-    * a foldable literal — the reference's `spark.conf.set` + `${var}`
-    * pattern, minus string substitution. Turns would-be scalar subqueries
-    * into constants Catalyst folds at plan time.
+    * (MIN, MAX)(o_orderdate) to the driver and splice them into later
+    * plans as foldable literals — the reference's `spark.conf.set` +
+    * `${var}` pattern, minus string substitution. Turns would-be scalar
+    * subqueries into constants Catalyst folds at plan time. One probe
+    * serves the anchor date (MAX: q03/q04/q11), q09's first year and the
+    * q10/q16 calendar bounds, once per content state of `orders`
+    * ([[ContentMemo]]): an in-place rewrite of the table re-probes.
     * Extracted via date_format (session-TZ-aware) to avoid JVM-default-TZ
     * skew when converting java.sql.Timestamp.
     */
-  private def anchorDate(spark: SparkSession, dir: String): LocalDate =
-    anchorMemo.getOrElseUpdate(Tables.snapshotKey(spark, dir), {
-      val s = Tables.load(spark, dir, "orders")
-        .agg(date_format(max(col("o_orderdate")), "yyyy-MM-dd").as("d"))
-        .first().getString(0)
-      LocalDate.parse(s)
-    })
+  private def orderDateRange(spark: SparkSession, dir: String): (LocalDate, LocalDate) =
+    orderDateMemo(spark, dir, "order_dates", Seq("orders")) {
+      val r = ord(spark, dir).agg(
+        date_format(min(col("o_orderdate")), "yyyy-MM-dd"),
+        date_format(max(col("o_orderdate")), "yyyy-MM-dd")).first()
+      (LocalDate.parse(r.getString(0)), LocalDate.parse(r.getString(1)))
+    }
 
-  /** Anchor dates per corpus SNAPSHOT — the scalar-fetch job runs once
-    * per (dir, file-listing fingerprint, JVM), not once per query
-    * construction, mirroring the skew probe's memoization
-    * ([[graft.plans.Scale]]). Overwriting the dir in place changes the
-    * snapshot key, so a refreshed table gets a fresh anchor. */
-  private val anchorMemo =
-    scala.collection.concurrent.TrieMap.empty[String, LocalDate]
+  private val orderDateMemo = new ContentMemo[(LocalDate, LocalDate)]
+
+  private def anchorDate(spark: SparkSession, dir: String): LocalDate =
+    orderDateRange(spark, dir)._2
 
   private def dlit(d: LocalDate): Column = lit(java.sql.Date.valueOf(d))
 
@@ -337,8 +337,7 @@ object CartAnalytics {
     * post-aggregate count) only exist after the full aggregation
     * (preconditions 1 and 3 fail). */
   def q09LaunchYearTopParts(spark: SparkSession, dir: String): DataFrame = {
-    val firstYear = Tables.load(spark, dir, "orders")
-      .agg(year(min(col("o_orderdate"))).as("y")).first().getInt(0)
+    val firstYear = orderDateRange(spark, dir)._1.getYear
     launchAndAbandoned(spark, dir)
       .select(
         col("l_partkey"),
@@ -359,12 +358,9 @@ object CartAnalytics {
   // ---------------------------------------------------------------------
   def q10MonthlyGapfill(spark: SparkSession, dir: String): DataFrame = {
     val o = ord(spark, dir)
-    val bounds = o.agg(
-      date_format(min(col("o_orderdate")), "yyyy-MM-01").as("lo"),
-      date_format(max(col("o_orderdate")), "yyyy-MM-01").as("hi")).first()
+    val (lo, hi) = orderDateRange(spark, dir)
     val spine = spark.range(1).select(explode(sequence(
-      dlit(LocalDate.parse(bounds.getString(0))),
-      dlit(LocalDate.parse(bounds.getString(1))),
+      dlit(lo.withDayOfMonth(1)), dlit(hi.withDayOfMonth(1)),
       expr("interval 1 month"))).as("month_start"))
     val ordersAgg = o.where(abandoned)
       .groupBy(date_trunc("MONTH", col("o_orderdate")).cast("date").as("month_start"))
@@ -627,13 +623,8 @@ object CartAnalytics {
   // date parts (ISO weekday).
   // ---------------------------------------------------------------------
   def q16Calendar(spark: SparkSession, dir: String): DataFrame = {
-    val o = ord(spark, dir)
-    val bounds = o.agg(
-      date_format(min(col("o_orderdate")), "yyyy-MM-dd").as("lo"),
-      date_format(max(col("o_orderdate")), "yyyy-MM-dd").as("hi")).first()
-    spark.range(1).select(explode(sequence(
-        dlit(LocalDate.parse(bounds.getString(0))),
-        dlit(LocalDate.parse(bounds.getString(1))),
+    val (lo, hi) = orderDateRange(spark, dir)
+    spark.range(1).select(explode(sequence(dlit(lo), dlit(hi),
         expr("interval 1 day"))).as("calendar_date"))
       .select(
         col("calendar_date"),

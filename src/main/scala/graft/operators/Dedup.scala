@@ -148,15 +148,16 @@ object Dedup {
     * d03/d08, whose candidates come from bounded band joins. */
   val BaselineMaxDocs: Long = envLong("GRAFT_BASELINE_MAX_DOCS", 100000L)
 
-  /** Guard shared by the exact inverted-index baselines (d02, d06). */
-  private def requireExactBaselineCorpus(docs: DataFrame, op: String): Unit =
-    requireBaselineSize(docs.count(), BaselineMaxDocs, op,
+  /** Guard shared by the exact inverted-index baselines (d02, d06),
+    * given the input's doc count. */
+  private def requireExactBaselineCorpus(nDocs: Long, op: String): Unit =
+    requireBaselineSize(nDocs, BaselineMaxDocs, op,
       "Dedup.minhashLsh / lshClusters (banded LSH)", "GRAFT_BASELINE_MAX_DOCS")
 
   /** Exact n-gram Jaccard near-dup over ANY (doc_id, text) frame — the
     * quadratic exactness baseline; refuses over-cap inputs. */
   def ngramJaccard(docs: DataFrame): DataFrame = {
-    requireExactBaselineCorpus(docs, "d02_ngram_jaccard")
+    requireExactBaselineCorpus(docs.count(), "d02_ngram_jaccard")
     ngramJaccardPairs(shinglesOf(docs))
   }
 
@@ -186,8 +187,7 @@ object Dedup {
   }
 
   def d02NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    requireExactBaselineCorpus(Tables.load(spark, dir, "documents"),
-      "d02_ngram_jaccard")
+    requireExactBaselineCorpus(docCount(spark, dir), "d02_ngram_jaccard")
     ngramJaccardPairs(Shingles.serve(spark, dir))
   }
 
@@ -406,15 +406,11 @@ object Dedup {
     * static oracle text mirrors exactly this. */
   val SimBands: Seq[(Int, Int, Int)] = simBands(2)
 
-  /** Corpus doc count per SNAPSHOT — one memoized probe job per
-    * (dir, file-listing fingerprint, JVM), the anchor/skew-probe
-    * pattern; decides the signature width. An in-place regeneration of
-    * the corpus changes the key, so the width re-probes. */
-  private val docCountMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  /** Corpus doc count, probed once per content state of `documents`
+    * ([[Tables.rowCount]]); decides the signature width and guards the
+    * exact baselines. An in-place rewrite of the table re-probes. */
   private[graft] def docCount(spark: SparkSession, dir: String): Long =
-    docCountMemo.getOrElseUpdate(Tables.snapshotKey(spark, dir),
-      Tables.load(spark, dir, "documents").count())
+    Tables.rowCount(spark, dir, "documents")
 
   /** SimHash near-dup pairs over ANY (doc_id, text) frame at an explicit
     * signature width (2 or 3 60-bit words — pick via [[simWordsFor]] on
@@ -612,13 +608,12 @@ object Dedup {
         s"cap $cap; use $alt at scale, or raise $knob for a deliberate eval run")
 
   /** All-pairs cosine near-dup over ANY (vec_id, embedding, label)
-    * frame — the quadratic exactness baseline; refuses over-cap inputs. */
-  def embeddingNeardup(vecs: DataFrame): DataFrame = {
-    // guard count on the bare input — for a parquet table this is a
-    // column-pruned count-star over footers, cheap enough to run per
-    // invocation (memoizing it would let a regrown corpus at the same
-    // path bypass the cap)
-    val n = vecs.count()
+    * frame of `n` rows — the quadratic exactness baseline; refuses
+    * over-cap inputs. d05 passes the memoized count of its table
+    * ([[Similarity.vecCount]]): the memo is keyed by the table's
+    * content, so a corpus regrown at the same path is a new key and
+    * re-probes — it cannot bypass the cap. */
+  def embeddingNeardup(vecs: DataFrame, n: Long): DataFrame = {
     requireBaselineSize(n, BaselineMaxVectors, "d05_embedding_neardup",
       "Similarity.s02 (LSH buckets) / s03 (IVF)")
     val v = normedOf(vecs)
@@ -654,7 +649,8 @@ object Dedup {
   }
 
   def d05EmbeddingNeardup(spark: SparkSession, dir: String): DataFrame =
-    embeddingNeardup(Tables.load(spark, dir, "embeddings"))
+    embeddingNeardup(Tables.load(spark, dir, "embeddings"),
+      Similarity.vecCount(spark, dir))
 
   // ---------------------------------------------------------------------
   // d06 — near-dup clusters: connected components over the jaccard≥0.6
@@ -668,9 +664,9 @@ object Dedup {
   val ClusterThreshold = 0.6
 
   /** Exact near-dup clustering over ANY (doc_id, text) frame — the
-    * quadratic exactness baseline; refuses over-cap inputs. */
+    * quadratic exactness baseline. It does not check its input's size:
+    * d06 refuses an over-cap corpus before calling it. */
   def neardupClusters(docs: DataFrame): DataFrame = {
-    requireExactBaselineCorpus(docs, "d06_neardup_clusters")
     val sh = shinglesOf(docs)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val shared = sh.as("a")
@@ -681,8 +677,10 @@ object Dedup {
     clusterOutput(minLabelComponents(thresholdEdges(shared, sizes)))
   }
 
-  def d06NeardupClusters(spark: SparkSession, dir: String): DataFrame =
+  def d06NeardupClusters(spark: SparkSession, dir: String): DataFrame = {
+    requireExactBaselineCorpus(docCount(spark, dir), "d06_neardup_clusters")
     neardupClusters(Tables.load(spark, dir, "documents"))
+  }
 
   /** Filter (doc_a, doc_b, shared) rows down to jaccard ≥
     * [[ClusterThreshold]] edges, given per-doc distinct-shingle counts —

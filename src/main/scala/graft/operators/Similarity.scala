@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
-import graft.sources.ArtifactFamily
+import graft.sources.{ArtifactFamily, Artifacts, ContentMemo}
 import graft.operators.Dedup.{dotExpr, dotSql, normed, normedOf, normedSql}
 import graft.plans.Scale
 
@@ -131,14 +131,10 @@ object Similarity {
     else 1 << math.min(12L, math.round(math.log(raw) / math.log(2.0))).toInt
   }
 
-  private val vecCountMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  /** Memoized parquet count-star of `dir`'s embeddings (the d04
-    * docCount pattern). */
+  /** Row count of `dir`'s embeddings, probed once per content state of
+    * the table ([[graft.Tables.rowCount]]). */
   private[graft] def vecCount(spark: SparkSession, dir: String): Long =
-    vecCountMemo.getOrElseUpdate(graft.Tables.snapshotKey(spark, dir),
-      graft.Tables.load(spark, dir, "embeddings").count())
+    graft.Tables.rowCount(spark, dir, "embeddings")
 
   /** The cell count every dir-keyed IVF query (and its oracle mirror)
     * uses for `dir`. */
@@ -270,7 +266,7 @@ object Similarity {
     * cell) — the shared assignment stage of s03 (cr = 1 only) and s05
     * (queries also probe cr ≤ NProbe). */
   private def cellRanked(spark: SparkSession, dir: String): DataFrame =
-    cellTop1Lit(normed(spark, dir), collectCents(Centroids.serve(spark, dir)))
+    cellTop1Lit(normed(spark, dir), servedCents(spark, dir))
 
   /** The k-row centroid table fetched to the driver, sorted by cent_id —
     * the index is kilobytes, and inlining it as a literal makes cell
@@ -280,17 +276,35 @@ object Similarity {
     * that shuffle DOMINATING the Σ cell² sweep it feeds (214 s vs the
     * 7× smaller intrinsic pair work) — the assignment, not the sweep,
     * was the scale ceiling of the whole IVF family. */
-  private def collectCents(cents: DataFrame): Seq[(Long, Seq[Double], Double)] =
+  private def collectCents(cents: DataFrame): Cents =
     cents.select(col("cent_id").cast("long"), col("ce"), col("cn")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
       .sortBy(_._1)
+
+  /** (cent_id, centroid, norm) rows sorted by cent_id. */
+  type Cents = Seq[(Long, Seq[Double], Double)]
+
+  /** [[collectCents]] of `dir`'s served [[Centroids]] table, fetched once
+    * per served generation: the memo row for `dir` holds while the
+    * table name and the content fingerprint of its files are unchanged.
+    * Keyed on the generation, not on the corpus: an append can refresh
+    * the centroid table without retraining ([[refreshedCentroids]]). */
+  private def servedCents(spark: SparkSession, dir: String): Cents = {
+    val cents = Centroids.serve(spark, dir)
+    val table = Centroids.name(spark, dir)
+    val loc = Artifacts.location(spark, table).toString
+    centsMemo.at(Centroids.kind, dir, table + "@" + Artifacts.corpusFingerprint(spark, loc))(
+      collectCents(cents))
+  }
+
+  private val centsMemo = new ContentMemo[Cents]
 
   /** cr = 1 only — the common case (every corpus-side consumer): the
     * codegen'd graft_cell_top1 argmax picks the home cell in one native
     * loop, no per-centroid struct allocation (which dominated at
     * corpus-sized k), no explode. Same schema as
     * `cellRankedLit(...).where(cr === 1)` and bit-identical content. */
-  private def cellTop1Lit(v: DataFrame, cl: Seq[(Long, Seq[Double], Double)]): DataFrame = {
+  private def cellTop1Lit(v: DataFrame, cl: Cents): DataFrame = {
     val vCols = v.columns.toSeq
     v.withColumn("__cents", typedlit(cl))
       .withColumn("__best",
@@ -307,7 +321,7 @@ object Similarity {
     * schema matches the old join form: v.* ++ (cent_id, ce, cn) ++ cr.
     * Probe frames only (small); corpus-side consumers take
     * [[cellTop1Lit]], which skips the per-centroid struct churn. */
-  private def cellRankedLit(v: DataFrame, cl: Seq[(Long, Seq[Double], Double)]): DataFrame = {
+  private def cellRankedLit(v: DataFrame, cl: Cents): DataFrame = {
     val vCols = v.columns.toSeq
     v.withColumn("__cents", typedlit(cl))
       .withColumn("__ranked", expr(
@@ -325,12 +339,12 @@ object Similarity {
         (col("pos") + 1).cast("int").as("cr")): _*)
   }
 
-  /** IVF ANN over ARBITRARY corpus/probe frames and a given centroid
-    * table (from [[trainCentroids]] or a served artifact): corpus rows
-    * live in their home cell; each probe searches only its own home
-    * cell via a cell-equi join. */
-  def annIvf(corpus: DataFrame, probes: DataFrame, cents: DataFrame): DataFrame = {
-    val cl = collectCents(cents) // one driver fetch serves both sides
+  /** IVF ANN over ARBITRARY corpus/probe frames and a given set of
+    * centroid rows (from [[trainCentroids]] or a served artifact, fetched
+    * to the driver once for both sides): corpus rows live in their home
+    * cell; each probe searches only its own home cell via a cell-equi
+    * join. */
+  def annIvf(corpus: DataFrame, probes: DataFrame, cl: Cents): DataFrame = {
     val assigned = cellTop1Lit(normedOf(corpus), cl)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("label"),
         col("cent_id").as("cell"))
@@ -349,11 +363,11 @@ object Similarity {
 
   /** [[annIvf]] training the index inline from the corpus. */
   def annIvf(corpus: DataFrame, probes: DataFrame): DataFrame =
-    annIvf(corpus, probes, trainCentroids(corpus))
+    annIvf(corpus, probes, collectCents(trainCentroids(corpus)))
 
   def s03AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
-    annIvf(emb, emb.where(col("vec_id") < QuerySet), Centroids.serve(spark, dir))
+    annIvf(emb, emb.where(col("vec_id") < QuerySet), servedCents(spark, dir))
   }
 
   // ---------------------------------------------------------------------
@@ -369,11 +383,10 @@ object Similarity {
   val NProbe = 2
 
   /** Multi-probe IVF ANN over ARBITRARY corpus/probe frames and a given
-    * centroid table: each probe fans out to its `nprobe` nearest cells;
-    * the corpus stays singly-assigned, so a neighbor can't repeat. */
-  def annIvfMultiprobe(corpus: DataFrame, probes: DataFrame, cents: DataFrame,
+    * set of centroid rows: each probe fans out to its `nprobe` nearest
+    * cells; the corpus stays singly-assigned, so a neighbor can't repeat. */
+  def annIvfMultiprobe(corpus: DataFrame, probes: DataFrame, cl: Cents,
       nprobe: Int = NProbe): DataFrame = {
-    val cl = collectCents(cents) // one driver fetch serves both sides
     val assigned = cellTop1Lit(normedOf(corpus), cl)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("label"),
         col("cent_id").as("cell"))
@@ -393,7 +406,7 @@ object Similarity {
   def s05AnnIvfMultiprobe(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
     annIvfMultiprobe(emb, emb.where(col("vec_id") < QuerySet),
-      Centroids.serve(spark, dir))
+      servedCents(spark, dir))
   }
 
   // ---------------------------------------------------------------------

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.SharedHash._
-import graft.sources.ArtifactFamily
+import graft.sources.{ArtifactFamily, ContentMemo}
 import graft.sources.ArtifactFamily.RowAppend
 
 /** Text-analysis operators over `documents`: language ID, quality
@@ -795,7 +795,7 @@ object TextAnalysis {
   // language — per stratum, the `quota` docs with the smallest
   // (content-hash, doc_id) key, so the selection is reproducible and
   // partition-independent like t05 (quota = smallest language's count,
-  // computed in-query).
+  // probed on the driver when the plan is built).
   //
   // Selection is distributed-selection via a hash histogram, NOT a
   // per-stratum row_number window: with a handful of languages, a window
@@ -816,10 +816,8 @@ object TextAnalysis {
   val SampleBuckets = 4096
 
   /** Stratified downsampling over ANY (doc_id, text, lang, source)
-    * frame. */
-  def stratifiedSample(docs: DataFrame): DataFrame = {
-    val quota = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
-      .agg(min(col("n"))).first().getLong(0)
+    * frame: `quota` docs per language. */
+  def stratifiedSample(docs: DataFrame, quota: Long): DataFrame = {
     // h ∈ [0, P31); bucket = ⌊h·B/P31⌋ ∈ [0, B) is monotone in h and
     // h·B < 2^43 — no 64-bit overflow
     val keyed = docs.select(col("doc_id"), col("lang"), col("source"),
@@ -848,8 +846,16 @@ object TextAnalysis {
     below.unionAll(atBoundary).orderBy(col("doc_id").asc)
   }
 
-  def t07StratifiedSample(spark: SparkSession, dir: String): DataFrame =
-    stratifiedSample(Tables.load(spark, dir, "documents"))
+  /** t07 reads its quota once per content state of `documents`. */
+  def t07StratifiedSample(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.load(spark, dir, "documents")
+    stratifiedSample(docs, quotaMemo(spark, dir, "t07_quota", Seq("documents"))(
+      docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
+        .agg(min(col("n"))).first().getLong(0)))
+  }
+
+  /** The smallest language's doc count — every stratum's sample size. */
+  private val quotaMemo = new ContentMemo[Long]
 
   /** DuckDB CTE chain for the t12 rule inputs, ending at `chars`, `ws`,
     * `cov` — shared with Curation's p01 oracle so the pipeline's quality

@@ -321,13 +321,7 @@ object Artifacts {
 
   /** The (kind, dir) memo lookup shared by [[keyFor]] and [[keyForTables]]. */
   private def memoKey(kind: String, dir: String, fp: String)(defining: => DataFrame): String =
-    keyMemo.get((kind, dir)) match {
-      case Some((oldFp, k)) if oldFp == fp => k
-      case _ =>
-        val k = keyOf(dir, fp, defining)
-        keyMemo.put((kind, dir), (fp, k))
-        k
-    }
+    keyMemo.at(kind, dir, fp)(keyOf(dir, fp, defining))
 
   /** [[corpusFingerprint]] restricted to `dir/<table>.parquet` entries
     * (each a single file or a directory of part files). Missing tables
@@ -340,9 +334,8 @@ object Artifacts {
   private val dirFpSeen =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** (kind, dir) → (corpus fingerprint, derived key); latest state only. */
-  private val keyMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (String, String)]
+  /** (kind, dir) → derived key at the latest corpus fingerprint. */
+  private val keyMemo = new ContentMemo[String]
 
   /** CONTENT fingerprint of a data dir: md5 over the sorted recursive
     * file listing of (path, length, per-file content digest).
@@ -370,11 +363,12 @@ object Artifacts {
     * metadata walk exactly as before, with mtime serving as the memo's
     * cheap validity check rather than as the identity itself.
     *
-    * Also keys the scalar-probe memos (anchor/docCount/packMaxId/skew):
-    * memo hits are valid precisely while the CONTENT is unchanged, so
-    * content keys make those memos survive an in-place same-bytes
-    * rewrite too — which is correct, where the mtime key's forced miss
-    * was merely safe. */
+    * Also keys the construct-time probe memos ([[ContentMemo]]: table
+    * schemas, order-date bounds, row counts, served centroids): memo
+    * hits are valid precisely while the CONTENT is unchanged, so content
+    * keys make those memos survive an in-place same-bytes rewrite too —
+    * which is correct, where the mtime key's forced miss was merely
+    * safe. */
   def corpusFingerprint(spark: SparkSession, dir: String): String =
     fingerprintOf(spark, Seq(new Path(dir)))
 
@@ -471,4 +465,38 @@ object Artifacts {
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+}
+
+/** A value derived from immutable input, held per `(name, dir)` only
+  * while that input's content fingerprint is unchanged. A changed
+  * fingerprint recomputes and REPLACES the row, so regenerating a
+  * corpus in place many times over one driver lifetime keeps one row
+  * per key instead of one per state.
+  *
+  * This is how a query's construction stays free of Spark jobs on a
+  * warm corpus: every scalar the plan needs from immutable input (a
+  * table's parquet schema, an order-date bound, a row count, the served
+  * centroid table) is probed once per content state and then read from
+  * here. Content keys, not paths: a table rewritten in place with
+  * different bytes is a new state and re-probes; a byte-identical
+  * rewrite keeps its value. Two threads missing at once both compute
+  * the same value; the later write wins harmlessly. */
+final class ContentMemo[A] {
+  private val rows = scala.collection.concurrent.TrieMap.empty[(String, String), (String, A)]
+
+  /** The value for `(name, dir)` at content state `fp`, computed on a miss. */
+  def at(name: String, dir: String, fp: String)(compute: => A): A =
+    rows.get((name, dir)) match {
+      case Some((f, v)) if f == fp => v
+      case _ =>
+        val v = compute
+        rows.put((name, dir), (fp, v))
+        v
+    }
+
+  /** [[at]] keyed on the content of `dir`'s `tables`
+    * ([[Artifacts.tablesFingerprint]]). */
+  def apply(spark: SparkSession, dir: String, name: String, tables: Seq[String])(
+      compute: => A): A =
+    at(name, dir, Artifacts.tablesFingerprint(spark, dir, tables))(compute)
 }

@@ -541,6 +541,22 @@ class SourcesSpec extends SparkSpec {
     // makes the overwritten corpus a fresh key
     assert(graft.operators.Dedup.docCount(spark, dir) === 7L,
       "memo must not serve a value probed from the overwritten snapshot")
+    // the schema memo is content-keyed too: a rewrite with a drifted
+    // physical type surfaces the new type, never the memoized one
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    assert(graft.Tables.load(spark, dir, "documents").schema("doc_id").dataType === LongType)
+    docs(7).selectExpr("CAST(doc_id AS INT) AS doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(graft.Tables.load(spark, dir, "documents").schema("doc_id").dataType === IntegerType,
+      "schema memo must not serve the schema of the overwritten snapshot")
+    // loads share the schema, not the relation: two loads self-join on
+    // their key as two sides (a shared attribute id would make the
+    // condition trivially true and return 7 x 2 rows)
+    val a = graft.Tables.load(spark, dir, "documents")
+    val b = graft.Tables.load(spark, dir, "documents").where("doc_id < 2")
+    val pairs = a.join(b, a("doc_id") === b("doc_id"))
+      .select(a("doc_id"), b("doc_id")).collect().map(r => (r.getInt(0), r.getInt(1)))
+    assert(pairs.sorted.toSeq === Seq((0, 0), (1, 1)))
   }
 
   // -------------------------------------------------------------------
