@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+
 /** Single-query timing harness for plan iteration: run one SparkEntry
   * query N times against a testdata dir and print each run's seconds
   * (min is the steady-state plan cost, same convention as [[Bench]]),
@@ -7,22 +9,48 @@ package graft
   * the generated-class cache lost the query's classes) and the Spark jobs
   * it started.
   *
-  * Usage: runMain graft.BenchOne <query_name> [sfDir] [iters]
+  * Flags:
+  *  - `--explain` prints the formatted physical plan instead of running.
+  *  - `--profile` also prints one `[stage p<run>]` line per completed
+  *    stage (task count, wall, executor CPU and run time), so a
+  *    "wall ≫ cpu/cores" reading resolves to a named stage.
+  *  - `--keep-cache` clears the cache only before run 1, so persists
+  *    made inside the query survive into later runs — [[Bench]]'s cache
+  *    semantics, whose min-of-3 rows it then reproduces. By default the
+  *    cache is cleared before every run.
+  *
+  * Usage: runMain graft.BenchOne <query_name> [sfDir] [iters] [--explain|--profile|--keep-cache]
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val iters = if (args.length > 2) args(2).toInt else 3
+    val (flags, pos) = args.partition(_.startsWith("--"))
+    val name = pos(0)
+    val sfDir = if (pos.length > 1) pos(1) else "/root/testdata/sf0.1"
+    val iters = if (pos.length > 2) pos(2).toInt else 3
+    val keepCache = flags.contains("--keep-cache")
     val spark = Session.get("graft-bench-one")
     val fn = SparkEntry.queries(name)
-    if (args.contains("--explain")) {
+    if (flags.contains("--explain")) {
       fn(spark, sfDir).explain("formatted")
       spark.stop()
       return
     }
     CpuMeter.install(spark)
+    @volatile var run = 0
+    if (flags.contains("--profile")) spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        val wall = (for (c <- i.completionTime; s <- i.submissionTime) yield (c - s) / 1e3)
+          .getOrElse(-1.0)
+        val m = i.taskMetrics
+        println(f"[stage p$run] id=${i.stageId}%-4d tasks=${i.numTasks}%-4d " +
+          f"wall=$wall%7.2f s cpu=${m.executorCpuTime / 1e9}%8.2f s " +
+          f"run=${m.executorRunTime / 1e3}%8.2f s  ${i.name.linesIterator.next()}")
+      }
+    })
     val times = (1 to iters).map { i =>
+      run = i
+      if (i == 1 || !keepCache) spark.catalog.clearCache()
       val (c0, _) = CpuMeter.snapshot(spark)
       val k0 = CpuMeter.compiles
       val j0 = CpuMeter.jobs
@@ -32,7 +60,6 @@ object BenchOne {
       val (n, digest) = BenchConsume.consume(fn(spark, sfDir))
       val s = (System.nanoTime() - t0) / 1e9
       val (c1, _) = CpuMeter.snapshot(spark)
-      spark.catalog.clearCache()
       println(f"[bench-one] $name run $i: $s%.3f s cpu ${c1 - c0}%.3f s compiles ${CpuMeter.compiles - k0} jobs ${CpuMeter.jobs - j0} ($n rows, digest $digest%016x)")
       (s, c1 - c0)
     }

@@ -4,26 +4,36 @@ import org.apache.spark.sql.SparkSession
 
 /** The one place engine SparkSession conf lives (SURVEY.md §7.2 step 1).
   *
-  * Defaults are scale-oriented; every knob below is env-overridable so the
-  * same binary runs local[32] tests and a 1000-executor cluster:
+  * Four deployment settings are read from the environment, so the same
+  * binary runs local tests and a cluster:
+  *
+  *  - `SPARK_GRAFT_CPUS`: local core count (default 32), the master's
+  *    `local[n]` and the default shuffle partition count.
+  *  - `SPARK_GRAFT_MASTER`: the master URL (default `local[$cpus]`).
+  *  - `SPARK_GRAFT_SHUFFLE_PARTITIONS`: `shuffle.partitions`; on a
+  *    cluster set it to 2-3× total executor cores (the adaptive coalescer
+  *    merges down from there, so erring high is safe).
+  *  - `SPARK_GRAFT_SF_DIR`: the corpus [[Bench]] times.
+  *
+  * Every other SQL setting a caller wants changed goes through
+  * `spark.conf.set` after [[get]]. Scan split size, the broadcast
+  * threshold and the join strategy stay at Spark's defaults (128m,
+  * 10 MB, prefer sort-merge); all are runtime confs, and
+  * [[graft.plans.Scale]] reads the broadcast threshold from `spark.conf`.
+  * On big-memory nodes, raising that threshold keeps growing star-join
+  * dimensions broadcast (PERF 14d).
+  * Sort-merge over shuffled-hash join was measured, not assumed: SHJ lost
+  * every interleaved sf1 A/B on the join-heaviest query (PERF 17e).
+  *
+  * Fixed here:
   *
   *  - AQE on: runtime shuffle coalescing, skew-join splitting, plan
   *    re-optimization from real stats.
-  *  - `shuffle.partitions` = local core count here; on a cluster set
-  *    SPARK_GRAFT_SHUFFLE_PARTITIONS to 2-3× total executor cores (the
-  *    adaptive coalescer merges down from there, so erring high is safe).
-  *  - `files.maxPartitionBytes` sizes scan tasks so a partition fits
-  *    executor memory with headroom; at 100 TB the default 128m yields
-  *    ~800k tasks — acceptable, raise to 256m if task overhead dominates.
   *  - UTC session time pins date-part determinism.
   *  - `nanosAsLong` lets parquet TIMESTAMP(NANOS) inputs load at all
   *    (surfaced as Long; Tables.load adapts per-schema — micros-era
   *    events files don't need it, but keeping it set is harmless).
   *  - GraftExtensions registers engine-native functions (graft_dot).
-  *
-  * Three settings are fixed, with no env knob, because no corpus or
-  * cluster size calls for another value and none can change an answer:
-  *
   *  - The generated-class cache size and class naming, so a warm query
   *    compiles nothing ([[CodegenCacheEntries]]).
   *  - Status-store retention. The UI is off and nothing in the engine
@@ -35,34 +45,6 @@ object Session {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
   def shufflePartitions: String =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-  def maxPartitionBytes: String =
-    sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m")
-  /** Dimension-broadcast ceiling. Default = Spark's 10 MB; raise to a
-    * memory-budgeted fraction of executor heap on big-memory nodes so
-    * star-join dims keep broadcasting as they grow (PERF.md 14d: q12 at
-    * 150M orders degrades to five chained fact-sized sort-merge joins —
-    * >56 GB of spill — when 15M-row dims stop fitting under 10 MB; at
-    * 512 MB the dims broadcast and the fact is read once). Past the
-    * point where dims outgrow ANY sane threshold, the co-bucketed
-    * layout (sources/Ingest writeBucketed + cojoin) is the shuffle-free
-    * path. */
-  def broadcastThreshold: String =
-    sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "10485760")
-  /** Shuffled-hash-vs-sort-merge stays at Spark's default (prefer SMJ):
-    * flipping it was MEASURED and REJECTED — interleaved sf1 A/B pairs
-    * on the join-heaviest fact query read q08 20.2-21.6 CPU-s under SMJ
-    * vs 24.0-33.7 under SHJ (PERF 17e; the per-partition hash-map build
-    * over the 4M-row join costs more than the codegen'd long-key sort),
-    * and no suite query improved outside window noise. Both knobs stay
-    * env-flippable for corpora where the build side is genuinely small
-    * per partition. */
-  def preferSortMergeJoin: String =
-    sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true")
-  /** AQE SMJ→SHJ rewrite ceiling (per-partition build-side bytes).
-    * 0 = off (Spark default; see [[preferSortMergeJoin]] — the rewrite
-    * lost its A/B here). */
-  def shjLocalMapThreshold: String =
-    sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0")
 
   /** Generated-class cache size (`spark.sql.codegen.cache.maxEntries`).
     * Spark's default of 100 is far below this engine's working set, so a
@@ -94,11 +76,6 @@ object Session {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", broadcastThreshold)
-      .config("spark.sql.join.preferSortMergeJoin", preferSortMergeJoin)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        shjLocalMapThreshold)
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")

@@ -43,24 +43,18 @@ object Tables {
     * construction: re-inferring made most of the jobs a warm query
     * started before it ran. The memo is keyed by the table's content
     * fingerprint ([[graft.sources.ContentMemo]]), so a rewrite with
-    * different bytes re-infers, plus the session settings that change
-    * what inference returns ([[InferenceConfs]]). Only the schema is
-    * shared: every load builds a fresh relation with fresh attribute ids
-    * (self-joins stay unambiguous), and [[conform]] runs on every load.
+    * different bytes re-infers. The parquet settings that change what
+    * inference returns (`nanosAsLong` among them) are fixed by
+    * [[graft.Session]] and changed by no code path, so the key is the
+    * table and its content alone. Only the schema is shared: every load
+    * builds a fresh relation with fresh attribute ids (self-joins stay
+    * unambiguous), and [[conform]] runs on every load.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val settings = InferenceConfs.map(spark.conf.getOption(_).getOrElse("")).mkString(",")
-    val schema = schemas(spark, dir, s"$name|$settings", Seq(name))(
-      spark.read.parquet(path).schema)
+    val schema = schemas(spark, dir, name, Seq(name))(spark.read.parquet(path).schema)
     conform(spark.read.schema(schema).parquet(path), name, path)
   }
-
-  /** Session settings that change the schema parquet inference returns. */
-  private val InferenceConfs = Seq(
-    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.parquet.mergeSchema")
 
   private val schemas = new graft.sources.ContentMemo[StructType]
   private val rowCounts = new graft.sources.ContentMemo[Long]

@@ -821,11 +821,10 @@ object Dedup {
   // ---------------------------------------------------------------------
   val ContaminationThreshold = 0.3
 
-  /** Eval-side doc cap for d07's broadcast hint (env-tunable): ~1M eval
-    * docs × ~100 distinct shingles × ~30 bytes ≈ low-GB build side —
-    * the edge of sane broadcast territory. */
-  val ContaminationBroadcastMaxEvalDocs: Long =
-    sys.env.getOrElse("GRAFT_D07_BROADCAST_MAX_EVAL_DOCS", "1000000").toLong
+  /** Eval-side doc cap for d07's broadcast hint: ~1M eval docs × ~100
+    * distinct shingles × ~30 bytes ≈ low-GB build side — the edge of sane
+    * broadcast territory. */
+  val ContaminationBroadcastMaxEvalDocs: Long = 1000000L
 
   /** Qualifying (eval, train) contamination pairs over ARBITRARY train
     * and eval (doc_id, text) frames — d07's pre-top-k derivation, shared
@@ -1189,7 +1188,7 @@ object Dedup {
   val AnchorK = 4
 
   /** Document-frequency cap on the INVERTED-INDEX side of the anchor
-    * probe (env-tunable). The probe's fanout is Σ_anchors df(anchor);
+    * probe. The probe's fanout is Σ_anchors df(anchor);
     * on a template-heavy corpus a hot boilerplate shingle with df ≈
     * corpus size turns one unlucky anchor into a near-cartesian
     * candidate wave. Shingles with df > cap are dropped from the index
@@ -1202,10 +1201,10 @@ object Dedup {
     * a boilerplate-heavy corpus). Worst-case candidate fanout becomes
     * docs·K·cap — linear in the corpus at fixed cap — instead of
     * docs·K·df_max. */
-  val AnchorDfCap: Long = envLong("GRAFT_D17_DF_CAP", 1024L)
+  val AnchorDfCap: Long = 1024L
 
   /** Minimum matched-anchor count for a candidate pair to reach exact
-    * verification (env-tunable; 1 restores verify-every-collision).
+    * verification (1 would restore verify-every-collision).
     *
     * The verify stage — joining every candidate pair against both full
     * shingle sets — owns the d17 wall-clock (14.7 s of the sf1 total in
@@ -1227,7 +1226,7 @@ object Dedup {
     * anchor count, so tiny docs keep the m=1 guarantee. The DuckDB
     * oracle mirrors the prune exactly (deterministic given h31), and
     * the recall spec re-asserts ≥95% against exhaustive truth. */
-  val MinAnchorHits: Long = envLong("GRAFT_D17_MIN_ANCHOR_HITS", 2L)
+  val MinAnchorHits: Long = 2L
 
   /** The sketch's candidate stream: bottom-K anchor shingle-hashes per
     * doc probing the df-capped hashed shingle inverted index. Exposed to
@@ -1341,18 +1340,18 @@ object Dedup {
   /** Anchors per eval doc (bottom-K distinct 60-bit shingle hashes). */
   val ContamAnchorK = 16
 
-  /** Document-frequency cap on the TRAIN index side of the d18 probe
-    * (env-tunable). Over-cap shingles are dropped from the INDEX only —
+  /** Document-frequency cap on the TRAIN index side of the d18 probe.
+    * Over-cap shingles are dropped from the INDEX only —
     * every eval doc still contributes all [[ContamAnchorK]] anchors, an
     * over-cap anchor merely finds no partner (it was near-useless
     * contamination evidence anyway: a shingle in >cap training docs
     * does not localize a leak). Worst-case candidate fanout becomes
     * evalDocs·K·cap instead of Σ dfE·dfT. */
-  val ContamDfCap: Long = envLong("GRAFT_D18_DF_CAP", 4096L)
+  val ContamDfCap: Long = 4096L
 
   /** Minimum matched-anchor count before exact verification (the d17
-    * prune; 1 restores verify-every-collision). */
-  val ContamMinAnchorHits: Long = envLong("GRAFT_D18_MIN_ANCHOR_HITS", 2L)
+    * prune; 1 would restore verify-every-collision). */
+  val ContamMinAnchorHits: Long = 2L
 
   /** The sketch's candidate stream over already-built HASHED shingle
     * frames (distinct (doc_id, h) rows): eval bottom-K anchors probing

@@ -700,28 +700,6 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), col("nrm"),
         col("cent_id").as("cell"))))
 
-  /** SemDeDup over ANY (vec_id, embedding, label) frame under a given
-    * centroid set (from [[trainCentroids]] or a served artifact) — the
-    * DataFrame-in deployment shape. Cost is Σ cell² pairs, so the
-    * caller bounds cells by growing k with the corpus (see
-    * [[trainCentroids]]); the keep-lowest rule keeps the prune set
-    * deterministic under any k. */
-  def semDedup(corpus: DataFrame, cents: DataFrame): DataFrame =
-    semDedupFromAssigned(Dedup.persistOnce(
-      cellTop1Lit(normedOf(corpus), collectCents(cents))
-        .select(col("vec_id"), col("embedding"), col("nrm"),
-          col("cent_id").as("cell"))))
-
-  /** Diagnostic for the k knob: (max cell population, Σ cell²) of a
-    * corpus under a centroid set — the intrinsic pair count the
-    * [[semDedup]] sweep pays. Used by the ProbeSemK scale study. */
-  private[graft] def semDedupCellSizes(corpus: DataFrame, cents: DataFrame): (Long, Long) = {
-    val sizes = cellTop1Lit(normedOf(corpus), collectCents(cents))
-      .groupBy(col("cent_id")).agg(count(lit(1)).as("n"))
-    val r = sizes.agg(max(col("n")), sum(col("n") * col("n"))).first()
-    (r.getLong(0), r.getLong(1))
-  }
-
   private def semDedupFromAssigned(assigned: DataFrame): DataFrame = {
     // `assigned`: one row per vec; PERSISTED because three plan
     // references consume it (both sides of the pair sweep + the verdict

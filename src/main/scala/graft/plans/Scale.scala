@@ -137,10 +137,8 @@ object Scale {
     * with nothing to amortize it, while every ≥15 MB corpus won
     * (t04 sf1 1.61→0.97 s, sf10full 13.2→10.1 s per the committed r14
     * sweep — bench/scaling_r14/bench_sf10full.json; t01 12.9→3.8 s,
-    * t02 10.0→5.3 s are the family's big wins). Env-overridable like
-    * the session's other scale knobs. */
-  private[graft] val SpreadMinBytes: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_MIN_BYTES").map(_.toLong).getOrElse(4L << 20)
+    * t02 10.0→5.3 s are the family's big wins). */
+  private[graft] val SpreadMinBytes: Long = 4L << 20
 
   private[graft] def spreadIfNarrow(df: DataFrame): DataFrame = {
     val spark = df.sparkSession

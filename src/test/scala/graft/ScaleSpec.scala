@@ -209,13 +209,9 @@ class ScaleSpec extends SparkSpec {
 
   test("spreadIfNarrow: fires on a big single-row-group file, memoizes the " +
       "decision per source root (performance-only staleness)") {
-    // env preconditions (ADVICE r14): the fixture is ~12 MB / 1 row
-    // group, sized against the DEFAULT 4 MB floor; with the A/B
-    // kill-switch exported (a documented PERF 14f workflow) or a
-    // single-core session the spread legitimately never fires — cancel
-    // rather than fail confusingly
-    assume(sys.env.get("SPARK_GRAFT_SPREAD_MIN_BYTES").isEmpty,
-      "SPARK_GRAFT_SPREAD_MIN_BYTES is set — fixture assumes the default floor")
+    // the fixture is ~12 MB / 1 row group, sized against the 4 MB
+    // floor (Scale.SpreadMinBytes); on a single-core session the spread
+    // legitimately never fires — cancel rather than fail confusingly
     assume(spark.sparkContext.defaultParallelism >= 2,
       "needs defaultParallelism >= 2 for groups*2 <= target to hold")
     val dir = java.nio.file.Files.createTempDirectory("graft-spread").toString

@@ -752,9 +752,7 @@ class SourcesSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{expr, lit}
     import graft.sources.Artifacts
     import graft.plans.Scale
-    // same env preconditions as ScaleSpec's spread fixture
-    assume(sys.env.get("SPARK_GRAFT_SPREAD_MIN_BYTES").isEmpty,
-      "SPARK_GRAFT_SPREAD_MIN_BYTES is set — fixture assumes the default floor")
+    // same precondition as ScaleSpec's spread fixture
     assume(spark.sparkContext.defaultParallelism >= 2,
       "needs defaultParallelism >= 2 for the spread to fire")
     val dir = Files.createTempDirectory("graft-keyfor-spread").toString
@@ -789,8 +787,6 @@ class SourcesSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{expr, lit}
     import graft.sources.Artifacts
     import graft.plans.Scale
-    assume(sys.env.get("SPARK_GRAFT_SPREAD_MIN_BYTES").isEmpty,
-      "SPARK_GRAFT_SPREAD_MIN_BYTES is set — fixture assumes the default floor")
     assume(spark.sparkContext.defaultParallelism >= 2,
       "needs defaultParallelism >= 2 for the spread to fire")
     val dir = Files.createTempDirectory("graft-keyfor-firstobs").toString
@@ -822,8 +818,6 @@ class SourcesSpec extends SparkSpec {
       "evict the sibling sf10-named corpus (ADVICE r15)") {
     import org.apache.spark.sql.functions.expr
     import graft.plans.Scale
-    assume(sys.env.get("SPARK_GRAFT_SPREAD_MIN_BYTES").isEmpty,
-      "SPARK_GRAFT_SPREAD_MIN_BYTES is set — fixture assumes the default floor")
     assume(spark.sparkContext.defaultParallelism >= 2,
       "needs defaultParallelism >= 2 for the spread to fire")
     val base = Files.createTempDirectory("graft-memo-boundary").toString

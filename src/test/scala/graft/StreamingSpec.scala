@@ -249,7 +249,7 @@ class StreamingSpec extends SparkSpec {
         mem.addData(batch: _*)
         q.processAllAvailable() // one micro-batch per stream batch
         // state-growth contract (r11 task 7; the sf1×5-trigger wall
-        // measurement lives in PERF.md via graft.tools.ProbeStream):
+        // measurement is PERF.md 12g):
         // this design's state is the PARQUET stream index, not
         // state-store rows — after every trigger it must hold EXACTLY
         // one index row per admitted doc (nothing unbounded, no
