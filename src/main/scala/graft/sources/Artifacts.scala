@@ -384,9 +384,11 @@ object Artifacts {
           fs.listStatus(st.getPath).sortBy(_.getPath.getName).foreach(visit)
         else if (!st.getPath.getName.startsWith(".")) { // ignore CRC sidecars
           val path = st.getPath.toUri.getPath
-          val dig = fileDigestMemo.getOrElseUpdate(
-            (path, st.getLen, st.getModificationTime),
-            headTailDigest(fs, st.getPath, st.getLen))
+          val mtime = st.getModificationTime
+          val dig =
+            if (mtime > System.currentTimeMillis() - RacyMs) headTailDigest(fs, st.getPath, st.getLen)
+            else fileDigestMemo.getOrElseUpdate((path, st.getLen, mtime),
+              headTailDigest(fs, st.getPath, st.getLen))
           entries += s"$path|${st.getLen}|$dig"
         }
       if (fs.exists(root)) visit(fs.getFileStatus(root))
@@ -400,6 +402,12 @@ object Artifacts {
     * only 1000 small tuples per JVM. */
   private val fileDigestMemo =
     scala.collection.concurrent.TrieMap.empty[(String, Long, Long), String]
+
+  /** A file modified less than this long ago is digested on every call
+    * and never memoized: it can still be rewritten inside the same mtime
+    * tick (same path, length and mtime, new bytes), which the memo key
+    * cannot tell apart. Covers filesystems with 1 s mtime granularity. */
+  private val RacyMs = 2000L
 
   private val DigestWindow = 64 * 1024
 

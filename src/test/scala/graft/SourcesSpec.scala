@@ -454,6 +454,23 @@ class SourcesSpec extends SparkSpec {
       "a rewrite with different bytes at identical (path, length) must change the key")
   }
 
+  test("content-keyed fingerprint: a same-length rewrite inside the same mtime tick " +
+      "still changes the key") {
+    import graft.sources.Artifacts
+    val dir = s"$tmpDir/fpt"
+    val p = Paths.get(dir, "blob.bin")
+    Files.createDirectories(p.getParent)
+    val bytes = Array.fill[Byte](4096)(7)
+    Files.write(p, bytes)
+    val tick = Files.getLastModifiedTime(p)
+    val before = Artifacts.corpusFingerprint(spark, dir)
+    bytes(2048) = 9
+    Files.write(p, bytes)
+    Files.setLastModifiedTime(p, tick) // the rewrite landed in the same tick
+    assert(Artifacts.corpusFingerprint(spark, dir) !== before,
+      "a rewrite with the same (path, length, mtime) and new bytes must change the key")
+  }
+
   test("footer-aware digest: an interior change inside a >64 KiB parquet footer " +
       "(beyond both fixed windows) still changes the key (r17 verdict)") {
     import graft.sources.Artifacts
