@@ -22,11 +22,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * Usage: runMain graft.BenchOne <query_name> [sfDir] [iters] [--explain|--profile|--keep-cache]
   */
 object BenchOne {
-  def main(args: Array[String]): Unit = {
-    val (flags, pos) = args.partition(_.startsWith("--"))
-    val name = pos(0)
-    val sfDir = if (pos.length > 1) pos(1) else "/root/testdata/sf0.1"
-    val iters = if (pos.length > 2) pos(2).toInt else 3
+  def main(argv: Array[String]): Unit = {
+    val (flags, args) = argv.partition(_.startsWith("--"))
+    val name = args(0)
+    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    val iters = if (args.length > 2) args(2).toInt else 3
     val keepCache = flags.contains("--keep-cache")
     val spark = Session.get("graft-bench-one")
     val fn = SparkEntry.queries(name)
