@@ -27,22 +27,27 @@ object Curation {
   // flags from per-doc aggregates; the composition itself is two
   // doc_id-keyed joins.
   // ---------------------------------------------------------------------
-  def p01CurationLedger(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val nearDrop = Dedup.Labels.serve(spark, dir)
+  /** The ledger over ANY (doc_id, lang, source) frame, its (doc_id,
+    * label) near-dup labels and its t12 quality flags. */
+  private[graft] def curationLedger(docs: DataFrame, labels: DataFrame,
+      quality: DataFrame): DataFrame = {
+    val nearDrop = labels
       .where(col("label") =!= col("doc_id"))
       .select(col("doc_id"), lit(true).as("is_near_dup"))
-    val quality = TextAnalysis.t12QualityFilter(spark, dir)
-      .select(col("doc_id"), col("keep").as("q_keep"))
+    val q = quality.select(col("doc_id"), col("keep").as("q_keep"))
     docs.select(col("doc_id"), col("lang"), col("source"))
       .join(nearDrop, Seq("doc_id"), "left_outer")
-      .join(quality, Seq("doc_id"))
+      .join(q, Seq("doc_id"))
       .select(col("doc_id"), col("lang"), col("source"),
         when(col("is_near_dup"), "near_dup")
           .when(!col("q_keep"), "low_quality")
           .otherwise("kept").as("status"))
       .orderBy(col("doc_id").asc)
   }
+
+  def p01CurationLedger(spark: SparkSession, dir: String): DataFrame =
+    curationLedger(Tables.load(spark, dir, "documents"), Dedup.Labels.serve(spark, dir),
+      TextAnalysis.t12QualityFilter(spark, dir))
 
   // ---------------------------------------------------------------------
   // p02 — token-budget shard packing: assign every document a training
@@ -235,8 +240,10 @@ object Curation {
   // aggregate over ≤ |sources|×|statuses| groups, with the per-source
   // totals joined back by broadcast.
   // ---------------------------------------------------------------------
-  def p05LossAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.load(spark, dir, "documents")
+  /** Per-(source, status) loss over a p01 `ledger` of the (doc_id, text)
+    * frame `docs`. */
+  private[graft] def lossAttribution(ledger: DataFrame, docs: DataFrame): DataFrame = {
+    val toks = docs
       .select(col("doc_id"), ceil(length(col("text")) / 4.0).cast("long").as("tokens"))
     // persisted: the rollup feeds BOTH the output rows and the per-source
     // totals join-back — without it the whole p01+token subtree (doc scan,
@@ -245,7 +252,7 @@ object Curation {
     // 33.6 unpersisted vs 14.1 CPU-s persisted, digest unchanged —
     // PERF 17e). The cached frame is ≤|sources|×|statuses| rows — the
     // materialization is the cheap side of the trade at any corpus size.
-    val agg = p01CurationLedger(spark, dir)
+    val agg = ledger
       .select(col("doc_id"), col("source"), col("status"))
       .join(toks, Seq("doc_id"))
       .groupBy(col("source"), col("status"))
@@ -257,6 +264,9 @@ object Curation {
         (col("n_tokens") / col("src_tokens")).as("token_share"))
       .orderBy(col("source").asc, col("status").asc)
   }
+
+  def p05LossAttribution(spark: SparkSession, dir: String): DataFrame =
+    lossAttribution(p01CurationLedger(spark, dir), Tables.load(spark, dir, "documents"))
 
   // ---------------------------------------------------------------------
   // p06 — data-constrained epoch plan: per source, how many passes
@@ -351,10 +361,10 @@ object Curation {
   // then a label-keyed aggregate — nothing beyond the artifacts that
   // already exist.
   // ---------------------------------------------------------------------
-  def p08SplitLeakage(spark: SparkSession, dir: String): DataFrame = {
-    val labels = Dedup.Labels.serve(spark, dir)
-    val splits = p03SplitAssign(spark, dir).select(col("doc_id"), col("split"))
-    labels.join(splits, Seq("doc_id"))
+  /** Clusters of a (doc_id, label) table that straddle the (doc_id,
+    * split) assignment `splits`. */
+  private[graft] def splitLeakage(labels: DataFrame, splits: DataFrame): DataFrame =
+    labels.join(splits.select(col("doc_id"), col("split")), Seq("doc_id"))
       .groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("split")).as("n_splits"),
@@ -363,7 +373,9 @@ object Curation {
         sum(when(col("split") === "test", 1L).otherwise(0L)).as("n_test"))
       .where(col("n_splits") > 1)
       .orderBy(col("cluster_id").asc)
-  }
+
+  def p08SplitLeakage(spark: SparkSession, dir: String): DataFrame =
+    splitLeakage(Dedup.Labels.serve(spark, dir), p03SplitAssign(spark, dir))
 
   // ---------------------------------------------------------------------
   // p09 — mixture APPLY: materialize the corpus that p04 plans — each

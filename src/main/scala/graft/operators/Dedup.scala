@@ -412,11 +412,6 @@ object Dedup {
   private[graft] def docCount(spark: SparkSession, dir: String): Long =
     Tables.rowCount(spark, dir, "documents")
 
-  /** SimHash near-dup pairs over ANY (doc_id, text) frame at an explicit
-    * signature width (2 or 3 60-bit words — pick via [[simWordsFor]] on
-    * the corpus cardinality). */
-  def simhash(docs: DataFrame, words: Int): DataFrame = simhashPairsOf(docs, words)
-
   def d04Simhash(spark: SparkSession, dir: String): DataFrame =
     simhashPairs(spark, dir, simWordsFor(docCount(spark, dir)))
 
@@ -1611,7 +1606,12 @@ object Dedup {
     * key to get the same build-once-serve-many behavior on your own
     * table. */
   def lshClusters(docs: DataFrame): DataFrame =
-    clusterOutput(minLabelComponents(lshEdgesOf(docs)))
+    clusterOutput(lshLabelsOf(docs))
+
+  /** The (doc_id, label) near-dup label table of ANY (doc_id, text)
+    * frame — what [[Labels]] serves for a corpus dir. */
+  private[graft] def lshLabelsOf(docs: DataFrame): DataFrame =
+    minLabelComponents(lshEdgesOf(docs))
 
   /** The exact-verified LSH edge set, served as a PERSISTED CATALOG
     * ARTIFACT. Until r13 the edge derivation was recomputed by every
@@ -1715,10 +1715,7 @@ object Dedup {
     * Append refresh RIDES the refreshed edges_ artifact: the scored_
     * refresh already found and verified every pair touching the batch,
     * so the label update is [[mergeNewEdgesIntoLabels]] over the
-    * batch-touching slice of edges(newDir) — no second band probe.
-    * ([[refreshedClusterLabels]] stays the direct-probe form for
-    * deployments that refresh labels WITHOUT maintaining a scored
-    * artifact.) */
+    * batch-touching slice of edges(newDir) — no second band probe. */
   private[graft] lazy val Labels: ArtifactFamily = new ArtifactFamily("labels", Docs,
     defining = lshEdges,
     // build from the served EDGE artifact: a cold label build pays one
@@ -1772,7 +1769,7 @@ object Dedup {
   /** [[dedupApply]] computing the near-dup labels inline from the same
     * frame — the one-argument form for arbitrary corpora. */
   def dedupApply(docs: DataFrame): DataFrame =
-    dedupApply(docs, minLabelComponents(lshEdgesOf(docs)))
+    dedupApply(docs, lshLabelsOf(docs))
 
   def d09DedupApply(spark: SparkSession, dir: String): DataFrame =
     dedupApply(Tables.load(spark, dir, "documents"), Labels.serve(spark, dir))
@@ -2054,10 +2051,9 @@ object Dedup {
   // over contracted ids is the true min over all members.
   // ---------------------------------------------------------------------
   /** Contract-and-propagate: fold `newEdges` — every near-dup edge with
-    * at least one batch endpoint — into `existingLabels`. The second
-    * half of [[refreshLabels]], factored out so the artifact-level
-    * refresh can feed it the batch-touching SLICE of the refreshed
-    * edges_ artifact instead of re-deriving band candidates the scored_
+    * at least one batch endpoint — into `existingLabels`. [[Labels]]'s
+    * refresh feeds it the batch-touching SLICE of the refreshed edges_
+    * artifact instead of re-deriving band candidates the scored_
     * refresh already found (r17: the re-probe cost 227 CPU-s at
     * sf10full where the slice + this propagation costs ~20). Exactness:
     * old×old edges cannot change under an append, so the union graph's
@@ -2089,86 +2085,6 @@ object Dedup {
     val fresh = contractedLabels
       .join(existingLabels.select(col("doc_id")), Seq("doc_id"), "left_anti")
     refreshedOld.unionAll(fresh)
-  }
-
-  /** Refresh an existing near-dup label table with a new batch, probing
-    * the existing corpus's PRE-BUILT index — the deployment shape,
-    * mirroring the 3-arg [[incrementalDedup]]: `existingIndex` is the
-    * [[DedupSig]] table (doc_id, text_md5, mh*, n) and
-    * `existingShingles` the [[Shingles]] table; NO existing
-    * TEXT is read, and existing SHINGLE rows are read only for
-    * band-collided docs (semi-join pushdown into the doc_id-clustered
-    * shingle table). `existingLabels` must be the label table of the
-    * indexed corpus. Returns the label table of `existing ∪ batch` —
-    * exactly what a from-scratch rebuild produces, at batch-probe cost. */
-  def refreshLabels(existingIndex: DataFrame, existingShingles: DataFrame,
-      existingLabels: DataFrame, batch: DataFrame): DataFrame = {
-    val shB = shinglesOf(batch.select(col("doc_id"), col("text")))
-    val sigB = lshSignatures(shB)
-    // batch×existing probes plus batch×batch self-pairs — no old×old
-    // work. Persisted: consumed by the touched-doc restriction AND the
-    // verify join.
-    val cand = bandCandidates(sigB, existingIndex, canonical = false)
-      .unionAll(bandCandidates(sigB, sigB, canonical = true))
-      .transform(persistOnce)
-    // existing-side shingles/sizes only for docs a band collision touched
-    val touched = cand.select(col("doc_b").as("doc_id")).distinct()
-    val shE = existingShingles.join(touched, Seq("doc_id"), "left_semi")
-    val sh = shB.unionAll(shE.select(col("doc_id"), col("shingle")))
-    val sizes = sigB.select(col("doc_id"), col("n")).unionAll(
-      existingIndex.select(col("doc_id"), col("n"))
-        .join(touched, Seq("doc_id"), "left_semi"))
-    val newEdges = thresholdEdges(sharedCounts(cand, sh), sizes)
-    // Materialize now (one job; the cand cache serves both consumers
-    // inside it), then release the batch-keyed caches — the
-    // incrementalDedup idiom: these plans can never be re-served by a
-    // later query, so leaving them cached leaks one CacheManager entry
-    // per refresh for the JVM's lifetime.
-    val result = mergeNewEdgesIntoLabels(existingLabels, newEdges).localCheckpoint()
-    cand.unpersist(false)
-    shB.unpersist(false)
-    sigB.unpersist(false)
-    result
-  }
-
-  /** [[refreshLabels]] over ARBITRARY (doc_id, text) frames with disjoint
-    * doc_ids — the one-shot form: derives the existing side's index and
-    * shingles in-query (corpus-wide by construction). A deployment (and
-    * [[refreshedClusterLabels]]) serves the persisted artifacts instead,
-    * so refresh cost scales with the batch. The derived existing-side
-    * caches are released before returning (safe: the 4-arg core
-    * localCheckpoints its result), so the one-shot form leaks nothing. */
-  def refreshLabels(existingDocs: DataFrame, existingLabels: DataFrame,
-      batch: DataFrame): DataFrame = {
-    val shEx = shinglesOf(existingDocs.select(col("doc_id"), col("text")))
-    val sigEx = lshSignatures(shEx)
-    val idx = existingDocs.select(col("doc_id"), md5(col("text")).as("text_md5"))
-      .join(sigEx, Seq("doc_id"), "left_outer") // = dedupIndexOf, with handles
-    val result = refreshLabels(idx, shEx, existingLabels, batch)
-    sigEx.unpersist(false)
-    shEx.unpersist(false)
-    result
-  }
-
-  /** Artifact-level refresh: serve the labels artifact for the corpus at
-    * `newDir` (= `oldDir`'s corpus plus an appended batch), building it
-    * incrementally from `oldDir`'s artifact when absent. The table name
-    * is [[Labels]]'s name for `newDir` — the SAME key a from-scratch
-    * d08 on `newDir` computes — so every later cold session (d08/d09/p01
-    * and friends) serves the incrementally-built labels transparently. */
-  private[graft] def refreshedClusterLabels(spark: SparkSession,
-      oldDir: String, newDir: String): DataFrame = {
-    val oldDocs = Tables.load(spark, oldDir, "documents")
-    val newDocs = Tables.load(spark, newDir, "documents")
-    val batch = newDocs
-      .join(oldDocs.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    Labels.serveWith(spark, newDir) { _ =>
-      // existing side = oldDir's PERSISTED index/shingle artifacts: the
-      // refresh reads old doc_ids (anti-join above, text column pruned)
-      // and band-collided shingle rows — never the old corpus's text
-      refreshLabels(DedupSig.serve(spark, oldDir), Shingles.serve(spark, oldDir),
-        Labels.serve(spark, oldDir), batch)
-    }
   }
 
   // ---------------------------------------------------------------------

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
-import graft.sources.{ArtifactFamily, Artifacts, ContentMemo}
+import graft.sources.{ArtifactFamily, ContentMemo}
 import graft.operators.Dedup.{dotExpr, dotSql, normed, normedOf, normedSql}
 import graft.plans.Scale
 
@@ -201,8 +201,8 @@ object Similarity {
     * iteration count) and doubles round-trip parquet bit-exactly. Keyed
     * by the corpus AND the (unrolled, lazy) training plan, so a changed
     * K, iteration count, or seed rule can never serve a stale index.
-    * Not append-refreshed by the registry: [[refreshedCentroids]] is
-    * the drift-gated refresh. */
+    * Not append-refreshed: an append re-keys it, and the first serve of
+    * the new state retrains. */
   private[graft] lazy val Centroids: ArtifactFamily = new ArtifactFamily("cents", Emb,
     defining = computeTrainedCentroids,
     build = (spark, dir, _) => computeTrainedCentroids(spark, dir))
@@ -262,12 +262,6 @@ object Similarity {
     cents
   }
 
-  /** Corpus rows ranked by trained-centroid cosine (cr = 1 is the home
-    * cell) — the shared assignment stage of s03 (cr = 1 only) and s05
-    * (queries also probe cr ≤ NProbe). */
-  private def cellRanked(spark: SparkSession, dir: String): DataFrame =
-    cellTop1Lit(normed(spark, dir), servedCents(spark, dir))
-
   /** The k-row centroid table fetched to the driver, sorted by cent_id —
     * the index is kilobytes, and inlining it as a literal makes cell
     * assignment a MAP-ONLY pass. The alternative (broadcast join + a
@@ -285,16 +279,12 @@ object Similarity {
   type Cents = Seq[(Long, Seq[Double], Double)]
 
   /** [[collectCents]] of `dir`'s served [[Centroids]] table, fetched once
-    * per served generation: the memo row for `dir` holds while the
-    * table name and the content fingerprint of its files are unchanged.
-    * Keyed on the generation, not on the corpus: an append can refresh
-    * the centroid table without retraining ([[refreshedCentroids]]). */
+    * per table name. The name carries the corpus content key and only
+    * the training build writes under it, so one name always holds the
+    * same rows. */
   private def servedCents(spark: SparkSession, dir: String): Cents = {
     val cents = Centroids.serve(spark, dir)
-    val table = Centroids.name(spark, dir)
-    val loc = Artifacts.location(spark, table).toString
-    centsMemo.at(Centroids.kind, dir, table + "@" + Artifacts.corpusFingerprint(spark, loc))(
-      collectCents(cents))
+    centsMemo.at(Centroids.kind, dir, Centroids.name(spark, dir))(collectCents(cents))
   }
 
   private val centsMemo = new ContentMemo[Cents]
@@ -340,8 +330,8 @@ object Similarity {
   }
 
   /** IVF ANN over ARBITRARY corpus/probe frames and a given set of
-    * centroid rows (from [[trainCentroids]] or a served artifact, fetched
-    * to the driver once for both sides): corpus rows live in their home
+    * centroid rows ([[trainedCents]] or a served artifact, collected
+    * once for both sides): corpus rows live in their home
     * cell; each probe searches only its own home cell via a cell-equi
     * join. */
   def annIvf(corpus: DataFrame, probes: DataFrame, cl: Cents): DataFrame = {
@@ -361,9 +351,9 @@ object Similarity {
       .orderBy(col("query_id").asc, col("rank").asc)
   }
 
-  /** [[annIvf]] training the index inline from the corpus. */
-  def annIvf(corpus: DataFrame, probes: DataFrame): DataFrame =
-    annIvf(corpus, probes, collectCents(trainCentroids(corpus)))
+  /** The `k` centroid rows [[trainCentroids]] trains over `corpus`. */
+  def trainedCents(corpus: DataFrame, k: Int = IvfCells): Cents =
+    collectCents(trainCentroids(corpus, k))
 
   def s03AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
@@ -420,9 +410,11 @@ object Similarity {
   // (DECIMAL(38,0)), so the mean is order-independent and bit-identical
   // cross-engine — the s04 quantization contract again.
   // ---------------------------------------------------------------------
-  def s07IvfCellStats(spark: SparkSession, dir: String): DataFrame = {
+  /** Per-cell population and mean cosine of ANY (vec_id, embedding,
+    * label) corpus under the centroid rows `cl`. */
+  private[graft] def ivfCellStats(corpus: DataFrame, cl: Cents): DataFrame = {
     val cos = expr(ddotMixed("embedding", "ce")) / (col("nrm") * col("cn"))
-    cellRanked(spark, dir)
+    cellTop1Lit(normedOf(corpus), cl)
       .where(col("cr") === 1)
       .select(col("cent_id").as("cell"),
         floor(cos * lit(1e9)).cast(DecimalType(38, 0)).as("qcos"))
@@ -431,6 +423,9 @@ object Similarity {
         (sum(col("qcos")).cast(DoubleType) / count(lit(1)) / lit(1e9)).as("mean_cosine"))
       .orderBy(col("cell").asc)
   }
+
+  def s07IvfCellStats(spark: SparkSession, dir: String): DataFrame =
+    ivfCellStats(graft.Tables.load(spark, dir, "embeddings"), servedCents(spark, dir))
 
   // ---------------------------------------------------------------------
   // s08 — cross-modal dedup audit: every LEXICAL near-dup pair (the
@@ -443,13 +438,12 @@ object Similarity {
   // machinery (never all-pairs); the vector lookups are two equi-joins
   // on the shared doc/vec id domain.
   // ---------------------------------------------------------------------
-  def s08CrossmodalAudit(spark: SparkSession, dir: String): DataFrame = {
-    val v = normed(spark, dir)
+  /** The audit over ANY (doc_a, doc_b) pair set and (vec_id, embedding,
+    * label) corpus sharing one id domain. */
+  private[graft] def crossmodalAudit(edges: DataFrame, corpus: DataFrame): DataFrame = {
+    val v = normedOf(corpus)
     val cos = expr(dotExpr.format("ea", "eb")) / (col("na") * col("nb"))
-    // r14: the pair set is the PERSISTED edge artifact (shared with the
-    // d08 label build), not a per-query re-derivation — s08's cost no
-    // longer depends on which d-family caches happen to be resident
-    Dedup.Edges.serve(spark, dir)
+    edges
       .join(v.select(col("vec_id").as("doc_a"), col("embedding").as("ea"),
         col("nrm").as("na"), col("label").as("label_a")), Seq("doc_a"))
       .join(v.select(col("vec_id").as("doc_b"), col("embedding").as("eb"),
@@ -458,6 +452,12 @@ object Similarity {
         round(cos, 6).as("cosine"))
       .orderBy(col("cosine").desc, col("doc_a").asc, col("doc_b").asc)
   }
+
+  // r14: the pair set is the PERSISTED edge artifact (shared with the d08
+  // label build), not a per-query re-derivation — s08's cost no longer
+  // depends on which d-family caches happen to be resident
+  def s08CrossmodalAudit(spark: SparkSession, dir: String): DataFrame =
+    crossmodalAudit(Dedup.Edges.serve(spark, dir), graft.Tables.load(spark, dir, "embeddings"))
 
   // ---------------------------------------------------------------------
   // s04 — label-centroid outliers: per-label mean vector, then each
@@ -610,21 +610,24 @@ object Similarity {
   // The trained-centroid cache serves the IVF side — same artifact every
   // other index consumer reads.
   // ---------------------------------------------------------------------
-  def s10AnnRecall(spark: SparkSession, dir: String): DataFrame = {
-    val truth = s01AnnBruteforce(spark, dir)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = s03AnnIvf(spark, dir)
-      .select(col("query_id").as("a_q"), col("neighbor_id").as("a_n"))
-    val hits = truth
-      .join(approx, col("query_id") === col("a_q") && col("neighbor_id") === col("a_n"))
+  /** Per-query recall of an `approx` (query_id, neighbor_id) result
+    * against the exact `truth` one. */
+  private[graft] def annRecall(truth: DataFrame, approx: DataFrame): DataFrame = {
+    val t = truth.select(col("query_id"), col("neighbor_id"))
+    val a = approx.select(col("query_id").as("a_q"), col("neighbor_id").as("a_n"))
+    val hits = t
+      .join(a, col("query_id") === col("a_q") && col("neighbor_id") === col("a_n"))
       .groupBy(col("query_id")).agg(count(lit(1)).as("n_hits"))
-    truth.groupBy(col("query_id")).agg(count(lit(1)).as("k"))
+    t.groupBy(col("query_id")).agg(count(lit(1)).as("k"))
       .join(hits, Seq("query_id"), "left_outer")
       .select(col("query_id"), col("k"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"),
         (coalesce(col("n_hits"), lit(0L)) / col("k")).as("recall"))
       .orderBy(col("query_id").asc)
   }
+
+  def s10AnnRecall(spark: SparkSession, dir: String): DataFrame =
+    annRecall(s01AnnBruteforce(spark, dir), s03AnnIvf(spark, dir))
 
   // ---------------------------------------------------------------------
   // s11 — connected components over the mutualized kNN graph: s09's
@@ -647,16 +650,24 @@ object Similarity {
     * sweep. */
   private[graft] lazy val KnnLabels: ArtifactFamily = new ArtifactFamily("knnl", Emb,
     defining = knnGraphRanked,
-    build = (spark, dir, _) => Dedup.minLabelComponents(KnnGraph.serve(spark, dir)
+    build = (spark, dir, _) => knnLabelsOf(KnnGraph.serve(spark, dir)))
+
+  /** Component labels of a kNN edge frame, edges taken undirected. */
+  private[graft] def knnLabelsOf(graph: DataFrame): DataFrame =
+    Dedup.minLabelComponents(graph
       .select(least(col("vec_id"), col("neighbor_id")).as("doc_a"),
         greatest(col("vec_id"), col("neighbor_id")).as("doc_b"))
-      .distinct()))
+      .distinct())
 
-  def s11KnnComponents(spark: SparkSession, dir: String): DataFrame =
-    Dedup.clusterOutput(KnnLabels.serve(spark, dir))
+  /** s11's presentation of a (doc_id, label) component table. */
+  private[graft] def knnComponents(labels: DataFrame): DataFrame =
+    Dedup.clusterOutput(labels)
       .select(col("doc_id").as("vec_id"), col("cluster_id"),
         col("cluster_size"), col("is_keeper"))
       .orderBy(col("cluster_id").asc, col("vec_id").asc)
+
+  def s11KnnComponents(spark: SparkSession, dir: String): DataFrame =
+    knnComponents(KnnLabels.serve(spark, dir))
 
   // ---------------------------------------------------------------------
   // s12 — SemDeDup semantic pruning: within each trained IVF cell, a
@@ -695,7 +706,12 @@ object Similarity {
   /** The SemDeDup DERIVATION body — what [[SemVerdicts]] materializes
     * once per corpus state. */
   private[graft] def s12Derive(spark: SparkSession, dir: String): DataFrame =
-    semDedupFromAssigned(Dedup.persistOnce(cellRanked(spark, dir)
+    semDedup(graft.Tables.load(spark, dir, "embeddings"), servedCents(spark, dir))
+
+  /** SemDeDup verdicts over ANY (vec_id, embedding, label) corpus under
+    * the centroid rows `cl`. */
+  private[graft] def semDedup(corpus: DataFrame, cl: Cents): DataFrame =
+    semDedupFromAssigned(Dedup.persistOnce(cellTop1Lit(normedOf(corpus), cl)
       .where(col("cr") === 1)
       .select(col("vec_id"), col("embedding"), col("nrm"),
         col("cent_id").as("cell"))))
@@ -750,13 +766,14 @@ object Similarity {
     defining = s12Derive,
     build = (spark, dir, _) => s12Derive(spark, dir))
 
-  def s13SemanticApply(spark: SparkSession, dir: String): DataFrame = {
-    val kept = SemVerdicts.serve(spark, dir).where(col("status") === "kept")
-      .select(col("vec_id"), col("cell"))
-    kept.join(graft.Tables.load(spark, dir, "embeddings")
-        .select(col("vec_id"), col("label")), Seq("vec_id"))
+  /** The corpus rows SemDeDup `verdicts` keep, with their cell. */
+  private[graft] def semanticApply(verdicts: DataFrame, corpus: DataFrame): DataFrame =
+    verdicts.where(col("status") === "kept").select(col("vec_id"), col("cell"))
+      .join(corpus.select(col("vec_id"), col("label")), Seq("vec_id"))
       .orderBy(col("vec_id").asc)
-  }
+
+  def s13SemanticApply(spark: SparkSession, dir: String): DataFrame =
+    semanticApply(SemVerdicts.serve(spark, dir), graft.Tables.load(spark, dir, "embeddings"))
 
   // ---------------------------------------------------------------------
   // s14 — embedding drift audit: per label, the L2 distance between the
@@ -784,8 +801,7 @@ object Similarity {
 
   /** Per-label centroid drift between TWO arbitrary (vec_id, embedding,
     * label) frames — the DataFrame-in core (s14's fixture wrapper below
-    * feeds it the even/odd halves; [[refreshedCentroids]] feeds it
-    * corpus vs incoming batch as the rebuild gate). */
+    * feeds it the even/odd halves). */
   def centroidDrift(a: DataFrame, b: DataFrame): DataFrame = {
     val ca = labelCentroids(a, "ca", "n_a")
     val cb = labelCentroids(b, "cb", "n_b")
@@ -804,39 +820,6 @@ object Similarity {
     val emb = graft.Tables.load(spark, dir, "embeddings")
     centroidDrift(emb.where(col("vec_id") % 2 === 0),
       emb.where(col("vec_id") % 2 =!= 0))
-  }
-
-  /** Drift threshold above which an appended batch forces centroid
-    * retraining (L2 between per-label means of normalized-scale
-    * embeddings; the fixture clusters sit ~0.6·‖center‖ apart, so 0.3
-    * means "a label's mass moved a sizable fraction of the inter-cluster
-    * gap"). Overridable per call. */
-  val DefaultMaxDrift = 0.3
-
-  /** Drift-gated incremental index refresh (the centroid counterpart of
-    * Dedup.refreshedClusterLabels): serve the centroid artifact for the
-    * grown corpus at `newDir` (= `oldDir` plus an appended batch). Gate
-    * with [[centroidDrift]] between the existing corpus and the batch:
-    * if no label drifted beyond `maxDrift`, the OLD centroids are still
-    * a statistically valid index for the grown corpus — persist THEM
-    * under the new corpus key (kilobytes copied, no Lloyd pass; IVF
-    * serving is correct under any centroid set, fit only affects
-    * recall/cell balance). Past the gate, retrain from scratch on the
-    * full new corpus. Returns (centroids, rebuilt?). A batch with no
-    * label overlap yields no drift signal and conservatively retrains.
-    * NOTE: this seam is for live append pipelines; the driver's oracle
-    * corpora are immutable and never pass through it. */
-  private[graft] def refreshedCentroids(spark: SparkSession, oldDir: String,
-      newDir: String, maxDrift: Double = DefaultMaxDrift): (DataFrame, Boolean) = {
-    val old = graft.Tables.load(spark, oldDir, "embeddings")
-    val neu = graft.Tables.load(spark, newDir, "embeddings")
-    val batch = neu.join(old.select(col("vec_id")), Seq("vec_id"), "left_anti")
-    val worst = centroidDrift(old, batch).agg(max(col("drift"))).first()
-    val rebuild = worst.isNullAt(0) || worst.getDouble(0) > maxDrift
-    val served = Centroids.serveWith(spark, newDir)(_ =>
-      if (rebuild) computeTrainedCentroids(spark, newDir)
-      else Centroids.serve(spark, oldDir))
-    (served, rebuild)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -24,7 +24,7 @@ import graft.Tables
 final class ArtifactFamily private[graft] (
     val kind: String,
     val reads: Seq[String],
-    defining: (SparkSession, String) => DataFrame,
+    private[graft] val defining: (SparkSession, String) => DataFrame,
     build: (SparkSession, String, ArtifactFamily.Built) => DataFrame,
     val refresh: ArtifactFamily.Refresh = ArtifactFamily.NoRefresh,
     tableScoped: Boolean = false,
@@ -40,10 +40,11 @@ final class ArtifactFamily private[graft] (
   def serve(spark: SparkSession, dir: String): DataFrame =
     serveWith(spark, dir)(build(spark, dir, _))
 
-  /** [[serve]] with a different build body (a refresh fold, a reused
-    * generation) for the same table name. Frames the body registers in
-    * its `Built` buffer are unpersisted once the table is written. */
-  def serveWith(spark: SparkSession, dir: String)(body: Built => DataFrame): DataFrame = {
+  /** [[serve]] with a refresh fold as the build body, for the same table
+    * name. Frames the body registers in its `Built` buffer are
+    * unpersisted once the table is written. */
+  private def serveWith(spark: SparkSession, dir: String)(body: Built => DataFrame): DataFrame = {
+    serving.value.foreach(_ += kind)
     val built = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val res = Artifacts.servePersisted(spark, name(spark, dir))(body(built))
     built.foreach(_.unpersist(false))
@@ -93,6 +94,18 @@ final class ArtifactFamily private[graft] (
 
 object ArtifactFamily {
   type Built = scala.collection.mutable.Buffer[DataFrame]
+
+  /** The kinds of every family served on this thread while `body` runs,
+    * nested builds included: which families a query's construction
+    * consumes, read off the engine rather than listed by hand. */
+  private[graft] def servedDuring(body: => Unit): Set[String] = {
+    val seen = scala.collection.mutable.Set.empty[String]
+    serving.withValue(Some(seen))(body)
+    seen.toSet
+  }
+
+  private val serving =
+    new scala.util.DynamicVariable[Option[scala.collection.mutable.Set[String]]](None)
 
   /** How a family follows a corpus append. */
   sealed trait Refresh

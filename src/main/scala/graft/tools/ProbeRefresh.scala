@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{BenchConsume, CpuMeter, Session, Tables}
@@ -12,8 +13,9 @@ import graft.sources.{ArtifactFamily, Artifacts}
   *
   * Usage: runMain graft.tools.ProbeRefresh <oldDir> <newDir> [batchFrac]
   *
-  * `newDir` is created on first run as oldDir's documents and orders
-  * plus a synthesized batch of each (default 1% of the table):
+  * `newDir` is created on first run ([[appendBatch]]) as oldDir's
+  * corpus with its documents and orders each grown by a synthesized
+  * batch (default 1% of the table):
   *   documents: half near-dup mutations of sampled old docs — so band
   *              collisions, contamination pairs, and cluster merges
   *              actually happen — and half fresh text;
@@ -36,42 +38,8 @@ object ProbeRefresh {
     val batchFrac = if (args.length > 2) args(2).toDouble else 0.01
     val spark = Session.get("graft-probe-refresh")
     CpuMeter.install(spark)
-    val fs = new org.apache.hadoop.fs.Path(newDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    // ---- corpus: newDir = oldDir + synthesized batches ----------------
-    def appendBatch(table: String, key: String, cols: Column*)(
-        batchOf: (DataFrame, Long) => DataFrame): Unit = {
-      val (src, dst) = (s"$oldDir/$table.parquet", s"$newDir/$table.parquet")
-      if (fs.exists(new org.apache.hadoop.fs.Path(src)) &&
-          !fs.exists(new org.apache.hadoop.fs.Path(dst))) {
-        val old = Tables.load(spark, oldDir, table)
-        val maxId = old.agg(max(col(key))).first().getLong(0)
-        val nBatch = math.max(1L, (old.count() * batchFrac).toLong)
-        val sampled = old.orderBy(col(key)).limit(nBatch.toInt)
-        old.select(cols: _*).unionByName(batchOf(sampled, maxId))
-          .write.mode("overwrite").parquet(dst)
-        System.err.println(s"[probe-refresh] wrote $dst (+$nBatch batch rows)")
-      }
-    }
-    appendBatch("documents", "doc_id", col("doc_id"), col("text"), col("lang"),
-        col("source"), col("n_chars").cast("long").as("n_chars")) { (docs, maxId) =>
-      val id = col("doc_id") + maxId + 1L
-      docs.select(id.as("doc_id"),
-        when(id % 2 === 0, concat_ws(" ", slice(split(col("text"), "\\s+"), 2, Int.MaxValue)))
-          .otherwise(concat(lit("fresh append "), col("text"))).as("text"),
-        col("lang"), col("source"))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-    }
-    appendBatch("orders", "o_orderkey", col("*")) { (ord, maxId) =>
-      val id = col("o_orderkey") + maxId + 1L
-      ord.select(id.as("o_orderkey"),
-        when(id % 2 === 0, col("o_custkey") + 7L).otherwise(col("o_custkey")).as("o_custkey"),
-        col("o_orderstatus"),
-        when(id % 2 === 0, col("o_totalprice") + 0.17)
-          .otherwise(col("o_totalprice")).as("o_totalprice"),
-        col("o_orderdate"), col("o_orderpriority"))
-    }
+    appendBatch(spark, oldDir, newDir, batchFrac)
 
     def timed(body: => Unit): (Double, Double) = {
       val t0 = System.nanoTime()
@@ -130,5 +98,49 @@ object ProbeRefresh {
     catch { case _: Throwable => () }
     spark.stop()
     println(line)
+  }
+
+  /** Write `newDir` as `oldDir`'s corpus plus a synthesized append: the
+    * documents and orders tables each grow by a batch of `batchFrac` of
+    * their rows (see the header), every other table is copied unchanged.
+    * A table `newDir` already holds is left as it is. */
+  def appendBatch(spark: SparkSession, oldDir: String, newDir: String,
+      batchFrac: Double): Unit = {
+    val fs = new Path(newDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def grow(table: String, key: String, cols: Column*)(
+        batchOf: (DataFrame, Long) => DataFrame): Unit = {
+      val (src, dst) = (s"$oldDir/$table.parquet", s"$newDir/$table.parquet")
+      if (fs.exists(new Path(src)) && !fs.exists(new Path(dst))) {
+        val old = Tables.load(spark, oldDir, table)
+        val maxId = old.agg(max(col(key))).first().getLong(0)
+        val nBatch = math.max(1L, (old.count() * batchFrac).toLong)
+        val sampled = old.orderBy(col(key)).limit(nBatch.toInt)
+        old.select(cols: _*).unionByName(batchOf(sampled, maxId))
+          .write.mode("overwrite").parquet(dst)
+        System.err.println(s"[probe-refresh] wrote $dst (+$nBatch batch rows)")
+      }
+    }
+    grow("documents", "doc_id", col("doc_id"), col("text"), col("lang"),
+        col("source"), col("n_chars").cast("long").as("n_chars")) { (docs, maxId) =>
+      val id = col("doc_id") + maxId + 1L
+      docs.select(id.as("doc_id"),
+        when(id % 2 === 0, concat_ws(" ", slice(split(col("text"), "\\s+"), 2, Int.MaxValue)))
+          .otherwise(concat(lit("fresh append "), col("text"))).as("text"),
+        col("lang"), col("source"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+    }
+    grow("orders", "o_orderkey", col("*")) { (ord, maxId) =>
+      val id = col("o_orderkey") + maxId + 1L
+      ord.select(id.as("o_orderkey"),
+        when(id % 2 === 0, col("o_custkey") + 7L).otherwise(col("o_custkey")).as("o_custkey"),
+        col("o_orderstatus"),
+        when(id % 2 === 0, col("o_totalprice") + 0.17)
+          .otherwise(col("o_totalprice")).as("o_totalprice"),
+        col("o_orderdate"), col("o_orderpriority"))
+    }
+    fs.listStatus(new Path(oldDir)).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !fs.exists(new Path(newDir, p.getName)))
+      .foreach(p => FileUtil.copy(fs, p, fs, new Path(newDir, p.getName), false,
+        spark.sparkContext.hadoopConfiguration))
   }
 }

@@ -21,6 +21,24 @@ class ArtifactFamilySpec extends SparkSpec {
     }
   }
 
+  test("every family's defining plan scans only corpus tables it declares in reads") {
+    // a derivation that starts reading an undeclared table would keep a
+    // table-scoped key (and `refreshable`'s both-states check) blind to
+    // changes of that table: a stale serve
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val corpus = new org.apache.hadoop.fs.Path(sf)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(
+        new org.apache.hadoop.fs.Path(sf))
+    ArtifactFamily.all.foreach { f =>
+      val scanned = f.defining(spark, sf).queryExecution.analyzed.collectWithSubqueries {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location.rootPaths
+      }.flatten.filter(_.getParent == corpus).map(_.getName.stripSuffix(".parquet")).toSet
+      assert(scanned.nonEmpty, s"family '${f.kind}': its defining plan scans no corpus table")
+      assert(scanned.subsetOf(f.reads.toSet),
+        s"family '${f.kind}' scans ${scanned.toSeq.sorted} but declares ${f.reads}")
+    }
+  }
+
   test("drop removes both the catalog entry and the files") {
     val dir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "fam-drop-").toString

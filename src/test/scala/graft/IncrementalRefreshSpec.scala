@@ -2,15 +2,16 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.operators.Dedup
+import graft.sources.{ArtifactFamily, Artifacts}
 
-/** Incremental artifact refresh (VERDICT r6 task 6): appending a batch
-  * updates the labels / centroid artifacts at batch-probe cost — no
-  * corpus-wide propagation loop, no unconditional retrain — and the
-  * refreshed artifacts are EXACTLY what a from-scratch rebuild produces
-  * (labels) or a drift-gate-justified reuse (centroids).
+/** Incremental artifact refresh through the one registry path
+  * ([[graft.sources.ArtifactFamily.refreshAfterAppend]], looped by
+  * `Dedup.refreshArtifactsAfterAppend`): appending a batch updates the
+  * label artifact at batch-probe cost — no corpus-wide propagation loop
+  * — reads no old corpus text, and every refreshed family is EXACTLY
+  * what a from-scratch rebuild produces.
   */
 class IncrementalRefreshSpec extends SparkSpec {
   import spark.implicits._
@@ -49,29 +50,6 @@ class IncrementalRefreshSpec extends SparkSpec {
     df.select("doc_id", "label").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("refreshLabels == from-scratch rebuild, including a merge bridged by the batch") {
-    val existing = Seq(
-      10L -> docA, 11L -> docA2, 20L -> docB, 21L -> docB2, 30L -> docIso
-    ).toDF("doc_id", "text")
-    val batch = Seq(100L -> docC, 101L -> docIso2).toDF("doc_id", "text")
-
-    val oldLabels = Dedup.minLabelComponents(Dedup.lshEdgesOf(existing))
-    // preconditions: two distinct clusters, isolated doc unlabeled
-    val before = labelSet(oldLabels)
-    assert(before === Set((10L, 10L), (11L, 10L), (20L, 20L), (21L, 20L)),
-      s"v1 corpus must form exactly two clusters, got $before")
-
-    val refreshed = labelSet(Dedup.refreshLabels(existing, oldLabels, batch))
-    val scratch = labelSet(Dedup.minLabelComponents(
-      Dedup.lshEdgesOf(existing.unionAll(batch))))
-    assert(refreshed === scratch, "incremental refresh must equal a full rebuild")
-    // the bridge merged both clusters under the global min label…
-    assert(Set(10L, 11L, 20L, 21L, 100L).forall(d => refreshed.contains((d, 10L))),
-      s"bridge doc must merge A- and B-clusters under label 10: $refreshed")
-    // …and the previously-isolated doc gained its first edge
-    assert(refreshed.contains((30L, 30L)) && refreshed.contains((101L, 30L)))
-  }
-
   /** Count Spark jobs triggered by `body` (job-group scoped; the listener
     * bus is async, so poll until the count settles). */
   private def countJobs(body: => Unit): Int = {
@@ -101,7 +79,8 @@ class IncrementalRefreshSpec extends SparkSpec {
       if (p < 8 * i) s"cs$p" else w
     }.mkString(" ")
 
-  test("refreshedClusterLabels: artifact refresh is batch-scale and a cold serve sees it") {
+  test("labels refresh after append: the contracted loop is shallower than a rebuild, " +
+      "and a cold serve sees it") {
     val oldDir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "inc-old-").toString
     val newDir = java.nio.file.Files.createTempDirectory(
@@ -112,19 +91,19 @@ class IncrementalRefreshSpec extends SparkSpec {
     chain.toDF(cols: _*).write.parquet(s"$oldDir/documents.parquet")
     (chain ++ batchRows).toDF(cols: _*).write.parquet(s"$newDir/documents.parquet")
 
-    // build (and persist) the v1 artifacts — the deployment precondition:
-    // a corpus under incremental maintenance has its labels AND its
-    // signature index/shingle tables materialized (the refresh probes
-    // the latter instead of re-reading the corpus text)
+    // build (and persist) the v1 labels — the deployment precondition
     val v1 = labelSet(Dedup.Labels.serve(spark, oldDir))
-    Dedup.DedupSig.serve(spark, oldDir)
-    Dedup.Shingles.serve(spark, oldDir)
     assert(v1 === (0 until 8).map(i => (i.toLong, 0L)).toSet,
       s"chain must form one cluster labeled 0, got $v1")
 
+    // upstream families first, in registry order, as
+    // refreshArtifactsAfterAppend runs them: the label fold reads the
+    // refreshed edges_ slice
+    ArtifactFamily.refreshable(spark, oldDir, newDir)
+      .takeWhile(_ ne Dedup.Labels).foreach(_.refreshAfterAppend(spark, oldDir, newDir))
     var refreshedLabels: Set[(Long, Long)] = null
     val refreshJobs = countJobs {
-      refreshedLabels = labelSet(Dedup.refreshedClusterLabels(spark, oldDir, newDir))
+      refreshedLabels = labelSet(Dedup.Labels.refreshAfterAppend(spark, oldDir, newDir))
     }
     val refreshRounds = Dedup.lastPropagationRounds.get()
     val scratchJobs = countJobs {
@@ -148,7 +127,7 @@ class IncrementalRefreshSpec extends SparkSpec {
     // cold serve: drop only the CATALOG entry (files persist, as after a
     // JVM restart) — d08's serve path must re-register and read the
     // incrementally built table without any build jobs
-    spark.sql(s"DROP TABLE IF EXISTS `${graft.sources.Artifacts.Db}`." +
+    spark.sql(s"DROP TABLE IF EXISTS `${Artifacts.Db}`." +
       s"`${Dedup.Labels.name(spark, newDir)}`")
     var coldServed: Set[(Long, Long)] = null
     val serveJobs = countJobs {
@@ -160,9 +139,22 @@ class IncrementalRefreshSpec extends SparkSpec {
       "serving the refreshed artifact must not rebuild anything")
   }
 
-  test("refreshedClusterLabels reads NO existing text: poisoning the old corpus's " +
-      "text (while serving the real artifacts) still yields the exact rebuild labels") {
-    import graft.sources.Artifacts
+  /** Drop `newDir`'s copy of every family in `refreshed`, rebuild each
+    * from scratch, and return (family → canonical rows) for both. */
+  private def refreshedVsScratch(refreshed: Seq[(String, String)], newDir: String)
+      : (Map[String, Seq[String]], Map[String, Seq[String]]) = {
+    val family = ArtifactFamily.all.map(f => f.kind -> f).toMap
+    def rowsOf(fam: String, tbl: String): Seq[String] =
+      family(fam).canonical(spark.table(s"`${Artifacts.Db}`.`$tbl`"))
+        .collect().map(_.toString).sorted.toSeq
+    val incremental = refreshed.map { case (fam, tbl) => fam -> rowsOf(fam, tbl) }.toMap
+    refreshed.foreach { case (fam, _) => family(fam).drop(spark, newDir) }
+    refreshed.foreach { case (fam, _) => family(fam).serve(spark, newDir) }
+    (incremental, refreshed.map { case (fam, tbl) => fam -> rowsOf(fam, tbl) }.toMap)
+  }
+
+  test("refreshArtifactsAfterAppend reads NO old corpus text: poisoning it (while " +
+      "serving the real old generations) still yields the from-scratch rebuild") {
     val oldDir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "poison-old-").toString
     val newDir = java.nio.file.Files.createTempDirectory(
@@ -174,63 +166,76 @@ class IncrementalRefreshSpec extends SparkSpec {
     oldRows.toDF(cols: _*).write.parquet(s"$oldDir/documents.parquet")
     (oldRows ++ batchRows).toDF(cols: _*).write.parquet(s"$newDir/documents.parquet")
 
-    // build the v1 artifacts from the REAL text, and the expected result
-    val families = Seq(Dedup.DedupSig, Dedup.Shingles, Dedup.Labels)
+    // build every refreshable documents family's old generation from the
+    // REAL text (d10verd/e15verd are never read by a refresh, and their
+    // key-defining plans serve dedupsig_/shingles_: naming them on the
+    // poisoned state would build those from the poisoned text)
+    val families = ArtifactFamily.all.filter(f =>
+      f.reads == Seq("documents") && f.refresh != ArtifactFamily.NoRefresh)
     families.foreach(_.serve(spark, oldDir))
     val realNames = families.map(_.name(spark, oldDir))
-    val expected = labelSet(Dedup.minLabelComponents(Dedup.lshEdgesOf(
-      (oldRows ++ batchRows).toDF(cols: _*).select($"doc_id", $"text"))))
-    assert(Set(10L, 11L, 20L, 21L, 100L).forall(d => expected.contains((d, 10L))),
-      s"fixture must merge both clusters through the bridge doc: $expected")
 
     // poison the old corpus's TEXT in place (same doc_ids, same schema),
-    // then alias the real artifact files under the poisoned-fingerprint
-    // names — the serve path now behaves as if the artifacts were built
-    // from this corpus, but any code path that goes back to the old
-    // corpus's TEXT reads garbage and must corrupt the labels
+    // then move each real generation under its poisoned-fingerprint name
+    // — the serve path now behaves as if the artifacts were built from
+    // this corpus, but any refresh that goes back to the old corpus's
+    // TEXT reads garbage and diverges from the rebuild
     oldRows.map { case (i, _, l, s, n) => (i, s"poison $i", l, s, n) }
       .toDF(cols: _*).write.mode("overwrite").parquet(s"$oldDir/documents.parquet")
     val poisonedNames = families.map(_.name(spark, oldDir))
     assert(realNames.zip(poisonedNames).forall { case (a, b) => a != b },
       "poisoning must change the artifact keys (else this test is vacuous)")
     realNames.zip(poisonedNames).foreach { case (real, poisoned) =>
-      val loc = Artifacts.location(spark, real)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      spark.sql(s"CREATE TABLE IF NOT EXISTS `${Artifacts.Db}`.`$poisoned` " +
-        s"USING parquet LOCATION '${fs.makeQualified(loc)}'")
+      val (from, to) = (Artifacts.location(spark, real), Artifacts.location(spark, poisoned))
+      val fs = from.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Artifacts.dropEntry(spark, real)
+      assert(!fs.exists(to) && fs.rename(from, to), s"could not alias $real as $poisoned")
     }
-    val got = labelSet(Dedup.refreshedClusterLabels(spark, oldDir, newDir))
-    assert(got === expected,
-      "refresh must consume ONLY the persisted index/shingles/labels — a divergence " +
-        "here means some path re-read the (poisoned) existing corpus text")
+
+    val refreshed = Dedup.refreshArtifactsAfterAppend(spark, oldDir, newDir)
+    assert(refreshed.map(_._1) === families.map(_.kind))
+    val (incremental, scratch) = refreshedVsScratch(refreshed, newDir)
+    assert(incremental("labels").exists(_.contains("[100,10]")),
+      s"fixture must merge both clusters through the bridge doc: ${incremental("labels")}")
+    refreshed.foreach { case (fam, _) =>
+      assert(incremental(fam) === scratch(fam),
+        s"family '$fam' diverged from the rebuild: its refresh re-read the (poisoned) " +
+          "old corpus text instead of the persisted old generation")
+    }
   }
 
   test("three chained refreshes with cross-batch and bridging merges equal " +
       "the from-scratch union rebuild") {
-    val existing = Seq(10L -> docA, 11L -> docA2, 20L -> docB, 21L -> docB2)
-      .toDF("doc_id", "text")
-    val b1 = Seq(100L -> docIso).toDF("doc_id", "text")  // isolated on arrival
-    val b2 = Seq(101L -> docIso2).toDF("doc_id", "text") // merges with PRIOR batch's doc
-    val b3 = Seq(102L -> docC).toDF("doc_id", "text")    // bridges the two v1 clusters
-    var corpus = existing
-    var labels = Dedup.minLabelComponents(Dedup.lshEdgesOf(existing))
-    for (b <- Seq(b1, b2, b3)) {
-      labels = Dedup.refreshLabels(corpus, labels, b)
-      corpus = corpus.unionAll(b)
+    val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
+    val v0 = Seq(10L -> docA, 11L -> docA2, 20L -> docB, 21L -> docB2)
+    val batches = Seq(
+      Seq(100L -> docIso),  // isolated on arrival
+      Seq(101L -> docIso2), // merges with PRIOR batch's doc
+      Seq(102L -> docC))    // bridges the two v0 clusters
+    val states = batches.scanLeft(v0)(_ ++ _).map { rows =>
+      val dir = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get("target"), "inc-chain-").toString
+      rows.map { case (i, t) => (i, t, "en", "s", 100L) }.toDF(cols: _*)
+        .write.parquet(s"$dir/documents.parquet")
+      dir
     }
-    val chained = labelSet(labels)
-    val scratch = labelSet(Dedup.minLabelComponents(Dedup.lshEdgesOf(corpus)))
-    assert(chained === scratch,
-      "chained refreshes must stay exactly equal to a from-scratch rebuild")
-    assert(Set(10L, 11L, 20L, 21L, 102L).forall(d => chained.contains((d, 10L))),
-      s"round-3 bridge must merge the two v1 clusters: $chained")
-    assert(chained.contains((100L, 100L)) && chained.contains((101L, 100L)),
-      s"docs isolated in round 1 must pair up in round 2: $chained")
+    val refreshed = states.zip(states.tail).map { case (from, to) =>
+      Dedup.refreshArtifactsAfterAppend(spark, from, to)
+    }.last
+    val (chained, scratch) = refreshedVsScratch(refreshed, states.last)
+    refreshed.foreach { case (fam, _) =>
+      assert(chained(fam) === scratch(fam),
+        s"family '$fam': chained refreshes must stay exactly equal to a from-scratch rebuild")
+    }
+    val labels = chained("labels")
+    assert(Seq(10L, 11L, 20L, 21L, 102L).forall(d => labels.contains(s"[$d,10]")),
+      s"round-3 bridge must merge the two v0 clusters: $labels")
+    assert(labels.contains("[100,100]") && labels.contains("[101,100]"),
+      s"docs isolated in round 1 must pair up in round 2: $labels")
   }
 
   test("refreshArtifactsAfterAppend: every refreshed family is row-identical " +
       "to a from-scratch rebuild on the appended corpus (r16 verdict task 1)") {
-    import graft.sources.{ArtifactFamily, Artifacts}
     val v1 = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "inc-fam-v1-").toString
     val v2 = java.nio.file.Files.createTempDirectory(
@@ -269,68 +274,16 @@ class IncrementalRefreshSpec extends SparkSpec {
     assert(refreshed.map(_._1) ===
       ArtifactFamily.all.filter(_.refresh != ArtifactFamily.NoRefresh).map(_.kind),
       "every family with a refresh shape must refresh, in registry order")
-    val family = ArtifactFamily.all.map(f => f.kind -> f).toMap
-    def rowsOf(fam: String, tbl: String): Seq[String] =
-      family(fam).canonical(spark.table(s"`${Artifacts.Db}`.`$tbl`"))
-        .collect().map(_.toString).sorted.toSeq
-    val incremental = refreshed.map { case (fam, tbl) => fam -> rowsOf(fam, tbl) }.toMap
+    // from-scratch control: drop every v2 artifact (files + entries),
+    // then let the ordinary cold-build path rebuild each family
+    val (incremental, scratch) = refreshedVsScratch(refreshed, v2)
     // the refresh must have found actual work: batch docs appear in the
     // per-row families and the bridge doc merges the clusters
     assert(incremental("labels").exists(_.contains("[100,10]")),
       s"bridge doc must carry the merged min label: ${incremental("labels")}")
-
-    // from-scratch control: drop every v2 artifact (files + entries),
-    // then let the ordinary cold-build path rebuild each family
-    refreshed.foreach { case (fam, _) => family(fam).drop(spark, v2) }
-    refreshed.foreach { case (fam, _) => family(fam).serve(spark, v2) }
-    refreshed.foreach { case (fam, tbl) =>
-      assert(rowsOf(fam, tbl) === incremental(fam),
+    refreshed.foreach { case (fam, _) =>
+      assert(incremental(fam) === scratch(fam),
         s"family '$fam' incremental refresh must equal the from-scratch rebuild")
     }
-  }
-
-  // -------------------------------------------------------------------
-  // drift-gated centroid refresh: deterministic two-cluster embedding
-  // fixture; a same-distribution batch reuses the trained index, a
-  // shifted batch forces retraining
-  // -------------------------------------------------------------------
-  private def vec(center: Array[Float], i: Int): Array[Float] =
-    center.zipWithIndex.map { case (c, d) => c + 0.01f * (((i * 7 + d * 3) % 5) - 2) }
-
-  private val c0 = Array(1f, 0f, 0f, 0f)
-  private val c1 = Array(0f, 1f, 0f, 0f)
-  private val cShift = Array(0f, 0f, 1f, 0f) // ‖c0 − cShift‖ = √2 ≫ 0.3
-
-  private def writeEmb(dir: String, rows: Seq[(Long, Array[Float], Int)]): Unit =
-    rows.toDF("vec_id", "embedding", "label")
-      .write.parquet(s"$dir/embeddings.parquet")
-
-  test("refreshedCentroids: same-distribution batch reuses, drifted batch retrains") {
-    val oldRows = (0 until 20).map(i => (i.toLong, vec(c0, i), 0)) ++
-      (20 until 40).map(i => (i.toLong, vec(c1, i), 1))
-    val calmBatch = (100 until 110).map(i => (i.toLong, vec(c0, i), 0)) ++
-      (110 until 120).map(i => (i.toLong, vec(c1, i), 1))
-    val driftBatch = (200 until 220).map(i => (i.toLong, vec(cShift, i), 0))
-
-    val dirs = (1 to 3).map(_ => java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "inc-emb-").toString)
-    writeEmb(dirs(0), oldRows)
-    writeEmb(dirs(1), oldRows ++ calmBatch)
-    writeEmb(dirs(2), oldRows ++ driftBatch)
-
-    def cents(df: DataFrame): Set[(Long, Seq[Double])] =
-      df.select(col("cent_id"), col("ce")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1))).toSet
-    val oldCents = cents(Similarity.Centroids.serve(spark, dirs(0)))
-
-    val (calm, calmRebuilt) = Similarity.refreshedCentroids(spark, dirs(0), dirs(1))
-    assert(!calmRebuilt, "an un-drifted batch must not trigger retraining")
-    assert(cents(calm) === oldCents,
-      "the reused index must be byte-identical to the v1 centroids")
-
-    val (shifted, driftRebuilt) = Similarity.refreshedCentroids(spark, dirs(0), dirs(2))
-    assert(driftRebuilt, "a cluster that moved √2 must trip the 0.3 gate")
-    assert(cents(shifted) !== oldCents,
-      "retraining on the drifted corpus must move the centroids")
   }
 }

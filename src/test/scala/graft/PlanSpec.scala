@@ -574,7 +574,7 @@ class PlanSpec extends SparkSpec {
     val plan = formatted(Similarity.s12Derive(spark, sf))
     assert(!plan.contains("CartesianProduct"), s"within-cell pairing must be equi:\n$plan")
     // the only nested-loop joins allowed are the K-row centroid
-    // broadcasts — one per cellRanked reference (a-side, b-side, base)
+    // broadcasts — one per cell-assignment reference (a-side, b-side, base)
     val bnl = plan.linesIterator.count(_.trim.matches("""\(\d+\) BroadcastNestedLoopJoin.*"""))
     assert(bnl <= 3, s"corpus-side nested loop joins:\n$plan")
     // the pair stage itself must be an equi join on cell

@@ -10,6 +10,8 @@
 #      sf100star headliners and oracle-compare them, so the scale
 #      evidence regenerates instead of aging (r14 verdict task 7).
 #      Needs target/testdata-local/sf100star (tools/gen_star_big.py).
+#   6. served ≡ recompute @ sf0.1 — ServedRecomputeSpec on the larger
+#      corpus (the suite in gate 1 runs it at sf0.01)
 # Scale legs (sf1/sf10full sweeps, per-query oracle at scale, probes) are
 # separate scripts by design — they take hours and have their own logs;
 # this gate is the "is HEAD shippable" answer in one invocation.
@@ -114,6 +116,21 @@ if [ $rc -eq 0 ] && [ -n "$total" ]; then
   note "GATE bench-sweep: PASS (${total}s sf0.1 sweep-recipe) [$OUT/bench_sf0.1_sweep.json]"
 else
   note "GATE bench-sweep: FAIL rc=$rc [$OUT/bench_sweep.log]"; fail=1
+fi
+
+# ---- gate 6: served ≡ recompute at sf0.1 --------------------------------
+# every query serving an artifact family against its frame-level
+# recompute, on a fresh warehouse and after a refreshed append; the spec
+# reads its corpus from the graft.served.dir system property (relative
+# to the test corpora's directory)
+sbt -batch 'set Test / javaOptions += "-Dgraft.served.dir=sf0.1"' \
+  "testOnly graft.ServedRecomputeSpec" > "$OUT/served_recompute.log" 2>&1
+rc=$?
+line=$(grep -E "Tests: succeeded" "$OUT/served_recompute.log" | tail -1)
+if [ $rc -eq 0 ] && grep -q "All tests passed" "$OUT/served_recompute.log"; then
+  note "GATE served-recompute-sf0.1: PASS ($line) [$OUT/served_recompute.log]"
+else
+  note "GATE served-recompute-sf0.1: FAIL rc=$rc ($line) [$OUT/served_recompute.log]"; fail=1
 fi
 
 # ---- gate 5 (optional): third-decade star oracle leg --------------------
