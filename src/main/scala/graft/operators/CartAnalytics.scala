@@ -552,13 +552,10 @@ object CartAnalytics {
 
   /** The per-value histogram of the orders numeric columns as a
     * PERSISTED CATALOG ARTIFACT (r18, r17 verdict task 4): the mergeable
-    * INTERMEDIATE the final statistics derive from. Keys on the ORDERS
-    * table's content only ([[graft.sources.Artifacts.keyForTables]]) —
-    * the whole-dir fingerprint forced a full re-profile on any corpus
-    * change (a DOCUMENTS append rebuilt orders statistics: 530 s /
-    * 4,447 CPU-s at sf10full for bytes q15 never reads); now the key
-    * moves exactly when orders bytes move, and an orders APPEND folds
-    * in at O(batch) (file-level link + batch histogram — the multiset
+    * INTERMEDIATE the final statistics derive from. Like every family it
+    * keys on the content of the tables it reads — here ORDERS only — so
+    * the key moves exactly when orders bytes move, and an orders APPEND
+    * folds in at O(batch) (file-level link + batch histogram — the multiset
     * contract in [[Profile.histogram]]: per-value counts are additive
     * under append, so consumers re-aggregate by value). */
   private[graft] lazy val ProfHist: ArtifactFamily = new ArtifactFamily("profhist",
@@ -566,7 +563,7 @@ object CartAnalytics {
     defining = (spark, dir) => Profile.histogram(ord(spark, dir), ProfileNumCols),
     build = (spark, dir, _) => Profile.histogram(ord(spark, dir), ProfileNumCols),
     refresh = RowAppend((batch, _) => Profile.histogram(batch, ProfileNumCols)),
-    tableScoped = true, multisetCount = Some("c"))
+    multisetCount = Some("c"))
 
   /** q17's string-histogram twin (profstrh_). */
   private[graft] lazy val ProfStrHist: ArtifactFamily = new ArtifactFamily("profstrh",
@@ -574,12 +571,11 @@ object CartAnalytics {
     defining = (spark, dir) => Profile.stringHistogram(ord(spark, dir), ProfileStrCols),
     build = (spark, dir, _) => Profile.stringHistogram(ord(spark, dir), ProfileStrCols),
     refresh = RowAppend((batch, _) => Profile.stringHistogram(batch, ProfileStrCols)),
-    tableScoped = true, multisetCount = Some("c"))
+    multisetCount = Some("c"))
 
   /** q15's statistics. Key: the full (histogram → statistics) derivation
-    * as a LAZY plan (materialize = false, the d10Program idiom — no
-    * cache entries minted during name derivation), orders-content-scoped.
-    * Build: the DECLARED statistics from the served histogram — the raw
+    * as a LAZY plan (materialize = false: no cache entries minted during
+    * name derivation). Build: the DECLARED statistics from the served histogram — the raw
     * fact is scanned only by the histogram build itself; ProfileHistSpec
     * pins bit-identity to Profile.summarize. On append it re-derives
     * from the refreshed histogram, never from the full raw fact. */
@@ -592,7 +588,7 @@ object CartAnalytics {
     },
     build = (spark, dir, built) => Profile.summarizeFromHistogram(ProfHist.serve(spark, dir),
       Profile.columnKinds(ord(spark, dir), ProfileNumCols), built = built),
-    refresh = Rederive, tableScoped = true)
+    refresh = Rederive)
 
   /** q17's statistics, derived from the served string histogram
     * (identical rows: the re-aggregated counts frame IS
@@ -603,7 +599,7 @@ object CartAnalytics {
       Profile.stringHistogram(ord(spark, dir), ProfileStrCols), ProfileStrCols),
     build = (spark, dir, _) => Profile.summarizeStringsFromHistogram(
       ProfStrHist.serve(spark, dir), ProfileStrCols),
-    refresh = Rederive, tableScoped = true)
+    refresh = Rederive)
 
   def q15ProfileOrders(spark: SparkSession, dir: String): DataFrame =
     ProfileStats.serve(spark, dir).orderBy(col("column_name").asc)

@@ -153,7 +153,7 @@ object Profile {
     * profile the largest build line (guide §1.2: fix the algorithm).
     *
     * `materialize = false` builds the PLAN without registering cache
-    * entries (the d10Program idiom) — for artifact-key derivation only;
+    * entries — for artifact-key derivation only;
     * executing a non-materialized plan recomputes a range exchange per
     * consumer and must not be done. Frames persisted during a
     * materialized build are appended to `built` (when provided) so the

@@ -761,9 +761,20 @@ object Similarity {
     * Keyed by corpus dir + content fingerprint + the semantic hash of
     * the defining plan, so a changed tau / K / centroid rule can never
     * serve stale verdicts. Columns are exact (ids + a status string — no
-    * floats), so the parquet round-trip is bit-identical to recompute. */
+    * floats), so the parquet round-trip is bit-identical to recompute.
+    *
+    * The defining plan is [[s12Derive]] with the centroids left as their
+    * training plan (the [[Centroids]] key plan) instead of the served
+    * rows: naming semv then trains nothing, and a changed K, iteration
+    * count or seed rule still moves its key. */
   private[graft] lazy val SemVerdicts: ArtifactFamily = new ArtifactFamily("semv", Emb,
-    defining = s12Derive,
+    defining = (spark, dir) => {
+      val ca = Centroids.defining(spark, dir)
+        .agg(collect_list(struct(col("cent_id"), col("ce"), col("cn"))).as("ca"))
+      semDedupFromAssigned(normed(spark, dir).crossJoin(ca).select(col("vec_id"),
+        col("embedding"), col("nrm"),
+        expr("element_at(ca, graft_cell_top1(embedding, nrm, ca)).cent_id").as("cell")))
+    },
     build = (spark, dir, _) => s12Derive(spark, dir))
 
   /** The corpus rows SemDeDup `verdicts` keep, with their cell. */

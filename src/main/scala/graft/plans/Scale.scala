@@ -156,11 +156,12 @@ object Scale {
     // results are identical either way, unlike probeMemo's skew counts
     // which gate a branch choice). It is NOT performance-only for
     // artifact KEYS: the Repartition node is part of the defining plans
-    // Artifacts.key hashes, so a stale decision after an in-place
+    // Artifacts.keyFor hashes, so a stale decision after an in-place
     // corpus rewrite would mint a key no fresh JVM reproduces and strand
     // a duplicate artifact table. Artifacts.keyFor therefore calls
-    // [[clearSpreadMemoUnder]] whenever a corpus dir's fingerprint
-    // changes — the rewrite is re-probed exactly where key stability
+    // [[clearSpreadMemoUnder]] the first time it sees the fingerprint of
+    // a family's read tables and whenever that fingerprint changes —
+    // the rewrite is re-probed exactly where key stability
     // matters, and JVM-lifetime staleness remains acceptable everywhere
     // else.
     val roots = sourceRoots(df)
@@ -251,14 +252,15 @@ object Scale {
   }
 
   /** Evict spread decisions whose source roots lie under `dir` — called
-    * by Artifacts.keyFor when a corpus dir's content fingerprint
-    * changes, so artifact keys derived after an in-place rewrite hash
-    * the plan a fresh JVM would build (see the staleness note on
-    * [[spreadIfNarrow]]). Match is scheme-stripped and path-boundary
-    * (r15 advisory): a raw substring test on `.../sf1` also evicted the
-    * sibling `.../sf10full`'s memo rows — harmless to values (decisions
-    * re-probe) but it defeated the memo for unrelated corpora. Memo
-    * keys are newline-joined root URIs, so each root is tested alone. */
+    * by Artifacts.keyFor when the content fingerprint of a family's read
+    * tables under `dir` is new or changed, so artifact keys derived after
+    * an in-place rewrite hash the plan a fresh JVM would build (see the
+    * staleness note on [[spreadIfNarrow]]). Match is scheme-stripped and
+    * path-boundary (r15 advisory): a raw substring test on `.../sf1` also
+    * evicted the sibling `.../sf10full`'s memo rows — harmless to values
+    * (decisions re-probe) but it defeated the memo for unrelated corpora.
+    * Memo keys are newline-joined root URIs, so each root is tested
+    * alone. */
   private[graft] def clearSpreadMemoUnder(dir: String): Unit = {
     def pathOf(s: String): String =
       new org.apache.hadoop.fs.Path(s).toUri.getPath.stripSuffix("/")

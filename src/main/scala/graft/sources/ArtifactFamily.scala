@@ -13,9 +13,16 @@ import graft.Tables
   * value, so a family cannot be served under one name and refreshed or
   * tested under another.
   *
-  * Table names are `<kind>_<key>` with the key from
-  * [[Artifacts.keyFor]] over the whole corpus dir, or — `tableScoped`
-  * families — [[Artifacts.keyForTables]] over `reads` only.
+  * Table names are `<kind>_<key>`, one key rule for every family
+  * ([[Artifacts.keyFor]]): the content fingerprint covers the corpus
+  * tables the family declares in `reads`, so a family's table moves
+  * exactly when a table it reads changes — an orders append leaves the
+  * documents families' tables in place, and the reverse.
+  *
+  * A family earns its place by reuse: at least two consumers, or an
+  * append refresh. A family that would persist one query's final
+  * answer and never refresh is that query's in-window derivation
+  * instead (d10/e15 read `dedupsig_`/`shingles_` and keep no ledger).
   *
   * `multisetCount` names the count column of families whose rows are a
   * MULTISET keyed by value (the profile histograms): an append-refreshed
@@ -27,14 +34,11 @@ final class ArtifactFamily private[graft] (
     private[graft] val defining: (SparkSession, String) => DataFrame,
     build: (SparkSession, String, ArtifactFamily.Built) => DataFrame,
     val refresh: ArtifactFamily.Refresh = ArtifactFamily.NoRefresh,
-    tableScoped: Boolean = false,
     multisetCount: Option[String] = None) {
   import ArtifactFamily._
 
   def name(spark: SparkSession, dir: String): String =
-    s"${kind}_" + (
-      if (tableScoped) Artifacts.keyForTables(spark, dir, kind, reads)(defining(spark, dir))
-      else Artifacts.keyFor(spark, dir, kind)(defining(spark, dir)))
+    s"${kind}_" + Artifacts.keyFor(spark, dir, kind, reads)(defining(spark, dir))
 
   /** The family's table for the corpus at `dir`, built on a miss. */
   def serve(spark: SparkSession, dir: String): DataFrame =
@@ -129,7 +133,7 @@ object ArtifactFamily {
     Seq(D.Shingles, D.H60, D.DedupSig, D.Scored, D.Edges, D.Contam, D.Labels,
       T.WordTf, T.BigramTf, D.Spans, D.ExcerptShingles, D.ContSig, D.ContAudit,
       C.ProfHist, C.ProfileStats, C.ProfStrHist, C.ProfileStrStats,
-      S.Centroids, S.KnnGraph, S.KnnLabels, S.SemVerdicts, D.D10Verdicts, D.E15Verdicts)
+      S.Centroids, S.KnnGraph, S.KnnLabels, S.SemVerdicts)
   }
 
   /** The families an append from `oldDir` to `newDir` refreshes: those

@@ -18,9 +18,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * form lets a cold session (or cold JVM) find the files and re-register
   * instead of rebuilding — which is the whole point of persisting.
   *
-  * Table names carry (corpus-dir hash, defining-plan semanticHash): a
-  * different corpus or a changed derivation can never serve a stale
-  * artifact — it simply misses and rebuilds under a new name.
+  * Table names carry (corpus-dir hash, read tables' content fingerprint,
+  * defining-plan digest) — see [[Artifacts.keyFor]]: a different corpus
+  * or a changed derivation can never serve a stale artifact — it simply
+  * misses and rebuilds under a new name.
   */
 object Artifacts {
   val Db = "graft_artifacts"
@@ -227,118 +228,81 @@ object Artifacts {
     swept
   }
 
-  /** Deterministic table-name key: corpus-dir digest + corpus CONTENT
-    * fingerprint + defining-plan digest.
+  /** Deterministic table-name key of a family that reads `tables` of the
+    * corpus at `dir`: `<dir digest>_<content fingerprint>_<plan digest>`,
+    * the defining-plan construction MEMOIZED per (kind, dir, content).
     *
-    * The content fingerprint closes the stale-serve hole: the warehouse
-    * outlives the JVM, so rewriting a corpus in place with DIFFERENT
-    * data must MISS and rebuild, not silently serve the old corpus's
-    * labels/centroids. Any file added, removed, resized, or rewritten
-    * with new bytes under the corpus dir changes the key — while a
-    * byte-identical regeneration (same seed, fresh mtimes) keeps it, so
-    * artifacts survive the regenerate-from-seed workflow instead of
-    * rebuilding on every round (r16 verdict task 3).
+    * CONTENT key. The fingerprint covers exactly the declared `tables`
+    * ([[tablesFingerprint]]): the warehouse outlives the JVM, so a read
+    * table rewritten in place with DIFFERENT data must miss and rebuild,
+    * not silently serve the old corpus's artifact; a byte-identical
+    * regeneration (same seed, fresh mtimes) keeps the key, so artifacts
+    * survive the regenerate-from-seed workflow (r16 verdict task 3); and
+    * a change to a table the family does not read leaves the key — and
+    * the served artifact — alone (an orders append no longer rebuilds
+    * the documents families, a documents append the orders statistics:
+    * 530 s / 4,447 CPU-s at sf10full when they were keyed on the whole
+    * dir). ArtifactFamilySpec pins that each defining plan scans only
+    * its declared tables.
     *
-    * The plan digest hashes the CANONICALIZED plan's string form,
-    * NOT `semanticHash()` — canonicalized expression ids print as stable
-    * ordinals (#0, #1, …) while `ExprId.hashCode` mixes in
-    * `NamedExpression.jvmId`, a per-JVM random UUID, which would give
+    * CANONICALIZED plan. The plan digest hashes the canonicalized plan's
+    * string form, NOT `semanticHash()` — canonicalized expression ids
+    * print as stable ordinals (#0, #1, …) while `ExprId.hashCode` mixes
+    * in `NamedExpression.jvmId`, a per-JVM random UUID, which would give
     * every fresh JVM a different key and silently defeat cross-JVM
-    * artifact reuse (observed: five labels_* tables for one corpus). */
-  def key(spark: SparkSession, dir: String, defining: DataFrame): String =
-    keyOf(dir, corpusFingerprint(spark, dir), defining)
+    * artifact reuse (observed: five labels_* tables for one corpus).
+    * Within one JVM the code is fixed, so (kind, dir, content) fully
+    * determines the defining plan and the memo is exact; constructing,
+    * analyzing and canonicalizing it ran once per query before (r14: a
+    * diffuse ~0.1-0.8 s per artifact-served row at sf0.1, PERF.md 14c).
+    * `kind` must be unique per family — two families may share one
+    * defining plan (labels and edges both key on the edge derivation)
+    * and still need their own memo rows; only the latest fingerprint per
+    * (kind, dir) is kept.
+    *
+    * SPREAD. The defining plan also embeds the session's parallelism
+    * (fixed per session) and the spread decision (Scale.spreadIfNarrow's
+    * Repartition), which is memoized per source root for the JVM's
+    * lifetime. So the first time a (dir, tables)
+    * fingerprint is seen, and every time it changes, the dir's spread
+    * decisions are evicted (Scale.clearSpreadMemoUnder) before the plan
+    * is rebuilt: the hashed plan is then the one a fresh JVM reading
+    * this content would build. Without it an in-place rewrite would mint
+    * a key no other JVM reproduces and strand a duplicate table; the
+    * first observation evicts too (r15 advisory), since a decision may
+    * have been memoized against content no key ever saw. Eviction costs
+    * one re-probe per (dir, tables, JVM), nothing at steady state. */
+  def keyFor(spark: SparkSession, dir: String, kind: String, tables: Seq[String])(
+      defining: => DataFrame): String = {
+    val fp = tablesFingerprint(spark, dir, tables)
+    if (!fpSeen.put((dir, tables.sorted), fp).contains(fp))
+      graft.plans.Scale.clearSpreadMemoUnder(dir)
+    keyMemo.at(kind, dir, fp)(keyOf(dir, fp, defining))
+  }
+
+  /** [[keyFor]] without its memo or eviction: the key a fresh JVM mints
+    * for `defining` over this content. */
+  private[graft] def key(spark: SparkSession, dir: String, tables: Seq[String],
+      defining: DataFrame): String =
+    keyOf(dir, tablesFingerprint(spark, dir, tables), defining)
 
   private def keyOf(dir: String, fp: String, defining: DataFrame): String =
     s"${md5hex(dir).take(10)}_${fp.take(8)}_" +
       md5hex(defining.queryExecution.analyzed.canonicalized.toString).take(8)
 
-  /** [[key]] with the defining-plan construction MEMOIZED per
-    * (kind, dir, corpus fingerprint). The fingerprint is recomputed on
-    * every call — one FS metadata walk at steady state (per-file content
-    * digests are memoized by (path, len, mtime)), which is what keeps
-    * the documented staleness contract (a corpus rewritten in place with
-    * different bytes changes the fingerprint, so it misses and
-    * re-derives; a byte-identical regeneration keeps it and HITS) — but the
-    * expensive part, constructing + analyzing + canonicalizing the full
-    * defining derivation tree, runs once per corpus state per JVM.
-    * Within one JVM the code is fixed, so (kind, dir, content) fully
-    * determines the defining plan — given two JVM-stable inputs the
-    * plan also embeds: the session's defaultParallelism (Repartition
-    * numPartitions from Scale.spreadIfNarrow is hashed) and the spread
-    * decision itself. Parallelism is fixed per session; the spread memo
-    * is made safe here: a fingerprint CHANGE for this dir evicts the
-    * dir's spread decisions (Scale.clearSpreadMemoUnder) before the
-    * defining plan is rebuilt, so the rebuilt plan is the one a fresh
-    * JVM reading the new content would build — without that eviction an
-    * in-place corpus rewrite would mint a key no other JVM reproduces
-    * and strand a duplicate artifact table (the exact failure [[key]]'s
-    * docstring warns about). Cross-JVM artifact reuse is untouched
-    * because the derived key is byte-identical to [[key]]'s.
-    * `kind` must be unique per artifact FAMILY (edges/labels/...) —
-    * two families over the same corpus may legitimately share one
-    * defining plan (labels and edges both key on the edge derivation)
-    * and still need their own memo rows. The memo keeps only the LATEST
-    * fingerprint per (kind, dir): regenerating a corpus in place many
-    * times over one driver lifetime replaces the row instead of leaking
-    * one per state.
-    *
-    * Measured (r14): every d/s-family consumer re-derived its defining
-    * plan per query — a diffuse ~0.1-0.8 s per artifact-served row at
-    * sf0.1 (PERF.md 14c's plan-construction tax), all of it skippable
-    * because the key is fully determined by (kind, content). */
-  def keyFor(spark: SparkSession, dir: String, kind: String)(
-      defining: => DataFrame): String = {
-    val fp = corpusFingerprint(spark, dir)
-    // dir-level (not per-kind) change tracking: after a rewrite, the
-    // FIRST keyFor of ANY kind over the dir must rebuild from a fresh
-    // spread decision, even if that kind never keyed the old state.
-    // First OBSERVATION evicts too (r15 advisory): spreadIfNarrow may
-    // have memoized a decision against content keyFor never saw — if
-    // the corpus was then rewritten in place, a change-only check would
-    // hash the stale spread into the key. Eviction on a miss costs one
-    // re-probe per (dir, JVM), nothing at steady state.
-    if (!dirFpSeen.put(dir, fp).contains(fp))
-      graft.plans.Scale.clearSpreadMemoUnder(dir)
-    memoKey(kind, dir, fp)(defining)
-  }
+  /** (dir, sorted tables) → the last fingerprint [[keyFor]] observed. */
+  private val fpSeen =
+    scala.collection.concurrent.TrieMap.empty[(String, Seq[String]), String]
 
-  /** [[keyFor]] scoped to the TABLES the derivation actually reads
-    * (r18, the profile families): the whole-dir fingerprint couples an
-    * artifact's key to every file under the corpus dir, so appending
-    * DOCUMENTS forced the orders-only q15/q17 statistics to rebuild
-    * (the single largest build line: 530 s / 4,447 CPU-s at sf10full)
-    * even though no byte they read had changed. Fingerprinting only
-    * `dir/<table>.parquet` for the declared input tables keeps the key
-    * — and therefore the served artifact — stable across changes to
-    * unrelated tables, while any real change to a read table still
-    * moves it (same per-file content digests as [[corpusFingerprint]]).
-    * No spread-memo eviction here: the profile derivations never use
-    * Scale.spreadIfNarrow (fact scans are multi-row-group parquet);
-    * derivations that do must stay on [[keyFor]]. */
-  def keyForTables(spark: SparkSession, dir: String, kind: String,
-      tables: Seq[String])(defining: => DataFrame): String =
-    memoKey(kind, dir, tablesFingerprint(spark, dir, tables))(defining)
-
-  /** The (kind, dir) memo lookup shared by [[keyFor]] and [[keyForTables]]. */
-  private def memoKey(kind: String, dir: String, fp: String)(defining: => DataFrame): String =
-    keyMemo.at(kind, dir, fp)(keyOf(dir, fp, defining))
-
-  /** [[corpusFingerprint]] restricted to `dir/<table>.parquet` entries
-    * (each a single file or a directory of part files). Missing tables
-    * contribute nothing — the absence is visible because the fingerprint
-    * then matches no state that had the table. */
-  def tablesFingerprint(spark: SparkSession, dir: String, tables: Seq[String]): String =
-    fingerprintOf(spark, tables.sorted.map(t => new Path(dir, s"$t.parquet")))
-
-  /** dir → last fingerprint any keyFor observed (latest state only). */
-  private val dirFpSeen =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** (kind, dir) → derived key at the latest corpus fingerprint. */
+  /** (kind, dir) → derived key at the latest content fingerprint. */
   private val keyMemo = new ContentMemo[String]
 
-  /** CONTENT fingerprint of a data dir: md5 over the sorted recursive
-    * file listing of (path, length, per-file content digest).
+  /** CONTENT fingerprint of `dir`'s `tables`: md5 over the sorted
+    * recursive file listing of (path, length, per-file content digest)
+    * of each `dir/<table>.parquet` entry (a single file or a directory of
+    * part files). Missing tables contribute nothing — the absence is
+    * visible because the fingerprint then matches no state that had the
+    * table.
     *
     * Until r16 this hashed (path, length, mtime) — which made the key
     * strictly TIME-keyed: regenerating a corpus from the same seed
@@ -369,15 +333,9 @@ object Artifacts {
     * keys make those memos survive an in-place same-bytes rewrite too —
     * which is correct, where the mtime key's forced miss was merely
     * safe. */
-  def corpusFingerprint(spark: SparkSession, dir: String): String =
-    fingerprintOf(spark, Seq(new Path(dir)))
-
-  /** md5 over the `path|length|content digest` lines of every file under
-    * `roots` (each a file or a directory walked recursively in name
-    * order); missing roots contribute nothing. */
-  private def fingerprintOf(spark: SparkSession, roots: Seq[Path]): String = {
+  def tablesFingerprint(spark: SparkSession, dir: String, tables: Seq[String]): String = {
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    roots.foreach { root =>
+    tables.sorted.map(t => new Path(dir, s"$t.parquet")).foreach { root =>
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       def visit(st: org.apache.hadoop.fs.FileStatus): Unit =
         if (st.isDirectory)

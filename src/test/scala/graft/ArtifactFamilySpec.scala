@@ -1,11 +1,16 @@
 package graft
 
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.functions.{col, lit, max}
+
 import graft.sources.{ArtifactFamily, Artifacts}
 
 /** Invariants of the artifact-family registry: every family is declared
   * once under a unique kind, names its tables in the generation format
   * [[Artifacts.sweepStale]] groups by (a family that breaks it is never
-  * garbage-collected), and `drop` leaves no catalog entry or file. */
+  * garbage-collected), names them without building anything, keys them
+  * on exactly the tables it reads, and `drop` leaves no catalog entry or
+  * file. */
 class ArtifactFamilySpec extends SparkSpec {
 
   test("registry kinds are unique") {
@@ -36,6 +41,51 @@ class ArtifactFamilySpec extends SparkSpec {
       assert(scanned.nonEmpty, s"family '${f.kind}': its defining plan scans no corpus table")
       assert(scanned.subsetOf(f.reads.toSet),
         s"family '${f.kind}' scans ${scanned.toSeq.sorted} but declares ${f.reads}")
+    }
+  }
+
+  test("naming a family serves no family") {
+    // a name is a key over the defining plan; a plan that serves another
+    // family would build it just to mint a table name. The memo may skip
+    // the plan on a warm name, so the plan a miss constructs is checked too.
+    val serving = ArtifactFamily.all.map { f =>
+      f.kind -> ArtifactFamily.servedDuring { f.name(spark, sf); f.defining(spark, sf) }
+    }.filter(_._2.nonEmpty)
+    assert(serving.isEmpty, s"naming these families serves others: $serving")
+  }
+
+  test("an append to one table renames exactly the families that read it") {
+    val base = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "fam-scope-")
+    val dir = base.resolve("corpus").toString
+    val fs = new Path(sf).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new Path(sf)).foreach { st =>
+      FileUtil.copy(fs, st.getPath, fs, new Path(dir, st.getPath.getName), false, fs.getConf)
+    }
+    /** Rewrite `dir/<table>.parquet` in place as its rows plus three
+      * copies under fresh keys. */
+    def appendInPlace(table: String, key: String): Unit = {
+      val path = new Path(dir, s"$table.parquet")
+      val stage = base.resolve(s"$table-stage").toString
+      val old = spark.read.parquet(path.toString)
+      val next = old.agg(max(col(key))).first().getLong(0) + 1L
+      old.unionByName(old.orderBy(col(key)).limit(3)
+          .withColumn(key, (col(key) + lit(next)).cast(old.schema(key).dataType)))
+        .write.parquet(stage)
+      fs.delete(path, true)
+      assert(fs.rename(new Path(stage), path))
+    }
+    def names() = ArtifactFamily.all.map(f => f -> f.name(spark, dir)).toMap
+    Seq("orders" -> "o_orderkey", "documents" -> "doc_id").foreach { case (table, key) =>
+      val before = names()
+      appendInPlace(table, key)
+      val after = names()
+      val (readers, others) = ArtifactFamily.all.partition(_.reads.contains(table))
+      assert(readers.nonEmpty && others.nonEmpty, s"no contrast for a $table append")
+      readers.foreach(f => assert(after(f) != before(f),
+        s"a $table append must rename '${f.kind}', which reads $table"))
+      others.foreach(f => assert(after(f) === before(f),
+        s"a $table-only append renamed '${f.kind}', which reads only ${f.reads}"))
     }
   }
 

@@ -166,12 +166,8 @@ class IncrementalRefreshSpec extends SparkSpec {
     oldRows.toDF(cols: _*).write.parquet(s"$oldDir/documents.parquet")
     (oldRows ++ batchRows).toDF(cols: _*).write.parquet(s"$newDir/documents.parquet")
 
-    // build every refreshable documents family's old generation from the
-    // REAL text (d10verd/e15verd are never read by a refresh, and their
-    // key-defining plans serve dedupsig_/shingles_: naming them on the
-    // poisoned state would build those from the poisoned text)
-    val families = ArtifactFamily.all.filter(f =>
-      f.reads == Seq("documents") && f.refresh != ArtifactFamily.NoRefresh)
+    // build every documents family's old generation from the REAL text
+    val families = ArtifactFamily.all.filter(_.reads == Seq("documents"))
     families.foreach(_.serve(spark, oldDir))
     val realNames = families.map(_.name(spark, oldDir))
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.operators.{CartAnalytics, Curation, Dedup, Profile, Similarity, TextAnalysis}
-import graft.sources.ArtifactFamily
+import graft.sources.{ArtifactFamily, Artifacts}
 
 /** Served ≡ recompute for every query that serves an artifact family.
   *
@@ -114,6 +114,14 @@ class ServedRecomputeSpec extends SparkSpec {
 
   test("every query that serves an artifact family has a recompute row, and no other does") {
     ArtifactFamily.all.foreach(_.drop(spark, dir)) // a fresh warehouse for this corpus
+    // dropping names every family; a name that built another family on
+    // the way would leave the warehouse warm
+    val left = ArtifactFamily.all.map(_.name(spark, dir)).filter { t =>
+      val loc = Artifacts.location(spark, t)
+      spark.catalog.tableExists(s"${Artifacts.Db}.$t") ||
+        loc.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(loc)
+    }
+    assert(left.isEmpty, s"family tables survived the drop: $left")
     val serving = SparkEntry.queries.toSeq.flatMap { case (q, f) =>
       if (ArtifactFamily.servedDuring(f(spark, dir)).nonEmpty) Some(q) else None
     }.toSet

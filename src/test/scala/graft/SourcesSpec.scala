@@ -406,12 +406,12 @@ class SourcesSpec extends SparkSpec {
     import graft.sources.Artifacts
     val dir = s"$tmpDir/fpr"
     Seq((1L, "a")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val before = Artifacts.corpusFingerprint(spark, dir)
-    assert(before === Artifacts.corpusFingerprint(spark, dir),
+    val before = Artifacts.tablesFingerprint(spark, dir, Seq("documents"))
+    assert(before === Artifacts.tablesFingerprint(spark, dir, Seq("documents")),
       "fingerprint must be stable while files are untouched")
     Seq((1L, "a"), (2L, "bb")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    assert(Artifacts.corpusFingerprint(spark, dir) !== before,
+    assert(Artifacts.tablesFingerprint(spark, dir, Seq("documents")) !== before,
       "in-place overwrite must change the fingerprint")
   }
 
@@ -421,8 +421,9 @@ class SourcesSpec extends SparkSpec {
     val dir = s"$tmpDir/fpc"
     Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val before = Artifacts.corpusFingerprint(spark, dir)
-    val keyBefore = Artifacts.key(spark, dir, spark.read.parquet(s"$dir/documents.parquet"))
+    val before = Artifacts.tablesFingerprint(spark, dir, Seq("documents"))
+    val keyBefore =
+      Artifacts.key(spark, dir, Seq("documents"), spark.read.parquet(s"$dir/documents.parquet"))
     Thread.sleep(1100) // distinct mtime on coarse-granularity filesystems
     // byte-identical in-place rewrite: same files, same bytes, new mtimes
     // (what a seed-deterministic corpus regeneration produces)
@@ -430,10 +431,10 @@ class SourcesSpec extends SparkSpec {
     files.forEachRemaining { p =>
       if (Files.isRegularFile(p)) Files.write(p, Files.readAllBytes(p))
     }
-    assert(Artifacts.corpusFingerprint(spark, dir) === before,
+    assert(Artifacts.tablesFingerprint(spark, dir, Seq("documents")) === before,
       "identical content under fresh mtimes must keep the fingerprint")
-    assert(Artifacts.key(spark, dir, spark.read.parquet(s"$dir/documents.parquet"))
-        === keyBefore,
+    assert(Artifacts.key(spark, dir, Seq("documents"),
+        spark.read.parquet(s"$dir/documents.parquet")) === keyBefore,
       "identical content under fresh mtimes must keep the artifact key " +
         "(a time-keyed fingerprint would rebuild every artifact per regeneration)")
   }
@@ -442,15 +443,15 @@ class SourcesSpec extends SparkSpec {
       "changes the key (parquet footer moves under the digest windows)") {
     import graft.sources.Artifacts
     val dir = s"$tmpDir/fpd"
-    val p = Paths.get(dir, "blob.bin")
+    val p = Paths.get(dir, "blob.parquet")
     Files.createDirectories(p.getParent)
     // same length, middle-of-head-window byte flipped — digest must move
     val bytes = Array.fill[Byte](4096)(7)
     Files.write(p, bytes)
-    val before = Artifacts.corpusFingerprint(spark, dir)
+    val before = Artifacts.tablesFingerprint(spark, dir, Seq("blob"))
     bytes(2048) = 9
     Files.write(p, bytes)
-    assert(Artifacts.corpusFingerprint(spark, dir) !== before,
+    assert(Artifacts.tablesFingerprint(spark, dir, Seq("blob")) !== before,
       "a rewrite with different bytes at identical (path, length) must change the key")
   }
 
@@ -458,16 +459,16 @@ class SourcesSpec extends SparkSpec {
       "still changes the key") {
     import graft.sources.Artifacts
     val dir = s"$tmpDir/fpt"
-    val p = Paths.get(dir, "blob.bin")
+    val p = Paths.get(dir, "blob.parquet")
     Files.createDirectories(p.getParent)
     val bytes = Array.fill[Byte](4096)(7)
     Files.write(p, bytes)
     val tick = Files.getLastModifiedTime(p)
-    val before = Artifacts.corpusFingerprint(spark, dir)
+    val before = Artifacts.tablesFingerprint(spark, dir, Seq("blob"))
     bytes(2048) = 9
     Files.write(p, bytes)
     Files.setLastModifiedTime(p, tick) // the rewrite landed in the same tick
-    assert(Artifacts.corpusFingerprint(spark, dir) !== before,
+    assert(Artifacts.tablesFingerprint(spark, dir, Seq("blob")) !== before,
       "a rewrite with the same (path, length, mtime) and new bytes must change the key")
   }
 
@@ -495,20 +496,20 @@ class SourcesSpec extends SparkSpec {
     }
     writeTrailer(magic = true)
     Files.write(p, bytes)
-    val before = Artifacts.corpusFingerprint(spark, dir)
+    val before = Artifacts.tablesFingerprint(spark, dir, Seq("wide"))
     bytes(len - 128 * 1024) = 9 // inside claimed footer, outside both windows
     Files.write(p, bytes)
-    assert(Artifacts.corpusFingerprint(spark, dir) !== before,
+    assert(Artifacts.tablesFingerprint(spark, dir, Seq("wide")) !== before,
       "a data change inside a large parquet footer must move the fingerprint")
     // control: the SAME flip without the parquet magic stays outside the
     // fixed windows — proves the footer path (not window growth) caught it
     bytes(len - 128 * 1024) = 3
     writeTrailer(magic = false)
     Files.write(p, bytes)
-    val beforeCtl = Artifacts.corpusFingerprint(spark, dir)
+    val beforeCtl = Artifacts.tablesFingerprint(spark, dir, Seq("wide"))
     bytes(len - 128 * 1024) = 9
     Files.write(p, bytes)
-    assert(Artifacts.corpusFingerprint(spark, dir) === beforeCtl,
+    assert(Artifacts.tablesFingerprint(spark, dir, Seq("wide")) === beforeCtl,
       "without the parquet magic the interior byte is outside both fixed windows")
   }
 
@@ -745,21 +746,22 @@ class SourcesSpec extends SparkSpec {
     spark.range(100).toDF("doc_id").write.mode("overwrite").parquet(s"$dir/documents.parquet")
     var built = 0
     def defining() = { built += 1; spark.read.parquet(s"$dir/documents.parquet") }
-    val k1 = Artifacts.keyFor(spark, dir, "keyfor-spec")(defining())
-    val k2 = Artifacts.keyFor(spark, dir, "keyfor-spec")(defining())
+    val k1 = Artifacts.keyFor(spark, dir, "keyfor-spec", Seq("documents"))(defining())
+    val k2 = Artifacts.keyFor(spark, dir, "keyfor-spec", Seq("documents"))(defining())
     assert(k1 === k2 && built === 1,
       s"second call must serve the memo without re-constructing the defining plan (built=$built)")
     // byte-identical to the un-memoized key derivation (cross-JVM reuse)
-    assert(k1 === Artifacts.key(spark, dir, spark.read.parquet(s"$dir/documents.parquet")))
+    assert(k1 === Artifacts.key(spark, dir, Seq("documents"),
+      spark.read.parquet(s"$dir/documents.parquet")))
     // a DIFFERENT kind over the same corpus gets its own memo row
-    val kOther = Artifacts.keyFor(spark, dir, "keyfor-spec-2")(defining())
+    val kOther = Artifacts.keyFor(spark, dir, "keyfor-spec-2", Seq("documents"))(defining())
     assert(built === 2 && kOther === k1,
       "same defining plan under another kind re-derives once, same key value")
     // rewriting the corpus in place must MISS (the stale-serve hole):
     // ensure a different mtime even on coarse-granularity filesystems
     Thread.sleep(1100)
     spark.range(101).toDF("doc_id").write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val k3 = Artifacts.keyFor(spark, dir, "keyfor-spec")(defining())
+    val k3 = Artifacts.keyFor(spark, dir, "keyfor-spec", Seq("documents"))(defining())
     assert(built === 3 && k3 != k1,
       "a rewritten corpus must re-derive and change the key")
   }
@@ -782,7 +784,7 @@ class SourcesSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(path)
     Scale.clearSpreadMemo()
     def defining() = Scale.spreadIfNarrow(spark.read.parquet(path))
-    val kBig = Artifacts.keyFor(spark, dir, "keyfor-spread")(defining())
+    val kBig = Artifacts.keyFor(spark, dir, "keyfor-spread", Seq("documents"))(defining())
     assert(defining().rdd.getNumPartitions === spark.sparkContext.defaultParallelism,
       "fixture must actually trigger (and memoize) a spread")
     Thread.sleep(1100) // distinct mtime on coarse-granularity filesystems
@@ -790,10 +792,11 @@ class SourcesSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(path)
     // keyFor sees the new fingerprint → evicts the dir's spread rows →
     // the defining plan it hashes is the one a FRESH JVM would build
-    val kSmall = Artifacts.keyFor(spark, dir, "keyfor-spread")(defining())
+    val kSmall = Artifacts.keyFor(spark, dir, "keyfor-spread", Seq("documents"))(defining())
     assert(kSmall != kBig)
     Scale.clearSpreadMemo()
-    val kFresh = Artifacts.key(spark, dir, Scale.spreadIfNarrow(spark.read.parquet(path)))
+    val kFresh = Artifacts.key(spark, dir, Seq("documents"),
+      Scale.spreadIfNarrow(spark.read.parquet(path)))
     assert(kSmall === kFresh,
       "post-rewrite keyFor must hash the plan a fresh JVM reproduces " +
         "(stale spread decision baked into the defining plan)")
@@ -814,7 +817,7 @@ class SourcesSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(path)
     Scale.clearSpreadMemo()
     // a non-artifact query memoizes the spread decision — NO keyFor ran,
-    // so dirFpSeen has never observed this dir
+    // so keyFor has never observed this dir's documents fingerprint
     Scale.spreadIfNarrow(spark.read.parquet(path)).count()
     assert(Scale.spreadMemoHasRootUnder(dir), "fixture must memoize a spread")
     Thread.sleep(1100)
@@ -822,10 +825,11 @@ class SourcesSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(path)
     // FIRST keyFor over the dir: a change-only check would see put()
     // return None, skip eviction, and hash the stale spread
-    val k = Artifacts.keyFor(spark, dir, "keyfor-firstobs")(
+    val k = Artifacts.keyFor(spark, dir, "keyfor-firstobs", Seq("documents"))(
       Scale.spreadIfNarrow(spark.read.parquet(path)))
     Scale.clearSpreadMemo()
-    val kFresh = Artifacts.key(spark, dir, Scale.spreadIfNarrow(spark.read.parquet(path)))
+    val kFresh = Artifacts.key(spark, dir, Seq("documents"),
+      Scale.spreadIfNarrow(spark.read.parquet(path)))
     assert(k === kFresh,
       "first-observation keyFor must evict the pre-existing spread memo " +
         "and mint the key a fresh JVM reproduces")
