@@ -159,8 +159,8 @@ object Scale {
     // Artifacts.keyFor hashes, so a stale decision after an in-place
     // corpus rewrite would mint a key no fresh JVM reproduces and strand
     // a duplicate artifact table. Artifacts.keyFor therefore calls
-    // [[clearSpreadMemoUnder]] the first time it sees the fingerprint of
-    // a family's read tables and whenever that fingerprint changes —
+    // [[clearSpreadMemoUnder]] on every key-memo miss (a new or changed
+    // fingerprint of a family's read tables) before it builds the plan —
     // the rewrite is re-probed exactly where key stability
     // matters, and JVM-lifetime staleness remains acceptable everywhere
     // else.
@@ -252,10 +252,10 @@ object Scale {
   }
 
   /** Evict spread decisions whose source roots lie under `dir` — called
-    * by Artifacts.keyFor when the content fingerprint of a family's read
-    * tables under `dir` is new or changed, so artifact keys derived after
-    * an in-place rewrite hash the plan a fresh JVM would build (see the
-    * staleness note on [[spreadIfNarrow]]). Match is scheme-stripped and
+    * by Artifacts.keyFor on a key-memo miss (a new or changed content
+    * fingerprint of a family's read tables under `dir`), so keys derived
+    * after an in-place rewrite hash the plan a fresh JVM would build (see
+    * the staleness note on [[spreadIfNarrow]]). Match is scheme-stripped and
     * path-boundary (r15 advisory): a raw substring test on `.../sf1` also
     * evicted the sibling `.../sf10full`'s memo rows — harmless to values
     * (decisions re-probe) but it defeated the memo for unrelated corpora.

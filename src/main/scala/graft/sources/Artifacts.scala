@@ -263,21 +263,23 @@ object Artifacts {
     * SPREAD. The defining plan also embeds the session's parallelism
     * (fixed per session) and the spread decision (Scale.spreadIfNarrow's
     * Repartition), which is memoized per source root for the JVM's
-    * lifetime. So the first time a (dir, tables)
-    * fingerprint is seen, and every time it changes, the dir's spread
-    * decisions are evicted (Scale.clearSpreadMemoUnder) before the plan
-    * is rebuilt: the hashed plan is then the one a fresh JVM reading
-    * this content would build. Without it an in-place rewrite would mint
-    * a key no other JVM reproduces and strand a duplicate table; the
-    * first observation evicts too (r15 advisory), since a decision may
-    * have been memoized against content no key ever saw. Eviction costs
-    * one re-probe per (dir, tables, JVM), nothing at steady state. */
+    * lifetime. So every memo miss — the first time a (kind, dir) sees
+    * a fingerprint, and every time it changes — evicts the dir's spread
+    * decisions (Scale.clearSpreadMemoUnder) before the plan is built:
+    * the hashed plan is then the one a fresh JVM reading this content
+    * would build. Without it an in-place rewrite would mint a key no
+    * other JVM reproduces and strand a duplicate table; the first
+    * observation evicts too (r15 advisory), since a decision may have
+    * been memoized against content no key ever saw. Eviction costs one
+    * re-probe (file metadata, no job) per miss, nothing at steady
+    * state. */
   def keyFor(spark: SparkSession, dir: String, kind: String, tables: Seq[String])(
       defining: => DataFrame): String = {
     val fp = tablesFingerprint(spark, dir, tables)
-    if (!fpSeen.put((dir, tables.sorted), fp).contains(fp))
+    keyMemo.at(kind, dir, fp) {
       graft.plans.Scale.clearSpreadMemoUnder(dir)
-    keyMemo.at(kind, dir, fp)(keyOf(dir, fp, defining))
+      keyOf(dir, fp, defining)
+    }
   }
 
   /** [[keyFor]] without its memo or eviction: the key a fresh JVM mints
@@ -289,10 +291,6 @@ object Artifacts {
   private def keyOf(dir: String, fp: String, defining: DataFrame): String =
     s"${md5hex(dir).take(10)}_${fp.take(8)}_" +
       md5hex(defining.queryExecution.analyzed.canonicalized.toString).take(8)
-
-  /** (dir, sorted tables) → the last fingerprint [[keyFor]] observed. */
-  private val fpSeen =
-    scala.collection.concurrent.TrieMap.empty[(String, Seq[String]), String]
 
   /** (kind, dir) → derived key at the latest content fingerprint. */
   private val keyMemo = new ContentMemo[String]
