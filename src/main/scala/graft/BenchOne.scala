@@ -2,12 +2,17 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
+import graft.sources.PlanCache
+
 /** Single-query timing harness for plan iteration: run one SparkEntry
   * query N times against a testdata dir and print each run's seconds
   * (min is the steady-state plan cost, same convention as [[Bench]]),
-  * its executor CPU, its Janino compiles (nonzero on a warm run means
-  * the generated-class cache lost the query's classes) and the Spark jobs
-  * it started.
+  * its executor CPU, its driver-thread CPU split into construction (the
+  * `SparkEntry.queries` call) and consumption (planning and running the
+  * [[BenchConsume]] fold), whether the construction reused its plan
+  * ([[graft.sources.PlanCache]]), its Janino compiles (nonzero on a warm
+  * run means the generated-class cache lost the query's classes) and the
+  * Spark jobs it started.
   *
   * Flags:
   *  - `--explain` prints the formatted physical plan instead of running.
@@ -36,6 +41,7 @@ object BenchOne {
       return
     }
     CpuMeter.install(spark)
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
     @volatile var run = 0
     if (flags.contains("--profile")) spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
@@ -54,13 +60,22 @@ object BenchOne {
       val (c0, _) = CpuMeter.snapshot(spark)
       val k0 = CpuMeter.compiles
       val j0 = CpuMeter.jobs
+      val h0 = PlanCache.hits
       val t0 = System.nanoTime()
+      val d0 = threads.getCurrentThreadCpuTime
+      val df = fn(spark, sfDir)
+      val d1 = threads.getCurrentThreadCpuTime
       // consume every output column (BenchConsume) — bare count() lets
       // Catalyst elide cardinality-preserving stages (PERF.md r11 s12)
-      val (n, digest) = BenchConsume.consume(fn(spark, sfDir))
+      val (n, digest) = BenchConsume.consume(df)
+      val d2 = threads.getCurrentThreadCpuTime
       val s = (System.nanoTime() - t0) / 1e9
       val (c1, _) = CpuMeter.snapshot(spark)
-      println(f"[bench-one] $name run $i: $s%.3f s cpu ${c1 - c0}%.3f s compiles ${CpuMeter.compiles - k0} jobs ${CpuMeter.jobs - j0} ($n rows, digest $digest%016x)")
+      val plan = if (PlanCache.hits > h0) "reused" else "built"
+      println(f"[bench-one] $name run $i: $s%.3f s cpu ${c1 - c0}%.3f s " +
+        f"driver ${(d2 - d0) / 1e9}%.3f s (construct ${(d1 - d0) / 1e9}%.3f s plan $plan, " +
+        f"consume ${(d2 - d1) / 1e9}%.3f s) compiles ${CpuMeter.compiles - k0} " +
+        f"jobs ${CpuMeter.jobs - j0} ($n rows, digest $digest%016x)")
       (s, c1 - c0)
     }
     println(f"[bench-one] $name min: ${times.map(_._1).min}%.3f s cpu min: ${times.map(_._2).min}%.3f s")

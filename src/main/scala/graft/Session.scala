@@ -40,6 +40,18 @@ import org.apache.spark.sql.SparkSession
   *    reads `statusTracker` or the status store, yet Spark keeps plan
   *    graphs and stage data for 1,000 SQL executions, jobs and stages by
   *    default. It now keeps the last 20 executions and 50 jobs and stages.
+  *  - The plan description each SQL execution posts to the listener bus
+  *    (`spark.sql.ui.explainMode`), built on the calling thread at
+  *    execution start and again on every adaptive re-plan, for a UI that
+  *    is off. `simple` (a plain tree string) instead of Spark's
+  *    `formatted` (the tree plus a per-operator detail section): warm, it
+  *    costs about half as much for 7 of the perfbench query set's 8 plans
+  *    (e.g. q02 1.40 → 0.69 ms per description at sf0.01; PERF.md B7).
+  *    `explain` and `graft.tools.DumpPlans` name their mode explicitly
+  *    and are unaffected. Capping the description with
+  *    `spark.sql.maxPlanStringLength` was measured too and kept out: the
+  *    plan text is still generated before the cap truncates it, and the
+  *    cap would also cut every tool's `explain` output.
   */
 object Session {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -85,6 +97,7 @@ object Session {
       .config("spark.sql.ui.retainedExecutions", 20L)
       .config("spark.ui.retainedJobs", 50L)
       .config("spark.ui.retainedStages", 50L)
+      .config("spark.sql.ui.explainMode", "simple")
 
   def get(appName: String): SparkSession = {
     val spark = builder(appName).getOrCreate()

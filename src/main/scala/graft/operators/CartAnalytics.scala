@@ -561,16 +561,16 @@ object CartAnalytics {
   private[graft] lazy val ProfHist: ArtifactFamily = new ArtifactFamily("profhist",
     Orders,
     defining = (spark, dir) => Profile.histogram(ord(spark, dir), ProfileNumCols),
-    build = (spark, dir, _) => Profile.histogram(ord(spark, dir), ProfileNumCols),
-    refresh = RowAppend((batch, _) => Profile.histogram(batch, ProfileNumCols)),
+    build = (spark, dir) => Profile.histogram(ord(spark, dir), ProfileNumCols),
+    refresh = RowAppend(batch => Profile.histogram(batch, ProfileNumCols)),
     multisetCount = Some("c"))
 
   /** q17's string-histogram twin (profstrh_). */
   private[graft] lazy val ProfStrHist: ArtifactFamily = new ArtifactFamily("profstrh",
     Orders,
     defining = (spark, dir) => Profile.stringHistogram(ord(spark, dir), ProfileStrCols),
-    build = (spark, dir, _) => Profile.stringHistogram(ord(spark, dir), ProfileStrCols),
-    refresh = RowAppend((batch, _) => Profile.stringHistogram(batch, ProfileStrCols)),
+    build = (spark, dir) => Profile.stringHistogram(ord(spark, dir), ProfileStrCols),
+    refresh = RowAppend(batch => Profile.stringHistogram(batch, ProfileStrCols)),
     multisetCount = Some("c"))
 
   /** q15's statistics. Key: the full (histogram → statistics) derivation
@@ -586,8 +586,8 @@ object CartAnalytics {
       Profile.summarizeFromHistogram(Profile.histogram(o, ProfileNumCols),
         Profile.columnKinds(o, ProfileNumCols), materialize = false)
     },
-    build = (spark, dir, built) => Profile.summarizeFromHistogram(ProfHist.serve(spark, dir),
-      Profile.columnKinds(ord(spark, dir), ProfileNumCols), built = built),
+    build = (spark, dir) => Profile.summarizeFromHistogram(ProfHist.serve(spark, dir),
+      Profile.columnKinds(ord(spark, dir), ProfileNumCols)),
     refresh = Rederive)
 
   /** q17's statistics, derived from the served string histogram
@@ -597,7 +597,7 @@ object CartAnalytics {
     Orders,
     defining = (spark, dir) => Profile.summarizeStringsFromHistogram(
       Profile.stringHistogram(ord(spark, dir), ProfileStrCols), ProfileStrCols),
-    build = (spark, dir, _) => Profile.summarizeStringsFromHistogram(
+    build = (spark, dir) => Profile.summarizeStringsFromHistogram(
       ProfStrHist.serve(spark, dir), ProfileStrCols),
     refresh = Rederive)
 

@@ -92,12 +92,17 @@ object Dedup {
     * query, so the bench tail filled with exactly the WARN spam that
     * competes with the compact contract line for the driver's 2 KB
     * stdout capture. */
-  private[graft] def persistOnce(df: DataFrame): DataFrame = {
+  private[graft] def persistOnce(df: DataFrame): DataFrame =
+    if (isCached(df)) df
+    else {
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      ArtifactFamily.persisted(df)
+      df
+    }
+
+  private def isCached(df: DataFrame): Boolean = {
     val classic = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    val cached = classic.sparkSession.sharedState.cacheManager
-      .lookupCachedData(classic).isDefined
-    if (cached) df
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    classic.sparkSession.sharedState.cacheManager.lookupCachedData(classic).isDefined
   }
 
   /** The read set of the document artifact families. */
@@ -331,14 +336,13 @@ object Dedup {
     * read only for collided docs. */
   private[graft] lazy val Scored: ArtifactFamily = new ArtifactFamily("scored", Docs,
     defining = (spark, dir) => scoredCandidatesOf(Tables.load(spark, dir, "documents")),
-    build = (spark, dir, _) =>
+    build = (spark, dir) =>
       scoredCandidatesFromShingles(persistOnce(Shingles.serve(spark, dir))),
-    refresh = Fold { (spark, oldDir, newDir, built) =>
+    refresh = Fold { (spark, oldDir, newDir) =>
       val oldIdx = DedupSig.serve(spark, oldDir)
       val shB = shinglesOf(appendedBatch(spark, oldDir, newDir).select(col("doc_id"), col("text")))
       val sigB = lshSignatures(shB)
       val candB = persistOnce(batchCandidates(sigB, oldIdx))
-      built += shB; built += sigB; built += candB
       val touched = endpoints(candB)
       val sigCols = col("doc_id") +: (0 until NumHashes).map(i => col(s"mh$i")) :+ col("n")
       val sig = sigB.select(sigCols: _*).unionAll(
@@ -886,10 +890,9 @@ object Dedup {
     * the round trip is bit-identical to recompute. */
   private[graft] lazy val H60: ArtifactFamily = new ArtifactFamily("h60", Docs,
     defining = (spark, dir) => hashed60ShinglesOf(docText(spark, dir)),
-    build = (spark, dir, _) => hashed60ShinglesOf(docText(spark, dir)),
-    refresh = RowAppend { (batch, built) =>
+    build = (spark, dir) => hashed60ShinglesOf(docText(spark, dir)),
+    refresh = RowAppend { batch =>
       val hB = hashed60ShinglesOf(batch.select(col("doc_id"), col("text")))
-      built += hB
       hB
     })
 
@@ -915,12 +918,11 @@ object Dedup {
       val (train, eval_) = fixtureEvalSplit(spark, dir)
       contaminationPairs(train, eval_)
     },
-    build = (spark, dir, _) => contamPairsDerive(spark, dir),
-    refresh = Fold { (spark, oldDir, newDir, built) =>
+    build = contamPairsDerive,
+    refresh = Fold { (spark, oldDir, newDir) =>
       val oldH60 = persistOnce(H60.serve(spark, oldDir))
       val batch = appendedBatch(spark, oldDir, newDir)
       val bH60 = hashed60ShinglesOf(batch.select(col("doc_id"), col("text")))
-      built += oldH60; built += bH60
       val bEval = bH60.where(col("doc_id") % 10 === 0)
       val bTrain = bH60.where(col("doc_id") % 10 =!= 0)
       // counts gate the broadcast hint only (values are count-independent)
@@ -1088,13 +1090,12 @@ object Dedup {
     * verification) — NO old text is read. */
   private[graft] lazy val ContAudit: ArtifactFamily = new ArtifactFamily("contaud", Docs,
     defining = (spark, dir) => containmentAudit(excerptAugmented(spark, dir)),
-    build = (spark, dir, _) => d16Derive(spark, dir),
-    refresh = Fold { (spark, oldDir, newDir, built) =>
+    build = d16Derive,
+    refresh = Fold { (spark, oldDir, newDir) =>
       val oldSig = ContSig.serve(spark, oldDir)
       val shB = shinglesOf(augmentedOf(appendedBatch(spark, oldDir, newDir)))
       val sigB = lshSignatures(shB)
       val candB = persistOnce(batchCandidates(sigB, oldSig))
-      built += shB; built += sigB; built += candB
       val touched = endpoints(candB)
       val sh = shB.unionAll(Shingles.serve(spark, oldDir)
         .unionAll(ExcerptShingles.serve(spark, oldDir))
@@ -1113,10 +1114,9 @@ object Dedup {
     * derivation; per-DOC rows → file-level append refresh. */
   private[graft] lazy val ExcerptShingles: ArtifactFamily = new ArtifactFamily("exsh", Docs,
     defining = (spark, dir) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))),
-    build = (spark, dir, _) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))),
-    refresh = RowAppend { (batch, built) =>
+    build = (spark, dir) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))),
+    refresh = RowAppend { batch =>
       val shB = shinglesOf(excerptsOf(batch))
-      built += shB
       shB
     })
 
@@ -1130,12 +1130,11 @@ object Dedup {
     * docs + batch excerpts) → file-level append refresh. */
   private[graft] lazy val ContSig: ArtifactFamily = new ArtifactFamily("contsig", Docs,
     defining = (spark, dir) => lshSignatures(shinglesOf(excerptAugmented(spark, dir))),
-    build = (spark, dir, _) => lshSignatures(persistOnce(Shingles.serve(spark, dir)
+    build = (spark, dir) => lshSignatures(persistOnce(Shingles.serve(spark, dir)
       .unionAll(ExcerptShingles.serve(spark, dir)))),
-    refresh = RowAppend { (batch, built) =>
+    refresh = RowAppend { batch =>
       val shB = shinglesOf(augmentedOf(batch))
       val sigB = lshSignatures(shB)
-      built += shB; built += sigB
       sigB
     })
 
@@ -1638,7 +1637,7 @@ object Dedup {
     // verification. Expression mirrors thresholdEdges exactly (Divide
     // casts to double; a null `shared` comparison is null → dropped,
     // same as the inner join it replaces).
-    build = (spark, dir, _) => Scored.serve(spark, dir)
+    build = (spark, dir) => Scored.serve(spark, dir)
       .where(col("shared") / (col("n_a") + col("n_b") - col("shared")) >= ClusterThreshold)
       .select(col("doc_a"), col("doc_b")),
     refresh = Rederive)
@@ -1672,11 +1671,10 @@ object Dedup {
     * own-shingle MinHash) → file-level append refresh. */
   private[graft] lazy val DedupSig: ArtifactFamily = new ArtifactFamily("dedupsig", Docs,
     defining = (spark, dir) => dedupIndexOf(Tables.load(spark, dir, "documents")),
-    build = (spark, dir, _) => dedupIndexOf(Tables.load(spark, dir, "documents")),
-    refresh = RowAppend { (batch, built) =>
+    build = (spark, dir) => dedupIndexOf(Tables.load(spark, dir, "documents")),
+    refresh = RowAppend { batch =>
       val shB = shinglesOf(batch.select(col("doc_id"), col("text")))
       val sigB = lshSignatures(shB)
-      built += shB; built += sigB
       batch.select(col("doc_id"), md5(col("text")).as("text_md5"))
         .join(sigB, Seq("doc_id"), "left_outer")
     })
@@ -1694,11 +1692,10 @@ object Dedup {
     * per-file pruning, which is what parquet min/max stats give anyway. */
   private[graft] lazy val Shingles: ArtifactFamily = new ArtifactFamily("shingles", Docs,
     defining = (spark, dir) => shinglesOf(docText(spark, dir)),
-    build = (spark, dir, _) => shinglesOf(docText(spark, dir))
+    build = (spark, dir) => shinglesOf(docText(spark, dir))
       .repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id")),
-    refresh = RowAppend { (batch, built) =>
+    refresh = RowAppend { batch =>
       val shB = shinglesOf(batch.select(col("doc_id"), col("text")))
-      built += shB
       shB.repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id"))
     })
 
@@ -1722,8 +1719,8 @@ object Dedup {
     // edge derivation (shared with s08 and any other pair consumer),
     // not its own — and the propagation loop reads a compact parquet
     // pair table instead of re-running band joins per iteration seed
-    build = (spark, dir, _) => minLabelComponents(Edges.serve(spark, dir)),
-    refresh = Fold { (spark, oldDir, newDir, _) =>
+    build = (spark, dir) => minLabelComponents(Edges.serve(spark, dir)),
+    refresh = Fold { (spark, oldDir, newDir) =>
       val batchIds = appendedBatch(spark, oldDir, newDir).select(col("doc_id"))
       val e = Edges.serve(spark, newDir)
       val touching = e
@@ -2193,8 +2190,8 @@ object Dedup {
 
   private[graft] lazy val Spans: ArtifactFamily = new ArtifactFamily("spans", Docs,
     defining = (spark, dir) => spanTfOf(docText(spark, dir)),
-    build = (spark, dir, _) => spanTfOf(graft.plans.Scale.spreadIfNarrow(docText(spark, dir))),
-    refresh = RowAppend((batch, _) => spanTfOf(batch.select(col("doc_id"), col("text")))))
+    build = (spark, dir) => spanTfOf(graft.plans.Scale.spreadIfNarrow(docText(spark, dir))),
+    refresh = RowAppend(batch => spanTfOf(batch.select(col("doc_id"), col("text")))))
 
   /** Boilerplate-span shares over a pre-built (doc_id, g, c) frame plus
     * the (doc_id, source) projection — the span document-frequency rides

@@ -155,23 +155,15 @@ object Profile {
     * `materialize = false` builds the PLAN without registering cache
     * entries — for artifact-key derivation only;
     * executing a non-materialized plan recomputes a range exchange per
-    * consumer and must not be done. Frames persisted during a
-    * materialized build are appended to `built` (when provided) so the
-    * caller can release them after the artifact write — these
-    * batch-keyed plans can never be re-served later (the
-    * incrementalDedup release discipline). */
+    * consumer and must not be done. Frames persisted during an
+    * artifact build are released after the artifact write (the family
+    * owns them, see [[graft.sources.ArtifactFamily]]). */
   private[graft] def summarizeFromHistogram(hist: DataFrame,
       colKinds: Seq[(String, Boolean)], scale: Int = 2,
-      materialize: Boolean = true,
-      built: scala.collection.mutable.Buffer[DataFrame] = null): DataFrame = {
+      materialize: Boolean = true): DataFrame = {
     require(colKinds.nonEmpty, "summarizeFromHistogram needs at least one column")
     def keep(df: DataFrame): DataFrame =
-      if (!materialize) df
-      else {
-        val p = graft.operators.Dedup.persistOnce(df)
-        if (built != null) built += p
-        p
-      }
+      if (!materialize) df else graft.operators.Dedup.persistOnce(df)
     val perCol = colKinds.map { case (c, integral) =>
       val vcol = if (integral) col("vl") else col("vd")
       // re-aggregate the multiset: one row per distinct value (null

@@ -205,7 +205,7 @@ object Similarity {
     * the new state retrains. */
   private[graft] lazy val Centroids: ArtifactFamily = new ArtifactFamily("cents", Emb,
     defining = computeTrainedCentroids,
-    build = (spark, dir, _) => computeTrainedCentroids(spark, dir))
+    build = (spark, dir) => computeTrainedCentroids(spark, dir))
 
   private def computeTrainedCentroids(spark: SparkSession, dir: String): DataFrame =
     computeTrainedCentroidsOf(normed(spark, dir), ivfK(spark, dir))
@@ -593,7 +593,7 @@ object Similarity {
     * double bit-identically), so serve ≡ rebuild row-for-row. */
   private[graft] lazy val KnnGraph: ArtifactFamily = new ArtifactFamily("knng", Emb,
     defining = knnGraphRanked,
-    build = (spark, dir, _) => knnGraphRanked(spark, dir))
+    build = (spark, dir) => knnGraphRanked(spark, dir))
 
   def s09KnnGraph(spark: SparkSession, dir: String): DataFrame =
     KnnGraph.serve(spark, dir)
@@ -650,7 +650,7 @@ object Similarity {
     * sweep. */
   private[graft] lazy val KnnLabels: ArtifactFamily = new ArtifactFamily("knnl", Emb,
     defining = knnGraphRanked,
-    build = (spark, dir, _) => knnLabelsOf(KnnGraph.serve(spark, dir)))
+    build = (spark, dir) => knnLabelsOf(KnnGraph.serve(spark, dir)))
 
   /** Component labels of a kNN edge frame, edges taken undirected. */
   private[graft] def knnLabelsOf(graph: DataFrame): DataFrame =
@@ -775,7 +775,7 @@ object Similarity {
         col("embedding"), col("nrm"),
         expr("element_at(ca, graft_cell_top1(embedding, nrm, ca)).cent_id").as("cell")))
     },
-    build = (spark, dir, _) => s12Derive(spark, dir))
+    build = (spark, dir) => s12Derive(spark, dir))
 
   /** The corpus rows SemDeDup `verdicts` keep, with their cell. */
   private[graft] def semanticApply(verdicts: DataFrame, corpus: DataFrame): DataFrame =

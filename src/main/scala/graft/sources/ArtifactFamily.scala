@@ -32,27 +32,24 @@ final class ArtifactFamily private[graft] (
     val kind: String,
     val reads: Seq[String],
     private[graft] val defining: (SparkSession, String) => DataFrame,
-    build: (SparkSession, String, ArtifactFamily.Built) => DataFrame,
+    build: (SparkSession, String) => DataFrame,
     val refresh: ArtifactFamily.Refresh = ArtifactFamily.NoRefresh,
     multisetCount: Option[String] = None) {
   import ArtifactFamily._
 
   def name(spark: SparkSession, dir: String): String =
-    s"${kind}_" + Artifacts.keyFor(spark, dir, kind, reads)(defining(spark, dir))
+    s"${kind}_" + owning(Artifacts.keyFor(spark, dir, kind, reads)(defining(spark, dir)))
 
   /** The family's table for the corpus at `dir`, built on a miss. */
   def serve(spark: SparkSession, dir: String): DataFrame =
-    serveWith(spark, dir)(build(spark, dir, _))
+    serveWith(spark, dir)(build(spark, dir))
 
   /** [[serve]] with a refresh fold as the build body, for the same table
-    * name. Frames the body registers in its `Built` buffer are
-    * unpersisted once the table is written. */
-  private def serveWith(spark: SparkSession, dir: String)(body: Built => DataFrame): DataFrame = {
+    * name. */
+  private def serveWith(spark: SparkSession, dir: String)(body: => DataFrame): DataFrame = {
     serving.value.foreach(_ += kind)
-    val built = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val res = Artifacts.servePersisted(spark, name(spark, dir))(body(built))
-    built.foreach(_.unpersist(false))
-    res
+    val table = name(spark, dir)
+    owning(Artifacts.servePersisted(spark, table)(body))
   }
 
   /** Drop catalog entry and files: the next serve is a cold build. */
@@ -80,33 +77,61 @@ final class ArtifactFamily private[graft] (
         // rewriting shingles_ cost 70 CPU-s at sf10full for a 1% batch,
         // linking ~1)
         serve(spark, oldDir)
-        val built = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        val res = Artifacts.servePersistedBy(spark, name(spark, newDir)) { stage =>
-          rows(appendedRows(spark, reads.head, oldDir, newDir), built)
+        val (table, oldTable) = (name(spark, newDir), name(spark, oldDir))
+        owning(Artifacts.servePersistedBy(spark, table) { stage =>
+          rows(appendedRows(spark, reads.head, oldDir, newDir))
             .write.mode("overwrite").parquet(stage.toString)
           Artifacts.linkDataFilesInto(stage.getFileSystem(spark.sparkContext.hadoopConfiguration),
-            Artifacts.location(spark, name(spark, oldDir)), stage)
-        }
-        built.foreach(_.unpersist(false))
-        res
+            Artifacts.location(spark, oldTable), stage)
+        })
       case Rederive => serve(spark, newDir)
-      case Fold(fold) => serveWith(spark, newDir)(fold(spark, oldDir, newDir, _))
+      case Fold(fold) => serveWith(spark, newDir)(fold(spark, oldDir, newDir))
       case NoRefresh => throw new UnsupportedOperationException(
         s"artifact family '$kind' has no append refresh")
     }
 }
 
 object ArtifactFamily {
-  type Built = scala.collection.mutable.Buffer[DataFrame]
+  /** `body`, then unpersist every frame [[persisted]] recorded while it
+    * ran: a build, a refresh or a key's defining plan owns exactly the
+    * frames it persisted itself. Those serve only the artifact write (or
+    * only the key), so left cached they would pin memory for the JVM's
+    * lifetime and turn later scans of their plans into in-memory scans.
+    * A frame cached before `body` ran stays cached; a nested family's
+    * build releases its own frames when it ends. */
+  private def owning[A](body: => A): A = {
+    val owned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try persisting.withValue(Some(owned))(body)
+    finally owned.foreach(_.unpersist(false))
+  }
+
+  /** Record that `df` was just persisted, for the innermost enclosing
+    * build ([[graft.operators.Dedup.persistOnce]] calls this). Outside a
+    * build it does nothing: a query's own persists stay its own. */
+  private[graft] def persisted(df: DataFrame): Unit = persisting.value.foreach(_ += df)
+
+  private val persisting =
+    new scala.util.DynamicVariable[Option[scala.collection.mutable.Buffer[DataFrame]]](None)
 
   /** The kinds of every family served on this thread while `body` runs,
     * nested builds included: which families a query's construction
     * consumes, read off the engine rather than listed by hand. */
-  private[graft] def servedDuring(body: => Unit): Set[String] = {
+  private[graft] def servedDuring(body: => Unit): Set[String] = servedWhile(body)._2
+
+  /** `body`'s value and [[servedDuring]]'s kinds. An enclosing call sees
+    * the kinds too. */
+  private[graft] def servedWhile[A](body: => A): (A, Set[String]) = {
     val seen = scala.collection.mutable.Set.empty[String]
-    serving.withValue(Some(seen))(body)
-    seen.toSet
+    val a = serving.withValue(Some(seen))(body)
+    noteServed(seen)
+    (a, seen.toSet)
   }
+
+  /** Report `kinds` as served to any enclosing [[servedDuring]]: a
+    * construction whose plan was reused ([[PlanCache]]) serves what the
+    * construction it reuses served. */
+  private[graft] def noteServed(kinds: Iterable[String]): Unit =
+    serving.value.foreach(_ ++= kinds)
 
   private val serving =
     new scala.util.DynamicVariable[Option[scala.collection.mutable.Set[String]]](None)
@@ -114,15 +139,14 @@ object ArtifactFamily {
   /** How a family follows a corpus append. */
   sealed trait Refresh
   /** Per-row derivation over the appended rows of the family's one read
-    * table; `rows(batch, built)` derives the batch's rows. */
-  final case class RowAppend(rows: (DataFrame, Built) => DataFrame) extends Refresh
+    * table; `rows(batch)` derives the batch's rows. */
+  final case class RowAppend(rows: DataFrame => DataFrame) extends Refresh
   /** The ordinary build on the new state, once its upstream families
     * (earlier in [[all]]) are refreshed. */
   case object Rederive extends Refresh
-  /** A family-specific fold `(spark, oldDir, newDir, built)` of the old
+  /** A family-specific fold `(spark, oldDir, newDir)` of the old
     * generation and the batch. */
-  final case class Fold(fold: (SparkSession, String, String, Built) => DataFrame)
-    extends Refresh
+  final case class Fold(fold: (SparkSession, String, String) => DataFrame) extends Refresh
   /** Not refreshed on append: rebuilt on first serve of the new state. */
   case object NoRefresh extends Refresh
 

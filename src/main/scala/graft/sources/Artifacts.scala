@@ -62,6 +62,7 @@ object Artifacts {
         ensureBuilt(fs, loc)(buildInto)
         spark.sql(s"CREATE TABLE IF NOT EXISTS ${qualified(table)} USING parquet " +
           s"LOCATION '${fs.makeQualified(loc).toString}'")
+        epochs.incrementAndGet()
       }
     }
     spark.table(qualified(table))
@@ -101,6 +102,15 @@ object Artifacts {
     * can't show it — it includes one serve-pass of every query). */
   private val buildsExecuted = new java.util.concurrent.atomic.AtomicLong
   def buildCount: Long = buildsExecuted.get()
+
+  /** Artifact epoch: moves on every change to what an artifact table
+    * name resolves to — a build, a catalog registration, the drop of a
+    * catalog entry or of files ([[sweepStale]]'s deletions included).
+    * A reused query plan ([[PlanCache]]) holds the artifact relations
+    * its construction resolved, so a plan recorded at another epoch is
+    * constructed again. */
+  private val epochs = new java.util.concurrent.atomic.AtomicLong
+  def epoch: Long = epochs.get()
 
   private object buildLock
   /** A builder that holds the lock longer than this is presumed dead
@@ -152,6 +162,7 @@ object Artifacts {
             try {
               buildInto(stage)
               buildsExecuted.incrementAndGet()
+              epochs.incrementAndGet()
               if (fs.exists(loc)) fs.delete(loc, true) // crashed-build partial
               if (!fs.rename(stage, loc))
                 throw new java.io.IOException(s"rename $stage -> $loc failed")
@@ -176,12 +187,15 @@ object Artifacts {
     val loc = location(spark, table)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
+    epochs.incrementAndGet()
   }
 
   /** Drop only the catalog ENTRY, keeping the files — simulates a fresh
     * session/JVM against an already-built warehouse (test hook). */
-  def dropEntry(spark: SparkSession, table: String): Unit =
+  def dropEntry(spark: SparkSession, table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS ${qualified(table)}")
+    epochs.incrementAndGet()
+  }
 
   /** Artifact table names are `<kind>_<dirhash10>_<fp8>_<plan8>`; the
     * (fp, plan) suffix is one corpus GENERATION of the (kind, dir)
@@ -210,7 +224,7 @@ object Artifacts {
     children.foreach { st => // crashed-build staging dirs: never registered
       if (st.isDirectory && st.getPath.getName.contains("_stage_") &&
           st.getModificationTime < now - StaleLockMs) {
-        fs.delete(st.getPath, true); swept += 1
+        fs.delete(st.getPath, true); swept += 1; epochs.incrementAndGet()
       }
     }
     children.filter(st => st.isDirectory && !st.getPath.getName.contains("_stage_"))
@@ -332,6 +346,29 @@ object Artifacts {
     * which is correct, where the mtime key's forced miss was merely
     * safe. */
   def tablesFingerprint(spark: SparkSession, dir: String, tables: Seq[String]): String = {
+    val fp = fingerprintOf(spark, dir, tables)
+    reading.value.foreach(_ += ((dir, tables.sorted, fp)))
+    fp
+  }
+
+  /** A fingerprint [[tablesFingerprint]] took: (dir, sorted tables, fp). */
+  private[graft] type Read = (String, Seq[String], String)
+
+  /** `body`'s value and every fingerprint [[tablesFingerprint]] took on
+    * this thread while it ran: the corpus content a construction read,
+    * through [[graft.Tables.load]], a family key or a probe memo. An
+    * enclosing call sees the reads too. */
+  private[graft] def readsDuring[A](body: => A): (A, Set[Read]) = {
+    val seen = scala.collection.mutable.Set.empty[Read]
+    val a = reading.withValue(Some(seen))(body)
+    reading.value.foreach(_ ++= seen)
+    (a, seen.toSet)
+  }
+
+  private val reading =
+    new scala.util.DynamicVariable[Option[scala.collection.mutable.Set[Read]]](None)
+
+  private def fingerprintOf(spark: SparkSession, dir: String, tables: Seq[String]): String = {
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     tables.sorted.map(t => new Path(dir, s"$t.parquet")).foreach { root =>
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

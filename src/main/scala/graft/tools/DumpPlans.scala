@@ -27,13 +27,21 @@ object DumpPlans {
         val body =
           try fn(spark, sfDir).queryExecution.explainString(FormattedMode)
           catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
-        // expression IDs (#123) vary per session; strip them so two dumps
-        // of the same plan are byte-comparable
-        val canon = body.replaceAll("#\\d+L?", "#_")
-        Files.writeString(Paths.get(s"$outDir/$name.txt"), canon + "\n")
+        Files.writeString(Paths.get(s"$outDir/$name.txt"), canon(body) + "\n")
         println(s"[plans] $name -> $outDir/$name.txt")
       }
     }
     spark.stop()
   }
+
+  /** `plan` with the ids that vary from JVM to JVM (and from one
+    * construction to the next) masked, so two dumps of the same plan are
+    * byte-comparable: expression ids (`#123`), exchange plan ids
+    * (`[plan_id=7]`), RDD ids (`MapPartitionsRDD[222]`) and lambda
+    * addresses (`$Lambda$6022/0x00007efc1166a630@471142b7`). */
+  private[graft] def canon(plan: String): String =
+    plan.replaceAll("#\\d+L?", "#_")
+      .replaceAll("\\[plan_id=\\d+\\]", "[plan_id=_]")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[_]")
+      .replaceAll("\\$Lambda[$/\\w]*@[0-9a-f]+", "\\$Lambda_")
 }

@@ -89,6 +89,28 @@ class ArtifactFamilySpec extends SparkSpec {
     }
   }
 
+  test("a cold serve of every family leaves the CacheManager as it found it") {
+    // a build that persists a served frame must unpersist it once its
+    // table is written; left cached, it pins memory for the JVM's lifetime
+    // and turns later scans of that table into in-memory scans
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "fam-cache-").resolve("corpus").toString
+    val fs = new Path(sf).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new Path(sf)).foreach { st =>
+      FileUtil.copy(fs, st.getPath, fs, new Path(dir, st.getPath.getName), false, fs.getConf)
+    }
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val leaking = ArtifactFamily.all.filter { f =>
+      f.serve(spark, dir)
+      val left = !cache.isEmpty
+      spark.catalog.clearCache()
+      left
+    }.map(_.kind)
+    assert(leaking.isEmpty, s"cold builds that leave frames cached: $leaking")
+  }
+
   test("drop removes both the catalog entry and the files") {
     val dir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "fam-drop-").toString
