@@ -891,10 +891,7 @@ object Dedup {
   private[graft] lazy val H60: ArtifactFamily = new ArtifactFamily("h60", Docs,
     defining = (spark, dir) => hashed60ShinglesOf(docText(spark, dir)),
     build = (spark, dir) => hashed60ShinglesOf(docText(spark, dir)),
-    refresh = RowAppend { batch =>
-      val hB = hashed60ShinglesOf(batch.select(col("doc_id"), col("text")))
-      hB
-    })
+    refresh = RowAppend(batch => hashed60ShinglesOf(batch.select(col("doc_id"), col("text")))))
 
   /** The qualifying contamination PAIR SET as a persisted catalog
     * artifact — the s12/edges pattern applied to the d-chain (r15
@@ -1115,10 +1112,7 @@ object Dedup {
   private[graft] lazy val ExcerptShingles: ArtifactFamily = new ArtifactFamily("exsh", Docs,
     defining = (spark, dir) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))),
     build = (spark, dir) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))),
-    refresh = RowAppend { batch =>
-      val shB = shinglesOf(excerptsOf(batch))
-      shB
-    })
+    refresh = RowAppend(batch => shinglesOf(excerptsOf(batch))))
 
   /** MinHash signatures of the EXCERPT-AUGMENTED corpus as a persisted
     * artifact — the probe index the contaud_ refresh band-probes with
@@ -1132,11 +1126,7 @@ object Dedup {
     defining = (spark, dir) => lshSignatures(shinglesOf(excerptAugmented(spark, dir))),
     build = (spark, dir) => lshSignatures(persistOnce(Shingles.serve(spark, dir)
       .unionAll(ExcerptShingles.serve(spark, dir)))),
-    refresh = RowAppend { batch =>
-      val shB = shinglesOf(augmentedOf(batch))
-      val sigB = lshSignatures(shB)
-      sigB
-    })
+    refresh = RowAppend(batch => lshSignatures(shinglesOf(augmentedOf(batch)))))
 
   /** The d16 DERIVATION body over the served shingle/signature
     * artifacts — what [[ContAudit]] materializes once
@@ -1673,8 +1663,7 @@ object Dedup {
     defining = (spark, dir) => dedupIndexOf(Tables.load(spark, dir, "documents")),
     build = (spark, dir) => dedupIndexOf(Tables.load(spark, dir, "documents")),
     refresh = RowAppend { batch =>
-      val shB = shinglesOf(batch.select(col("doc_id"), col("text")))
-      val sigB = lshSignatures(shB)
+      val sigB = lshSignatures(shinglesOf(batch.select(col("doc_id"), col("text"))))
       batch.select(col("doc_id"), md5(col("text")).as("text_md5"))
         .join(sigB, Seq("doc_id"), "left_outer")
     })
@@ -1694,10 +1683,8 @@ object Dedup {
     defining = (spark, dir) => shinglesOf(docText(spark, dir)),
     build = (spark, dir) => shinglesOf(docText(spark, dir))
       .repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id")),
-    refresh = RowAppend { batch =>
-      val shB = shinglesOf(batch.select(col("doc_id"), col("text")))
-      shB.repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id"))
-    })
+    refresh = RowAppend(batch => shinglesOf(batch.select(col("doc_id"), col("text")))
+      .repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id"))))
 
   /** The near-dup label table, served as a PERSISTED CATALOG ARTIFACT —
     * the dedup counterpart of Similarity's trained-centroid table: a real
