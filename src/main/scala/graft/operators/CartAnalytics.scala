@@ -560,16 +560,14 @@ object CartAnalytics {
     * under append, so consumers re-aggregate by value). */
   private[graft] lazy val ProfHist: ArtifactFamily = new ArtifactFamily("profhist",
     Orders,
-    defining = (spark, dir) => Profile.histogram(ord(spark, dir), ProfileNumCols),
-    build = (spark, dir) => Profile.histogram(ord(spark, dir), ProfileNumCols),
+    defining = (spark, dir) => Profile.histogram(ord(spark, dir), ProfileNumCols))(
     refresh = RowAppend(batch => Profile.histogram(batch, ProfileNumCols)),
     multisetCount = Some("c"))
 
   /** q17's string-histogram twin (profstrh_). */
   private[graft] lazy val ProfStrHist: ArtifactFamily = new ArtifactFamily("profstrh",
     Orders,
-    defining = (spark, dir) => Profile.stringHistogram(ord(spark, dir), ProfileStrCols),
-    build = (spark, dir) => Profile.stringHistogram(ord(spark, dir), ProfileStrCols),
+    defining = (spark, dir) => Profile.stringHistogram(ord(spark, dir), ProfileStrCols))(
     refresh = RowAppend(batch => Profile.stringHistogram(batch, ProfileStrCols)),
     multisetCount = Some("c"))
 
@@ -585,7 +583,7 @@ object CartAnalytics {
       val o = ord(spark, dir)
       Profile.summarizeFromHistogram(Profile.histogram(o, ProfileNumCols),
         Profile.columnKinds(o, ProfileNumCols), materialize = false)
-    },
+    })(
     build = (spark, dir) => Profile.summarizeFromHistogram(ProfHist.serve(spark, dir),
       Profile.columnKinds(ord(spark, dir), ProfileNumCols)),
     refresh = Rederive)
@@ -596,7 +594,7 @@ object CartAnalytics {
   private[graft] lazy val ProfileStrStats: ArtifactFamily = new ArtifactFamily("profstr",
     Orders,
     defining = (spark, dir) => Profile.summarizeStringsFromHistogram(
-      Profile.stringHistogram(ord(spark, dir), ProfileStrCols), ProfileStrCols),
+      Profile.stringHistogram(ord(spark, dir), ProfileStrCols), ProfileStrCols))(
     build = (spark, dir) => Profile.summarizeStringsFromHistogram(
       ProfStrHist.serve(spark, dir), ProfileStrCols),
     refresh = Rederive)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.ContentMemo
 
 /** End-to-end corpus-curation operators: the composition layer that turns
   * the individual dedup (d-series) and quality (t-series) primitives into
@@ -120,15 +121,12 @@ object Curation {
     require(bucketWidth > 0 && fanout > 1, "degenerate packing layout")
     val grp = groupCols.map(col)
     // largest key the leaf level can hold — decides the recursion depth
-    // statically at plan time (memoized per (input plan, source-file
-    // snapshot): one probe job per corpus+layout per JVM, like the skew
-    // probe / anchor date; in-place overwrite of the source re-probes)
-    val maxId = packMaxIdMemo.getOrElseUpdate(
-      (toks.queryExecution.analyzed.semanticHash(),
-        graft.plans.Scale.inputFilesDigest(toks)), {
+    // statically at plan time (one probe job per input plan and content
+    // state of its files, like the skew probe / anchor date)
+    val maxId = maxIds.over(toks, s"maxid/${toks.queryExecution.analyzed.semanticHash()}") {
       val r = toks.agg(max(col("doc_id"))).first()
       if (r.isNullAt(0)) 0L else r.getLong(0)
-    })
+    }
     val keyed = toks.withColumn("__k0", expr(s"doc_id DIV $bucketWidth"))
     val wDoc = Window.partitionBy(grp :+ col("__k0"): _*).orderBy(col("doc_id").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -179,10 +177,8 @@ object Curation {
       .select(toks.columns.map(col) :+ col("cum_before"): _*)
   }
 
-  /** Max doc_id per (input plan, source-file snapshot) — one probe job
-    * per corpus+layout per JVM; in-place refresh re-probes. */
-  private val packMaxIdMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, Int), Long]
+  /** Max doc_id per input plan of [[hierPrefixSum]]. */
+  private val maxIds = new ContentMemo[Long]
 
   // ---------------------------------------------------------------------
   // p03 — deterministic train/val/test split assignment, keyed on the

@@ -335,7 +335,7 @@ object Dedup {
     * doc_id-clustered table). No old text is read; old index rows are
     * read only for collided docs. */
   private[graft] lazy val Scored: ArtifactFamily = new ArtifactFamily("scored", Docs,
-    defining = (spark, dir) => scoredCandidatesOf(Tables.load(spark, dir, "documents")),
+    defining = (spark, dir) => scoredCandidatesOf(Tables.load(spark, dir, "documents")))(
     build = (spark, dir) =>
       scoredCandidatesFromShingles(persistOnce(Shingles.serve(spark, dir))),
     refresh = Fold { (spark, oldDir, newDir) =>
@@ -889,8 +889,7 @@ object Dedup {
     * h60 consumer read the parquet table. Values are exact longs, so
     * the round trip is bit-identical to recompute. */
   private[graft] lazy val H60: ArtifactFamily = new ArtifactFamily("h60", Docs,
-    defining = (spark, dir) => hashed60ShinglesOf(docText(spark, dir)),
-    build = (spark, dir) => hashed60ShinglesOf(docText(spark, dir)),
+    defining = (spark, dir) => hashed60ShinglesOf(docText(spark, dir)))(
     refresh = RowAppend(batch => hashed60ShinglesOf(batch.select(col("doc_id"), col("text")))))
 
   /** The qualifying contamination PAIR SET as a persisted catalog
@@ -914,7 +913,7 @@ object Dedup {
     defining = (spark, dir) => {
       val (train, eval_) = fixtureEvalSplit(spark, dir)
       contaminationPairs(train, eval_)
-    },
+    })(
     build = contamPairsDerive,
     refresh = Fold { (spark, oldDir, newDir) =>
       val oldH60 = persistOnce(H60.serve(spark, oldDir))
@@ -1086,7 +1085,7 @@ object Dedup {
     * signatures, shingles_ ∪ exsh_ semi-joined to collided docs for
     * verification) — NO old text is read. */
   private[graft] lazy val ContAudit: ArtifactFamily = new ArtifactFamily("contaud", Docs,
-    defining = (spark, dir) => containmentAudit(excerptAugmented(spark, dir)),
+    defining = (spark, dir) => containmentAudit(excerptAugmented(spark, dir)))(
     build = d16Derive,
     refresh = Fold { (spark, oldDir, newDir) =>
       val oldSig = ContSig.serve(spark, oldDir)
@@ -1110,8 +1109,7 @@ object Dedup {
     * per excerpt row) makes the old side probe-only. Keyed by the raw
     * derivation; per-DOC rows → file-level append refresh. */
   private[graft] lazy val ExcerptShingles: ArtifactFamily = new ArtifactFamily("exsh", Docs,
-    defining = (spark, dir) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))),
-    build = (spark, dir) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))),
+    defining = (spark, dir) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))))(
     refresh = RowAppend(batch => shinglesOf(excerptsOf(batch))))
 
   /** MinHash signatures of the EXCERPT-AUGMENTED corpus as a persisted
@@ -1123,7 +1121,7 @@ object Dedup {
     * artifacts (exact longs → serve ≡ recompute). Per-DOC rows (batch
     * docs + batch excerpts) → file-level append refresh. */
   private[graft] lazy val ContSig: ArtifactFamily = new ArtifactFamily("contsig", Docs,
-    defining = (spark, dir) => lshSignatures(shinglesOf(excerptAugmented(spark, dir))),
+    defining = (spark, dir) => lshSignatures(shinglesOf(excerptAugmented(spark, dir))))(
     build = (spark, dir) => lshSignatures(persistOnce(Shingles.serve(spark, dir)
       .unionAll(ExcerptShingles.serve(spark, dir)))),
     refresh = RowAppend(batch => lshSignatures(shinglesOf(augmentedOf(batch)))))
@@ -1620,7 +1618,7 @@ object Dedup {
     * serve a stale artifact. On append it is re-derived from the
     * refreshed scored_ table. */
   private[graft] lazy val Edges: ArtifactFamily = new ArtifactFamily("edges", Docs,
-    defining = lshEdges,
+    defining = lshEdges)(
     // build from the served SCORED candidate artifact (r16): the edge
     // set is the ≥ threshold slice of the one scored pair population —
     // a cold edge build pays a table scan, not its own band joins +
@@ -1660,8 +1658,7 @@ object Dedup {
     * instead of re-signing the corpus. Per-row derivation (md5 +
     * own-shingle MinHash) → file-level append refresh. */
   private[graft] lazy val DedupSig: ArtifactFamily = new ArtifactFamily("dedupsig", Docs,
-    defining = (spark, dir) => dedupIndexOf(Tables.load(spark, dir, "documents")),
-    build = (spark, dir) => dedupIndexOf(Tables.load(spark, dir, "documents")),
+    defining = (spark, dir) => dedupIndexOf(Tables.load(spark, dir, "documents")))(
     refresh = RowAppend { batch =>
       val sigB = lshSignatures(shinglesOf(batch.select(col("doc_id"), col("text"))))
       batch.select(col("doc_id"), md5(col("text")).as("text_md5"))
@@ -1680,7 +1677,7 @@ object Dedup {
     * clustered among themselves — global range disjointness degrades to
     * per-file pruning, which is what parquet min/max stats give anyway. */
   private[graft] lazy val Shingles: ArtifactFamily = new ArtifactFamily("shingles", Docs,
-    defining = (spark, dir) => shinglesOf(docText(spark, dir)),
+    defining = (spark, dir) => shinglesOf(docText(spark, dir)))(
     build = (spark, dir) => shinglesOf(docText(spark, dir))
       .repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id")),
     refresh = RowAppend(batch => shinglesOf(batch.select(col("doc_id"), col("text")))
@@ -1701,7 +1698,7 @@ object Dedup {
     * so the label update is [[mergeNewEdgesIntoLabels]] over the
     * batch-touching slice of edges(newDir) — no second band probe. */
   private[graft] lazy val Labels: ArtifactFamily = new ArtifactFamily("labels", Docs,
-    defining = lshEdges,
+    defining = lshEdges)(
     // build from the served EDGE artifact: a cold label build pays one
     // edge derivation (shared with s08 and any other pair consumer),
     // not its own — and the propagation loop reads a compact parquet
@@ -2176,7 +2173,7 @@ object Dedup {
       .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
 
   private[graft] lazy val Spans: ArtifactFamily = new ArtifactFamily("spans", Docs,
-    defining = (spark, dir) => spanTfOf(docText(spark, dir)),
+    defining = (spark, dir) => spanTfOf(docText(spark, dir)))(
     build = (spark, dir) => spanTfOf(graft.plans.Scale.spreadIfNarrow(docText(spark, dir))),
     refresh = RowAppend(batch => spanTfOf(batch.select(col("doc_id"), col("text")))))
 

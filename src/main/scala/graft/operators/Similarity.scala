@@ -204,8 +204,7 @@ object Similarity {
     * Not append-refreshed: an append re-keys it, and the first serve of
     * the new state retrains. */
   private[graft] lazy val Centroids: ArtifactFamily = new ArtifactFamily("cents", Emb,
-    defining = computeTrainedCentroids,
-    build = (spark, dir) => computeTrainedCentroids(spark, dir))
+    defining = computeTrainedCentroids)()
 
   private def computeTrainedCentroids(spark: SparkSession, dir: String): DataFrame =
     computeTrainedCentroidsOf(normed(spark, dir), ivfK(spark, dir))
@@ -592,8 +591,7 @@ object Similarity {
     * (ids, a label string, and a round(·,6) double — parquet stores the
     * double bit-identically), so serve ≡ rebuild row-for-row. */
   private[graft] lazy val KnnGraph: ArtifactFamily = new ArtifactFamily("knng", Emb,
-    defining = knnGraphRanked,
-    build = (spark, dir) => knnGraphRanked(spark, dir))
+    defining = knnGraphRanked)()
 
   def s09KnnGraph(spark: SparkSession, dir: String): DataFrame =
     KnnGraph.serve(spark, dir)
@@ -649,7 +647,7 @@ object Similarity {
     * starts from a parquet scan instead of re-paying the bucketed pair
     * sweep. */
   private[graft] lazy val KnnLabels: ArtifactFamily = new ArtifactFamily("knnl", Emb,
-    defining = knnGraphRanked,
+    defining = knnGraphRanked)(
     build = (spark, dir) => knnLabelsOf(KnnGraph.serve(spark, dir)))
 
   /** Component labels of a kNN edge frame, edges taken undirected. */
@@ -774,7 +772,7 @@ object Similarity {
       semDedupFromAssigned(normed(spark, dir).crossJoin(ca).select(col("vec_id"),
         col("embedding"), col("nrm"),
         expr("element_at(ca, graft_cell_top1(embedding, nrm, ca)).cent_id").as("cell")))
-    },
+    })(
     build = (spark, dir) => s12Derive(spark, dir))
 
   /** The corpus rows SemDeDup `verdicts` keep, with their cell. */

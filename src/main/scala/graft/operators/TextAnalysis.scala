@@ -330,7 +330,7 @@ object TextAnalysis {
     * DuckDB oracle still re-derives every consumer from raw text.
     * Per-DOC rows → file-level append refresh. */
   private[graft] lazy val WordTf: ArtifactFamily = new ArtifactFamily("wtf", Dedup.Docs,
-    defining = (spark, dir) => wordTfOf(Dedup.docText(spark, dir)),
+    defining = (spark, dir) => wordTfOf(Dedup.docText(spark, dir)))(
     build = (spark, dir) => wordTfOf(graft.plans.Scale.spreadIfNarrow(Dedup.docText(spark, dir))),
     refresh = RowAppend(batch => wordTfOf(batch.select(col("doc_id"), col("text")))))
 
@@ -559,7 +559,7 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("c"))
 
   private[graft] lazy val BigramTf: ArtifactFamily = new ArtifactFamily("dbg", Dedup.Docs,
-    defining = (spark, dir) => bigramTfOf(Dedup.docText(spark, dir)),
+    defining = (spark, dir) => bigramTfOf(Dedup.docText(spark, dir)))(
     build = (spark, dir) => bigramTfOf(graft.plans.Scale.spreadIfNarrow(Dedup.docText(spark, dir))),
     refresh = RowAppend(batch => bigramTfOf(batch.select(col("doc_id"), col("text")))))
 

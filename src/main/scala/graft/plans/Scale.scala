@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ContentMemo
+
 /** Scale utilities: the shuffle-shaping patterns a 100 TB deployment
   * needs beyond what AQE does automatically.
   *
@@ -17,6 +19,11 @@ import org.apache.spark.sql.functions._
   *   repeated fact⋈fact join (orders⋈lineitem here, carts⋈cartentries in
   *   the reference) pays its shuffle once at write time, then every
   *   downstream join is exchange-free.
+  *
+  * The data-driven decisions ([[skewAwareJoin]]'s skew probe,
+  * [[spreadIfNarrow]]'s split probe) are memoized in [[ContentMemo]] on
+  * the content of the files they read: a probe is paid once per content
+  * state, and a rewrite with different bytes re-probes.
   */
 object Scale {
 
@@ -47,22 +54,22 @@ object Scale {
     * result (ScaleSpec property-tests the equivalence AND that the
     * skewed fixture actually takes the salted branch), so correctness
     * is branch-independent. The probe runs ONE job per distinct
-    * (plan, key, threshold) — memoized, so plan-only inspections and
-    * repeated query constructions don't re-pay it; on a real cluster
-    * with fresh table stats, replace the probe with a stats lookup and
-    * keep the same two branches. */
+    * (plan, key, threshold) and content state of big's files — memoized
+    * ([[ContentMemo.over]]), so plan-only inspections and repeated query
+    * constructions don't re-pay it; on a real cluster with fresh table
+    * stats, replace the probe with a stats lookup and keep the same two
+    * branches. */
   def skewAwareJoin(big: DataFrame, small: DataFrame, key: String,
       rowThreshold: Long = 1000000L, salt: Int = 8): DataFrame = {
     val sampleMod = 64
-    val memoKey =
-      (big.queryExecution.analyzed.semanticHash(), inputFilesDigest(big), key, rowThreshold)
-    val hottest = probeMemo.getOrElseUpdate(memoKey, {
+    val name = s"skew/${big.queryExecution.analyzed.semanticHash()}/$key/$rowThreshold"
+    val hottest = skews.over(big, name) {
       val probe = big
         .where(pmod(monotonically_increasing_id(), lit(sampleMod)) === 0)
         .groupBy(col(key)).count()
         .agg(max(col("count"))).first()
       if (probe.isNullAt(0)) 0L else probe.getLong(0) * sampleMod
-    })
+    }
     if (hottest >= rowThreshold) saltedJoin(big, small, key, salt)
     else big.join(small, Seq(key))
   }
@@ -96,26 +103,17 @@ object Scale {
     p.join(i, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** Skew-probe results per (big-plan semantic hash, input-files digest,
-    * key, threshold). The files digest folds each source file's
-    * length+mtime in, so overwriting the underlying table in place
-    * re-probes instead of serving the old corpus's skew decision. */
-  private val probeMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, Int, String, Long), Long]
+  /** Hottest-key row estimate per (plan, key, threshold) of the big side. */
+  private val skews = new ContentMemo[Long]
 
-  /** Fingerprint of a plan's source files (path, length, mtime) — one FS
-    * metadata pass, no job; empty-source plans digest to a constant.
-    * Shared with Curation's max-id probe memo (same staleness contract). */
-  private[graft] def inputFilesDigest(df: DataFrame): Int = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    df.inputFiles.sorted.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      try {
-        val st = p.getFileSystem(conf).getFileStatus(p)
-        s"$f|${st.getLen}|${st.getModificationTime}"
-      } catch { case _: java.io.IOException => f }
-    }.mkString("\n").hashCode
-  }
+  /** Below this much total input, the spread's extra shuffle + 32-task
+    * scheduling costs more than single-task CPU saves: the r14 sf0.1
+    * sweep (5 MB corpus) paid a systematic ~0.2-0.4 s per spread query
+    * with nothing to amortize it, while every ≥15 MB corpus won
+    * (t04 sf1 1.61→0.97 s, sf10full 13.2→10.1 s per the committed r14
+    * sweep — bench/scaling_r14/bench_sf10full.json; t01 12.9→3.8 s,
+    * t02 10.0→5.3 s are the family's big wins). */
+  private[graft] val SpreadMinBytes: Long = 4L << 20
 
   /** Spread a pathologically under-split scan across the session's
     * parallelism before CPU-heavy per-row work (md5 window walks and
@@ -130,67 +128,29 @@ object Scale {
     * `parts*2 > target` and no exchange is added), firing only when the
     * scan has less than half the session's parallelism. Costs one
     * round-robin shuffle of the projected columns when it fires —
-    * project BEFORE spreading. */
-  /** Below this much total input, the spread's extra shuffle + 32-task
-    * scheduling costs more than single-task CPU saves: the r14 sf0.1
-    * sweep (5 MB corpus) paid a systematic ~0.2-0.4 s per spread query
-    * with nothing to amortize it, while every ≥15 MB corpus won
-    * (t04 sf1 1.61→0.97 s, sf10full 13.2→10.1 s per the committed r14
-    * sweep — bench/scaling_r14/bench_sf10full.json; t01 12.9→3.8 s,
-    * t02 10.0→5.3 s are the family's big wins). */
-  private[graft] val SpreadMinBytes: Long = 4L << 20
-
+    * project BEFORE spreading.
+    *
+    * The decision is memoized per content state of the scan's files
+    * ([[ContentMemo.over]]; r14: the un-memoized probe cost the sf0.1
+    * sweep a diffuse ~0.3-1 s on every shingle-family row — artifact
+    * keys re-derive defining plans and d06's propagation loop constructs
+    * plans per iteration, so this helper runs MANY times per query). Its
+    * Repartition is part of the defining plans Artifacts.keyFor hashes,
+    * and a content key never outlives the bytes it was probed from, so
+    * the hashed plan is the one a fresh JVM builds. */
   private[graft] def spreadIfNarrow(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    // The DECISION is memoized per source root (r14: the un-memoized
-    // probe cost the sf0.1 sweep a diffuse ~0.3-1 s on every
-    // shingle-family row — these operators re-derive defining plans for
-    // artifact keys and d06's propagation loop constructs plans per
-    // iteration, so this helper runs MANY times per query; each
-    // un-memoized call re-lists the scan's files and stats each one).
-    // Keying on the scan's ROOT paths costs no FS access at all —
-    // they're already resolved in the relation. A memoized decision can
-    // go stale if the file is overwritten in place mid-JVM, but the
-    // decision is PERFORMANCE-ONLY for VALUES (repartition or not —
-    // results are identical either way, unlike probeMemo's skew counts
-    // which gate a branch choice). It is NOT performance-only for
-    // artifact KEYS: the Repartition node is part of the defining plans
-    // Artifacts.keyFor hashes, so a stale decision after an in-place
-    // corpus rewrite would mint a key no fresh JVM reproduces and strand
-    // a duplicate artifact table. Artifacts.keyFor therefore calls
-    // [[clearSpreadMemoUnder]] on every key-memo miss (a new or changed
-    // fingerprint of a family's read tables) before it builds the plan —
-    // the rewrite is re-probed exactly where key stability
-    // matters, and JVM-lifetime staleness remains acceptable everywhere
-    // else.
-    val roots = sourceRoots(df)
-    val memoKey = if (roots.isEmpty) null else roots.sorted.mkString("\n")
-    if (memoKey != null) spreadDecisionMemo.get(memoKey) match {
-      case Some(n) => return if (n > 0) df.repartition(n) else df
-      case None    => ()
-    }
-    val n = spreadTarget(df, target)
-    if (memoKey != null) spreadDecisionMemo.putIfAbsent(memoKey, n)
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    val n = spreads.over(df, s"spread/$target")(spreadTarget(df, target))
     if (n > 0) df.repartition(n) else df
   }
 
-  /** Root paths of every file relation in `df`'s plan — resolved at
-    * read time, so collecting them costs no FS access. Empty for
-    * constructed/streaming frames. */
-  private def sourceRoots(df: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    df.queryExecution.analyzed.collect {
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
-        case _                   => Seq.empty[String]
-      }
-    }.flatten
-  }
+  /** Spread decision per session parallelism: 0 = no-op, n>0 =
+    * repartition to n. */
+  private val spreads = new ContentMemo[Int]
 
   /** Probe the scan's true parallelism; >0 = repartition to that many
-    * partitions, 0 = leave alone. One FS-metadata pass; footer reads
-    * memoized per (path, length, mtime). */
+    * partitions, 0 = leave alone. One FS-metadata pass plus, for a scan
+    * of fewer files than `target`, one footer read per file. */
   private def spreadTarget(df: DataFrame, target: Int): Int = {
     val files = df.inputFiles
     // non-file frames (constructed Datasets, streams) already carry the
@@ -202,75 +162,20 @@ object Scale {
     // written as one row group planned 17 splits but only the split
     // holding the row group does any work (PERF.md 14b). The row-group
     // count is the true upper bound on scan parallelism, and with <
-    // `target` files reading their footers is a bounded metadata read —
-    // MEMOIZED per (path, length, mtime): plan construction runs this
-    // helper many times per query (artifact keys re-derive defining
-    // plans), and un-memoized footer opens cost the r14 sf0.1 sweep a
-    // diffuse ~0.3-1 s on every shingle-family row.
+    // `target` files reading their footers is a bounded metadata read.
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
     var bytes = 0L
     val groups = files.map { f =>
       val p = new org.apache.hadoop.fs.Path(f)
       try {
-        val fs = p.getFileSystem(conf)
-        val st = fs.getFileStatus(p)
+        val st = p.getFileSystem(conf).getFileStatus(p)
         bytes += st.getLen
-        footerMemo.getOrElseUpdate((f, st.getLen, st.getModificationTime), {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRowGroups.size finally r.close()
-        })
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try r.getRowGroups.size finally r.close()
       } catch { case _: Exception => Int.MaxValue / 1024 } // non-parquet: assume splittable
     }.sum
     if (bytes >= SpreadMinBytes && groups * 2 <= target) target else 0
-  }
-
-  /** (path, length, mtime) → row-group count; stale entries self-evict
-    * by key (a rewritten file has a new length/mtime key). */
-  private val footerMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Long, Long), Int]
-
-  /** sorted-source-roots → spread decision (0 = no-op, n>0 = repartition
-    * to n). JVM-lifetime; performance-only staleness (see
-    * [[spreadIfNarrow]]). Tests that rewrite a path in place can
-    * [[clearSpreadMemo]]. */
-  private val spreadDecisionMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-
-  private[graft] def clearSpreadMemo(): Unit = spreadDecisionMemo.clear()
-
-  /** Test hook: is any spread decision memoized for a root under `dir`?
-    * (Observability only — eviction is value-invisible, decisions just
-    * re-probe, so the boundary-match pin needs to see the memo.) */
-  private[graft] def spreadMemoHasRootUnder(dir: String): Boolean = {
-    def pathOf(s: String): String =
-      new org.apache.hadoop.fs.Path(s).toUri.getPath.stripSuffix("/")
-    val needle = pathOf(dir)
-    spreadDecisionMemo.keys.exists(_.split('\n').exists { r =>
-      val p = pathOf(r); p == needle || p.startsWith(needle + "/")
-    })
-  }
-
-  /** Evict spread decisions whose source roots lie under `dir` — called
-    * by Artifacts.keyFor on a key-memo miss (a new or changed content
-    * fingerprint of a family's read tables under `dir`), so keys derived
-    * after an in-place rewrite hash the plan a fresh JVM would build (see
-    * the staleness note on [[spreadIfNarrow]]). Match is scheme-stripped and
-    * path-boundary (r15 advisory): a raw substring test on `.../sf1` also
-    * evicted the sibling `.../sf10full`'s memo rows — harmless to values
-    * (decisions re-probe) but it defeated the memo for unrelated corpora.
-    * Memo keys are newline-joined root URIs, so each root is tested
-    * alone. */
-  private[graft] def clearSpreadMemoUnder(dir: String): Unit = {
-    def pathOf(s: String): String =
-      new org.apache.hadoop.fs.Path(s).toUri.getPath.stripSuffix("/")
-    val needle = pathOf(dir)
-    def under(root: String): Boolean = {
-      val p = pathOf(root)
-      p == needle || p.startsWith(needle + "/")
-    }
-    spreadDecisionMemo.keys.filter(_.split('\n').exists(under))
-      .foreach(spreadDecisionMemo.remove)
   }
 
   /** Fact⋈dim join with an automatic strategy escape past the broadcast

@@ -8,7 +8,8 @@ import graft.Tables
 
 /** One persisted artifact FAMILY, declared once: its `kind` (the table
   * name prefix), the corpus tables it reads, its key-defining plan, its
-  * build body, and how it follows a corpus append. Serving, dropping,
+  * build body (the defining plan unless the family builds from served
+  * artifacts), and how it follows a corpus append. Serving, dropping,
   * refreshing and the refresh ≡ rebuild checks all go through this
   * value, so a family cannot be served under one name and refreshed or
   * tested under another.
@@ -31,8 +32,8 @@ import graft.Tables
 final class ArtifactFamily private[graft] (
     val kind: String,
     val reads: Seq[String],
-    private[graft] val defining: (SparkSession, String) => DataFrame,
-    build: (SparkSession, String) => DataFrame,
+    private[graft] val defining: (SparkSession, String) => DataFrame)(
+    build: (SparkSession, String) => DataFrame = defining,
     val refresh: ArtifactFamily.Refresh = ArtifactFamily.NoRefresh,
     multisetCount: Option[String] = None) {
   import ArtifactFamily._

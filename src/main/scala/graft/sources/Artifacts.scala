@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Build-once-serve-many index artifacts (dedup cluster labels, IVF
   * centroids) persisted as CATALOG TABLES, not JVM caches: the artifact
@@ -274,29 +275,17 @@ object Artifacts {
     * and still need their own memo rows; only the latest fingerprint per
     * (kind, dir) is kept.
     *
-    * SPREAD. The defining plan also embeds the session's parallelism
-    * (fixed per session) and the spread decision (Scale.spreadIfNarrow's
-    * Repartition), which is memoized per source root for the JVM's
-    * lifetime. So every memo miss — the first time a (kind, dir) sees
-    * a fingerprint, and every time it changes — evicts the dir's spread
-    * decisions (Scale.clearSpreadMemoUnder) before the plan is built:
-    * the hashed plan is then the one a fresh JVM reading this content
-    * would build. Without it an in-place rewrite would mint a key no
-    * other JVM reproduces and strand a duplicate table; the first
-    * observation evicts too (r15 advisory), since a decision may have
-    * been memoized against content no key ever saw. Eviction costs one
-    * re-probe (file metadata, no job) per miss, nothing at steady
-    * state. */
+    * SPREAD. The defining plan also embeds the spread decision
+    * (Scale.spreadIfNarrow's Repartition), which is memoized on the
+    * content of the files it read ([[ContentMemo.over]]), so the plan
+    * hashed here is the one a fresh JVM reading this content builds. */
   def keyFor(spark: SparkSession, dir: String, kind: String, tables: Seq[String])(
       defining: => DataFrame): String = {
     val fp = tablesFingerprint(spark, dir, tables)
-    keyMemo.at(kind, dir, fp) {
-      graft.plans.Scale.clearSpreadMemoUnder(dir)
-      keyOf(dir, fp, defining)
-    }
+    keyMemo.at(kind, dir, fp)(keyOf(dir, fp, defining))
   }
 
-  /** [[keyFor]] without its memo or eviction: the key a fresh JVM mints
+  /** [[keyFor]] without its memo: the key a fresh JVM mints
     * for `defining` over this content. */
   private[graft] def key(spark: SparkSession, dir: String, tables: Seq[String],
       defining: DataFrame): String =
@@ -339,14 +328,13 @@ object Artifacts {
     * metadata walk exactly as before, with mtime serving as the memo's
     * cheap validity check rather than as the identity itself.
     *
-    * Also keys the construct-time probe memos ([[ContentMemo]]: table
-    * schemas, order-date bounds, row counts, served centroids): memo
+    * Also keys every construct-time probe memo ([[ContentMemo]]): memo
     * hits are valid precisely while the CONTENT is unchanged, so content
     * keys make those memos survive an in-place same-bytes rewrite too —
     * which is correct, where the mtime key's forced miss was merely
     * safe. */
   def tablesFingerprint(spark: SparkSession, dir: String, tables: Seq[String]): String = {
-    val fp = fingerprintOf(spark, dir, tables)
+    val fp = fingerprintOf(spark, tables.sorted.map(t => new Path(dir, s"$t.parquet")))
     reading.value.foreach(_ += ((dir, tables.sorted, fp)))
     fp
   }
@@ -368,9 +356,11 @@ object Artifacts {
   private val reading =
     new scala.util.DynamicVariable[Option[scala.collection.mutable.Set[Read]]](None)
 
-  private def fingerprintOf(spark: SparkSession, dir: String, tables: Seq[String]): String = {
+  /** The content fingerprint of the files under `roots`, in order (see
+    * [[tablesFingerprint]]); unrecorded. */
+  private[sources] def fingerprintOf(spark: SparkSession, roots: Seq[Path]): String = {
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    tables.sorted.map(t => new Path(dir, s"$t.parquet")).foreach { root =>
+    roots.foreach { root =>
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       def visit(st: org.apache.hadoop.fs.FileStatus): Unit =
         if (st.isDirectory)
@@ -474,11 +464,18 @@ object Artifacts {
   * corpus in place many times over one driver lifetime keeps one row
   * per key instead of one per state.
   *
-  * This is how a query's construction stays free of Spark jobs on a
-  * warm corpus: every scalar the plan needs from immutable input (a
-  * table's parquet schema, an order-date bound, a row count, the served
-  * centroid table) is probed once per content state and then read from
-  * here. Content keys, not paths: a table rewritten in place with
+  * This is the one construct-time memo, and it is how a query's
+  * construction stays free of Spark jobs on a warm corpus: every value
+  * the plan needs from immutable input is probed once per content state
+  * and then read from here. Its users:
+  *   - [[graft.Tables]]: each table's parquet schema and row count;
+  *   - `CartAnalytics.orderDateRange`: the order-date bounds;
+  *   - `TextAnalysis`: t07's stratum quota;
+  *   - `Similarity.servedCents`: the served centroid rows;
+  *   - [[Artifacts.keyFor]]: each artifact family's table-name key;
+  *   - [[graft.plans.Scale]]: the spread decision and the skew probe,
+  *     and `Curation`'s max-id probe, through [[over]].
+  * Content keys, not paths or mtimes: a table rewritten in place with
   * different bytes is a new state and re-probes; a byte-identical
   * rewrite keeps its value. Two threads missing at once both compute
   * the same value; the later write wins harmlessly. */
@@ -500,4 +497,25 @@ final class ContentMemo[A] {
   def apply(spark: SparkSession, dir: String, name: String, tables: Seq[String])(
       compute: => A): A =
     at(name, dir, Artifacts.tablesFingerprint(spark, dir, tables))(compute)
+
+  /** [[at]] keyed on the files `df` reads: one row per `name` and sorted
+    * set of file-relation roots in `df`'s analyzed plan, valid while
+    * those roots' content fingerprint is unchanged. `name` must carry
+    * whatever else the value depends on (the skew and max-id probes put
+    * the plan's semantic hash in it). A frame that reads no files (local
+    * rows, a checkpoint) computes on every call. Not recorded in
+    * [[Artifacts.readsDuring]]: the tables a construction loads are
+    * recorded already, and recording the roots again would make every
+    * [[PlanCache]] hit fingerprint them once more. */
+  def over(df: DataFrame, name: String)(compute: => A): A = {
+    val roots = df.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
+        case _                   => Nil
+      }
+    }.flatten.distinct.sorted
+    if (roots.isEmpty) compute
+    else at(name, roots.mkString("\n"),
+      Artifacts.fingerprintOf(df.sparkSession, roots.map(new Path(_))))(compute)
+  }
 }

@@ -208,7 +208,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("spreadIfNarrow: fires on a big single-row-group file, memoizes the " +
-      "decision per source root (performance-only staleness)") {
+      "decision per content state, re-probes after an in-place rewrite") {
     // the fixture is ~12 MB / 1 row group, sized against the 4 MB
     // floor (Scale.SpreadMinBytes); on a single-core session the spread
     // legitimately never fires — cancel rather than fail confusingly
@@ -224,23 +224,17 @@ class ScaleSpec extends SparkSpec {
       .select($"id", expr(
         "concat_ws('', transform(sequence(1, 200), i -> md5(concat(id, '-', i))))").as("text"))
       .coalesce(1).write.mode("overwrite").parquet(path)
-    Scale.clearSpreadMemo()
     val spread1 = Scale.spreadIfNarrow(spark.read.parquet(path))
     assert(spread1.rdd.getNumPartitions === target,
       "big single-row-group scan must spread to session parallelism")
     // memo hit on a FRESH read of the same root: same decision
     val spread2 = Scale.spreadIfNarrow(spark.read.parquet(path))
     assert(spread2.rdd.getNumPartitions === target)
-    // documented JVM-lifetime staleness: overwriting the source in place
-    // keeps serving the old decision (harmless — perf-only) ...
+    // overwriting the source in place with different bytes is a new
+    // content state: the decision re-probes, and the tiny file is below
+    // the 4 MB floor → structural no-op
     spark.range(10).select($"id", lit("t").as("text"))
       .coalesce(1).write.mode("overwrite").parquet(path)
-    val stale = Scale.spreadIfNarrow(spark.read.parquet(path))
-    assert(stale.rdd.getNumPartitions === target,
-      "memoized decision expected until clearSpreadMemo")
-    // ... and clearing the memo re-probes: tiny file → below the 4 MB
-    // floor → structural no-op
-    Scale.clearSpreadMemo()
     val fresh = spark.read.parquet(path)
     val noop = Scale.spreadIfNarrow(fresh)
     assert(noop eq fresh, "sub-floor scan must be left untouched")

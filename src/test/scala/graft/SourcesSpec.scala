@@ -766,8 +766,8 @@ class SourcesSpec extends SparkSpec {
       "a rewritten corpus must re-derive and change the key")
   }
 
-  test("Artifacts.keyFor evicts stale spread decisions on in-place corpus " +
-      "rewrite so keys stay fresh-JVM-reproducible (ADVICE r14)") {
+  test("Artifacts.keyFor mints the fresh-JVM key after an in-place rewrite " +
+      "of a corpus whose scan spreads") {
     import org.apache.spark.sql.functions.{expr, lit}
     import graft.sources.Artifacts
     import graft.plans.Scale
@@ -777,12 +777,11 @@ class SourcesSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-keyfor-spread").toString
     val path = s"$dir/documents.parquet"
     // ~12 MB of incompressible hex in one row group → the spread fires
-    // and its decision is memoized per source root
+    // and its decision is memoized per content state of the file
     spark.range(2000)
       .select($"id", expr(
         "concat_ws('', transform(sequence(1, 200), i -> md5(concat(id, '-', i))))").as("text"))
       .coalesce(1).write.mode("overwrite").parquet(path)
-    Scale.clearSpreadMemo()
     def defining() = Scale.spreadIfNarrow(spark.read.parquet(path))
     val kBig = Artifacts.keyFor(spark, dir, "keyfor-spread", Seq("documents"))(defining())
     assert(defining().rdd.getNumPartitions === spark.sparkContext.defaultParallelism,
@@ -790,20 +789,19 @@ class SourcesSpec extends SparkSpec {
     Thread.sleep(1100) // distinct mtime on coarse-granularity filesystems
     spark.range(10).select($"id", lit("t").as("text"))
       .coalesce(1).write.mode("overwrite").parquet(path)
-    // keyFor sees the new fingerprint → evicts the dir's spread rows →
-    // the defining plan it hashes is the one a FRESH JVM would build
+    // new content → the spread re-probes → the defining plan keyFor
+    // hashes is the one a FRESH JVM would build
     val kSmall = Artifacts.keyFor(spark, dir, "keyfor-spread", Seq("documents"))(defining())
     assert(kSmall != kBig)
-    Scale.clearSpreadMemo()
-    val kFresh = Artifacts.key(spark, dir, Seq("documents"),
-      Scale.spreadIfNarrow(spark.read.parquet(path)))
+    // a fresh JVM leaves the sub-floor scan unspread
+    val kFresh = Artifacts.key(spark, dir, Seq("documents"), spark.read.parquet(path))
     assert(kSmall === kFresh,
       "post-rewrite keyFor must hash the plan a fresh JVM reproduces " +
         "(stale spread decision baked into the defining plan)")
   }
 
-  test("keyFor's FIRST observation of a dir also evicts spread decisions " +
-      "(spread memoized before any keyFor, then in-place rewrite — ADVICE r15)") {
+  test("keyFor's FIRST observation of a dir mints the fresh-JVM key " +
+      "(spread decided before any keyFor, then in-place rewrite)") {
     import org.apache.spark.sql.functions.{expr, lit}
     import graft.sources.Artifacts
     import graft.plans.Scale
@@ -815,49 +813,21 @@ class SourcesSpec extends SparkSpec {
       .select($"id", expr(
         "concat_ws('', transform(sequence(1, 200), i -> md5(concat(id, '-', i))))").as("text"))
       .coalesce(1).write.mode("overwrite").parquet(path)
-    Scale.clearSpreadMemo()
-    // a non-artifact query memoizes the spread decision — NO keyFor ran,
-    // so keyFor has never observed this dir's documents fingerprint
-    Scale.spreadIfNarrow(spark.read.parquet(path)).count()
-    assert(Scale.spreadMemoHasRootUnder(dir), "fixture must memoize a spread")
+    // a non-artifact query decides the spread — NO keyFor ran, so keyFor
+    // has never observed this dir's documents fingerprint
+    val spread = Scale.spreadIfNarrow(spark.read.parquet(path))
+    assert(spread.rdd.getNumPartitions === spark.sparkContext.defaultParallelism,
+      "fixture must spread")
+    spread.count()
     Thread.sleep(1100)
     spark.range(10).select($"id", lit("t").as("text"))
       .coalesce(1).write.mode("overwrite").parquet(path)
-    // FIRST keyFor over the dir: a change-only check would see put()
-    // return None, skip eviction, and hash the stale spread
+    // FIRST keyFor over the dir must not hash the decision taken on the
+    // old bytes
     val k = Artifacts.keyFor(spark, dir, "keyfor-firstobs", Seq("documents"))(
       Scale.spreadIfNarrow(spark.read.parquet(path)))
-    Scale.clearSpreadMemo()
-    val kFresh = Artifacts.key(spark, dir, Seq("documents"),
-      Scale.spreadIfNarrow(spark.read.parquet(path)))
+    val kFresh = Artifacts.key(spark, dir, Seq("documents"), spark.read.parquet(path))
     assert(k === kFresh,
-      "first-observation keyFor must evict the pre-existing spread memo " +
-        "and mint the key a fresh JVM reproduces")
-  }
-
-  test("clearSpreadMemoUnder matches path boundaries: evicting sf1 must not " +
-      "evict the sibling sf10-named corpus (ADVICE r15)") {
-    import org.apache.spark.sql.functions.expr
-    import graft.plans.Scale
-    assume(spark.sparkContext.defaultParallelism >= 2,
-      "needs defaultParallelism >= 2 for the spread to fire")
-    val base = Files.createTempDirectory("graft-memo-boundary").toString
-    def mk(sub: String): String = {
-      val p = s"$base/$sub/documents.parquet"
-      spark.range(2000)
-        .select($"id", expr(
-          "concat_ws('', transform(sequence(1, 200), i -> md5(concat(id, '-', i))))").as("text"))
-        .coalesce(1).write.mode("overwrite").parquet(p)
-      Scale.spreadIfNarrow(spark.read.parquet(p)).count()
-      s"$base/$sub"
-    }
-    Scale.clearSpreadMemo()
-    val sf1 = mk("sf1")
-    val sf10 = mk("sf10full") // prefix-collides with "sf1" under substring match
-    assert(Scale.spreadMemoHasRootUnder(sf1) && Scale.spreadMemoHasRootUnder(sf10))
-    Scale.clearSpreadMemoUnder(sf1)
-    assert(!Scale.spreadMemoHasRootUnder(sf1), "sf1's memo row must be evicted")
-    assert(Scale.spreadMemoHasRootUnder(sf10),
-      "sibling sf10full's memo row must SURVIVE eviction of sf1 (prefix collision)")
+      "first-observation keyFor must mint the key a fresh JVM reproduces")
   }
 }
