@@ -232,10 +232,4 @@ object Tables {
     * `spark.sql(sql)`: unrelated tables are never loaded. */
   def registerFor(spark: SparkSession, dir: String, sql: String): Unit =
     register(spark, dir, referencedTables(sql))
-
-  /** Register all tables as temp views so ad-hoc SQL works too. Prefer
-    * [[registerFor]] in query entry points: this form loads every table,
-    * so one broken file fails the whole call. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    register(spark, dir, names)
 }

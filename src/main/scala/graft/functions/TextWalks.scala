@@ -85,8 +85,6 @@ object TextWalks extends Serializable {
     }
   }
 
-  private val Space: Array[Byte] = Array(' '.toByte)
-
   /** Java-regex `\s` is exactly the ASCII class `[ \t\n\x0B\f\r]`, and
     * every one of those bytes IS that character in UTF-8 (multi-byte
     * sequences use bytes ≥ 0x80 only) — so splitting on raw UTF-8 bytes

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
 import graft.sources.{ArtifactFamily, ContentMemo}
-import graft.sources.ArtifactFamily.{Rederive, RowAppend}
+import graft.sources.ArtifactFamily.RowAppend
 
 /** Reference-parity analytics re-expressed on the synthetic star schema.
   *
@@ -179,25 +179,28 @@ object CartAnalytics {
   /** Both periods in ONE fact scan: the reference builds two aggregated
     * subqueries and joins them (J7) — semantically that is a conditional
     * aggregation, so the engine scans lineitem⋈orders once, filtered to
-    * the union of both periods (pushed down), and splits the periods with
-    * `countDistinct(when(...))`. Halves the scans AND replaces the
-    * subquery join's shuffle with nothing. cur-side membership (the
-    * reference's inner `cur` relation) becomes `last > 0`.
+    * the union of both periods (pushed down), and counts each period's
+    * distinct orders per part by summing per-(part, order) period flags
+    * — no distinct aggregate, whose Expand Spark orders anew on every
+    * construction. Halves the scans AND replaces the subquery join with
+    * a second aggregate. cur-side membership (the reference's inner
+    * `cur` relation) becomes `last > 0`.
     */
   private def periodIncrease(spark: SparkSession, dir: String,
       curPeriod: Column, prePeriod: Column,
       curAlias: String, preAlias: String): DataFrame =
     li(spark, dir)
       .join(ord(spark, dir), col("l_orderkey") === col("o_orderkey"), "right_outer")
-      .where(abandoned && (curPeriod || prePeriod))
+      .where(abandoned && (curPeriod || prePeriod) && col("o_orderkey").isNotNull)
+      .groupBy(col("l_partkey"), col("o_orderkey"))
+      .agg(max(when(curPeriod, 1L).otherwise(0L)).as(curAlias),
+        max(when(prePeriod, 1L).otherwise(0L)).as(preAlias))
       .groupBy(col("l_partkey"))
-      .agg(
-        countDistinct(when(curPeriod, col("o_orderkey"))).as(curAlias),
+      .agg(sum(col(curAlias)).as(curAlias),
         // join-parity for the NULL part bucket: an equi-join on l_partkey
         // never matches NULL, so the reference's prev for that bucket is
         // the coalesced 0, not the real previous-period count
-        when(col("l_partkey").isNull, lit(0L))
-          .otherwise(countDistinct(when(prePeriod, col("o_orderkey")))).as(preAlias))
+        when(col("l_partkey").isNull, lit(0L)).otherwise(sum(col(preAlias))).as(preAlias))
       .where(col(curAlias) > 0)
       .select(
         col("l_partkey"),
@@ -561,22 +564,23 @@ object CartAnalytics {
   private[graft] lazy val ProfHist: ArtifactFamily = new ArtifactFamily("profhist",
     Orders,
     defining = (spark, dir) => Profile.histogram(ord(spark, dir), ProfileNumCols))(
-    refresh = RowAppend(batch => Profile.histogram(batch, ProfileNumCols)),
+    refresh = Some(RowAppend(batch => Profile.histogram(batch, ProfileNumCols))),
     multisetCount = Some("c"))
 
   /** q17's string-histogram twin (profstrh_). */
   private[graft] lazy val ProfStrHist: ArtifactFamily = new ArtifactFamily("profstrh",
     Orders,
     defining = (spark, dir) => Profile.stringHistogram(ord(spark, dir), ProfileStrCols))(
-    refresh = RowAppend(batch => Profile.stringHistogram(batch, ProfileStrCols)),
+    refresh = Some(RowAppend(batch => Profile.stringHistogram(batch, ProfileStrCols))),
     multisetCount = Some("c"))
 
   /** q15's statistics. Key: the full (histogram → statistics) derivation
     * as a LAZY plan (materialize = false: no cache entries minted during
     * name derivation). Build: the DECLARED statistics from the served histogram — the raw
     * fact is scanned only by the histogram build itself; ProfileHistSpec
-    * pins bit-identity to Profile.summarize. On append it re-derives
-    * from the refreshed histogram, never from the full raw fact. */
+    * pins bit-identity to Profile.summarize. It has no append refresh:
+    * on an appended state its first serve reads the refreshed histogram,
+    * never the full raw fact. */
   private[graft] lazy val ProfileStats: ArtifactFamily = new ArtifactFamily("profile",
     Orders,
     defining = (spark, dir) => {
@@ -585,8 +589,7 @@ object CartAnalytics {
         Profile.columnKinds(o, ProfileNumCols), materialize = false)
     })(
     build = (spark, dir) => Profile.summarizeFromHistogram(ProfHist.serve(spark, dir),
-      Profile.columnKinds(ord(spark, dir), ProfileNumCols)),
-    refresh = Rederive)
+      Profile.columnKinds(ord(spark, dir), ProfileNumCols)))
 
   /** q17's statistics, derived from the served string histogram
     * (identical rows: the re-aggregated counts frame IS
@@ -596,8 +599,7 @@ object CartAnalytics {
     defining = (spark, dir) => Profile.summarizeStringsFromHistogram(
       Profile.stringHistogram(ord(spark, dir), ProfileStrCols), ProfileStrCols))(
     build = (spark, dir) => Profile.summarizeStringsFromHistogram(
-      ProfStrHist.serve(spark, dir), ProfileStrCols),
-    refresh = Rederive)
+      ProfStrHist.serve(spark, dir), ProfileStrCols))
 
   def q15ProfileOrders(spark: SparkSession, dir: String): DataFrame =
     ProfileStats.serve(spark, dir).orderBy(col("column_name").asc)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.SharedHash._
 import graft.sources.ArtifactFamily
-import graft.sources.ArtifactFamily.{Fold, Rederive, RowAppend}
+import graft.sources.ArtifactFamily.{Fold, RowAppend}
 
 /** Deduplication operators over the `documents` table — the core of a
   * training-data pipeline at 100 TB.
@@ -338,7 +338,7 @@ object Dedup {
     defining = (spark, dir) => scoredCandidatesOf(Tables.load(spark, dir, "documents")))(
     build = (spark, dir) =>
       scoredCandidatesFromShingles(persistOnce(Shingles.serve(spark, dir))),
-    refresh = Fold { (spark, oldDir, newDir) =>
+    refresh = Some(Fold { (spark, oldDir, newDir) =>
       val oldIdx = DedupSig.serve(spark, oldDir)
       val shB = shinglesOf(appendedBatch(spark, oldDir, newDir).select(col("doc_id"), col("text")))
       val sigB = lshSignatures(shB)
@@ -350,7 +350,7 @@ object Dedup {
       val sh = shB.unionAll(
         Shingles.serve(spark, oldDir).join(touched, Seq("doc_id"), "left_semi"))
       Scored.serve(spark, oldDir).unionAll(scoreCandidates(candB, sig, sh))
-    })
+    }))
 
   def d03MinhashLsh(spark: SparkSession, dir: String): DataFrame =
     minhashTopK(Scored.serve(spark, dir))
@@ -405,10 +405,6 @@ object Dedup {
       (0 until s).map(i => (w, i * width, width))
     }
   }
-
-  /** The 2-word (120-bit) layout — the regime of every driver sf; the
-    * static oracle text mirrors exactly this. */
-  val SimBands: Seq[(Int, Int, Int)] = simBands(2)
 
   /** Corpus doc count, probed once per content state of `documents`
     * ([[Tables.rowCount]]); decides the signature width and guards the
@@ -890,7 +886,8 @@ object Dedup {
     * the round trip is bit-identical to recompute. */
   private[graft] lazy val H60: ArtifactFamily = new ArtifactFamily("h60", Docs,
     defining = (spark, dir) => hashed60ShinglesOf(docText(spark, dir)))(
-    refresh = RowAppend(batch => hashed60ShinglesOf(batch.select(col("doc_id"), col("text")))))
+    refresh = Some(RowAppend(batch =>
+      hashed60ShinglesOf(batch.select(col("doc_id"), col("text"))))))
 
   /** The qualifying contamination PAIR SET as a persisted catalog
     * artifact — the s12/edges pattern applied to the d-chain (r15
@@ -915,7 +912,7 @@ object Dedup {
       contaminationPairs(train, eval_)
     })(
     build = contamPairsDerive,
-    refresh = Fold { (spark, oldDir, newDir) =>
+    refresh = Some(Fold { (spark, oldDir, newDir) =>
       val oldH60 = persistOnce(H60.serve(spark, oldDir))
       val batch = appendedBatch(spark, oldDir, newDir)
       val bH60 = hashed60ShinglesOf(batch.select(col("doc_id"), col("text")))
@@ -930,7 +927,7 @@ object Dedup {
           oldH60.where(col("doc_id") % 10 =!= 0).unionAll(bTrain), bEval, nEvalB))
         .unionAll(contaminationPairsHashed(
           bTrain, oldH60.where(col("doc_id") % 10 === 0), nEvalOld))
-    })
+    }))
 
   /** The contamination pair DERIVATION body over the served h60 index —
     * what [[Contam]] materializes once per corpus state.
@@ -1087,7 +1084,7 @@ object Dedup {
   private[graft] lazy val ContAudit: ArtifactFamily = new ArtifactFamily("contaud", Docs,
     defining = (spark, dir) => containmentAudit(excerptAugmented(spark, dir)))(
     build = d16Derive,
-    refresh = Fold { (spark, oldDir, newDir) =>
+    refresh = Some(Fold { (spark, oldDir, newDir) =>
       val oldSig = ContSig.serve(spark, oldDir)
       val shB = shinglesOf(augmentedOf(appendedBatch(spark, oldDir, newDir)))
       val sigB = lshSignatures(shB)
@@ -1099,7 +1096,7 @@ object Dedup {
       val sizes = sigB.select(col("doc_id"), col("n")).unionAll(
         oldSig.select(col("doc_id"), col("n")).join(touched, Seq("doc_id"), "left_semi"))
       ContAudit.serve(spark, oldDir).unionAll(scoreContainment(candB, sh, sizes))
-    })
+    }))
 
   /** Excerpt-row shingles as a PERSISTED CATALOG ARTIFACT (r18, the
     * contaud-refresh prerequisite): the d16 build and the contaud_
@@ -1110,7 +1107,7 @@ object Dedup {
     * derivation; per-DOC rows → file-level append refresh. */
   private[graft] lazy val ExcerptShingles: ArtifactFamily = new ArtifactFamily("exsh", Docs,
     defining = (spark, dir) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))))(
-    refresh = RowAppend(batch => shinglesOf(excerptsOf(batch))))
+    refresh = Some(RowAppend(batch => shinglesOf(excerptsOf(batch)))))
 
   /** MinHash signatures of the EXCERPT-AUGMENTED corpus as a persisted
     * artifact — the probe index the contaud_ refresh band-probes with
@@ -1124,7 +1121,7 @@ object Dedup {
     defining = (spark, dir) => lshSignatures(shinglesOf(excerptAugmented(spark, dir))))(
     build = (spark, dir) => lshSignatures(persistOnce(Shingles.serve(spark, dir)
       .unionAll(ExcerptShingles.serve(spark, dir)))),
-    refresh = RowAppend(batch => lshSignatures(shinglesOf(augmentedOf(batch)))))
+    refresh = Some(RowAppend(batch => lshSignatures(shinglesOf(augmentedOf(batch))))))
 
   /** The d16 DERIVATION body over the served shingle/signature
     * artifacts — what [[ContAudit]] materializes once
@@ -1615,8 +1612,8 @@ object Dedup {
     * order is immaterial) and the DuckDB oracle still re-derives the
     * full edge set per query. Keyed, like labels, by the corpus and the
     * edge derivation, so a changed LSH layout or threshold can never
-    * serve a stale artifact. On append it is re-derived from the
-    * refreshed scored_ table. */
+    * serve a stale artifact. It has no append refresh: on an appended
+    * state its first serve reads the refreshed scored_ table. */
   private[graft] lazy val Edges: ArtifactFamily = new ArtifactFamily("edges", Docs,
     defining = lshEdges)(
     // build from the served SCORED candidate artifact (r16): the edge
@@ -1627,8 +1624,7 @@ object Dedup {
     // same as the inner join it replaces).
     build = (spark, dir) => Scored.serve(spark, dir)
       .where(col("shared") / (col("n_a") + col("n_b") - col("shared")) >= ClusterThreshold)
-      .select(col("doc_a"), col("doc_b")),
-    refresh = Rederive)
+      .select(col("doc_a"), col("doc_b")))
 
   // ---------------------------------------------------------------------
   // Persisted DEDUP INDEX artifacts (VERDICT r7 task 2): the per-doc
@@ -1648,10 +1644,16 @@ object Dedup {
     * (band-candidate probes). LEFT join keeps docs with <3 words
     * (no shingles): their null band keys can never equi-match, but
     * their md5 still serves exact-dup checks. */
-  private[graft] def dedupIndexOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), md5(col("text")).as("text_md5"))
-      .join(lshSignatures(shinglesOf(docs.select(col("doc_id"), col("text")))),
-        Seq("doc_id"), "left_outer")
+  private[graft] def dedupIndexOf(docs: DataFrame): DataFrame = dedupIndexParts(docs)._1
+
+  /** [[dedupIndexOf]]'s rows with the shingle and signature frames they
+    * join, whose caches a caller may release. */
+  private def dedupIndexParts(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val sh = shinglesOf(docs.select(col("doc_id"), col("text")))
+    val sig = lshSignatures(sh)
+    (docs.select(col("doc_id"), md5(col("text")).as("text_md5"))
+      .join(sig, Seq("doc_id"), "left_outer"), sh, sig)
+  }
 
   /** The per-doc signature index, served as a persisted catalog
     * artifact. Build-once: every incremental consumer probes this table
@@ -1659,11 +1661,7 @@ object Dedup {
     * own-shingle MinHash) → file-level append refresh. */
   private[graft] lazy val DedupSig: ArtifactFamily = new ArtifactFamily("dedupsig", Docs,
     defining = (spark, dir) => dedupIndexOf(Tables.load(spark, dir, "documents")))(
-    refresh = RowAppend { batch =>
-      val sigB = lshSignatures(shinglesOf(batch.select(col("doc_id"), col("text"))))
-      batch.select(col("doc_id"), md5(col("text")).as("text_md5"))
-        .join(sigB, Seq("doc_id"), "left_outer")
-    })
+    refresh = Some(RowAppend(dedupIndexOf)))
 
   /** The doc-shingle inverted-index rows, served as a persisted catalog
     * artifact. The build clusters rows by doc_id (range partition +
@@ -1680,8 +1678,8 @@ object Dedup {
     defining = (spark, dir) => shinglesOf(docText(spark, dir)))(
     build = (spark, dir) => shinglesOf(docText(spark, dir))
       .repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id")),
-    refresh = RowAppend(batch => shinglesOf(batch.select(col("doc_id"), col("text")))
-      .repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id"))))
+    refresh = Some(RowAppend(batch => shinglesOf(batch.select(col("doc_id"), col("text")))
+      .repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id")))))
 
   /** The near-dup label table, served as a PERSISTED CATALOG ARTIFACT —
     * the dedup counterpart of Similarity's trained-centroid table: a real
@@ -1704,7 +1702,7 @@ object Dedup {
     // not its own — and the propagation loop reads a compact parquet
     // pair table instead of re-running band joins per iteration seed
     build = (spark, dir) => minLabelComponents(Edges.serve(spark, dir)),
-    refresh = Fold { (spark, oldDir, newDir) =>
+    refresh = Some(Fold { (spark, oldDir, newDir) =>
       val batchIds = appendedBatch(spark, oldDir, newDir).select(col("doc_id"))
       val e = Edges.serve(spark, newDir)
       val touching = e
@@ -1715,7 +1713,7 @@ object Dedup {
           .join(batchIds.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
           .select(col("doc_a"), col("doc_b")))
       mergeNewEdgesIntoLabels(Labels.serve(spark, oldDir), touching)
-    })
+    }))
 
   def d08LshClusters(spark: SparkSession, dir: String): DataFrame =
     clusterOutput(Labels.serve(spark, dir))
@@ -1869,16 +1867,8 @@ object Dedup {
     * derived existing-side caches are released before returning (safe:
     * the 3-arg core localCheckpoints its result), so repeated one-shot
     * calls over distinct corpora no longer leak CacheManager entries. */
-  def incrementalDedup(incoming: DataFrame, existing: DataFrame): DataFrame = {
-    val shEx = shinglesOf(existing.select(col("doc_id"), col("text")))
-    val sigEx = lshSignatures(shEx)
-    val idx = existing.select(col("doc_id"), md5(col("text")).as("text_md5"))
-      .join(sigEx, Seq("doc_id"), "left_outer") // = dedupIndexOf, with handles
-    val result = incrementalDedup(incoming, idx, shEx)
-    sigEx.unpersist(false)
-    shEx.unpersist(false)
-    result
-  }
+  def incrementalDedup(incoming: DataFrame, existing: DataFrame): DataFrame =
+    withBatchIndex(existing)((idx, sh) => incrementalDedup(incoming, idx, sh))
 
   /** Derive a batch's per-doc index rows (md5 + signature + size) and
     * shingle rows, hand both to `sink`, then release the derivation
@@ -1888,10 +1878,7 @@ object Dedup {
     * (see [[graft.streaming.DedupStream]]). */
   private[graft] def withBatchIndex[A](batch: DataFrame)(
       sink: (DataFrame, DataFrame) => A): A = {
-    val sh = shinglesOf(batch.select(col("doc_id"), col("text")))
-    val sig = lshSignatures(sh)
-    val idx = batch.select(col("doc_id"), md5(col("text")).as("text_md5"))
-      .join(sig, Seq("doc_id"), "left_outer")
+    val (idx, sh, sig) = dedupIndexParts(batch)
     try sink(idx, sh)
     finally { sig.unpersist(false); sh.unpersist(false) }
   }
@@ -2050,16 +2037,17 @@ object Dedup {
   // task 1). Until r17 the artifact lifecycle answered ANY corpus change
   // with a full rebuild of every family (r16 gate: 1,658.9 s prebuild at
   // sf10full) — but corpus snapshots evolve by append, and for the
-  // append case every refreshable family has a batch-cost update that is
-  // ROW-IDENTICAL to a from-scratch rebuild. Each family declares its
-  // own shape ([[graft.sources.ArtifactFamily.Refresh]]): per-row
-  // families link the old generation and add batch rows; edges_ and the
-  // profile statistics re-derive from their refreshed upstream; scored_,
-  // contam_, contaud_ and labels_ fold the batch into the old
-  // generation. Each refresh persists under the NEW state's own key
-  // (the same key a from-scratch build computes), so later cold
-  // sessions serve the incrementally-built table transparently and
-  // serve ≡ recompute stays a checked contract.
+  // append case a family's refresh shape is a batch-cost update that is
+  // ROW-IDENTICAL to a from-scratch rebuild
+  // ([[graft.sources.ArtifactFamily.Refresh]]): per-row families link
+  // the old generation and add batch rows; scored_, contam_, contaud_
+  // and labels_ fold the batch into the old generation. Only what is
+  // built refreshes; every other family (edges_ and the profile
+  // statistics have no shape) builds on its first serve of the new
+  // state, from its refreshed upstream. Each refresh persists under the
+  // NEW state's own key (the same key a from-scratch build computes), so
+  // later cold sessions serve the incrementally-built table
+  // transparently and serve ≡ recompute stays a checked contract.
   // ---------------------------------------------------------------------
   /** The appended documents between two corpus states (see
     * [[graft.sources.ArtifactFamily.appendedRows]]). */
@@ -2080,11 +2068,13 @@ object Dedup {
     cand.select(col("doc_a").as("doc_id"))
       .unionAll(cand.select(col("doc_b").as("doc_id"))).distinct()
 
-  /** Refresh EVERY incrementally-refreshable served family for the
-    * corpus at `newDir` (= `oldDir` plus an appended batch) — the
-    * deployment's "corpus advanced one snapshot" entry point. Families
-    * refresh in registry (dependency) order, and only those whose read
-    * tables exist in both states ([[ArtifactFamily.refreshable]]).
+  /** Refresh every BUILT family that has a refresh shape for the corpus
+    * at `newDir` (= `oldDir` plus an appended batch) — the deployment's
+    * "corpus advanced one snapshot" entry point. Families refresh in
+    * registry (dependency) order, and only those whose read tables exist
+    * in both states and whose `oldDir` generation is complete
+    * ([[ArtifactFamily.refreshable]]); every other family builds on its
+    * first serve of `newDir`.
     * Returns (family, table name) for each refreshed artifact; every
     * table is named with the NEW state's from-scratch key, so all later
     * consumers — this session or any cold JVM — serve transparently. */
@@ -2175,7 +2165,7 @@ object Dedup {
   private[graft] lazy val Spans: ArtifactFamily = new ArtifactFamily("spans", Docs,
     defining = (spark, dir) => spanTfOf(docText(spark, dir)))(
     build = (spark, dir) => spanTfOf(graft.plans.Scale.spreadIfNarrow(docText(spark, dir))),
-    refresh = RowAppend(batch => spanTfOf(batch.select(col("doc_id"), col("text")))))
+    refresh = Some(RowAppend(batch => spanTfOf(batch.select(col("doc_id"), col("text"))))))
 
   /** Boilerplate-span shares over a pre-built (doc_id, g, c) frame plus
     * the (doc_id, source) projection — the span document-frequency rides

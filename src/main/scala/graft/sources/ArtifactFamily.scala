@@ -9,7 +9,7 @@ import graft.Tables
 /** One persisted artifact FAMILY, declared once: its `kind` (the table
   * name prefix), the corpus tables it reads, its key-defining plan, its
   * build body (the defining plan unless the family builds from served
-  * artifacts), and how it follows a corpus append. Serving, dropping,
+  * artifacts), and its append refresh shape, if any. Serving, dropping,
   * refreshing and the refresh ≡ rebuild checks all go through this
   * value, so a family cannot be served under one name and refreshed or
   * tested under another.
@@ -19,6 +19,9 @@ import graft.Tables
   * tables the family declares in `reads`, so a family's table moves
   * exactly when a table it reads changes — an orders append leaves the
   * documents families' tables in place, and the reverse.
+  *
+  * An append refreshes what is built ([[refreshable]]); every other
+  * family builds on its first serve of the new state.
   *
   * A family earns its place by reuse: at least two consumers, or an
   * append refresh. A family that would persist one query's final
@@ -34,7 +37,7 @@ final class ArtifactFamily private[graft] (
     val reads: Seq[String],
     private[graft] val defining: (SparkSession, String) => DataFrame)(
     build: (SparkSession, String) => DataFrame = defining,
-    val refresh: ArtifactFamily.Refresh = ArtifactFamily.NoRefresh,
+    val refresh: Option[ArtifactFamily.Refresh] = None,
     multisetCount: Option[String] = None) {
   import ArtifactFamily._
 
@@ -64,20 +67,28 @@ final class ArtifactFamily private[graft] (
       .agg(sum(col(c)).as(c))
   }
 
+  /** Whether `dir`'s generation has its `_SUCCESS` on disk: a cold JVM
+    * sees only the files, not this JVM's catalog. */
+  private def built(spark: SparkSession, dir: String): Boolean = {
+    val success = new Path(Artifacts.location(spark, name(spark, dir)), "_SUCCESS")
+    success.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(success)
+  }
+
   /** Serve `newDir`'s table (= `oldDir`'s corpus plus appended rows),
-    * building it from `oldDir`'s generation by this family's refresh
-    * shape when absent. The table is named with `newDir`'s from-scratch
-    * key, so later cold sessions serve it transparently. */
+    * building it from `oldDir`'s complete generation ([[refreshable]])
+    * by this family's refresh shape when absent. The table is named with
+    * `newDir`'s from-scratch key, so later cold sessions serve it
+    * transparently. */
   def refreshAfterAppend(spark: SparkSession, oldDir: String, newDir: String): DataFrame =
-    refresh match {
+    refresh.getOrElse(throw new UnsupportedOperationException(
+        s"artifact family '$kind' has no append refresh")) match {
       case RowAppend(rows) =>
         // per-row derivation: rows(new) = rows(old generation) ∪
         // rows(batch) — the old generation's part files are hard-linked
         // unchanged, only batch rows are computed and written: O(batch)
         // compute and O(files) metadata, no corpus-sized re-encode (r17:
         // rewriting shingles_ cost 70 CPU-s at sf10full for a 1% batch,
-        // linking ~1)
-        serve(spark, oldDir)
+        // linking ~1). Nothing is served on the old state.
         val (table, oldTable) = (name(spark, newDir), name(spark, oldDir))
         owning(Artifacts.servePersistedBy(spark, table) { stage =>
           rows(appendedRows(spark, reads.head, oldDir, newDir))
@@ -85,10 +96,7 @@ final class ArtifactFamily private[graft] (
           Artifacts.linkDataFilesInto(stage.getFileSystem(spark.sparkContext.hadoopConfiguration),
             Artifacts.location(spark, oldTable), stage)
         })
-      case Rederive => serve(spark, newDir)
       case Fold(fold) => serveWith(spark, newDir)(fold(spark, oldDir, newDir))
-      case NoRefresh => throw new UnsupportedOperationException(
-        s"artifact family '$kind' has no append refresh")
     }
 }
 
@@ -137,19 +145,16 @@ object ArtifactFamily {
   private val serving =
     new scala.util.DynamicVariable[Option[scala.collection.mutable.Set[String]]](None)
 
-  /** How a family follows a corpus append. */
+  /** How a family follows a corpus append. A family without one builds
+    * on its first serve of the new state. */
   sealed trait Refresh
   /** Per-row derivation over the appended rows of the family's one read
-    * table; `rows(batch)` derives the batch's rows. */
+    * table; `rows(batch)` derives the batch's rows, and the old
+    * generation's files are linked in unchanged. */
   final case class RowAppend(rows: DataFrame => DataFrame) extends Refresh
-  /** The ordinary build on the new state, once its upstream families
-    * (earlier in [[all]]) are refreshed. */
-  case object Rederive extends Refresh
   /** A family-specific fold `(spark, oldDir, newDir)` of the old
     * generation and the batch. */
   final case class Fold(fold: (SparkSession, String, String) => DataFrame) extends Refresh
-  /** Not refreshed on append: rebuilt on first serve of the new state. */
-  case object NoRefresh extends Refresh
 
   /** Every family, in dependency order: a family's build and refresh
     * read only families listed before it. */
@@ -161,18 +166,23 @@ object ArtifactFamily {
       S.Centroids, S.KnnGraph, S.KnnLabels, S.SemVerdicts)
   }
 
-  /** The families an append from `oldDir` to `newDir` refreshes: those
-    * with a refresh shape whose every read table exists in both states.
-    * A documents-only state pair skips the orders families. */
-  def refreshable(spark: SparkSession, oldDir: String, newDir: String): Seq[ArtifactFamily] = {
+  /** The families whose every read table exists in each of `dirs`:
+    * naming a family over a missing table fails. */
+  def readable(spark: SparkSession, dirs: String*): Seq[ArtifactFamily] = {
     val conf = spark.sparkContext.hadoopConfiguration
     def exists(dir: String, table: String) = {
       val p = new Path(dir, s"$table.parquet")
       p.getFileSystem(conf).exists(p)
     }
-    all.filter(f => f.refresh != NoRefresh &&
-      f.reads.forall(t => exists(oldDir, t) && exists(newDir, t)))
+    all.filter(_.reads.forall(t => dirs.forall(exists(_, t))))
   }
+
+  /** The families an append from `oldDir` to `newDir` refreshes: those
+    * with a refresh shape, readable in both states, whose `oldDir`
+    * generation is complete. A family never built on the old state
+    * builds on its first serve of the new one. */
+  def refreshable(spark: SparkSession, oldDir: String, newDir: String): Seq[ArtifactFamily] =
+    readable(spark, oldDir, newDir).filter(f => f.refresh.isDefined && f.built(spark, oldDir))
 
   /** Row key of each table a row-append family may read. */
   private val appendKey = Map("documents" -> "doc_id", "orders" -> "o_orderkey")

@@ -9,7 +9,7 @@ import graft.sources.{ArtifactFamily, Artifacts}
 
 /** Measure the incremental artifact refresh against a full from-scratch
   * rebuild on an APPENDED corpus, and prove digest equality for every
-  * refreshable family of the registry ([[ArtifactFamily.all]]).
+  * family of the registry with a refresh shape ([[ArtifactFamily.all]]).
   *
   * Usage: runMain graft.tools.ProbeRefresh <oldDir> <newDir> [batchFrac]
   *
@@ -23,8 +23,9 @@ import graft.sources.{ArtifactFamily, Artifacts}
   *              (multiset merge of existing histogram rows) and half
   *              shifted price/custkey values (new histogram rows).
   * Then:
-  *   phase old:     ensure oldDir's families exist (timed; ~0 when a
-  *                  prebuild leg already built them)
+  *   phase old:     build oldDir's generation of every family with a
+  *                  refresh shape (timed; ~0 when a prebuild leg
+  *                  already built them), so every one refreshes
   *   phase refresh: refresh each family incrementally onto newDir
   *   phase scratch: drop newDir's artifacts, rebuild each from scratch
   * and print one JSON line with per-family wall/CPU for both phases and
@@ -46,6 +47,11 @@ object ProbeRefresh {
       val (_, cpu, _) = CpuMeter.measure(spark)(body)
       ((System.nanoTime() - t0) / 1e9, cpu)
     }
+
+    // ---- phase old: the deployment precondition -----------------------
+    val (oldWall, oldCpu) = timed(ArtifactFamily.readable(spark, oldDir, newDir)
+      .filter(_.refresh.isDefined).foreach(_.serve(spark, oldDir)))
+    spark.catalog.clearCache()
     val fams = ArtifactFamily.refreshable(spark, oldDir, newDir)
     def phase(label: String)(step: ArtifactFamily => Unit): Map[String, (Double, Double)] = {
       val times = fams.map { f =>
@@ -61,9 +67,6 @@ object ProbeRefresh {
         f.canonical(spark.table(s"`${Artifacts.Db}`.`${f.name(spark, newDir)}`")))
     }.toMap
 
-    // ---- phase old: the deployment precondition -----------------------
-    val (oldWall, oldCpu) = timed(fams.foreach(_.serve(spark, oldDir)))
-    spark.catalog.clearCache()
     // a prior run (or its scratch phase) may have left newDir artifacts
     // behind — drop them so the refresh phase measures a real build
     fams.foreach(_.drop(spark, newDir))

@@ -10,8 +10,9 @@ import graft.sources.{ArtifactFamily, Artifacts}
   * ([[graft.sources.ArtifactFamily.refreshAfterAppend]], looped by
   * `Dedup.refreshArtifactsAfterAppend`): appending a batch updates the
   * label artifact at batch-probe cost — no corpus-wide propagation loop
-  * — reads no old corpus text, and every refreshed family is EXACTLY
-  * what a from-scratch rebuild produces.
+  * — reads no old corpus text, refreshes only what is built, and every
+  * family served on the appended state is EXACTLY what a from-scratch
+  * rebuild produces.
   */
 class IncrementalRefreshSpec extends SparkSpec {
   import spark.implicits._
@@ -97,10 +98,11 @@ class IncrementalRefreshSpec extends SparkSpec {
       s"chain must form one cluster labeled 0, got $v1")
 
     // upstream families first, in registry order, as
-    // refreshArtifactsAfterAppend runs them: the label fold reads the
-    // refreshed edges_ slice
+    // refreshArtifactsAfterAppend runs them; the label fold reads the
+    // edges_ slice, built on its first serve from the refreshed scored_
     ArtifactFamily.refreshable(spark, oldDir, newDir)
       .takeWhile(_ ne Dedup.Labels).foreach(_.refreshAfterAppend(spark, oldDir, newDir))
+    Dedup.Edges.serve(spark, newDir)
     var refreshedLabels: Set[(Long, Long)] = null
     val refreshJobs = countJobs {
       refreshedLabels = labelSet(Dedup.Labels.refreshAfterAppend(spark, oldDir, newDir))
@@ -139,19 +141,25 @@ class IncrementalRefreshSpec extends SparkSpec {
       "serving the refreshed artifact must not rebuild anything")
   }
 
-  /** Drop `newDir`'s copy of every family in `refreshed`, rebuild each
-    * from scratch, and return (family → canonical rows) for both. */
-  private def refreshedVsScratch(refreshed: Seq[(String, String)], newDir: String)
+  /** Serve every family in `families` on `newDir` after a refresh (a
+    * refreshed generation, or a first build over refreshed upstreams),
+    * then drop them all, rebuild each from scratch, and return (family →
+    * canonical rows) for both. */
+  private def refreshedVsScratch(families: Seq[ArtifactFamily], newDir: String)
       : (Map[String, Seq[String]], Map[String, Seq[String]]) = {
-    val family = ArtifactFamily.all.map(f => f.kind -> f).toMap
-    def rowsOf(fam: String, tbl: String): Seq[String] =
-      family(fam).canonical(spark.table(s"`${Artifacts.Db}`.`$tbl`"))
-        .collect().map(_.toString).sorted.toSeq
-    val incremental = refreshed.map { case (fam, tbl) => fam -> rowsOf(fam, tbl) }.toMap
-    refreshed.foreach { case (fam, _) => family(fam).drop(spark, newDir) }
-    refreshed.foreach { case (fam, _) => family(fam).serve(spark, newDir) }
-    (incremental, refreshed.map { case (fam, tbl) => fam -> rowsOf(fam, tbl) }.toMap)
+    def rows(): Map[String, Seq[String]] = families.map { f =>
+      f.kind -> f.canonical(f.serve(spark, newDir)).collect().map(_.toString).sorted.toSeq
+    }.toMap
+    val incremental = rows()
+    families.foreach(_.drop(spark, newDir))
+    (incremental, rows())
   }
+
+  private def assertRebuilt(incremental: Map[String, Seq[String]],
+      scratch: Map[String, Seq[String]], why: String): Unit =
+    incremental.keys.foreach { fam =>
+      assert(incremental(fam) === scratch(fam), s"family '$fam' diverged from the rebuild: $why")
+    }
 
   test("refreshArtifactsAfterAppend reads NO old corpus text: poisoning it (while " +
       "serving the real old generations) still yields the from-scratch rebuild") {
@@ -189,15 +197,12 @@ class IncrementalRefreshSpec extends SparkSpec {
     }
 
     val refreshed = Dedup.refreshArtifactsAfterAppend(spark, oldDir, newDir)
-    assert(refreshed.map(_._1) === families.map(_.kind))
-    val (incremental, scratch) = refreshedVsScratch(refreshed, newDir)
+    assert(refreshed.map(_._1) === families.filter(_.refresh.isDefined).map(_.kind))
+    val (incremental, scratch) = refreshedVsScratch(families, newDir)
     assert(incremental("labels").exists(_.contains("[100,10]")),
       s"fixture must merge both clusters through the bridge doc: ${incremental("labels")}")
-    refreshed.foreach { case (fam, _) =>
-      assert(incremental(fam) === scratch(fam),
-        s"family '$fam' diverged from the rebuild: its refresh re-read the (poisoned) " +
-          "old corpus text instead of the persisted old generation")
-    }
+    assertRebuilt(incremental, scratch, "its refresh re-read the (poisoned) old corpus " +
+      "text instead of the persisted old generation")
   }
 
   test("three chained refreshes with cross-batch and bridging merges equal " +
@@ -215,14 +220,18 @@ class IncrementalRefreshSpec extends SparkSpec {
         .write.parquet(s"$dir/documents.parquet")
       dir
     }
+    // every family built on the first state; the refreshes carry them on
+    ArtifactFamily.readable(spark, states.head).foreach(_.serve(spark, states.head))
     val refreshed = states.zip(states.tail).map { case (from, to) =>
       Dedup.refreshArtifactsAfterAppend(spark, from, to)
-    }.last
-    val (chained, scratch) = refreshedVsScratch(refreshed, states.last)
-    refreshed.foreach { case (fam, _) =>
-      assert(chained(fam) === scratch(fam),
-        s"family '$fam': chained refreshes must stay exactly equal to a from-scratch rebuild")
     }
+    val shaped = ArtifactFamily.all.filter(f => f.refresh.isDefined && f.reads == Seq("documents"))
+    assert(refreshed.forall(_.map(_._1) === shaped.map(_.kind)),
+      s"every documents family with a refresh shape refreshes each time: $refreshed")
+    val (chained, scratch) =
+      refreshedVsScratch(ArtifactFamily.readable(spark, states.last), states.last)
+    assertRebuilt(chained, scratch, "chained refreshes must stay exactly equal to a " +
+      "from-scratch rebuild")
     val labels = chained("labels")
     assert(Seq(10L, 11L, 20L, 21L, 102L).forall(d => labels.contains(s"[$d,10]")),
       s"round-3 bridge must merge the two v0 clusters: $labels")
@@ -246,6 +255,9 @@ class IncrementalRefreshSpec extends SparkSpec {
       .map { case (i, t) => (i, t, "en", "s", 100L) }
     v1Rows.toDF(cols: _*).write.parquet(s"$v1/documents.parquet")
     (v1Rows ++ batchRows).toDF(cols: _*).write.parquet(s"$v2/documents.parquet")
+    // every family built on the old state, as every query set would
+    def buildOld(): Unit = ArtifactFamily.readable(spark, v1).foreach(_.serve(spark, v1))
+    buildOld()
 
     // a documents-only state pair skips every family that reads orders
     val ordersFamilies = ArtifactFamily.all.filter(_.reads.contains("orders")).map(_.kind)
@@ -265,21 +277,69 @@ class IncrementalRefreshSpec extends SparkSpec {
       (i, i % 5, Seq("O", "P", "F")(i.toInt % 3), 90.5 + 7.75 * (i % 8), t0, s"${i % 5}-PRIO"))
     ordersOf(oldOrders).write.parquet(s"$v1/orders.parquet")
     ordersOf(oldOrders ++ batchOrders).write.parquet(s"$v2/orders.parquet")
+    buildOld()
 
     val refreshed = Dedup.refreshArtifactsAfterAppend(spark, v1, v2)
-    assert(refreshed.map(_._1) ===
-      ArtifactFamily.all.filter(_.refresh != ArtifactFamily.NoRefresh).map(_.kind),
-      "every family with a refresh shape must refresh, in registry order")
-    // from-scratch control: drop every v2 artifact (files + entries),
-    // then let the ordinary cold-build path rebuild each family
-    val (incremental, scratch) = refreshedVsScratch(refreshed, v2)
+    assert(refreshed.map(_._1) === ArtifactFamily.all.filter(_.refresh.isDefined).map(_.kind),
+      "every built family with a refresh shape must refresh, in registry order")
+    // from-scratch control: every family served on v2, then dropped
+    // (files + entries) and rebuilt by the ordinary cold-build path
+    val families = ArtifactFamily.readable(spark, v2)
+    assert(families === ArtifactFamily.all.filter(_.reads.forall(Set("documents", "orders"))))
+    val (incremental, scratch) = refreshedVsScratch(families, v2)
     // the refresh must have found actual work: batch docs appear in the
     // per-row families and the bridge doc merges the clusters
     assert(incremental("labels").exists(_.contains("[100,10]")),
       s"bridge doc must carry the merged min label: ${incremental("labels")}")
-    refreshed.foreach { case (fam, _) =>
-      assert(incremental(fam) === scratch(fam),
-        s"family '$fam' incremental refresh must equal the from-scratch rebuild")
+    assertRebuilt(incremental, scratch, "the incremental refresh (or the first build over " +
+      "refreshed upstreams) must equal the from-scratch rebuild")
+  }
+
+  test("an append refreshes only what is built: an unbuilt family gets no old generation, " +
+      "and a built one with no catalog entry is linked from its files") {
+    val v1 = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "inc-built-v1-").toString
+    val v2 = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "inc-built-v2-").toString
+    val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
+    val v1Rows = Seq(10L -> docA, 11L -> docA2, 20L -> docB, 21L -> docB2)
+      .map { case (i, t) => (i, t, "en", "s", 100L) }
+    val batchRows = Seq((100L, docC, "en", "s", 100L))
+    v1Rows.toDF(cols: _*).write.parquet(s"$v1/documents.parquet")
+    (v1Rows ++ batchRows).toDF(cols: _*).write.parquet(s"$v2/documents.parquet")
+
+    // only h60 is built on the old state, and its catalog entry is gone
+    // as in a cold JVM: only its files remain
+    Dedup.H60.serve(spark, v1)
+    val h60Old = Dedup.H60.name(spark, v1)
+    Artifacts.dropEntry(spark, h60Old)
+    val oldLoc = Artifacts.location(spark, h60Old)
+    val fs = oldLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataFiles(loc: org.apache.hadoop.fs.Path) =
+      fs.listStatus(loc).map(_.getPath).filterNot(p => p.getName.matches("[._].*"))
+    val oldFiles = dataFiles(oldLoc)
+
+    val refreshed = Dedup.refreshArtifactsAfterAppend(spark, v1, v2)
+    assert(refreshed.map(_._1) === Seq("h60"), "only the built family refreshes")
+    val unbuilt = ArtifactFamily.readable(spark, v1).filterNot(_ eq Dedup.H60)
+      .map(_.name(spark, v1)).filter(t => fs.exists(Artifacts.location(spark, t)))
+    assert(unbuilt.isEmpty, s"the refresh built old generations nothing served: $unbuilt")
+    assert(!spark.catalog.tableExists(s"${Artifacts.Db}.$h60Old"),
+      "the refresh served h60's old generation instead of reading its files")
+    // the new generation holds every old data file as a link, not a copy
+    val linked = dataFiles(Artifacts.location(spark, refreshed.head._2))
+      .filter(_.getName.startsWith("prev_")).map(p => p.getName -> p).toMap
+    assert(linked.keySet === oldFiles.map("prev_" + _.getName).toSet)
+    oldFiles.foreach { p =>
+      assert(java.nio.file.Files.isSameFile(java.nio.file.Paths.get(p.toUri.getPath),
+        java.nio.file.Paths.get(linked("prev_" + p.getName).toUri.getPath)), s"$p was not linked")
     }
+
+    // every family's first serve on the new state equals a from-scratch build
+    val (incremental, scratch) = refreshedVsScratch(ArtifactFamily.readable(spark, v2), v2)
+    assert(incremental("labels").exists(_.contains("[100,10]")),
+      s"bridge doc must carry the merged min label: ${incremental("labels")}")
+    assertRebuilt(incremental, scratch, "a first serve after the append must equal " +
+      "the from-scratch rebuild")
   }
 }

@@ -52,11 +52,17 @@ object InvariantProps extends Properties("graft.invariants") {
       // rows: (partkey, orderkey) in period 1 (cur) / period 2 (pre)
       val df = (cur.map { case (o, k) => (k, o, 1) } ++
         pre.map { case (o, k) => (k, o, 2) }).toDF("k", "o", "p")
-      val fused = df.groupBy(col("k")).agg(
-          countDistinct(when(col("p") === 1, col("o"))).as("c"),
-          countDistinct(when(col("p") === 2, col("o"))).as("q"))
-        .where(col("c") > 0)
+      def triples(agg: org.apache.spark.sql.DataFrame) = agg.where(col("c") > 0)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val fused = triples(df.groupBy(col("k")).agg(
+        countDistinct(when(col("p") === 1, col("o"))).as("c"),
+        countDistinct(when(col("p") === 2, col("o"))).as("q")))
+      // CartAnalytics.periodIncrease's form: per-(part, order) period
+      // flags, summed per part
+      val flagged = triples(df.groupBy(col("k"), col("o"))
+        .agg(max(when(col("p") === 1, 1L).otherwise(0L)).as("c"),
+          max(when(col("p") === 2, 1L).otherwise(0L)).as("q"))
+        .groupBy(col("k")).agg(sum(col("c")).as("c"), sum(col("q")).as("q")))
       val curAgg = df.where(col("p") === 1).groupBy(col("k"))
         .agg(countDistinct(col("o")).as("c"))
       val preAgg = df.where(col("p") === 2).groupBy(col("k"))
@@ -64,7 +70,7 @@ object InvariantProps extends Properties("graft.invariants") {
       val joined = curAgg.join(preAgg, Seq("k"), "left_outer")
         .select(col("k"), col("c"), coalesce(col("q"), lit(0L)))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      fused == joined
+      fused == joined && flagged == joined
     }
 
   property("decimal money sum is invariant under permutation and partitioning") =

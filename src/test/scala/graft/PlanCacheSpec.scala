@@ -135,11 +135,8 @@ class PlanCacheSpec extends SparkSpec {
 
   test("a hit plans exactly as a full construction does, for every query") {
     // the DumpPlans view (masked formatted plans). A hit plans as the
-    // construction it reuses did, byte for byte. Against a construction
-    // with the cache cleared it can differ only where Spark's
-    // RewriteDistinctAggregates orders an Expand's projections by a hash
-    // over expression ids, which every full construction draws anew
-    // (q03/q04 differ between two full constructions the same way).
+    // construction it reuses did, and as a construction with the cache
+    // cleared does, byte for byte.
     def plan(df: DataFrame) = tools.DumpPlans.canon(df.queryExecution.explainString(FormattedMode))
     val checked = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot(_._1 == "d06_neardup_clusters")
@@ -150,7 +147,7 @@ class PlanCacheSpec extends SparkSpec {
         val (h, df) = hit(build(spark, sf))
         val fromHit = plan(df)
         PlanCache.clear()
-        (q, h, fromHit == recorded, fromHit == plan(build(spark, sf)) || fromHit.contains("Expand"))
+        (q, h, fromHit == recorded, fromHit == plan(build(spark, sf)))
       }
     val notReused = checked.collect { case (q, false, _, _) => q }
     val unlikeRecorded = checked.collect { case (q, _, false, _) => q }
