@@ -268,17 +268,6 @@ object Dedup {
       .groupBy(col("c.doc_a"), col("c.doc_b"))
       .agg(count(lit(1)).as("shared"))
 
-  /** The SCORED LSH candidate table over a shingle frame: every band-
-    * collision pair with its minhash agreement estimate, both set sizes,
-    * and the exact shared-shingle count (null when the colliding pair
-    * shares no shingle). This is the one pair population the LSH family
-    * acts on — d03's top-k view, d14's threshold sweep, and the edge
-    * set d08/d09/s08 cluster over are all projections of it. */
-  private[graft] def scoredCandidatesFromShingles(sh: DataFrame): DataFrame = {
-    val sig = lshSignatures(sh)
-    scoreCandidates(lshCandidates(sig), sig, sh)
-  }
-
   /** The scoring tail of the scored-candidate table, factored out so the
     * incremental refresh path can score a BATCH-RESTRICTED candidate set
     * against a batch-restricted signature/shingle slice with the exact
@@ -299,8 +288,16 @@ object Dedup {
     withEst.join(sharedCounts(cand, sh), Seq("doc_a", "doc_b"), "left_outer")
   }
 
-  private[graft] def scoredCandidatesOf(docs: DataFrame): DataFrame =
-    scoredCandidatesFromShingles(shinglesOf(docs))
+  /** The SCORED LSH candidate table over ANY (doc_id, text) frame: every
+    * band-collision pair with its minhash agreement estimate, both set
+    * sizes, and the exact shared-shingle count (null when the colliding
+    * pair shares no shingle). The one pair population the LSH family acts
+    * on — d03's top-k view, d14's sweep and the d08/d09/s08 edge set. */
+  private[graft] def scoredCandidatesOf(docs: DataFrame): DataFrame = {
+    val sh = shinglesOf(docs)
+    val sig = lshSignatures(sh)
+    scoreCandidates(lshCandidates(sig), sig, sh)
+  }
 
   /** d03's top-k tail over a scored candidate frame. */
   private def minhashTopK(scored: DataFrame): DataFrame = {
@@ -322,34 +319,23 @@ object Dedup {
     * contam_/contaud_ argument one level deeper: the band joins + exact
     * verification are index state shared by THREE consumers (d03 view,
     * d14 sweep, the edges_* build), so they run once per corpus state.
-    * Keyed by the raw derivation; the build reads the served shingle
-    * artifact. est_raw is k/16 (exact in binary) and the counts are
-    * longs, so the parquet round trip is bit-identical to recompute.
+    * Keyed by the raw derivation; the build reads the served signature
+    * index ([[DedupSig]]) and shingles. est_raw is k/16 (exact in binary)
+    * and the counts are longs, so serve ≡ recompute bit for bit.
     *
     * Append refresh: old×old pairs are the old artifact verbatim; pairs
-    * touching the batch are found by band-probing the old SIGNATURE
-    * artifact with batch signatures (canonicalized to doc_a < doc_b like
-    * the from-scratch self-join) plus the batch self-pairs, then scored
-    * by [[scoreCandidates]] over batch shingles ∪ the band-collided slice
-    * of the old SHINGLE artifact (semi-join pushdown into the
-    * doc_id-clustered table). No old text is read; old index rows are
-    * read only for collided docs. */
+    * touching the batch come from [[batchProbe]]. No old text is read. */
   private[graft] lazy val Scored: ArtifactFamily = new ArtifactFamily("scored", Docs,
     defining = (spark, dir) => scoredCandidatesOf(Tables.load(spark, dir, "documents")))(
-    build = (spark, dir) =>
-      scoredCandidatesFromShingles(persistOnce(Shingles.serve(spark, dir))),
+    build = (spark, dir) => {
+      val sig = persistOnce(signatureRows(DedupSig.serve(spark, dir)))
+      scoreCandidates(lshCandidates(sig), sig, persistOnce(Shingles.serve(spark, dir)))
+    },
     refresh = Some(Fold { (spark, oldDir, newDir) =>
-      val oldIdx = DedupSig.serve(spark, oldDir)
-      val shB = shinglesOf(appendedBatch(spark, oldDir, newDir).select(col("doc_id"), col("text")))
-      val sigB = lshSignatures(shB)
-      val candB = persistOnce(batchCandidates(sigB, oldIdx))
-      val touched = endpoints(candB)
-      val sigCols = col("doc_id") +: (0 until NumHashes).map(i => col(s"mh$i")) :+ col("n")
-      val sig = sigB.select(sigCols: _*).unionAll(
-        oldIdx.select(sigCols: _*).join(touched, Seq("doc_id"), "left_semi"))
-      val sh = shB.unionAll(
-        Shingles.serve(spark, oldDir).join(touched, Seq("doc_id"), "left_semi"))
-      Scored.serve(spark, oldDir).unionAll(scoreCandidates(candB, sig, sh))
+      val (cand, sig, sh) = batchProbe(
+        shinglesOf(appendedBatch(spark, oldDir, newDir).select(col("doc_id"), col("text"))),
+        signatureRows(DedupSig.serve(spark, oldDir)), Shingles.serve(spark, oldDir))
+      Scored.serve(spark, oldDir).unionAll(scoreCandidates(cand, sig, sh))
     }))
 
   def d03MinhashLsh(spark: SparkSession, dir: String): DataFrame =
@@ -1065,37 +1051,23 @@ object Dedup {
     * pairs: the audit's band join + exact verification over the
     * excerpt-augmented corpus runs once per corpus state and every
     * later read pays a table scan. Keyed by the RAW audit derivation;
-    * the build derives its shingles from the served shingle artifact
-    * (sh(docs ∪ excerpts) = served_sh(docs) ∪ sh(excerpts) — shingling
-    * is per-row and the excerpt ids are provably disjoint), so a cold
-    * build re-walks only the 1/17 excerpt slice, not the corpus. The
-    * rounded doubles round-trip parquet bit-exactly (IEEE), so serve ≡
-    * recompute.
+    * the build ([[d16Derive]]) signs only the 1/17 excerpt slice and
+    * walks no corpus text. The rounded doubles round-trip parquet
+    * bit-exactly (IEEE), so serve ≡ recompute.
     *
     * Append refresh (r17 verdict task 3): pairs split by endpoint
-    * membership exactly like scored_ — band collisions and every scored
-    * value depend only on the two endpoint docs — so old×old pairs are
-    * the old artifact verbatim, and pairs touching the AUGMENTED batch
-    * (batch docs + batch excerpts) come from band-probing the old
-    * contsig_ index with batch signatures plus the batch self-join. The
-    * old corpus is touched only through its artifacts (contsig_ for
-    * signatures, shingles_ ∪ exsh_ semi-joined to collided docs for
-    * verification) — NO old text is read. */
+    * membership exactly like scored_, so old×old pairs are the old
+    * artifact verbatim and pairs touching the AUGMENTED batch (batch docs
+    * + batch excerpts) come from [[batchProbe]]. NO old text is read. */
   private[graft] lazy val ContAudit: ArtifactFamily = new ArtifactFamily("contaud", Docs,
     defining = (spark, dir) => containmentAudit(excerptAugmented(spark, dir)))(
     build = d16Derive,
     refresh = Some(Fold { (spark, oldDir, newDir) =>
-      val oldSig = ContSig.serve(spark, oldDir)
-      val shB = shinglesOf(augmentedOf(appendedBatch(spark, oldDir, newDir)))
-      val sigB = lshSignatures(shB)
-      val candB = persistOnce(batchCandidates(sigB, oldSig))
-      val touched = endpoints(candB)
-      val sh = shB.unionAll(Shingles.serve(spark, oldDir)
-        .unionAll(ExcerptShingles.serve(spark, oldDir))
-        .join(touched, Seq("doc_id"), "left_semi"))
-      val sizes = sigB.select(col("doc_id"), col("n")).unionAll(
-        oldSig.select(col("doc_id"), col("n")).join(touched, Seq("doc_id"), "left_semi"))
-      ContAudit.serve(spark, oldDir).unionAll(scoreContainment(candB, sh, sizes))
+      val (cand, sig, sh) = batchProbe(
+        shinglesOf(augmentedOf(appendedBatch(spark, oldDir, newDir))),
+        augmentedSig(spark, oldDir), augmentedShingles(spark, oldDir))
+      ContAudit.serve(spark, oldDir)
+        .unionAll(scoreContainment(cand, sh, sig.select(col("doc_id"), col("n"))))
     }))
 
   /** Excerpt-row shingles as a PERSISTED CATALOG ARTIFACT (r18, the
@@ -1109,30 +1081,23 @@ object Dedup {
     defining = (spark, dir) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))))(
     refresh = Some(RowAppend(batch => shinglesOf(excerptsOf(batch)))))
 
-  /** MinHash signatures of the EXCERPT-AUGMENTED corpus as a persisted
-    * artifact — the probe index the contaud_ refresh band-probes with
-    * batch signatures (the scored_ economics applied to d16): without
-    * it, any corpus append had to re-derive every augmented signature
-    * before the audit could be refreshed. Keyed by the raw derivation;
-    * the build composes the served real-doc and excerpt shingle
-    * artifacts (exact longs → serve ≡ recompute). Per-DOC rows (batch
-    * docs + batch excerpts) → file-level append refresh. */
-  private[graft] lazy val ContSig: ArtifactFamily = new ArtifactFamily("contsig", Docs,
-    defining = (spark, dir) => lshSignatures(shinglesOf(excerptAugmented(spark, dir))))(
-    build = (spark, dir) => lshSignatures(persistOnce(Shingles.serve(spark, dir)
-      .unionAll(ExcerptShingles.serve(spark, dir)))),
-    refresh = Some(RowAppend(batch => lshSignatures(shinglesOf(augmentedOf(batch))))))
+  /** sh(docs ∪ excerpts) = served_sh(docs) ∪ served_exsh(docs):
+    * shingling is per-row and the excerpt ids are disjoint. */
+  private def augmentedShingles(spark: SparkSession, dir: String): DataFrame =
+    Shingles.serve(spark, dir).unionAll(ExcerptShingles.serve(spark, dir))
 
-  /** The d16 DERIVATION body over the served shingle/signature
-    * artifacts — what [[ContAudit]] materializes once
-    * per corpus state. sh(docs ∪ excerpts) = served_sh(docs) ∪
-    * served_exsh(docs) (shingling is per-row, excerpt ids disjoint),
-    * and the signature table is the served contsig_ — a cold audit
-    * build never re-walks corpus text. */
+  /** The signatures of [[augmentedShingles]]: the served index's rows
+    * plus the excerpts signed from their served shingles (a signature
+    * reads only its own doc's shingles). */
+  private def augmentedSig(spark: SparkSession, dir: String): DataFrame =
+    signatureRows(DedupSig.serve(spark, dir))
+      .unionAll(lshSignatures(ExcerptShingles.serve(spark, dir)))
+
+  /** The d16 DERIVATION body over the served artifacts — what
+    * [[ContAudit]] materializes once per corpus state. */
   private[graft] def d16Derive(spark: SparkSession, dir: String): DataFrame = {
-    val sh = persistOnce(
-      Shingles.serve(spark, dir).unionAll(ExcerptShingles.serve(spark, dir)))
-    val sig = persistOnce(ContSig.serve(spark, dir))
+    val sh = persistOnce(augmentedShingles(spark, dir))
+    val sig = persistOnce(augmentedSig(spark, dir))
     scoreContainment(lshCandidates(sig), sh, sig.select(col("doc_id"), col("n")))
   }
 
@@ -1630,8 +1595,9 @@ object Dedup {
   // Persisted DEDUP INDEX artifacts (VERDICT r7 task 2): the per-doc
   // signature row (text md5 + MinHash signature + set size) and the
   // doc-shingle index, materialized ONCE per corpus like the label and
-  // centroid tables. These are what make the incremental paths (d10
-  // probe, label refresh) genuinely batch-scale: without them every
+  // centroid tables; dedupsig_ is the ONE corpus-wide signature index.
+  // These are what make the incremental paths (d10 probe, label refresh)
+  // genuinely batch-scale: without them every
   // "incremental" run re-shingled and re-signed the full existing
   // corpus — a daily 100 TB text scan on a daily-append pipeline, the
   // exact cost class the incremental operators exist to avoid. The
@@ -1644,24 +1610,30 @@ object Dedup {
     * (band-candidate probes). LEFT join keeps docs with <3 words
     * (no shingles): their null band keys can never equi-match, but
     * their md5 still serves exact-dup checks. */
-  private[graft] def dedupIndexOf(docs: DataFrame): DataFrame = dedupIndexParts(docs)._1
+  private[graft] def dedupIndexOf(docs: DataFrame): DataFrame =
+    dedupIndexFrom(docs, lshSignatures(shinglesOf(docs.select(col("doc_id"), col("text")))))
 
-  /** [[dedupIndexOf]]'s rows with the shingle and signature frames they
-    * join, whose caches a caller may release. */
-  private def dedupIndexParts(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val sh = shinglesOf(docs.select(col("doc_id"), col("text")))
-    val sig = lshSignatures(sh)
-    (docs.select(col("doc_id"), md5(col("text")).as("text_md5"))
-      .join(sig, Seq("doc_id"), "left_outer"), sh, sig)
-  }
+  /** [[dedupIndexOf]] given the signature rows of `docs`. */
+  private def dedupIndexFrom(docs: DataFrame, sig: DataFrame): DataFrame =
+    docs.select(col("doc_id"), md5(col("text")).as("text_md5"))
+      .join(sig, Seq("doc_id"), "left_outer")
 
   /** The per-doc signature index, served as a persisted catalog
     * artifact. Build-once: every incremental consumer probes this table
-    * instead of re-signing the corpus. Per-row derivation (md5 +
-    * own-shingle MinHash) → file-level append refresh. */
+    * instead of re-signing the corpus; the build signs the served
+    * shingles and reads the text only for its md5. Per-row derivation
+    * (md5 + own-shingle MinHash) → file-level append refresh. */
   private[graft] lazy val DedupSig: ArtifactFamily = new ArtifactFamily("dedupsig", Docs,
     defining = (spark, dir) => dedupIndexOf(Tables.load(spark, dir, "documents")))(
+    build = (spark, dir) =>
+      dedupIndexFrom(docText(spark, dir), lshSignatures(Shingles.serve(spark, dir))),
     refresh = Some(RowAppend(dedupIndexOf)))
+
+  /** The signature rows (doc_id, mh0..mh15, n) of a [[DedupSig]] table:
+    * the docs that have a signature. */
+  private def signatureRows(idx: DataFrame): DataFrame =
+    idx.where(col("n").isNotNull)
+      .select(col("doc_id") +: (0 until NumHashes).map(i => col(s"mh$i")) :+ col("n"): _*)
 
   /** The doc-shingle inverted-index rows, served as a persisted catalog
     * artifact. The build clusters rows by doc_id (range partition +
@@ -1878,8 +1850,9 @@ object Dedup {
     * (see [[graft.streaming.DedupStream]]). */
   private[graft] def withBatchIndex[A](batch: DataFrame)(
       sink: (DataFrame, DataFrame) => A): A = {
-    val (idx, sh, sig) = dedupIndexParts(batch)
-    try sink(idx, sh)
+    val sh = shinglesOf(batch.select(col("doc_id"), col("text")))
+    val sig = lshSignatures(sh)
+    try sink(dedupIndexFrom(batch, sig), sh)
     finally { sig.unpersist(false); sh.unpersist(false) }
   }
 
@@ -2041,10 +2014,11 @@ object Dedup {
   // ROW-IDENTICAL to a from-scratch rebuild
   // ([[graft.sources.ArtifactFamily.Refresh]]): per-row families link
   // the old generation and add batch rows; scored_, contam_, contaud_
-  // and labels_ fold the batch into the old generation. Only what is
-  // built refreshes; every other family (edges_ and the profile
-  // statistics have no shape) builds on its first serve of the new
-  // state, from its refreshed upstream. Each refresh persists under the
+  // and labels_ fold the batch into the old generation, serving on the
+  // old state only what their build serves. Only what is built
+  // refreshes; every other family (edges_ and the profile statistics
+  // have no shape) builds on its first serve of the new state, from its
+  // refreshed upstream. Each refresh persists under the
   // NEW state's own key (the same key a from-scratch build computes), so
   // later cold sessions serve the incrementally-built table
   // transparently and serve ≡ recompute stays a checked contract.
@@ -2054,19 +2028,24 @@ object Dedup {
   private def appendedBatch(spark: SparkSession, oldDir: String, newDir: String): DataFrame =
     ArtifactFamily.appendedRows(spark, "documents", oldDir, newDir)
 
-  /** Band candidates touching a batch: batch signatures probed against
-    * an existing signature index (canonicalized to doc_a < doc_b like the
-    * from-scratch self-join) plus the batch self-pairs. */
-  private def batchCandidates(sigB: DataFrame, oldSig: DataFrame): DataFrame =
-    bandCandidates(sigB, oldSig, canonical = false)
+  /** The band probe of an appended batch (the scored_ and contaud_
+    * folds): the signed batch shingles `shB` probe the old signature rows
+    * `oldSig` (canonicalized to doc_a < doc_b like the self-join) and
+    * themselves. Returns the batch-touching candidates and the signature
+    * and shingle rows of their endpoints: batch rows ∪ the band-collided
+    * slice of `oldSig` and `oldSh`, all a scoring tail reads. */
+  private def batchProbe(shB: DataFrame, oldSig: DataFrame, oldSh: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val sigB = lshSignatures(shB)
+    val cand = persistOnce(bandCandidates(sigB, oldSig, canonical = false)
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      .unionAll(bandCandidates(sigB, sigB, canonical = true))
-
-  /** The distinct endpoint doc_ids of a candidate pair set. */
-  private def endpoints(cand: DataFrame): DataFrame =
-    cand.select(col("doc_a").as("doc_id"))
+      .unionAll(bandCandidates(sigB, sigB, canonical = true)))
+    val touched = cand.select(col("doc_a").as("doc_id"))
       .unionAll(cand.select(col("doc_b").as("doc_id"))).distinct()
+    (cand, sigB.unionAll(oldSig.join(touched, Seq("doc_id"), "left_semi")),
+      shB.unionAll(oldSh.join(touched, Seq("doc_id"), "left_semi")))
+  }
 
   /** Refresh every BUILT family that has a refresh shape for the corpus
     * at `newDir` (= `oldDir` plus an appended batch) — the deployment's

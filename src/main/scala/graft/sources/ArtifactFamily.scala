@@ -21,7 +21,9 @@ import graft.Tables
   * documents families' tables in place, and the reverse.
   *
   * An append refreshes what is built ([[refreshable]]); every other
-  * family builds on its first serve of the new state.
+  * family builds on its first serve of the new state. A `Fold` serves,
+  * on the old state, only families its build serves, so a refresh
+  * writes no old generation that nothing served.
   *
   * A family earns its place by reuse: at least two consumers, or an
   * append refresh. A family that would persist one query's final
@@ -161,7 +163,7 @@ object ArtifactFamily {
   lazy val all: Seq[ArtifactFamily] = {
     import graft.operators.{CartAnalytics => C, Dedup => D, Similarity => S, TextAnalysis => T}
     Seq(D.Shingles, D.H60, D.DedupSig, D.Scored, D.Edges, D.Contam, D.Labels,
-      T.WordTf, T.BigramTf, D.Spans, D.ExcerptShingles, D.ContSig, D.ContAudit,
+      T.WordTf, T.BigramTf, D.Spans, D.ExcerptShingles, D.ContAudit,
       C.ProfHist, C.ProfileStats, C.ProfStrHist, C.ProfileStrStats,
       S.Centroids, S.KnnGraph, S.KnnLabels, S.SemVerdicts)
   }

@@ -37,10 +37,13 @@ object DumpPlans {
   /** `plan` with the ids that vary from JVM to JVM (and from one
     * construction to the next) masked, so two dumps of the same plan are
     * byte-comparable: expression ids (`#123`), exchange plan ids
-    * (`[plan_id=7]`), RDD ids (`MapPartitionsRDD[222]`) and lambda
-    * addresses (`$Lambda$6022/0x00007efc1166a630@471142b7`). */
+    * (`[plan_id=7]`), RDD ids (`MapPartitionsRDD[222]`), lambda
+    * addresses (`$Lambda$6022/0x00007efc1166a630@471142b7`) and source
+    * lines of call sites (`localCheckpoint at Dedup.scala:763`), which
+    * move with any edit above them. */
   private[graft] def canon(plan: String): String =
     plan.replaceAll("#\\d+L?", "#_")
+      .replaceAll("(\\w\\.scala):\\d+", "$1:_")
       .replaceAll("\\[plan_id=\\d+\\]", "[plan_id=_]")
       .replaceAll("RDD\\[\\d+\\]", "RDD[_]")
       .replaceAll("\\$Lambda[$/\\w]*@[0-9a-f]+", "\\$Lambda_")

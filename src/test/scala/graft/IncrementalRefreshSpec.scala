@@ -341,5 +341,21 @@ class IncrementalRefreshSpec extends SparkSpec {
       s"bridge doc must carry the merged min label: ${incremental("labels")}")
     assertRebuilt(incremental, scratch, "a first serve after the append must equal " +
       "the from-scratch rebuild")
+
+    // a fold serves, on the old state, only generations its build served:
+    // each folded family built alone on v1 refreshes without writing any
+    // other v1 generation
+    val folded = ArtifactFamily.all.filter(_.refresh.exists(_.isInstanceOf[ArtifactFamily.Fold]))
+    assert(folded.map(_.kind) === Seq("scored", "contam", "labels", "contaud"))
+    def builtOn(dir: String): Set[String] = ArtifactFamily.readable(spark, dir)
+      .map(_.name(spark, dir)).filter(t => fs.exists(Artifacts.location(spark, t))).toSet
+    folded.foreach { f =>
+      ArtifactFamily.readable(spark, v1, v2).foreach { g => g.drop(spark, v1); g.drop(spark, v2) }
+      f.serve(spark, v1)
+      val built = builtOn(v1)
+      Dedup.refreshArtifactsAfterAppend(spark, v1, v2)
+      assert(builtOn(v1) -- built === Set.empty[String],
+        s"refreshing ${f.kind} wrote old generations its build never served")
+    }
   }
 }

@@ -131,6 +131,9 @@ class PlanCacheSpec extends SparkSpec {
     val build = SparkEntry.queries("d06_neardup_clusters")
     val hits = (1 to 3).map(_ => hit(build(spark, sf))._1)
     assert(!hits.exists(identity), "d06's construction runs jobs and must never be reused")
+    // its plan names the checkpoint's call site, which the dump masks
+    val dumped = tools.DumpPlans.canon(build(spark, sf).queryExecution.explainString(FormattedMode))
+    assert("""\.scala:\d+""".r.findFirstIn(dumped).isEmpty, s"unmasked call site:\n$dumped")
   }
 
   test("a hit plans exactly as a full construction does, for every query") {

@@ -283,26 +283,20 @@ class PlanSpec extends SparkSpec {
     // one task — the exact anti-pattern the bench log flags as
     // `WindowExec: No Partition Defined`. None of the engine's plans may
     // contain one — INCLUDING inside persisted subtrees, which appear as
-    // InMemoryRelation leaves and would otherwise hide their interior.
+    // InMemoryRelation leaves and would otherwise hide their interior
+    // (their physical plans are searched by ExplainAll's own check).
     // Known scope limit: localCheckpoint'ed subtrees (the d06/d08
     // propagation loop) execute during construction and surface only as
     // LogicalRDD leaves, so their interiors are not inspectable here —
     // they contain no windows by construction (joins+aggregates only).
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LWindow}
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
-    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
-    def badPhysical(p: SparkPlan): Seq[String] = p.collect {
-      case w: WindowExec if w.partitionSpec.isEmpty => Seq(w.nodeName)
-      case a: AdaptiveSparkPlanExec => badPhysical(a.executedPlan)
-      case s: InMemoryTableScanExec => badPhysical(s.relation.cachedPlan)
-    }.flatten
     def badLogical(p: LogicalPlan): Seq[String] = p.collect {
-      case w: LWindow if w.partitionSpec.isEmpty => Seq(w.nodeName)
-      case r: InMemoryRelation => badPhysical(r.cachedPlan)
-    }.flatten
+      case w: LWindow if w.partitionSpec.isEmpty => w.nodeName
+      case r: InMemoryRelation if tools.ExplainAll.unpartitionedWindow(r.cachedPlan) =>
+        s"${r.nodeName} holding a Window"
+    }
 
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val bad = badLogical(fn(spark, sf).queryExecution.optimizedPlan)
@@ -615,6 +609,17 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("Window") && !plan.contains("SortMergeJoin") &&
       !plan.contains("CartesianProduct"), s"expected a pure aggregate plan:\n$plan")
     assert(plan.contains("Union"), s"augmented view should be a union:\n$plan")
+  }
+
+  test("ExplainAll flags a window with no partition spec, and only that window") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    val df = spark.range(10).withColumn("g", col("id") % 3)
+    def flagged(w: org.apache.spark.sql.expressions.WindowSpec) = tools.ExplainAll
+      .unpartitionedWindow(df.withColumn("r", row_number().over(w)).queryExecution.executedPlan)
+    assert(flagged(Window.orderBy(col("id"))), "an order-only window must be flagged")
+    assert(!flagged(Window.partitionBy(col("g")).orderBy(col("id"))),
+      "a partitioned window must not be flagged")
   }
 
   test("d14: sweep cumulative is a broadcast theta-join over bucket rows, not a zero-partition window") {
