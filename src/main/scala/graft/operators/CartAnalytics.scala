@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
 import graft.sources.{ArtifactFamily, ContentMemo}
-import graft.sources.ArtifactFamily.RowAppend
+import graft.sources.ArtifactFamily.Append
 
 /** Reference-parity analytics re-expressed on the synthetic star schema.
   *
@@ -564,14 +564,14 @@ object CartAnalytics {
   private[graft] lazy val ProfHist: ArtifactFamily = new ArtifactFamily("profhist",
     Orders,
     defining = (spark, dir) => Profile.histogram(ord(spark, dir), ProfileNumCols))(
-    refresh = Some(RowAppend(batch => Profile.histogram(batch, ProfileNumCols))),
+    refresh = Some(Append((_, _, batch) => Profile.histogram(batch, ProfileNumCols))),
     multisetCount = Some("c"))
 
   /** q17's string-histogram twin (profstrh_). */
   private[graft] lazy val ProfStrHist: ArtifactFamily = new ArtifactFamily("profstrh",
     Orders,
     defining = (spark, dir) => Profile.stringHistogram(ord(spark, dir), ProfileStrCols))(
-    refresh = Some(RowAppend(batch => Profile.stringHistogram(batch, ProfileStrCols))),
+    refresh = Some(Append((_, _, batch) => Profile.stringHistogram(batch, ProfileStrCols))),
     multisetCount = Some("c"))
 
   /** q15's statistics. Key: the full (histogram → statistics) derivation

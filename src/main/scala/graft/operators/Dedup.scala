@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.SharedHash._
 import graft.sources.ArtifactFamily
-import graft.sources.ArtifactFamily.{Fold, RowAppend}
+import graft.sources.ArtifactFamily.{Append, Fold}
 
 /** Deduplication operators over the `documents` table — the core of a
   * training-data pipeline at 100 TB.
@@ -323,19 +323,19 @@ object Dedup {
     * index ([[DedupSig]]) and shingles. est_raw is k/16 (exact in binary)
     * and the counts are longs, so serve ≡ recompute bit for bit.
     *
-    * Append refresh: old×old pairs are the old artifact verbatim; pairs
-    * touching the batch come from [[batchProbe]]. No old text is read. */
+    * Append refresh: old×old pairs are the old artifact's files, linked;
+    * pairs touching the batch come from [[batchProbe]]. No old text is
+    * read. */
   private[graft] lazy val Scored: ArtifactFamily = new ArtifactFamily("scored", Docs,
     defining = (spark, dir) => scoredCandidatesOf(Tables.load(spark, dir, "documents")))(
     build = (spark, dir) => {
       val sig = persistOnce(signatureRows(DedupSig.serve(spark, dir)))
       scoreCandidates(lshCandidates(sig), sig, persistOnce(Shingles.serve(spark, dir)))
     },
-    refresh = Some(Fold { (spark, oldDir, newDir) =>
-      val (cand, sig, sh) = batchProbe(
-        shinglesOf(appendedBatch(spark, oldDir, newDir).select(col("doc_id"), col("text"))),
+    refresh = Some(Append { (spark, oldDir, batch) =>
+      val (cand, sig, sh) = batchProbe(shinglesOf(batch.select(col("doc_id"), col("text"))),
         signatureRows(DedupSig.serve(spark, oldDir)), Shingles.serve(spark, oldDir))
-      Scored.serve(spark, oldDir).unionAll(scoreCandidates(cand, sig, sh))
+      scoreCandidates(cand, sig, sh)
     }))
 
   def d03MinhashLsh(spark: SparkSession, dir: String): DataFrame =
@@ -872,7 +872,7 @@ object Dedup {
     * the round trip is bit-identical to recompute. */
   private[graft] lazy val H60: ArtifactFamily = new ArtifactFamily("h60", Docs,
     defining = (spark, dir) => hashed60ShinglesOf(docText(spark, dir)))(
-    refresh = Some(RowAppend(batch =>
+    refresh = Some(Append((_, _, batch) =>
       hashed60ShinglesOf(batch.select(col("doc_id"), col("text"))))))
 
   /** The qualifying contamination PAIR SET as a persisted catalog
@@ -887,7 +887,8 @@ object Dedup {
     * Columns are exact longs → serve ≡ recompute bit-for-bit.
     *
     * Append refresh: pairs split by endpoint membership — (old-eval ×
-    * old-train) is the old artifact; (batch-eval × all-train) and
+    * old-train) is the old artifact's files, linked; (batch-eval ×
+    * all-train) and
     * (old-eval × batch-train) are two h60-keyed joins over the served
     * index, so the old corpus is touched only through its h60 artifact.
     * Per-pair (shared, n_eval) depend only on the two docs' shingle
@@ -898,9 +899,8 @@ object Dedup {
       contaminationPairs(train, eval_)
     })(
     build = contamPairsDerive,
-    refresh = Some(Fold { (spark, oldDir, newDir) =>
+    refresh = Some(Append { (spark, oldDir, batch) =>
       val oldH60 = persistOnce(H60.serve(spark, oldDir))
-      val batch = appendedBatch(spark, oldDir, newDir)
       val bH60 = hashed60ShinglesOf(batch.select(col("doc_id"), col("text")))
       val bEval = bH60.where(col("doc_id") % 10 === 0)
       val bTrain = bH60.where(col("doc_id") % 10 =!= 0)
@@ -908,9 +908,8 @@ object Dedup {
       val nEvalB = batch.where(col("doc_id") % 10 === 0).count()
       val nEvalOld = Tables.load(spark, oldDir, "documents")
         .where(col("doc_id") % 10 === 0).count()
-      Contam.serve(spark, oldDir)
-        .unionAll(contaminationPairsHashed(
-          oldH60.where(col("doc_id") % 10 =!= 0).unionAll(bTrain), bEval, nEvalB))
+      contaminationPairsHashed(
+          oldH60.where(col("doc_id") % 10 =!= 0).unionAll(bTrain), bEval, nEvalB)
         .unionAll(contaminationPairsHashed(
           bTrain, oldH60.where(col("doc_id") % 10 === 0), nEvalOld))
     }))
@@ -1057,17 +1056,16 @@ object Dedup {
     *
     * Append refresh (r17 verdict task 3): pairs split by endpoint
     * membership exactly like scored_, so old×old pairs are the old
-    * artifact verbatim and pairs touching the AUGMENTED batch (batch docs
-    * + batch excerpts) come from [[batchProbe]]. NO old text is read. */
+    * artifact's files, linked, and pairs touching the AUGMENTED batch
+    * (batch docs + batch excerpts) come from [[batchProbe]]. NO old text
+    * is read. */
   private[graft] lazy val ContAudit: ArtifactFamily = new ArtifactFamily("contaud", Docs,
     defining = (spark, dir) => containmentAudit(excerptAugmented(spark, dir)))(
     build = d16Derive,
-    refresh = Some(Fold { (spark, oldDir, newDir) =>
-      val (cand, sig, sh) = batchProbe(
-        shinglesOf(augmentedOf(appendedBatch(spark, oldDir, newDir))),
+    refresh = Some(Append { (spark, oldDir, batch) =>
+      val (cand, sig, sh) = batchProbe(shinglesOf(augmentedOf(batch)),
         augmentedSig(spark, oldDir), augmentedShingles(spark, oldDir))
-      ContAudit.serve(spark, oldDir)
-        .unionAll(scoreContainment(cand, sh, sig.select(col("doc_id"), col("n"))))
+      scoreContainment(cand, sh, sig.select(col("doc_id"), col("n")))
     }))
 
   /** Excerpt-row shingles as a PERSISTED CATALOG ARTIFACT (r18, the
@@ -1079,7 +1077,7 @@ object Dedup {
     * derivation; per-DOC rows → file-level append refresh. */
   private[graft] lazy val ExcerptShingles: ArtifactFamily = new ArtifactFamily("exsh", Docs,
     defining = (spark, dir) => shinglesOf(excerptsOf(Tables.load(spark, dir, "documents"))))(
-    refresh = Some(RowAppend(batch => shinglesOf(excerptsOf(batch)))))
+    refresh = Some(Append((_, _, batch) => shinglesOf(excerptsOf(batch)))))
 
   /** sh(docs ∪ excerpts) = served_sh(docs) ∪ served_exsh(docs):
     * shingling is per-row and the excerpt ids are disjoint. */
@@ -1627,7 +1625,7 @@ object Dedup {
     defining = (spark, dir) => dedupIndexOf(Tables.load(spark, dir, "documents")))(
     build = (spark, dir) =>
       dedupIndexFrom(docText(spark, dir), lshSignatures(Shingles.serve(spark, dir))),
-    refresh = Some(RowAppend(dedupIndexOf)))
+    refresh = Some(Append((_, _, batch) => dedupIndexOf(batch))))
 
   /** The signature rows (doc_id, mh0..mh15, n) of a [[DedupSig]] table:
     * the docs that have a signature. */
@@ -1650,7 +1648,7 @@ object Dedup {
     defining = (spark, dir) => shinglesOf(docText(spark, dir)))(
     build = (spark, dir) => shinglesOf(docText(spark, dir))
       .repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id")),
-    refresh = Some(RowAppend(batch => shinglesOf(batch.select(col("doc_id"), col("text")))
+    refresh = Some(Append((_, _, batch) => shinglesOf(batch.select(col("doc_id"), col("text")))
       .repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id")))))
 
   /** The near-dup label table, served as a PERSISTED CATALOG ARTIFACT —
@@ -1675,7 +1673,8 @@ object Dedup {
     // pair table instead of re-running band joins per iteration seed
     build = (spark, dir) => minLabelComponents(Edges.serve(spark, dir)),
     refresh = Some(Fold { (spark, oldDir, newDir) =>
-      val batchIds = appendedBatch(spark, oldDir, newDir).select(col("doc_id"))
+      val batchIds = ArtifactFamily.appendedRows(spark, "documents", oldDir, newDir)
+        .select(col("doc_id"))
       val e = Edges.serve(spark, newDir)
       val touching = e
         .join(batchIds.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
@@ -2012,24 +2011,22 @@ object Dedup {
   // sf10full) — but corpus snapshots evolve by append, and for the
   // append case a family's refresh shape is a batch-cost update that is
   // ROW-IDENTICAL to a from-scratch rebuild
-  // ([[graft.sources.ArtifactFamily.Refresh]]): per-row families link
-  // the old generation and add batch rows; scored_, contam_, contaud_
-  // and labels_ fold the batch into the old generation, serving on the
-  // old state only what their build serves. Only what is built
-  // refreshes; every other family (edges_ and the profile statistics
-  // have no shape) builds on its first serve of the new state, from its
-  // refreshed upstream. Each refresh persists under the
-  // NEW state's own key (the same key a from-scratch build computes), so
-  // later cold sessions serve the incrementally-built table
-  // transparently and serve ≡ recompute stays a checked contract.
+  // ([[graft.sources.ArtifactFamily.Refresh]]): every family whose new
+  // rows are its old rows plus a disjoint delta — the per-row families,
+  // and scored_, contam_ and contaud_, whose delta is the pairs touching
+  // the batch — links the old generation's files and writes only the
+  // delta; labels_, whose old rows are remapped, folds the batch into
+  // its old generation. A refresh serves on the old state only what its
+  // family's build serves. Only what is built refreshes; every other
+  // family (edges_ and the profile statistics have no shape) builds on
+  // its first serve of the new state, from its refreshed upstream. Each
+  // refresh persists under the NEW state's own key (the same key a
+  // from-scratch build computes), so later cold sessions serve the
+  // incrementally-built table transparently and serve ≡ recompute stays
+  // a checked contract.
   // ---------------------------------------------------------------------
-  /** The appended documents between two corpus states (see
-    * [[graft.sources.ArtifactFamily.appendedRows]]). */
-  private def appendedBatch(spark: SparkSession, oldDir: String, newDir: String): DataFrame =
-    ArtifactFamily.appendedRows(spark, "documents", oldDir, newDir)
-
   /** The band probe of an appended batch (the scored_ and contaud_
-    * folds): the signed batch shingles `shB` probe the old signature rows
+    * deltas): the signed batch shingles `shB` probe the old signature rows
     * `oldSig` (canonicalized to doc_a < doc_b like the self-join) and
     * themselves. Returns the batch-touching candidates and the signature
     * and shingle rows of their endpoints: batch rows ∪ the band-collided
@@ -2053,16 +2050,17 @@ object Dedup {
     * registry (dependency) order, and only those whose read tables exist
     * in both states and whose `oldDir` generation is complete
     * ([[ArtifactFamily.refreshable]]); every other family builds on its
-    * first serve of `newDir`.
+    * first serve of `newDir`. The appended batches it materialized are
+    * freed before it returns.
     * Returns (family, table name) for each refreshed artifact; every
     * table is named with the NEW state's from-scratch key, so all later
     * consumers — this session or any cold JVM — serve transparently. */
   def refreshArtifactsAfterAppend(spark: SparkSession,
       oldDir: String, newDir: String): Seq[(String, String)] =
-    ArtifactFamily.refreshable(spark, oldDir, newDir).map { f =>
+    try ArtifactFamily.refreshable(spark, oldDir, newDir).map { f =>
       f.refreshAfterAppend(spark, oldDir, newDir)
       f.kind -> f.name(spark, newDir)
-    }
+    } finally ArtifactFamily.releaseBatches(oldDir, newDir)
 
   // ---------------------------------------------------------------------
   // d11 — source-overlap matrix: for every pair of sources, the number of
@@ -2144,7 +2142,7 @@ object Dedup {
   private[graft] lazy val Spans: ArtifactFamily = new ArtifactFamily("spans", Docs,
     defining = (spark, dir) => spanTfOf(docText(spark, dir)))(
     build = (spark, dir) => spanTfOf(graft.plans.Scale.spreadIfNarrow(docText(spark, dir))),
-    refresh = Some(RowAppend(batch => spanTfOf(batch.select(col("doc_id"), col("text"))))))
+    refresh = Some(Append((_, _, batch) => spanTfOf(batch.select(col("doc_id"), col("text"))))))
 
   /** Boilerplate-span shares over a pre-built (doc_id, g, c) frame plus
     * the (doc_id, source) projection — the span document-frequency rides

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.SharedHash._
 import graft.sources.{ArtifactFamily, ContentMemo}
-import graft.sources.ArtifactFamily.RowAppend
+import graft.sources.ArtifactFamily.Append
 
 /** Text-analysis operators over `documents`: language ID, quality
   * scoring, token counting, fingerprinting.
@@ -332,7 +332,7 @@ object TextAnalysis {
   private[graft] lazy val WordTf: ArtifactFamily = new ArtifactFamily("wtf", Dedup.Docs,
     defining = (spark, dir) => wordTfOf(Dedup.docText(spark, dir)))(
     build = (spark, dir) => wordTfOf(graft.plans.Scale.spreadIfNarrow(Dedup.docText(spark, dir))),
-    refresh = Some(RowAppend(batch => wordTfOf(batch.select(col("doc_id"), col("text"))))))
+    refresh = Some(Append((_, _, batch) => wordTfOf(batch.select(col("doc_id"), col("text"))))))
 
   /** Distinctive terms (tf/df) over a pre-built tf frame. The corpus df
     * rides a `count() OVER (PARTITION BY word)` window on the SAME
@@ -561,7 +561,7 @@ object TextAnalysis {
   private[graft] lazy val BigramTf: ArtifactFamily = new ArtifactFamily("dbg", Dedup.Docs,
     defining = (spark, dir) => bigramTfOf(Dedup.docText(spark, dir)))(
     build = (spark, dir) => bigramTfOf(graft.plans.Scale.spreadIfNarrow(Dedup.docText(spark, dir))),
-    refresh = Some(RowAppend(batch => bigramTfOf(batch.select(col("doc_id"), col("text"))))))
+    refresh = Some(Append((_, _, batch) => bigramTfOf(batch.select(col("doc_id"), col("text"))))))
 
   /** Bigram-LM novelty over a pre-built (doc_id, bg, c) frame plus the
     * (doc_id, lang) projection. Restructured r18 (guide §2.4): the train

@@ -21,9 +21,10 @@ import graft.Tables
   * documents families' tables in place, and the reverse.
   *
   * An append refreshes what is built ([[refreshable]]); every other
-  * family builds on its first serve of the new state. A `Fold` serves,
-  * on the old state, only families its build serves, so a refresh
-  * writes no old generation that nothing served.
+  * family builds on its first serve of the new state. An `Append` links
+  * the old generation's files and writes only its delta; only a `Fold`
+  * rewrites old rows. A refresh serves, on the old state, only families
+  * its build serves, so it writes no old generation that nothing served.
   *
   * A family earns its place by reuse: at least two consumers, or an
   * append refresh. A family that would persist one query's final
@@ -84,16 +85,16 @@ final class ArtifactFamily private[graft] (
   def refreshAfterAppend(spark: SparkSession, oldDir: String, newDir: String): DataFrame =
     refresh.getOrElse(throw new UnsupportedOperationException(
         s"artifact family '$kind' has no append refresh")) match {
-      case RowAppend(rows) =>
-        // per-row derivation: rows(new) = rows(old generation) ∪
-        // rows(batch) — the old generation's part files are hard-linked
-        // unchanged, only batch rows are computed and written: O(batch)
-        // compute and O(files) metadata, no corpus-sized re-encode (r17:
-        // rewriting shingles_ cost 70 CPU-s at sf10full for a 1% batch,
-        // linking ~1). Nothing is served on the old state.
+      case Append(delta) =>
+        // rows(new) = rows(old generation) ∪ delta, disjoint — the old
+        // generation's part files are hard-linked unchanged, only the
+        // delta is computed and written: O(batch) compute and O(files)
+        // metadata, no corpus-sized re-encode (r17: rewriting shingles_
+        // cost 70 CPU-s at sf10full for a 1% batch, linking ~1). The
+        // family's own old generation is never served.
         val (table, oldTable) = (name(spark, newDir), name(spark, oldDir))
         owning(Artifacts.servePersistedBy(spark, table) { stage =>
-          rows(appendedRows(spark, reads.head, oldDir, newDir))
+          delta(spark, oldDir, appendedRows(spark, reads.head, oldDir, newDir))
             .write.mode("overwrite").parquet(stage.toString)
           Artifacts.linkDataFilesInto(stage.getFileSystem(spark.sparkContext.hadoopConfiguration),
             Artifacts.location(spark, oldTable), stage)
@@ -150,12 +151,13 @@ object ArtifactFamily {
   /** How a family follows a corpus append. A family without one builds
     * on its first serve of the new state. */
   sealed trait Refresh
-  /** Per-row derivation over the appended rows of the family's one read
-    * table; `rows(batch)` derives the batch's rows, and the old
-    * generation's files are linked in unchanged. */
-  final case class RowAppend(rows: DataFrame => DataFrame) extends Refresh
+  /** The new rows are the old generation's rows plus a disjoint delta:
+    * `delta(spark, oldDir, batch)` derives the rows the appended `batch`
+    * of the family's one read table adds, and the old generation's files
+    * are linked in unchanged. */
+  final case class Append(delta: (SparkSession, String, DataFrame) => DataFrame) extends Refresh
   /** A family-specific fold `(spark, oldDir, newDir)` of the old
-    * generation and the batch. */
+    * generation and the batch, for a family whose old rows change. */
   final case class Fold(fold: (SparkSession, String, String) => DataFrame) extends Refresh
 
   /** Every family, in dependency order: a family's build and refresh
@@ -199,7 +201,8 @@ object ArtifactFamily {
     * MATERIALIZED once per (table, state pair): every refreshed family
     * of the table needs the same batch, and deriving it per family
     * re-scanned the new table once per family. Keyed by both states'
-    * table fingerprints; a superseded pair frees its checkpoint. */
+    * table fingerprints; a superseded pair frees its checkpoint, and
+    * [[releaseBatches]] frees a pair's batches once its refresh ends. */
   private[graft] def appendedRows(spark: SparkSession, table: String,
       oldDir: String, newDir: String): DataFrame = {
     val fp = Artifacts.tablesFingerprint(spark, oldDir, Seq(table)) + ":" +
@@ -216,6 +219,14 @@ object ArtifactFamily {
         df
     }
   }
+
+  /** Free every batch [[appendedRows]] materialized between `oldDir`
+    * and `newDir`: a refresh that has written its generations reads
+    * them no more, and a checkpoint is pinned until freed. */
+  private[graft] def releaseBatches(oldDir: String, newDir: String): Unit =
+    batchMemo.keys.filter(k => k._2 == oldDir && k._3 == newDir).foreach { k =>
+      batchMemo.remove(k).foreach(b => graft.operators.Dedup.freeCheckpoint(b._2))
+    }
 
   /** (table, oldDir, newDir) → (state-pair fingerprint, materialized batch). */
   private val batchMemo = scala.collection.concurrent.TrieMap

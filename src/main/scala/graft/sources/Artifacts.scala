@@ -70,7 +70,9 @@ object Artifacts {
   }
 
   /** Link every DATA file of artifact directory `src` into `dst` under a
-    * `prev_` prefix (collision-proof against the fresh `part-*` files).
+    * `prev_` prefix (collision-proof against the fresh `part-*` files),
+    * added once: a file linked forward again keeps its name, which stays
+    * unique because every write puts its own job id into its part names.
     * Local filesystems hard-link (O(1) per file, zero bytes moved);
     * other schemes fall back to a byte copy. `_SUCCESS`, locks, and
     * checksum sidecars are skipped — the staging write provides its own
@@ -81,7 +83,7 @@ object Artifacts {
     fs.listStatus(src).foreach { st =>
       val name = st.getPath.getName
       if (st.isFile && !name.startsWith(".") && !name.startsWith("_")) {
-        val target = new Path(dst, s"prev_$name")
+        val target = new Path(dst, if (name.startsWith("prev_")) name else s"prev_$name")
         if (fs.getScheme == "file")
           java.nio.file.Files.createLink(
             java.nio.file.Paths.get(target.toUri.getPath),

@@ -28,9 +28,15 @@ import graft.sources.{ArtifactFamily, Artifacts}
   *                  already built them), so every one refreshes
   *   phase refresh: refresh each family incrementally onto newDir
   *   phase scratch: drop newDir's artifacts, rebuild each from scratch
-  * and print one JSON line with per-family wall/CPU for both phases and
-  * a per-family digest comparison (BenchConsume xor-fold over the
-  * family's canonical rows — order-insensitive, all columns).
+  * and print one JSON line with per-family wall, CPU and Spark jobs for
+  * both phases, the bytes each refresh wrote (its new generation's data
+  * files that are not `prev_` links to the old one), and a per-family
+  * digest comparison (BenchConsume xor-fold over the family's canonical
+  * rows — order-insensitive, all columns).
+  *
+  * The scratch phase rebuilds the families in registry order in one JVM,
+  * so each scratch build pays only its own step over upstreams it has
+  * just rebuilt: a lower bound on a cold build of that family.
   */
 object ProbeRefresh {
   def main(args: Array[String]): Unit = {
@@ -42,22 +48,24 @@ object ProbeRefresh {
 
     appendBatch(spark, oldDir, newDir, batchFrac)
 
-    def timed(body: => Unit): (Double, Double) = {
-      val t0 = System.nanoTime()
+    /** (wall s, executor CPU s, Spark jobs) of `body`. */
+    def timed(body: => Unit): (Double, Double, Long) = {
+      CpuMeter.snapshot(spark)
+      val (t0, j0) = (System.nanoTime(), CpuMeter.jobs)
       val (_, cpu, _) = CpuMeter.measure(spark)(body)
-      ((System.nanoTime() - t0) / 1e9, cpu)
+      ((System.nanoTime() - t0) / 1e9, cpu, CpuMeter.jobs - j0)
     }
 
     // ---- phase old: the deployment precondition -----------------------
-    val (oldWall, oldCpu) = timed(ArtifactFamily.readable(spark, oldDir, newDir)
+    val (oldWall, oldCpu, _) = timed(ArtifactFamily.readable(spark, oldDir, newDir)
       .filter(_.refresh.isDefined).foreach(_.serve(spark, oldDir)))
     spark.catalog.clearCache()
     val fams = ArtifactFamily.refreshable(spark, oldDir, newDir)
-    def phase(label: String)(step: ArtifactFamily => Unit): Map[String, (Double, Double)] = {
+    def phase(label: String)(step: ArtifactFamily => Unit): Map[String, (Double, Double, Long)] = {
       val times = fams.map { f =>
-        val (w, c) = timed(step(f))
-        System.err.println(f"[probe-refresh] $label ${f.kind}: $w%.1f s / $c%.1f cpu-s")
-        f.kind -> (w, c)
+        val (w, c, j) = timed(step(f))
+        System.err.println(f"[probe-refresh] $label ${f.kind}: $w%.1f s / $c%.1f cpu-s / $j jobs")
+        f.kind -> (w, c, j)
       }.toMap
       spark.catalog.clearCache()
       times
@@ -74,6 +82,12 @@ object ProbeRefresh {
     // ---- phase refresh, then scratch: drop + ordinary cold build ------
     val refreshTimes = phase("refresh")(_.refreshAfterAppend(spark, oldDir, newDir))
     val refreshDigests = digests()
+    val fs = new Path(newDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val written = fams.map { f =>
+      f.kind -> fs.listStatus(Artifacts.location(spark, f.name(spark, newDir)))
+        .filter(st => st.isFile && !st.getPath.getName.matches("(prev_|[._]).*"))
+        .map(_.getLen).sum
+    }.toMap
     fams.foreach(_.drop(spark, newDir))
     spark.catalog.clearCache()
     val scratchTimes = phase("scratch")(_.serve(spark, newDir))
@@ -81,13 +95,15 @@ object ProbeRefresh {
 
     def jnum(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val famJson = fams.map(_.kind).map { fam =>
-      val ((rw, rc), (sw, sc)) = (refreshTimes(fam), scratchTimes(fam))
+      val ((rw, rc, rj), (sw, sc, sj)) = (refreshTimes(fam), scratchTimes(fam))
       val (rn, _) = refreshDigests(fam)
       s""""$fam":{"refresh_s":${jnum(rw)},"refresh_cpu_s":${jnum(rc)},""" +
-        s""""scratch_s":${jnum(sw)},"scratch_cpu_s":${jnum(sc)},""" +
+        s""""refresh_jobs":$rj,"refresh_bytes_written":${written(fam)},""" +
+        s""""scratch_s":${jnum(sw)},"scratch_cpu_s":${jnum(sc)},"scratch_jobs":$sj,""" +
         s""""rows":$rn,"digest_match":${refreshDigests(fam) == scratchDigests(fam)}}"""
     }.mkString("{", ",", "}")
-    def total(ts: Map[String, (Double, Double)]) = (ts.values.map(_._1).sum, ts.values.map(_._2).sum)
+    def total(ts: Map[String, (Double, Double, Long)]) =
+      (ts.values.map(_._1).sum, ts.values.map(_._2).sum)
     val ((rTot, rCpuTot), (sTot, sCpuTot)) = (total(refreshTimes), total(scratchTimes))
     val line =
       s"""{"probe":"refresh","old":"$oldDir","new":"$newDir","n_families":${fams.size},""" +

@@ -317,6 +317,18 @@ class IncrementalRefreshSpec extends SparkSpec {
     val fs = oldLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dataFiles(loc: org.apache.hadoop.fs.Path) =
       fs.listStatus(loc).map(_.getPath).filterNot(p => p.getName.matches("[._].*"))
+    /** `newLoc` holds every file of `oldFiles` as a `prev_` link, not a copy. */
+    def assertLinked(kind: String, oldFiles: Seq[org.apache.hadoop.fs.Path],
+        newLoc: org.apache.hadoop.fs.Path): Unit = {
+      val linked = dataFiles(newLoc)
+        .filter(_.getName.startsWith("prev_")).map(p => p.getName -> p).toMap
+      assert(linked.keySet === oldFiles.map("prev_" + _.getName).toSet, s"$kind's links")
+      oldFiles.foreach { p =>
+        assert(java.nio.file.Files.isSameFile(java.nio.file.Paths.get(p.toUri.getPath),
+          java.nio.file.Paths.get(linked("prev_" + p.getName).toUri.getPath)),
+          s"$kind: $p was not linked")
+      }
+    }
     val oldFiles = dataFiles(oldLoc)
 
     val refreshed = Dedup.refreshArtifactsAfterAppend(spark, v1, v2)
@@ -326,14 +338,7 @@ class IncrementalRefreshSpec extends SparkSpec {
     assert(unbuilt.isEmpty, s"the refresh built old generations nothing served: $unbuilt")
     assert(!spark.catalog.tableExists(s"${Artifacts.Db}.$h60Old"),
       "the refresh served h60's old generation instead of reading its files")
-    // the new generation holds every old data file as a link, not a copy
-    val linked = dataFiles(Artifacts.location(spark, refreshed.head._2))
-      .filter(_.getName.startsWith("prev_")).map(p => p.getName -> p).toMap
-    assert(linked.keySet === oldFiles.map("prev_" + _.getName).toSet)
-    oldFiles.foreach { p =>
-      assert(java.nio.file.Files.isSameFile(java.nio.file.Paths.get(p.toUri.getPath),
-        java.nio.file.Paths.get(linked("prev_" + p.getName).toUri.getPath)), s"$p was not linked")
-    }
+    assertLinked("h60", oldFiles.toSeq, Artifacts.location(spark, refreshed.head._2))
 
     // every family's first serve on the new state equals a from-scratch build
     val (incremental, scratch) = refreshedVsScratch(ArtifactFamily.readable(spark, v2), v2)
@@ -342,20 +347,50 @@ class IncrementalRefreshSpec extends SparkSpec {
     assertRebuilt(incremental, scratch, "a first serve after the append must equal " +
       "the from-scratch rebuild")
 
-    // a fold serves, on the old state, only generations its build served:
-    // each folded family built alone on v1 refreshes without writing any
-    // other v1 generation
-    val folded = ArtifactFamily.all.filter(_.refresh.exists(_.isInstanceOf[ArtifactFamily.Fold]))
-    assert(folded.map(_.kind) === Seq("scored", "contam", "labels", "contaud"))
+    // a refresh serves, on the old state, only generations its build
+    // served: each pair-set family built alone on v1 refreshes without
+    // writing any other v1 generation, and each Append among them (every
+    // one but labels, whose old rows change) serves none of its own old
+    // generation and links all of its files
+    assert(ArtifactFamily.all.filter(_.refresh.exists(_.isInstanceOf[ArtifactFamily.Fold]))
+      .map(_.kind) === Seq("labels"), "only labels rewrites its old rows")
+    val pairSets = ArtifactFamily.all
+      .filter(f => Set("scored", "contam", "labels", "contaud").contains(f.kind))
+    assert(pairSets.size === 4)
     def builtOn(dir: String): Set[String] = ArtifactFamily.readable(spark, dir)
       .map(_.name(spark, dir)).filter(t => fs.exists(Artifacts.location(spark, t))).toSet
-    folded.foreach { f =>
+    pairSets.foreach { f =>
       ArtifactFamily.readable(spark, v1, v2).foreach { g => g.drop(spark, v1); g.drop(spark, v2) }
       f.serve(spark, v1)
       val built = builtOn(v1)
+      val old = f.name(spark, v1)
+      val oldFiles = dataFiles(Artifacts.location(spark, old)).toSeq
+      Artifacts.dropEntry(spark, old)
       Dedup.refreshArtifactsAfterAppend(spark, v1, v2)
       assert(builtOn(v1) -- built === Set.empty[String],
         s"refreshing ${f.kind} wrote old generations its build never served")
+      if (f.refresh.exists(_.isInstanceOf[ArtifactFamily.Append])) {
+        assert(!spark.catalog.tableExists(s"${Artifacts.Db}.$old"),
+          s"refreshing ${f.kind} served its own old generation")
+        assertLinked(f.kind, oldFiles, Artifacts.location(spark, f.name(spark, v2)))
+      }
     }
+  }
+
+  test("an append's refresh frees the batch it materialized") {
+    val v1 = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "inc-free-v1-").toString
+    val v2 = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "inc-free-v2-").toString
+    val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
+    val v1Rows = Seq(10L -> docA, 20L -> docB).map { case (i, t) => (i, t, "en", "s", 100L) }
+    v1Rows.toDF(cols: _*).write.parquet(s"$v1/documents.parquet")
+    (v1Rows :+ ((100L, docC, "en", "s", 100L))).toDF(cols: _*)
+      .write.parquet(s"$v2/documents.parquet")
+    Dedup.H60.serve(spark, v1)
+    val pinned = spark.sparkContext.getPersistentRDDs.size
+    assert(Dedup.refreshArtifactsAfterAppend(spark, v1, v2).map(_._1) === Seq("h60"))
+    assert(spark.sparkContext.getPersistentRDDs.size === pinned,
+      "the refresh left its appended batch's checkpoint pinned")
   }
 }

@@ -402,6 +402,25 @@ class SourcesSpec extends SparkSpec {
     assert(stray.isEmpty, s"staging dirs must be cleaned: ${stray.mkString(",")}")
   }
 
+  test("chained artifact links add the prev_ prefix once: 40 generations link one file") {
+    import graft.sources.Artifacts
+    import org.apache.hadoop.fs.Path
+    // a Spark part name is 67 characters; a prefix added per generation
+    // would pass NAME_MAX (255) at the 38th chained append
+    val root = tmpDir
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = "part-00000-0e6f5c6e-2d0f-4c8f-9a5e-3b1c2d4e5f60-c000.snappy.parquet"
+    val gens = (0 to 40).map(i => new Path(root, s"gen$i"))
+    gens.foreach(fs.mkdirs)
+    Files.write(Paths.get(gens.head.toUri.getPath, part), Array[Byte](1, 2, 3))
+    gens.zip(gens.tail).foreach { case (from, to) =>
+      assert(Artifacts.linkDataFilesInto(fs, from, to) === 1, s"$from linked no file")
+    }
+    assert(fs.listStatus(gens.last).map(_.getPath.getName).toSeq === Seq(s"prev_$part"))
+    assert(Files.isSameFile(Paths.get(gens.head.toUri.getPath, part),
+      Paths.get(gens.last.toUri.getPath, s"prev_$part")))
+  }
+
   test("corpus fingerprint: key changes when a table is overwritten in place") {
     import graft.sources.Artifacts
     val dir = s"$tmpDir/fpr"
