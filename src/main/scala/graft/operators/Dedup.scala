@@ -324,8 +324,7 @@ object Dedup {
     * and the counts are longs, so serve ≡ recompute bit for bit.
     *
     * Append refresh: old×old pairs are the old artifact's files, linked;
-    * pairs touching the batch come from [[batchProbe]]. No old text is
-    * read. */
+    * batch-touching pairs come from [[batchProbe]]. No old text is read. */
   private[graft] lazy val Scored: ArtifactFamily = new ArtifactFamily("scored", Docs,
     defining = (spark, dir) => scoredCandidatesOf(Tables.load(spark, dir, "documents")))(
     build = (spark, dir) => {
@@ -887,9 +886,8 @@ object Dedup {
     * Columns are exact longs → serve ≡ recompute bit-for-bit.
     *
     * Append refresh: pairs split by endpoint membership — (old-eval ×
-    * old-train) is the old artifact's files, linked; (batch-eval ×
-    * all-train) and
-    * (old-eval × batch-train) are two h60-keyed joins over the served
+    * old-train) is the old artifact's linked files; (batch-eval × all-train)
+    * and (old-eval × batch-train) are two h60-keyed joins over the served
     * index, so the old corpus is touched only through its h60 artifact.
     * Per-pair (shared, n_eval) depend only on the two docs' shingle
     * sets, so the union is row-identical to a from-scratch derivation. */
@@ -908,8 +906,8 @@ object Dedup {
       val nEvalB = batch.where(col("doc_id") % 10 === 0).count()
       val nEvalOld = Tables.load(spark, oldDir, "documents")
         .where(col("doc_id") % 10 === 0).count()
-      contaminationPairsHashed(
-          oldH60.where(col("doc_id") % 10 =!= 0).unionAll(bTrain), bEval, nEvalB)
+      contaminationPairsHashed(oldH60.where(col("doc_id") % 10 =!= 0).unionAll(bTrain),
+          bEval, nEvalB)
         .unionAll(contaminationPairsHashed(
           bTrain, oldH60.where(col("doc_id") % 10 === 0), nEvalOld))
     }))
@@ -1056,9 +1054,8 @@ object Dedup {
     *
     * Append refresh (r17 verdict task 3): pairs split by endpoint
     * membership exactly like scored_, so old×old pairs are the old
-    * artifact's files, linked, and pairs touching the AUGMENTED batch
-    * (batch docs + batch excerpts) come from [[batchProbe]]. NO old text
-    * is read. */
+    * artifact's linked files and pairs touching the AUGMENTED batch (batch
+    * docs + batch excerpts) come from [[batchProbe]]. NO old text is read. */
   private[graft] lazy val ContAudit: ArtifactFamily = new ArtifactFamily("contaud", Docs,
     defining = (spark, dir) => containmentAudit(excerptAugmented(spark, dir)))(
     build = d16Derive,
@@ -2005,25 +2002,14 @@ object Dedup {
   }
 
   // ---------------------------------------------------------------------
-  // Incremental refresh for the SERVED ARTIFACT FAMILIES (r16 verdict
-  // task 1). Until r17 the artifact lifecycle answered ANY corpus change
-  // with a full rebuild of every family (r16 gate: 1,658.9 s prebuild at
-  // sf10full) — but corpus snapshots evolve by append, and for the
-  // append case a family's refresh shape is a batch-cost update that is
-  // ROW-IDENTICAL to a from-scratch rebuild
-  // ([[graft.sources.ArtifactFamily.Refresh]]): every family whose new
-  // rows are its old rows plus a disjoint delta — the per-row families,
-  // and scored_, contam_ and contaud_, whose delta is the pairs touching
-  // the batch — links the old generation's files and writes only the
-  // delta; labels_, whose old rows are remapped, folds the batch into
-  // its old generation. A refresh serves on the old state only what its
-  // family's build serves. Only what is built refreshes; every other
-  // family (edges_ and the profile statistics have no shape) builds on
-  // its first serve of the new state, from its refreshed upstream. Each
-  // refresh persists under the NEW state's own key (the same key a
-  // from-scratch build computes), so later cold sessions serve the
-  // incrementally-built table transparently and serve ≡ recompute stays
-  // a checked contract.
+  // Incremental refresh of the served artifact families on a corpus
+  // append ([[graft.sources.ArtifactFamily.Refresh]]), row-identical to a
+  // from-scratch rebuild at batch cost. A family whose new rows are its
+  // old rows plus a disjoint delta — the per-row families' batch rows;
+  // the scored_, contam_ and contaud_ pairs touching the batch — links
+  // the old generation's files and writes only the delta; labels_, whose
+  // old rows are remapped, folds. Each refresh persists under the new
+  // state's own key, so later cold sessions serve it transparently.
   // ---------------------------------------------------------------------
   /** The band probe of an appended batch (the scored_ and contaud_
     * deltas): the signed batch shingles `shB` probe the old signature rows
@@ -2044,17 +2030,13 @@ object Dedup {
       shB.unionAll(oldSh.join(touched, Seq("doc_id"), "left_semi")))
   }
 
-  /** Refresh every BUILT family that has a refresh shape for the corpus
-    * at `newDir` (= `oldDir` plus an appended batch) — the deployment's
-    * "corpus advanced one snapshot" entry point. Families refresh in
-    * registry (dependency) order, and only those whose read tables exist
-    * in both states and whose `oldDir` generation is complete
-    * ([[ArtifactFamily.refreshable]]); every other family builds on its
-    * first serve of `newDir`. The appended batches it materialized are
-    * freed before it returns.
-    * Returns (family, table name) for each refreshed artifact; every
-    * table is named with the NEW state's from-scratch key, so all later
-    * consumers — this session or any cold JVM — serve transparently. */
+  /** Refresh, in registry (dependency) order, every BUILT family with a
+    * refresh shape ([[ArtifactFamily.refreshable]]) for the corpus at
+    * `newDir` (= `oldDir` plus an appended batch); every other family
+    * builds on its first serve of `newDir`. Frees the appended batches
+    * before it returns. Returns (family, table name) for each refreshed
+    * artifact, named with the NEW state's from-scratch key, so later
+    * consumers — this session or any cold JVM — serve it transparently. */
   def refreshArtifactsAfterAppend(spark: SparkSession,
       oldDir: String, newDir: String): Seq[(String, String)] =
     try ArtifactFamily.refreshable(spark, oldDir, newDir).map { f =>

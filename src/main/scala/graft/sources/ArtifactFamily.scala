@@ -22,9 +22,8 @@ import graft.Tables
   *
   * An append refreshes what is built ([[refreshable]]); every other
   * family builds on its first serve of the new state. An `Append` links
-  * the old generation's files and writes only its delta; only a `Fold`
-  * rewrites old rows. A refresh serves, on the old state, only families
-  * its build serves, so it writes no old generation that nothing served.
+  * the old generation's files and writes its delta; a `Fold` rewrites old
+  * rows. On the old state a refresh serves only what its build serves.
   *
   * A family earns its place by reuse: at least two consumers, or an
   * append refresh. A family that would persist one query's final
@@ -86,18 +85,15 @@ final class ArtifactFamily private[graft] (
     refresh.getOrElse(throw new UnsupportedOperationException(
         s"artifact family '$kind' has no append refresh")) match {
       case Append(delta) =>
-        // rows(new) = rows(old generation) ∪ delta, disjoint — the old
-        // generation's part files are hard-linked unchanged, only the
-        // delta is computed and written: O(batch) compute and O(files)
-        // metadata, no corpus-sized re-encode (r17: rewriting shingles_
-        // cost 70 CPU-s at sf10full for a 1% batch, linking ~1). The
-        // family's own old generation is never served.
-        val (table, oldTable) = (name(spark, newDir), name(spark, oldDir))
-        owning(Artifacts.servePersistedBy(spark, table) { stage =>
+        // rows(new) = rows(old generation) ∪ delta, disjoint: the old
+        // part files are hard-linked, never served or re-encoded (r17:
+        // rewriting shingles_ cost 70 CPU-s at sf10full for a 1% batch,
+        // linking ~1); only the delta is computed and written.
+        owning(Artifacts.servePersistedBy(spark, name(spark, newDir)) { stage =>
           delta(spark, oldDir, appendedRows(spark, reads.head, oldDir, newDir))
             .write.mode("overwrite").parquet(stage.toString)
           Artifacts.linkDataFilesInto(stage.getFileSystem(spark.sparkContext.hadoopConfiguration),
-            Artifacts.location(spark, oldTable), stage)
+            Artifacts.location(spark, name(spark, oldDir)), stage)
         })
       case Fold(fold) => serveWith(spark, newDir)(fold(spark, oldDir, newDir))
     }
@@ -220,9 +216,8 @@ object ArtifactFamily {
     }
   }
 
-  /** Free every batch [[appendedRows]] materialized between `oldDir`
-    * and `newDir`: a refresh that has written its generations reads
-    * them no more, and a checkpoint is pinned until freed. */
+  /** Free the batches [[appendedRows]] materialized between `oldDir` and
+    * `newDir`: a checkpoint stays pinned until freed. */
   private[graft] def releaseBatches(oldDir: String, newDir: String): Unit =
     batchMemo.keys.filter(k => k._2 == oldDir && k._3 == newDir).foreach { k =>
       batchMemo.remove(k).foreach(b => graft.operators.Dedup.freeCheckpoint(b._2))

@@ -70,9 +70,8 @@ object Artifacts {
   }
 
   /** Link every DATA file of artifact directory `src` into `dst` under a
-    * `prev_` prefix (collision-proof against the fresh `part-*` files),
-    * added once: a file linked forward again keeps its name, which stays
-    * unique because every write puts its own job id into its part names.
+    * `prev_` prefix added once (collision-proof against the fresh `part-*`
+    * files, which carry their write's job id, so chained links stay unique).
     * Local filesystems hard-link (O(1) per file, zero bytes moved);
     * other schemes fall back to a byte copy. `_SUCCESS`, locks, and
     * checksum sidecars are skipped — the staging write provides its own

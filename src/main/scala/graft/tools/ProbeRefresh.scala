@@ -28,15 +28,11 @@ import graft.sources.{ArtifactFamily, Artifacts}
   *                  already built them), so every one refreshes
   *   phase refresh: refresh each family incrementally onto newDir
   *   phase scratch: drop newDir's artifacts, rebuild each from scratch
-  * and print one JSON line with per-family wall, CPU and Spark jobs for
-  * both phases, the bytes each refresh wrote (its new generation's data
-  * files that are not `prev_` links to the old one), and a per-family
-  * digest comparison (BenchConsume xor-fold over the family's canonical
-  * rows — order-insensitive, all columns).
-  *
-  * The scratch phase rebuilds the families in registry order in one JVM,
-  * so each scratch build pays only its own step over upstreams it has
-  * just rebuilt: a lower bound on a cold build of that family.
+  * and print one JSON line with per-family wall, CPU and jobs for both
+  * phases, the bytes each refresh wrote (data files that are not `prev_`
+  * links), and a per-family digest comparison (BenchConsume xor-fold over
+  * the canonical rows — order-insensitive, all columns). A scratch build
+  * runs over upstreams just rebuilt in this JVM: a lower bound.
   */
 object ProbeRefresh {
   def main(args: Array[String]): Unit = {
@@ -48,7 +44,6 @@ object ProbeRefresh {
 
     appendBatch(spark, oldDir, newDir, batchFrac)
 
-    /** (wall s, executor CPU s, Spark jobs) of `body`. */
     def timed(body: => Unit): (Double, Double, Long) = {
       CpuMeter.snapshot(spark)
       val (t0, j0) = (System.nanoTime(), CpuMeter.jobs)
